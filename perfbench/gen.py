@@ -110,7 +110,7 @@ FROM planted ORDER BY id
 
 def _props_pool(rng: random.Random) -> list[str]:
     out = []
-    for i in range(EVENT_POOL):
+    for _ in range(EVENT_POOL):
         doc = {
             "user": rng.randrange(0, 10**6),
             "amount": round(rng.uniform(0, 10000), 2),
@@ -142,7 +142,7 @@ def _attrs_pool(rng: random.Random) -> list[str]:
     words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta",
              "theta", "iota", "kappa", "lambda", "mu"]
     out = []
-    for i in range(EVENT_POOL):
+    for _ in range(EVENT_POOL):
         doc: dict = {"labels": [rng.choice(words)
                                 for _ in range(rng.randrange(0, 5))]}
         if rng.random() < 0.5:
@@ -182,9 +182,8 @@ def write_input(kind: str, n: int, seed: int, out_dir: str) -> dict:
     try:
         con.execute("SET threads=4")
         if kind == "events":
-            rng = random.Random(seed)
-            for name, pool in (("props_pool", _props_pool(rng)),
-                               ("attrs_pool", _attrs_pool(rng))):
+            for name, pool in zip(("props_pool", "attrs_pool"),
+                                  event_pools(seed)):
                 con.execute(f"CREATE TABLE {name} (i UBIGINT, s VARCHAR)")
                 con.executemany(f"INSERT INTO {name} VALUES (?, ?)",
                                 list(enumerate(pool)))

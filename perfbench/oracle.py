@@ -16,6 +16,8 @@ An oracle is a dict::
      "fingerprint": <sha256 over the sorted violation rows>}
 
 ``fail_by_constraint`` lists only constraints with at least one failure.
+The ``sequences`` oracle also carries ``"table_checks"``: the violation rows
+of ``fk:source`` and ``unique:doc_id``.
 """
 
 from __future__ import annotations
