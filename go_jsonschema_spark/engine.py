@@ -12,6 +12,14 @@ The Spark lifecycle replacing the reference's per-document loop
     table checks (unique / foreign_key / stats / drift) run as separate
     aggregate stages over narrow projections of the same table.
 
+All pass/fail arithmetic lives in one :class:`VerdictKernel` per compiled
+plan: the predicate projection, the violation-entries array, the fail
+counters and the verdict columns.  Every verdict entry point is that
+kernel plus a grouping — ``run()`` (partition column, counters over the
+failing rows), ``verdict_counts`` (partition column, counters over the
+scan) and the streaming ``windowed_verdicts`` (event-time window) — so
+batch and stream agree by construction ("a batch is a bounded stream").
+
 Violations are *data*, not exceptions (helpers.go:58-67 addError analogue):
 one row ``(doc_id, constraint_id, observed)`` per failed constraint, and —
 unlike the reference, which stops at the first error per document
@@ -96,34 +104,52 @@ class ConstraintPlan:
     predicates: list[tuple[str, Column]]  # (constraint_id, pred)
     observed: dict[str, Column]  # constraint_id -> observed-value column
     table_checks: list[dict[str, Any]]
-    # memo of derived Column fragments (run()'s _RunFragments bundles and
-    # verdict_counts' fragment dicts): Columns are immutable unbound
-    # expressions, so the ~250 py4j round trips that assemble them per
-    # call are pure fixed driver cost — cached per (key, partition_col,
-    # tolerances) alongside the plan.  Never holds DataFrames, data, or
-    # anything input-derived (the fk-fold value list stays per-run in
+    # memo of derived Column bundles (the VerdictKernel per key and
+    # tolerances): Columns are immutable unbound expressions, so the
+    # ~1000 py4j round trips that assemble them are pure fixed driver
+    # cost — paid once per compiled plan.  Never holds DataFrames, data,
+    # or anything input-derived (the fk-fold value list stays per-run in
     # run()).
     derived: dict[tuple, Any] = field(default_factory=dict)
 
 
 @dataclass
-class _RunFragments:
-    """Per-(key, partition_col, tolerances) Column fragments reused across
-    run() calls on the same compiled plan.  Everything here is a pure
-    function of the plan's predicate/observed Columns and the suite
-    config — independent of the input DataFrame and of any data."""
+class VerdictKernel:
+    """The one implementation of pass/fail arithmetic for a compiled plan.
 
-    pred_aliases: list[Column]  # predicates aliased to safe names
-    pass_col: Column  # AND over the safe predicate columns
-    row_entries: list[Column]  # per-cid when(~ok, struct(cid, observed))
-    entries_nofk: Column  # filtered entries array for the no-folded-fk case
-    doc_id_col: Column  # key cast to string, aliased doc_id
-    part_col: Column  # partition column (or the __all__ literal)
-    rowfail_col: Column  # ~__pass__ aliased __rowfail__
-    nfail_agg: Column  # sum(__rowfail__) aliased n_fail
-    cid_counts: list[Column]  # per-cid exists-sum aggregates
-    fail_map_col: Column  # map_from_arrays(cids, counts) (or typed NULL)
-    verdict_passed: Column  # tolerant gate or n_fail == 0
+    Independent of the grouping and of the input DataFrame: every entry
+    point applies :meth:`project` and aggregates :attr:`counters` under
+    its own grouping (partition column, event-time window, whole table),
+    then selects :attr:`verdict` over ``(n_rows, n_fail, __n{i}__)``.
+
+    A predicate that evaluates to NULL counts as passing everywhere —
+    it never survives a violation filter, and every counter is
+    ``sum(~coalesce(col, true))``."""
+
+    ids: list[str]  # constraint ids, plan order
+    names: list[str]  # internal boolean column per id: __c{i}__
+    checks: list[Column]  # predicate i aliased names[i]
+    pass_col: Column  # AND over names (the __pass__ column)
+    row_entries: list[Column]  # per id: when(~ok, struct(id, observed))
+    entries: Column  # row_entries as an array, NULLs filtered out
+    doc_id: Column  # key cast to string, aliased doc_id
+    n_rows: Column  # count(1) aliased n_rows
+    counters: list[Column]  # n_fail, __n{i}__ aggregates
+    # n_rows, n_fail, fail_by_constraint, n_pass, passed over the counters
+    verdict: list[Column]
+
+    def project(self, df: DataFrame, *extra: Column) -> DataFrame:
+        """``df`` plus the predicate columns, ``extra`` and ``__pass__``."""
+        return df.select("*", *self.checks, *extra).withColumn(
+            "__pass__", self.pass_col)
+
+    def verdicts(self, checked: DataFrame, group: Column, name: str
+                 ) -> DataFrame:
+        """``(name, n_rows, n_fail, fail_by_constraint, n_pass, passed)``
+        from ONE aggregation of a :meth:`project` output by ``group``."""
+        return (checked.groupBy(group.alias(name))
+                .agg(self.n_rows, *self.counters)
+                .select(name, *self.verdict))
 
 
 @dataclass
@@ -136,6 +162,10 @@ class SuiteResult:
     constraint_ids: list[str] = field(default_factory=list)
     row_violations: DataFrame | None = None  # persisted handle (unpersist me)
     fk_constraint_ids: list[str] = field(default_factory=list)  # folded fks
+    # internal boolean column of each constraint id / folded fk in
+    # ``checked`` (the kernel's names, the fold's __fk{i}__)
+    check_cols: list[str] = field(default_factory=list)
+    fk_cols: list[str] = field(default_factory=list)
 
     def split(self, *, include_reasons: bool = False,
               quarantine_fk: bool = True) -> tuple[DataFrame, DataFrame]:
@@ -151,10 +181,8 @@ class SuiteResult:
         appends a ``__reasons__`` array of failed constraint ids to
         the quarantined side (original column set otherwise —
         internal predicate columns are dropped from both sides)."""
-        row_safe = [(f"__c{i}__", cid)
-                    for i, cid in enumerate(self.constraint_ids)]
-        fk_safe = [(f"__fk{i}__", cid)
-                   for i, cid in enumerate(self.fk_constraint_ids)]
+        row_safe = list(zip(self.check_cols, self.constraint_ids))
+        fk_safe = list(zip(self.fk_cols, self.fk_constraint_ids))
         ok = F.col("__pass__")
         if quarantine_fk:
             for col, _cid in fk_safe:
@@ -280,7 +308,8 @@ class ConstraintSuite:
         except Exception:  # pragma: no cover - exotic spec content
             return None
 
-    def _tolerant_passed(self, ids, cnt_for, n_rows):
+    def _tolerant_passed(self, counts: dict[str, Column], n_rows: Column
+                         ) -> Column:
         """The verdict ``passed`` expression under ``spec.tolerances``
         (Great-Expectations ``mostly``): constraint ``c`` is within budget
         when pass_count(c) >= mostly_c * n_rows, evaluated as the EXACT
@@ -291,22 +320,21 @@ class ConstraintSuite:
         is a GATE concept, not row routing; ``split()`` still quarantines
         every failing row.
 
-        ``cnt_for(cid)`` maps a constraint id to its per-partition fail
-        count Column; ``n_rows`` is the partition row count Column."""
+        ``counts`` maps each constraint id to its fail-count Column;
+        ``n_rows`` is the group row count Column."""
         import functools
         import operator
         from fractions import Fraction
 
-        unknown = set(self.spec.tolerances) - set(ids)
+        unknown = set(self.spec.tolerances) - set(counts)
         if unknown:
             raise KeyError(
                 f"tolerances reference unknown row-constraint ids "
-                f"{sorted(unknown)}; known ids: {sorted(ids)} "
+                f"{sorted(unknown)}; known ids: {sorted(counts)} "
                 "(table checks cannot be tolerated — they are not "
                 "verdict constraints)")
         terms = []
-        for cid in ids:
-            cnt = cnt_for(cid)
+        for cid, cnt in counts.items():
             m = self.spec.tolerances.get(cid)
             if m is None:
                 terms.append(cnt == 0)
@@ -318,6 +346,78 @@ class ConstraintSuite:
                 )
         return (functools.reduce(operator.and_, terms)
                 if terms else F.lit(True))
+
+    def kernel(self, df: DataFrame) -> VerdictKernel:
+        """The :class:`VerdictKernel` of ``df``'s compiled plan for this
+        suite's key and tolerances, memoized on the plan: its ~1000 py4j
+        round trips (entries array, counters, verdict map) are paid once
+        per plan, not per call."""
+        plan = self.compile(df)
+        tol_fp = tuple(sorted(
+            (k, str(v)) for k, v in (self.spec.tolerances or {}).items()))
+        dk = ("kernel", self.key, tol_fp)
+        k = plan.derived.get(dk)
+        if k is None:
+            k = plan.derived[dk] = self._build_kernel(plan)
+        return k
+
+    def _build_kernel(self, plan: ConstraintPlan) -> VerdictKernel:
+        import functools
+        import operator
+
+        ids = [cid for cid, _ in plan.predicates]
+        # internal alias per constraint — ids may contain '.', which
+        # Column resolution would read as struct access
+        names = [f"__c{i}__" for i in range(len(ids))]
+        counts = [f"__n{i}__" for i in range(len(ids))]
+        row_entries = [
+            F.when(~F.col(name), F.struct(
+                F.lit(cid).alias("constraint_id"),
+                plan.observed[cid].alias("observed"),
+            ))
+            for name, cid in zip(names, ids)
+        ]
+        entries = F.filter(
+            F.array(*row_entries) if row_entries else F.array().cast(
+                "array<struct<constraint_id:string,observed:string>>"),
+            lambda x: x.isNotNull(),
+        )
+
+        def n_failed(col: str, alias: str) -> Column:
+            return F.sum((~F.coalesce(F.col(col), F.lit(True)))
+                         .cast("long")).alias(alias)
+
+        # a group no counted row reached (run()'s left join) counts zero
+        n_rows = F.col("n_rows")
+        n_fail, *n_cid = (F.coalesce(F.col(c), F.lit(0))
+                          for c in ["n_fail", *counts])
+        fail_map = (
+            F.when(n_fail > 0, F.map_from_arrays(
+                F.array(*[F.lit(cid) for cid in ids]), F.array(*n_cid)))
+            if ids else F.lit(None).cast("map<string,bigint>")
+        )
+        passed = (
+            self._tolerant_passed(dict(zip(ids, n_cid)), n_rows)
+            if self.spec.tolerances else n_fail == 0
+        )
+        return VerdictKernel(
+            ids=ids,
+            names=names,
+            checks=[p.alias(name)
+                    for name, (_, p) in zip(names, plan.predicates)],
+            pass_col=(functools.reduce(operator.and_, map(F.col, names))
+                      if names else F.lit(True)),
+            row_entries=row_entries,
+            entries=entries,
+            doc_id=F.col(self.key).cast("string").alias("doc_id"),
+            n_rows=F.count(F.lit(1)).alias("n_rows"),
+            counters=[n_failed("__pass__", "n_fail"),
+                      *map(n_failed, names, counts)],
+            verdict=[n_rows, n_fail.alias("n_fail"),
+                     fail_map.alias("fail_by_constraint"),
+                     (n_rows - n_fail).alias("n_pass"),
+                     passed.alias("passed")],
+        )
 
     # -- compile ----------------------------------------------------------
     def compile(self, df: DataFrame) -> ConstraintPlan:
@@ -492,7 +592,6 @@ class ConstraintSuite:
                         # a single-element list degrades to the plain column
                         tc["columns"] if "columns" in tc else tc["column"],
                         constraint_id=tc["id"],
-                        salt_buckets=tc.get("salt_buckets"),
                         # rare-duplicates regime: shuffle 8-byte key
                         # hashes instead of the keys (see operators/
                         # uniqueness.py duplicate_keys docstring)
@@ -650,88 +749,17 @@ class ConstraintSuite:
         predicate scan — ZERO violation materialization: no failing-row
         filter branch, no per-row constraint arrays, no explode, no
         persist, nothing row-scaled on the shuffle (each map task emits
-        one partial row per partition key).  Equality with
-        ``run().verdicts`` is pinned by test.
+        one partial row per partition key).  The counters and verdict
+        columns are the kernel's, the same ones ``run()`` aggregates.
 
         This is the batch-gate shape at 10^12 rows: when the decision
         is "ship or quarantine the batch", the violation DETAIL stream
         (the dominant shuffle-write cost of the full pass — the r5→r6
         scaling-gap attribution) never needs to exist.  Run the full
         ``run()`` afterwards on only the partitions that failed."""
-        import functools
-        import operator
-
-        plan = self.compile(df)
-        ids = [cid for cid, _ in plan.predicates]
-        # memoized Column fragments, same discipline as _run_fragments
-        # (the "vc" tag keeps the key space disjoint from run()'s)
-        tol_fp = tuple(sorted(
-            (k, str(v)) for k, v in (self.spec.tolerances or {}).items()))
-        dk = ("vc", partition_col, tol_fp)
-        frag = plan.derived.get(dk)
-        if frag is None:
-            preds = dict(plan.predicates)
-            pass_col = (
-                functools.reduce(operator.and_, [preds[cid] for cid in ids])
-                if ids else F.lit(True)
-            )
-            # a NULL predicate never survives run()'s violation filter
-            # (NULL is not true there), so it counts as non-failing —
-            # coalesce to True, NOT False, to mirror run().verdicts
-            # exactly
-            aggs = [
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum((~F.coalesce(pass_col, F.lit(True)))
-                      .cast("long")).alias("n_fail"),
-                *[
-                    F.sum((~F.coalesce(preds[cid], F.lit(True)))
-                          .cast("long")).alias(f"__n{i}__")
-                    for i, cid in enumerate(ids)
-                ],
-            ]
-            passed = (
-                self._tolerant_passed(
-                    ids,
-                    lambda cid: F.col(f"__n{ids.index(cid)}__"),
-                    F.col("n_rows"),
-                )
-                if self.spec.tolerances
-                else F.col("n_fail") == 0
-            )
-            fail_map = (
-                # run() leaves the map NULL when no row failed (its
-                # left join finds no fail_counts row) — mirror that
-                F.when(
-                    F.col("n_fail") > 0,
-                    F.map_from_arrays(
-                        F.array(*[F.lit(cid) for cid in ids]),
-                        F.array(*[F.col(f"__n{i}__")
-                                  for i in range(len(ids))]),
-                    ),
-                )
-                if ids
-                else F.lit(None).cast("map<string,bigint>")
-            ).alias("fail_by_constraint")
-            part = (F.col(partition_col) if partition_col
-                    else F.lit("__all__"))
-            frag = {
-                "part": part, "aggs": aggs,
-                "fail_map": fail_map,
-                "n_pass": (F.col("n_rows") - F.col("n_fail"))
-                .alias("n_pass"),
-                "passed": passed.alias("passed"),
-            }
-            plan.derived[dk] = frag
-        agged = df.groupBy(frag["part"].alias("partition")).agg(
-            *frag["aggs"])
-        return agged.select(
-            "partition",
-            "n_rows",
-            "n_fail",
-            frag["fail_map"],
-            frag["n_pass"],
-            frag["passed"],
-        )
+        k = self.kernel(df)
+        part = F.col(partition_col) if partition_col else F.lit("__all__")
+        return k.verdicts(k.project(df), part, "partition")
 
     def row_only(self) -> "ConstraintSuite":
         """A copy of this suite with the dataset-level checks stripped —
@@ -746,111 +774,6 @@ class ConstraintSuite:
         s = ConstraintSuite(spec, key=self.key)
         s.registry = self.registry
         return s
-
-    def _run_fragments(
-        self, plan: ConstraintPlan, ids: list[str], safe: dict[str, str],
-        partition_col: str | None,
-    ) -> _RunFragments:
-        """Build (or fetch) the per-run Column fragments for this plan.
-
-        cProfile on the r7 flagship put ~0.3-0.4 s of every run() call in
-        assembling these Columns (entries array, exists-counters, verdict
-        map — ~1000 py4j round trips); they are pure functions of the
-        CACHED plan plus (key, partition_col, tolerances), so they are
-        memoized on the plan with exactly that key.  Data-dependent
-        Columns (the folded-fk isin over a collected dim) are NOT here —
-        run() rebuilds those every call."""
-        import functools
-        import operator
-
-        tol_fp = tuple(sorted(
-            (k, str(v)) for k, v in (self.spec.tolerances or {}).items()))
-        dk = (self.key, partition_col, tol_fp)
-        frag = plan.derived.get(dk)
-        if frag is not None:
-            return frag
-
-        pred_aliases = [p.alias(safe[cid]) for cid, p in plan.predicates]
-        pass_col = (
-            functools.reduce(
-                operator.and_, [F.col(safe[cid]) for cid in ids]
-            )
-            if ids
-            else F.lit(True)
-        )
-        row_entries = [
-            F.when(
-                ~F.col(safe[cid]),
-                F.struct(
-                    F.lit(cid).alias("constraint_id"),
-                    plan.observed[cid].alias("observed"),
-                ),
-            )
-            for cid in ids
-        ]
-        entries_nofk = F.filter(
-            F.array(*row_entries)
-            if row_entries
-            else F.array().cast(
-                "array<struct<constraint_id:string,observed:string>>"
-            ),
-            lambda x: x.isNotNull(),
-        )
-        part = F.col(partition_col) if partition_col else F.lit("__all__")
-
-        # ONE parsed expr string per constraint where the id is
-        # literal-safe: pyspark's F.exists builds its lambda via ~30 py4j
-        # round trips each, which cProfile put at ~0.3 s of driver time
-        # per run() at 10 constraints (r7); the parsed form is the same
-        # expression.
-        def _cid_count(cid: str) -> Column:
-            if "'" not in cid and "\\" not in cid:
-                ex = F.expr(f"exists(entries, e -> e.constraint_id = '{cid}')")
-            else:  # ids with quote/escape chars keep the lambda builder
-                ex = F.exists(
-                    "entries", lambda e: e.getField("constraint_id") == cid)
-            return F.sum(ex.cast("long")).alias(f"__n{ids.index(cid)}__")
-
-        fail_map_col = (
-            F.map_from_arrays(
-                F.array(*[F.lit(cid) for cid in ids]),
-                F.array(*[F.col(f"__n{i}__") for i in range(len(ids))]),
-            ).alias("fail_by_constraint")
-            if ids
-            else F.lit(None)
-            .cast("map<string,bigint>")
-            .alias("fail_by_constraint")
-        )
-        verdict_passed = (
-            # per-constraint budget gate; the NULL map (no failing rows in
-            # the partition) coalesces to all-zero counts
-            self._tolerant_passed(
-                ids,
-                lambda cid: F.coalesce(
-                    F.element_at("fail_by_constraint", F.lit(cid)),
-                    F.lit(0),
-                ),
-                F.col("n_rows"),
-            )
-            if self.spec.tolerances
-            else F.col("n_fail") == 0
-        )
-        frag = _RunFragments(
-            pred_aliases=pred_aliases,
-            pass_col=pass_col,
-            row_entries=row_entries,
-            entries_nofk=entries_nofk,
-            doc_id_col=F.col(self.key).cast("string").alias("doc_id"),
-            part_col=part,
-            rowfail_col=(~F.col("__pass__")).alias("__rowfail__"),
-            nfail_agg=F.sum(
-                F.col("__rowfail__").cast("long")).alias("n_fail"),
-            cid_counts=[_cid_count(cid) for cid in ids],
-            fail_map_col=fail_map_col,
-            verdict_passed=verdict_passed,
-        )
-        plan.derived[dk] = frag
-        return frag
 
     # -- run --------------------------------------------------------------
     def run(
@@ -873,12 +796,7 @@ class ConstraintSuite:
         ``persist_violations`` the row-violation DF is persisted
         (MEMORY_AND_DISK) so violations + verdicts together still cost one
         predicate pass."""
-        plan = self.compile(df)
-        ids = [cid for cid, _ in plan.predicates]
-        # internal alias per constraint — ids may contain '.', which Column
-        # resolution would read as struct access
-        safe = {cid: f"__c{i}__" for i, cid in enumerate(ids)}
-        frag = self._run_fragments(plan, ids, safe, partition_col)
+        k = self.kernel(df)
 
         import functools
         import operator
@@ -925,14 +843,10 @@ class ConstraintSuite:
                 (tc["id"], ok, F.col(tc["column"]).cast("string")))
             fk_folded_ids.add(tc["id"])
 
-        part = frag.part_col
-        fk_safe = {cid: f"__fk{i}__" for i, (cid, _, _) in
-                   enumerate(fk_folded)}
-        checked = df.select(
-            "*",
-            *frag.pred_aliases,
-            *[ok.alias(fk_safe[cid]) for cid, ok, _ in fk_folded],
-        ).withColumn("__pass__", frag.pass_col)
+        part = F.col(partition_col) if partition_col else F.lit("__all__")
+        fk_cols = [f"__fk{i}__" for i in range(len(fk_folded))]
+        checked = k.project(df, *[
+            ok.alias(col) for col, (_, ok, _) in zip(fk_cols, fk_folded)])
 
         # violations: one row per FAILING source row with the array of its
         # failed constraints (kept un-exploded so row identity survives —
@@ -941,36 +855,32 @@ class ConstraintSuite:
         # exploded per-constraint view and the per-partition counts all
         # derive from this one DF.  The fk entries embed this run's
         # collected dim values, so the combined array is rebuilt whenever
-        # a folded fk is present; without one the cached fragment is the
+        # a folded fk is present; without one the kernel's array is the
         # identical expression.
         if fk_folded:
-            entries = frag.row_entries + [
-                F.when(
-                    ~F.col(fk_safe[cid]),
-                    F.struct(
-                        F.lit(cid).alias("constraint_id"),
-                        obs.alias("observed"),
-                    ),
-                )
-                for cid, _ok, obs in fk_folded
-            ]
-            entries_col = F.filter(
-                F.array(*entries), lambda x: x.isNotNull())
+            entries = F.filter(F.array(*k.row_entries, *[
+                F.when(~F.col(col), F.struct(
+                    F.lit(cid).alias("constraint_id"),
+                    obs.alias("observed"),
+                ))
+                for col, (cid, _ok, obs) in zip(fk_cols, fk_folded)
+            ]), lambda x: x.isNotNull())
         else:
-            entries_col = frag.entries_nofk
-        # rows are emitted when ANY row constraint OR folded fk fails;
-        # __rowfail__ preserves the verdict semantics (fk failures are
-        # table-check violations, never verdict fail counts)
+            entries = k.entries
+        # rows are emitted when ANY row constraint OR folded fk fails; a
+        # row emitted only for a folded fk has __pass__ true and adds 0 to
+        # every kernel counter (fk failures are table-check violations,
+        # never verdict fail counts)
         emit = functools.reduce(
             operator.or_,
-            [~F.col("__pass__")]
-            + [~F.col(fk_safe[cid]) for cid, _, _ in fk_folded],
+            [~F.col("__pass__")] + [~F.col(col) for col in fk_cols],
         )
         failed_rows = checked.filter(emit).select(
-            frag.doc_id_col,
+            k.doc_id,
             part.alias("__part__"),
-            frag.rowfail_col,
-            entries_col.alias("entries"),
+            "__pass__",
+            *k.names,
+            entries.alias("entries"),
         )
         if persist_violations:
             from pyspark import StorageLevel
@@ -993,34 +903,19 @@ class ConstraintSuite:
             violations = violations.unionByName(v)
 
         # verdicts WITHOUT re-running predicates: row counts come from a
-        # single-column scan; fail counts and the per-constraint breakdown
-        # come from the (small) violations set
-        row_counts = df.groupBy(part.alias("partition")).agg(
-            F.count(F.lit(1)).alias("n_rows")
-        )
-        # ONE aggregation over failed_rows yields both the row fail count
-        # and the per-constraint breakdown (one sum(exists(...)) per
-        # constraint — the plan prunes to nothing extra, and the predicate
-        # pass is not re-run a second time for the map).  The aggregate
-        # and verdict-map Columns come from the cached fragments.
+        # single-column scan; the kernel's counters aggregate the (small)
+        # failing-row set, which carries the predicate booleans.  A
+        # partition with no failing rows finds no counts row: all zero.
+        row_counts = df.groupBy(part.alias("partition")).agg(k.n_rows)
         fail_counts = failed_rows.groupBy(
-            F.col("__part__").alias("partition")
-        ).agg(
-            # only ROW-constraint failures count toward verdicts — a row
-            # emitted purely for a folded fk violation has __rowfail__
-            # False and contributes nothing here
-            frag.nfail_agg,
-            *frag.cid_counts,
-        ).select("partition", "n_fail", frag.fail_map_col)
-        verdicts = (
-            row_counts.join(fail_counts, "partition", "left")
-            .withColumn("n_fail", F.coalesce(F.col("n_fail"), F.lit(0)))
-            .withColumn("n_pass", F.col("n_rows") - F.col("n_fail"))
-            .withColumn("passed", frag.verdict_passed)
-        )
+            F.col("__part__").alias("partition")).agg(*k.counters)
+        verdicts = row_counts.join(fail_counts, "partition", "left").select(
+            "partition", *k.verdict)
 
         return SuiteResult(
-            checked, violations, verdicts, ids,
+            checked, violations, verdicts, k.ids,
             row_violations=failed_rows if persist_violations else None,
             fk_constraint_ids=[cid for cid, _, _ in fk_folded],
+            check_cols=k.names,
+            fk_cols=fk_cols,
         )

@@ -53,8 +53,7 @@ from pyspark.sql import Column, functions as F, types as T
 
 from go_jsonschema_spark.compile import CompileError, compile_predicate
 
-__all__ = ["json_schema_struct", "json_column_predicate_native",
-           "json_column_predicate_auto"]
+__all__ = ["json_column_predicate_native", "json_column_predicate_auto"]
 
 _CORRUPT = "__corrupt__"
 _KEY_RE = re.compile(r"^[A-Za-z0-9_]+$")
@@ -195,15 +194,6 @@ def _object_struct(
 
             conjuncts.append(lifted)
     return T.StructType(fields), conjuncts
-
-
-def json_schema_struct(schema: Any) -> T.StructType:
-    """Spark StructType derived from a static object schema (or
-    CompileError when the schema needs the dynamic path)."""
-    if not isinstance(schema, dict):
-        raise CompileError("boolean/invalid schema — UDF path")
-    st, _ = _object_struct(schema, "$")
-    return st
 
 
 def json_column_predicate_native(

@@ -14,9 +14,7 @@ __all__ = [
     "token_count",
     "word_shingles",
     "dup_ngram_metrics",
-    "char_ngrams",
     "punct_ratio",
-    "stopword_ratio",
     "quality_score",
     "gopher_metrics",
     "lang_id",
@@ -107,31 +105,12 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     )
 
 
-def char_ngrams(text: Column, n: int = 4) -> Column:
-    """Character n-grams of the lowercased text, deduplicated."""
-    t = F.lower(text)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(t) - (n - 1), F.lit(1))),
-            lambda i: F.substring(t, i, n),
-        )
-    )
-
-
 def punct_ratio(text: Column) -> Column:
     """Fraction of characters that are punctuation."""
     cleaned = F.regexp_replace(text, r"[^\p{Punct}]", "")
     return F.when(F.length(text) == 0, F.lit(0.0)).otherwise(
         F.length(cleaned) / F.length(text)
     )
-
-
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    """Fraction of words that are stopwords of ``lang``."""
-    w = words(text)
-    sw = F.array(*[F.lit(s) for s in LANG_STOPWORDS[lang]])
-    hits = F.size(F.filter(w, lambda x: F.array_contains(sw, x)))
-    return F.when(F.size(w) == 0, F.lit(0.0)).otherwise(hits / F.size(w))
 
 
 def quality_score(text: Column) -> Column:

@@ -611,11 +611,6 @@ def duplicate_clusters(
 
     Two engines, picked by ``algorithm``:
 
-    * ``"label"`` — min-label propagation with pointer jumping: each round
-      a vertex takes the minimum label among itself and its neighbors,
-      then compresses one level (``lbl ← label[lbl]``), turning
-      diameter-bound convergence into O(log n) rounds.  Every round
-      shuffles the FULL edge set twice — fine when the pair list is small.
     * ``"star"`` — alternating large-star/small-star (Kiveris et al.,
       "Connected Components in MapReduce and Beyond", SoCC'14): the edge
       set itself contracts toward a star forest, so per-round shuffle
@@ -628,15 +623,20 @@ def duplicate_clusters(
     * ``"auto"`` — one ``count()`` on the pair list, then ``"star"`` at or
       above ``star_threshold`` pairs, ``"local"`` below.
 
-    Both produce identical labels (pytest-verified on hub/chain/random
-    graphs + the same DuckDB recursive-CTE oracle).
+    Any other ``algorithm`` raises ``ValueError``.  Both engines produce
+    identical labels (pytest-verified on hub/chain/random graphs + the
+    same DuckDB recursive-CTE oracle).
 
     Scale notes: each round ``localCheckpoint``s to cut the growing
     lineage (without it the plan doubles per round and the DRIVER becomes
-    the bottleneck); convergence is detected on a count of the CHANGED /
-    difference set only.  ``stats_out`` (optional dict) receives
+    the bottleneck); convergence is detected on a count of the edge-set
+    difference only.  ``stats_out`` (optional dict) receives
     ``{"algorithm", "rounds"}`` for round-count measurement."""
-    if algorithm in ("auto", "star", "label"):
+    if algorithm not in ("auto", "star", "local"):
+        raise ValueError(
+            f"duplicate_clusters: algorithm must be 'auto', 'star' or "
+            f"'local', got {algorithm!r}")
+    if algorithm in ("auto", "star"):
         # materialize the pair plan ONCE.  The upstream plan is typically
         # the expensive LSH candidate self-join; without this the auto
         # count() plus the chosen engine's own consumption re-evaluate it
@@ -657,59 +657,8 @@ def duplicate_clusters(
     if algorithm == "local":
         return _clusters_local(pairs, a_col=a_col, b_col=b_col,
                                stats_out=stats_out)
-    if algorithm == "star":
-        return _clusters_star(pairs, a_col=a_col, b_col=b_col,
-                              max_iter=max_iter, stats_out=stats_out)
-    edges = (
-        pairs.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
-        .unionByName(
-            pairs.select(F.col(b_col).alias("x"), F.col(a_col).alias("y"))
-        )
-        .distinct()
-    )
-    labels = (
-        edges.select(F.col("x").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("lbl"))
-        .localCheckpoint()
-    )
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        neigh = (
-            edges.join(labels, edges.y == labels.id)
-            .groupBy("x")
-            .agg(F.min("lbl").alias("nl"))
-        )
-        cand = labels.join(neigh, labels.id == neigh.x, "left").select(
-            "id",
-            F.least(
-                F.col("lbl"), F.coalesce(F.col("nl"), F.col("lbl"))
-            ).alias("clbl"),
-            F.col("lbl").alias("olbl"),
-        )
-        # pointer jumping: follow the candidate label one more level
-        # (label-of-label) so chains halve every round
-        ptr = cand.select(
-            F.col("id").alias("pid"), F.col("clbl").alias("plbl")
-        )
-        new_labels = (
-            cand.join(ptr, cand.clbl == ptr.pid, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("clbl"), F.coalesce(F.col("plbl"), F.col("clbl"))
-                ).alias("nlbl"),
-                "olbl",
-            )
-        ).localCheckpoint()
-        changed = new_labels.filter(F.col("nlbl") != F.col("olbl")).count()
-        labels = new_labels.select("id", F.col("nlbl").alias("lbl"))
-        if changed == 0:
-            break
-    if stats_out is not None:
-        stats_out["rounds"] = rounds
-    return labels.select("id", F.col("lbl").alias("cluster"))
+    return _clusters_star(pairs, a_col=a_col, b_col=b_col,
+                          max_iter=max_iter, stats_out=stats_out)
 
 
 def _clusters_local(
@@ -778,9 +727,7 @@ def _clusters_star(
     exact: the distinct edge set is compared round-over-round (count +
     one-sided exceptAll — both sets are distinct, so equal counts plus an
     empty difference imply equality).  Per-round shuffle volume tracks the
-    CURRENT edge set, which contracts as components collapse — unlike
-    label propagation, which drags the full original edge list through
-    every round."""
+    CURRENT edge set, which contracts as components collapse."""
     ids = (
         pairs.select(F.col(a_col).alias("id"))
         .unionByName(pairs.select(F.col(b_col).alias("id")))

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from go_jsonschema_spark.operators.drift import ks_statistic, psi
 
-__all__ = ["grouped_drift", "grouped_check"]
+__all__ = ["grouped_drift"]
 
 
 def grouped_drift(
@@ -64,12 +64,3 @@ def grouped_drift(
 
     out_schema = "group string, n long, psi double, ks double, passed boolean"
     return hist.groupBy(group_col).applyInPandas(check, out_schema)
-
-
-def grouped_check(
-    df: DataFrame, group_col: str, fn, out_schema: str
-) -> DataFrame:
-    """Generic whole-group check: ``fn(pdf) -> pdf`` gets each group's rows
-    as one pandas DataFrame (applyInPandas; groups must fit an executor —
-    pre-aggregate first when they don't, as grouped_drift does)."""
-    return df.groupBy(group_col).applyInPandas(fn, out_schema)

@@ -1,26 +1,21 @@
-"""Cross-row uniqueness with explicit skew handling.
+"""Cross-row uniqueness of a key column (or composite key).
 
 The reference's ``uniqueItems`` is intra-array only (validate_unique.go);
 the north star demands global uniqueness of ``doc_id`` over 10^12 rows with
-a hot key duplicated on ~5% of rows.  Strategy (SURVEY.md §4.3):
-
-1. **Salted partial count** — group by ``(key, salt)`` where salt spreads a
-   hot key over S reducers, so no single reducer receives 5% of the table.
-   Spark's hash aggregation is already partial+final (map-side combine), so
-   the salt matters for the *reduce* side distribution of distinct keys —
-   i.e. when one key's pre-combined partial rows would still swamp one task.
-2. **Final count** — re-aggregate the partial counts by ``key`` alone; at
-   most S rows per key arrive, tiny.
-3. Optional HLL pre-check: ``approx_count_distinct(key) ≈ count(*)`` means
-   duplicates are rare → the exact pass confirms.
+a hot key duplicated on ~5% of rows.  Strategy (SURVEY.md §4.3): ONE count
+aggregation per key.  Spark's hash aggregation is partial+final, so a hot
+key collapses to one partial row per map task before the shuffle and no
+reducer ever receives 5% of the table — the skew is absorbed map-side.
+For the mostly-unique regime (duplicates are rare defects),
+``hash_compact`` shuffles fixed-width key hashes instead of the keys and
+confirms the few candidate hashes exactly (see :func:`duplicate_keys`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ["duplicate_keys", "uniqueness_violations", "approx_unique_ratio",
-           "compact_latest"]
+__all__ = ["duplicate_keys", "uniqueness_violations", "compact_latest"]
 
 
 def _key_col(key: str | list[str]):
@@ -37,8 +32,7 @@ def _key_col(key: str | list[str]):
 
 
 def duplicate_keys(
-    df: DataFrame, key: str | list[str], *, salt_buckets: int | None = None,
-    hash_compact: bool = False,
+    df: DataFrame, key: str | list[str], *, hash_compact: bool = False,
 ) -> DataFrame:
     """Keys occurring more than once, with their counts: ``(key, n_dup)``.
     ``key`` may be one column name or a list (composite key → struct).
@@ -47,13 +41,9 @@ def duplicate_keys(
     Spark's hash aggregation is partial+final, so a hot key collapses to
     ONE partial row per map task before the shuffle — the reduce side
     receives at most #map-tasks rows for it, never 5% of the table.
-    Explicit salting (``salt_buckets=N``: phase 1 on ``(key, salt)``,
-    phase 2 re-aggregating per key) pays a SECOND full shuffle of the
-    distinct-key set, which an interleaved A/B at 16M rows measured at
-    1.8× the single-phase cost (2.80 s vs 1.56 s, identical output).
-    Reach for the salt only when partial aggregation cannot reduce
-    map-side — high-cardinality intermediate state per key
-    (``collect_list``, exact distinct), not ``count``.
+    There is deliberately no salted two-phase variant: its second
+    shuffle of the distinct-key set measured 1.8× the single-phase cost
+    at 16M rows, with identical output.
 
     ``hash_compact=True`` is the MOSTLY-UNIQUE-keys path (validation's
     regime: duplicate doc_ids are rare defects, not the norm).  The big
@@ -70,10 +60,6 @@ def duplicate_keys(
     set and the join-back degrades to a second full shuffle."""
     kcol, _ = _key_col(key)
     if hash_compact:
-        if salt_buckets:
-            raise ValueError(
-                "duplicate_keys: hash_compact and salt_buckets are "
-                "alternative shuffle strategies; pick one")
         h = F.xxhash64(kcol)
         cand = (
             df.select(h.alias("__h__"))
@@ -89,22 +75,6 @@ def duplicate_keys(
             .agg(F.count(F.lit(1)).alias("n_dup"))
             .filter(F.col("n_dup") > 1)
         )
-    if salt_buckets:
-        salted = df.select(
-            kcol.alias("key"),
-            F.pmod(
-                F.xxhash64(F.monotonically_increasing_id()),
-                F.lit(salt_buckets),
-            ).alias("__salt__"),
-        )
-        partial = salted.groupBy("key", "__salt__").agg(
-            F.count(F.lit(1)).alias("__c__")
-        )
-        return (
-            partial.groupBy("key")
-            .agg(F.sum("__c__").alias("n_dup"))
-            .filter(F.col("n_dup") > 1)
-        )
     return (
         df.select(kcol.alias("key"))
         .groupBy("key")
@@ -115,15 +85,14 @@ def duplicate_keys(
 
 def uniqueness_violations(
     df: DataFrame, key: str | list[str], *, constraint_id: str | None = None,
-    salt_buckets: int | None = None, hash_compact: bool = False,
+    hash_compact: bool = False,
 ) -> DataFrame:
     """Violation rows ``(doc_id, constraint_id, observed)`` for duplicate
     keys — ``observed`` is the duplicate count as a string.  Composite keys
     serialize as JSON so the violation row stays one string column."""
     kcol, kname = _key_col(key)
     cid = constraint_id or f"unique:{kname}"
-    dups = duplicate_keys(df, key, salt_buckets=salt_buckets,
-                          hash_compact=hash_compact)
+    dups = duplicate_keys(df, key, hash_compact=hash_compact)
     doc_id = (
         F.to_json(F.col("key"))
         if isinstance(key, list) and len(key) > 1
@@ -133,17 +102,6 @@ def uniqueness_violations(
         doc_id.alias("doc_id"),
         F.lit(cid).alias("constraint_id"),
         F.concat(F.lit("count="), F.col("n_dup").cast("string")).alias("observed"),
-    )
-
-
-def approx_unique_ratio(df: DataFrame, key: str) -> DataFrame:
-    """Cheap HLL++ pre-check: ``approx_distinct / count`` — a ratio ≈ 1.0
-    means duplicates are rare and the exact pass is mostly confirmatory
-    (SURVEY.md §2.8)."""
-    return df.agg(
-        F.count(key).alias("n"),
-        F.approx_count_distinct(key).alias("n_distinct_approx"),
-        (F.approx_count_distinct(key) / F.count(key)).alias("unique_ratio"),
     )
 
 

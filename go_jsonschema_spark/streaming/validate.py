@@ -3,11 +3,17 @@
 The row predicates compiled by compile.py are STATELESS Column expressions,
 so they apply to a streaming DataFrame unchanged — the one engine serves
 batch and streaming (the reference has no streaming at all, SURVEY.md
-§2.8; this is a north-star addition built on Structured Streaming).
+§2.8; this is a north-star addition built on Structured Streaming).  The
+row-check functions below are the engine's ``VerdictKernel`` under a
+streaming grouping; none builds predicate, entry or counter columns of
+its own, so stream and batch verdicts agree by construction.
 
-* :func:`stream_violations` — per-record violations stream (append mode).
-* :func:`windowed_verdicts` — event-time-windowed pass/fail aggregation
-  with a watermark for late data.
+* :func:`stream_violations` — per-record violations stream (append mode):
+  ``run().violations`` of the row-only suite.
+* :func:`windowed_verdicts` — event-time-windowed verdicts with a
+  watermark for late data: the kernel grouped by ``window(ts)``.
+* :func:`stateful_group_verdicts` — running per-group counters of the
+  kernel's ``__pass__`` across micro-batches.
 
 Dataset-level checks over unbounded input need key-scoped state:
 
@@ -34,48 +40,12 @@ from pyspark.sql import DataFrame, functions as F
 from go_jsonschema_spark.engine import ConstraintSuite
 
 
-def _checked(suite: ConstraintSuite, stream: DataFrame):
-    plan = suite.compile(stream)
-    ids = [cid for cid, _ in plan.predicates]
-    safe = {cid: f"__c{i}__" for i, cid in enumerate(ids)}
-    out = stream.select(
-        "*", *[p.alias(safe[cid]) for cid, p in plan.predicates]
-    )
-    import functools
-    import operator
-
-    pass_col = (
-        functools.reduce(operator.and_, [F.col(safe[cid]) for cid in ids])
-        if ids
-        else F.lit(True)
-    )
-    return out.withColumn("__pass__", pass_col), plan, ids, safe
-
-
 def stream_violations(suite: ConstraintSuite, stream: DataFrame) -> DataFrame:
     """Append-mode violations stream ``(doc_id, constraint_id, observed)``
-    — attach ``.writeStream`` to sink it."""
-    checked, plan, ids, safe = _checked(suite, stream)
-    entries = [
-        F.when(
-            ~F.col(safe[cid]),
-            F.struct(
-                F.lit(cid).alias("constraint_id"),
-                plan.observed[cid].alias("observed"),
-            ),
-        )
-        for cid in ids
-    ]
-    return (
-        checked.filter(~F.col("__pass__"))
-        .select(
-            F.col(suite.key).cast("string").alias("doc_id"),
-            F.explode(
-                F.filter(F.array(*entries), lambda x: x.isNotNull())
-            ).alias("v"),
-        )
-        .select("doc_id", "v.constraint_id", "v.observed")
-    )
+    — attach ``.writeStream`` to sink it.  Row checks only: the
+    dataset-level checks need the whole table (see the module docstring
+    for their streaming forms)."""
+    return suite.row_only().run(stream).violations
 
 
 def stream_fk_violations(
@@ -120,8 +90,10 @@ def stateful_group_verdicts(
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    checked, _, _, _ = _checked(suite, stream)
-    slim = checked.select(group_col, F.col("__pass__").alias("ok"))
+    checked = suite.kernel(stream).project(stream)
+    # a NULL __pass__ counts as passing, as in every kernel counter
+    slim = checked.select(
+        group_col, F.coalesce("__pass__", F.lit(True)).alias("ok"))
 
     def update(key, pdfs, state: GroupState):
         n_rows, n_fail = state.get if state.exists else (0, 0)
@@ -139,55 +111,6 @@ def stateful_group_verdicts(
         stateStructType="n_rows long, n_fail long",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stateful_group_verdicts_tws(
-    suite: ConstraintSuite, stream: DataFrame, *, group_col: str
-) -> DataFrame:
-    """Running per-group verdict counters via ``transformWithStateInPandas``
-    — the Spark 4 stateful-processor API (successor of
-    applyInPandasWithState: multiple named state variables, timers, state
-    TTL; requires the RocksDB state store provider:
-    ``spark.sql.streaming.stateStore.providerClass =
-    ...RocksDBStateStoreProvider`` AND the ``protobuf`` Python package —
-    absent in this sandbox, so the gated test skips and
-    :func:`stateful_group_verdicts` is the working fallback).  Output
-    mirrors :func:`stateful_group_verdicts`."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle,
-    )
-
-    checked, _, _, _ = _checked(suite, stream)
-    slim = checked.select(group_col, F.col("__pass__").alias("ok"))
-
-    class Counters(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._counts = handle.getValueState(
-                "counts", "n_rows long, n_fail long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n_rows, n_fail = (
-                self._counts.get() if self._counts.exists() else (0, 0)
-            )
-            for pdf in rows:
-                n_rows += len(pdf)
-                n_fail += int((~pdf["ok"]).sum())
-            self._counts.update((n_rows, n_fail))
-            yield pd.DataFrame(
-                {"group": [key[0]], "n_rows": [n_rows], "n_fail": [n_fail]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return slim.groupBy(group_col).transformWithStateInPandas(
-        statefulProcessor=Counters(),
-        outputStructType="group string, n_rows long, n_fail long",
-        outputMode="Update",
-        timeMode="None",
     )
 
 
@@ -291,53 +214,21 @@ def windowed_verdicts(
     ts_col: str,
     window: str = "5 minutes",
     watermark: str = "10 minutes",
-    with_passed: bool = False,
 ) -> DataFrame:
-    """Event-time-windowed verdict counts with late-data watermark:
-    ``(window, n_rows, n_pass, n_fail)`` in append mode once the watermark
-    passes — the streaming analogue of per-partition verdicts.
-
-    ``with_passed=True`` appends a per-window ``passed`` gate computed
-    with the SAME rule as batch verdicts — strict (zero failures) by
-    default, per-constraint ``spec.tolerances`` budgets when declared
-    (the exact-integer ``mostly`` rule; one extra sum per constraint in
-    the same windowed aggregation, no second pass).  Off by default to
-    keep the established output schema."""
-    checked, _, ids, safe = _checked(suite, stream)
+    """Event-time-windowed verdicts with late-data watermark:
+    ``(window, n_rows, n_fail, fail_by_constraint, n_pass, passed)`` in
+    append mode once the watermark passes — the streaming analogue of
+    per-partition verdicts, from the same kernel counters and gate
+    (strict, or ``spec.tolerances`` budgets) in ONE windowed aggregation."""
+    k = suite.kernel(stream)
+    checked = k.project(stream)
     # watermarks need TIMESTAMP (with zone); parquet often stores NTZ
     ts_field = dict((f.name, f.dataType.simpleString())
                     for f in stream.schema.fields).get(ts_col)
     if ts_field == "timestamp_ntz":
         checked = checked.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    aggs = [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("__pass__").cast("long")).alias("n_pass"),
-        F.sum((~F.col("__pass__")).cast("long")).alias("n_fail"),
-    ]
-    if with_passed:
-        aggs += [
-            F.sum((~F.coalesce(F.col(safe[cid]), F.lit(True)))
-                  .cast("long")).alias(f"__n{i}__")
-            for i, cid in enumerate(ids)
-        ]
-    out = (
-        checked.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window))
-        .agg(*aggs)
-    )
-    if with_passed:
-        passed = (
-            suite._tolerant_passed(
-                ids,
-                lambda cid: F.col(f"__n{ids.index(cid)}__"),
-                F.col("n_rows"),
-            )
-            if suite.spec.tolerances
-            else F.col("n_fail") == 0
-        )
-        out = out.withColumn("passed", passed).drop(
-            *[f"__n{i}__" for i in range(len(ids))])
-    return out
+    return k.verdicts(checked.withWatermark(ts_col, watermark),
+                      F.window(F.col(ts_col), window), "window")
 
 
 def stream_sessions(

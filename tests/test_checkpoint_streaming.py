@@ -179,62 +179,6 @@ def test_streaming_violations_and_verdicts(spark, tmp_path):
     assert row["f"] == want
 
 
-def test_stateful_group_verdicts_tws(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 StatefulProcessor): same
-    running-counter semantics as the applyInPandasWithState variant.
-    Needs the RocksDB state store provider — skip cleanly if the runtime
-    lacks it."""
-    import pytest
-
-    from go_jsonschema_spark.spec import TableSpec
-    from go_jsonschema_spark.streaming.validate import (
-        stateful_group_verdicts_tws,
-    )
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = str(tmp_path / "tws_src")
-    events.write.mode("overwrite").parquet(src)
-    ts = TableSpec(columns={"value": {"type": "number", "maximum": 100}})
-    suite = ConstraintSuite(ts, key="event_id")
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    out = stateful_group_verdicts_tws(suite, stream, group_col="event_type")
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            out.writeStream.format("memory").queryName("tws_out")
-            .outputMode("update").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-    except Exception as e:  # pragma: no cover - env-specific
-        pytest.skip(f"transformWithStateInPandas unavailable: {e}")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-    got = {
-        r["group"]: (r["n_rows"], r["n_fail"])
-        for r in spark.sql("SELECT * FROM tws_out").collect()
-    }
-    want = {
-        r["event_type"]: (r["n"], r["nf"])
-        for r in events.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("value") > 100).cast("long")).alias("nf"),
-        ).collect()
-    }
-    assert got == want
-
-
 def test_stream_fk_violations(spark, tmp_path):
     """Stream-static broadcast anti-join: streaming rows missing from the
     static dimension surface as violations, matching the batch check."""

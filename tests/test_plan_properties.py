@@ -48,9 +48,6 @@ def test_uniqueness_single_shuffle_and_pruned(spark, seq_parquet):
     # cost); scan reads only the key column
     assert plan.count("Exchange (") == 1
     assert "struct<doc_id:string>" in plan
-    # opt-in salted form for aggs without map-side reduction: two phases
-    salted = _plan(duplicate_keys(seq_parquet, "doc_id", salt_buckets=64))
-    assert salted.count("Exchange (") >= 2
 
 
 def test_verdict_rowcount_scan_is_single_column(spark, seq_parquet):

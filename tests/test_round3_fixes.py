@@ -196,14 +196,19 @@ def _cc_reference(edges):
     + [(20 + i, 20 + (i + 1) % 7) for i in range(7)],
 ])
 def test_star_and_label_clusters_agree(spark, edges):
+    """Both engines equal union-find ground truth; any other algorithm
+    name, including the label-propagation one, raises."""
     from go_jsonschema_spark.operators.dedup import duplicate_clusters
 
     pairs = spark.createDataFrame(edges, "a int, b int")
     want = _cc_reference(edges)
-    for algo in ("label", "star", "local"):
+    for algo in ("star", "local"):
         got = {r["id"]: r["cluster"] for r in duplicate_clusters(
             pairs, algorithm=algo).collect()}
         assert got == want, algo
+    for algo in ("label", "nope"):
+        with pytest.raises(ValueError, match="algorithm must be"):
+            duplicate_clusters(pairs, algorithm=algo)
 
 
 def test_star_clusters_random_graphs_hypothesis(spark):

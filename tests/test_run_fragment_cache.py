@@ -1,9 +1,9 @@
-"""run()-fragment caching (round 7): derived Columns are memoized on the
-cached ConstraintPlan keyed by (key, partition_col, tolerances).  Two
+"""Verdict-kernel caching: the kernel's derived Columns are memoized on
+the cached ConstraintPlan keyed by ("kernel", key, tolerances).  Two
 suites whose specs differ ONLY in fields outside the plan fingerprint
 (tolerances, key) share one cached plan — these tests pin that the
-fragment memo cannot leak verdict gates or doc_id columns across them,
-and that repeated run() calls reuse fragments without changing results.
+kernel memo cannot leak verdict gates or doc_id columns across them,
+and that repeated run() calls reuse the kernel without changing results.
 """
 
 from __future__ import annotations
@@ -81,11 +81,16 @@ def test_repeated_runs_hit_fragment_memo_with_identical_results(spark):
     suite = ConstraintSuite(_spec(), key="doc_id")
     r1 = suite.run(df, partition_col="part")
     plan = suite.compile(df)
-    dk = ("doc_id", "part", ())  # (key, partition_col, tolerances)
-    frag = plan.derived[dk]  # fragments memoized on first run
-    assert isinstance(frag, eng._RunFragments)
+    dk = ("kernel", "doc_id", ())  # ("kernel", key, tolerances)
+    frag = plan.derived[dk]  # kernel memoized on first run
+    assert isinstance(frag, eng.VerdictKernel)
+    # verdict_counts and a whole-table run() reuse the same kernel
+    memo = list(plan.derived)
+    suite.verdict_counts(df, partition_col="part")
+    suite.run(df)
+    assert list(plan.derived) == memo and plan.derived[dk] is frag
 
-    # a fresh suite with identical content reuses plan AND fragments
+    # a fresh suite with identical content reuses plan AND kernel
     suite2 = ConstraintSuite(_spec(), key="doc_id")
     r2 = suite2.run(df, partition_col="part")
     assert suite2.compile(df) is plan

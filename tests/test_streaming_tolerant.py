@@ -1,5 +1,5 @@
-"""windowed_verdicts(with_passed=True) — the batch tolerant/strict gate
-rule carried into the streaming windowed aggregation (one pass)."""
+"""windowed_verdicts — the batch tolerant/strict gate rule carried into
+the streaming windowed aggregation (one pass)."""
 
 from __future__ import annotations
 
@@ -15,8 +15,7 @@ def _run(spark, tmp_path, suite, name):
     src = str(tmp_path / f"src_{name}")
     events.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(events.schema).parquet(src)
-    verd = windowed_verdicts(suite, stream, ts_col="ts", window="1 hour",
-                             with_passed=True)
+    verd = windowed_verdicts(suite, stream, ts_col="ts", window="1 hour")
     q = (verd.writeStream.format("memory").queryName(name)
          .outputMode("complete").trigger(availableNow=True).start())
     q.awaitTermination(120)
@@ -28,6 +27,8 @@ def test_strict_passed_matches_counts(spark, tmp_path):
         columns={"value": {"type": "number", "maximum": 100}}),
         key="event_id")
     out = _run(spark, tmp_path, suite, "tol_strict")
+    assert out.columns == ["window", "n_rows", "n_fail",
+                           "fail_by_constraint", "n_pass", "passed"]
     rows = out.collect()
     assert rows and all((r["n_fail"] == 0) == r["passed"] for r in rows)
     assert any(not r["passed"] for r in rows)  # >100 values exist in events
@@ -46,15 +47,3 @@ def test_tolerant_passed_uses_budget(spark, tmp_path):
         assert r["passed"] == want
     # the budget must flip at least one failing window vs strict
     assert any(r["n_fail"] > 0 and r["passed"] for r in rows)
-
-
-def test_schema_unchanged_without_flag(spark, tmp_path):
-    suite = ConstraintSuite(TableSpec(
-        columns={"value": {"type": "number", "minimum": 0}}),
-        key="event_id")
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = str(tmp_path / "src_schema")
-    events.limit(10).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    verd = windowed_verdicts(suite, stream, ts_col="ts")
-    assert verd.columns == ["window", "n_rows", "n_pass", "n_fail"]

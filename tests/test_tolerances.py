@@ -56,17 +56,6 @@ def test_violation_rows_not_suppressed(spark):
         F.col("constraint_id") == "v.minimum").count() == 33
 
 
-def test_verdict_counts_matches_run(spark):
-    suite = ConstraintSuite(_spec(**{"v.minimum": 0.9}))
-    df = _df(spark)
-    full = {r["partition"]: r["passed"]
-            for r in suite.run(df, partition_col="part").verdicts.collect()}
-    fast = {r["partition"]: r["passed"]
-            for r in suite.verdict_counts(
-                df, partition_col="part").collect()}
-    assert full == fast == {"a": True, "b": False}
-
-
 def test_exact_boundary_integer_rule(spark):
     # 1000 rows, exactly 100 failures: pass fraction == 0.9 exactly ->
     # mostly=0.9 PASSES (>=), while any float-rounded 0.9*1000 slightly

@@ -1,16 +1,18 @@
-"""Measure label-propagation vs large-star/small-star connected components.
+"""Measure the distributed large-star/small-star connected-components
+engine against driver-side union-find.
 
 Synthetic edge lists built Spark-native (deterministic), shaped to stress
 different regimes:
 
-* ``chains``  — many long paths (diameter stress: propagation needs
-  O(log d) rounds, star collapses faster)
+* ``chains``  — many long paths (diameter stress: round count grows
+  with the path length)
 * ``hub``     — a few huge stars + noise (degree skew: per-round shuffle
   volume is where the star variant's contraction pays)
 * ``mixed``   — chains + hubs + random pairs
 
 Prints one JSON line per (shape, algorithm): rounds, wall sec, and checks
-both algorithms produce identical labels.
+both engines produce identical labels.  ``local`` collects every pair to
+the driver, so keep ``n_edges`` within driver memory.
 
     python tools/cc_bench.py [n_edges]
 """
@@ -65,7 +67,7 @@ def main() -> int:
         pairs = e.toDF("a", "b").localCheckpoint()  # freeze input
         n_pairs = pairs.count()
         sums = {}
-        for algo in ("label", "star"):
+        for algo in ("star", "local"):
             stats: dict = {}
             t0 = time.time()
             out = duplicate_clusters(pairs, algorithm=algo, stats_out=stats)
@@ -80,7 +82,7 @@ def main() -> int:
                 "shape": shape, "algorithm": algo, "edges": n_pairs,
                 "rounds": stats.get("rounds"), "sec": dt,
             }))
-        assert sums["label"] == sums["star"], (shape, sums)
+        assert sums["star"] == sums["local"], (shape, sums)
         print(json.dumps({"shape": shape, "labels_agree": True}))
     spark.stop()
     return 0
