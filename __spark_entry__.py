@@ -279,13 +279,15 @@ def _q_streaming_drift_psi(spark: SparkSession, sf: str) -> DataFrame:
 def _q_streaming_fk_violations(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming referential integrity (r6): orders streamed AvailableNow
     against a STATIC customer dimension restricted to the BUILDING
-    segment — streaming/validate.py stream_fk_violations is a stateless
-    broadcast stream-static left-anti join (no state store, no
-    watermark), so the union of all micro-batch outputs equals the batch
-    anti-join the DuckDB oracle replays with NOT EXISTS.  Locks the
-    last stateless streaming surface (violations locked the predicate
-    path; this locks the dimension-join path)."""
-    from go_jsonschema_spark.streaming.validate import stream_fk_violations
+    segment — operators/referential.py referential_violations is a
+    stateless broadcast left-anti join, run here stream-static (no state
+    store, no watermark), so the union of all micro-batch outputs equals
+    the batch anti-join the DuckDB oracle replays with NOT EXISTS.
+    Locks the last stateless streaming surface (violations locked the
+    predicate path; this locks the dimension-join path)."""
+    from go_jsonschema_spark.operators.referential import (
+        referential_violations,
+    )
 
     qname = "streaming_fk_mem"
     try:
@@ -301,9 +303,9 @@ def _q_streaming_fk_violations(spark: SparkSession, sf: str) -> DataFrame:
     dim = _t(spark, sf, "customer").filter(
         F.col("c_mktsegment") == "BUILDING")
     q = (
-        stream_fk_violations(stream, "o_custkey", dim, "c_custkey",
-                             key="o_orderkey",
-                             constraint_id="fk:o_custkey:building")
+        referential_violations(stream, "o_custkey", dim, "c_custkey",
+                               key="o_orderkey",
+                               constraint_id="fk:o_custkey:building")
         .writeStream.format("memory").queryName(qname)
         .outputMode("append").trigger(availableNow=True).start()
     )

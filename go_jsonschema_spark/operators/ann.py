@@ -1,28 +1,39 @@
-"""Approximate-nearest-neighbor search over an embedding column.
+"""Approximate-nearest-neighbor search over an embedding column
+(SURVEY-mandated pipeline ops, not in the reference).
 
-Two paths (SURVEY-mandated pipeline ops, not in the reference):
+Every operator here is a front-end over a few shared primitives:
 
-* :func:`topk_cosine` — brute-force exact cosine top-k: one narrow scan,
-  native arithmetic (``zip_with``/``aggregate``), a single
-  ``TakeOrderedAndProject`` — the correctness baseline and perfectly
-  adequate when the query set is small.
-* :func:`topk_cosine_lsh` — the scale path: random-hyperplane bucket
-  signature (same family as dedup.embedding_cosine_pairs); probe the
-  query's bucket plus all hamming≤1 neighbor buckets, exact-rank only the
-  candidates.  Scan prunes to matching buckets (a pre-computed/bucketed
-  table turns this into partition pruning on a real deployment).
+* :func:`topk_cosine` — the single-query ranker: brute-force exact
+  cosine top-k as one narrow scan, native arithmetic
+  (``zip_with``/``aggregate``) and a single ``TakeOrderedAndProject``.
+  The approximate single-query paths only FILTER the table first —
+  :func:`topk_cosine_lsh_multi` (multi-table hyperplane LSH),
+  :func:`topk_cosine_ivf` (inline coarse quantizer) and
+  :func:`topk_cosine_ivf_indexed` (partition-pruned materialized index)
+  — and hand the survivors to :func:`topk_cosine`.
+* :func:`_topk_batched` — the batch kernel: m queries in ONE scan, one
+  BLAS matmul per Arrow batch (:func:`_cosine_block`), per-batch top-k
+  and a ``row_number`` re-rank.  :func:`topk_cosine_many`,
+  :func:`topk_cosine_many_ivf_indexed` (cell mask) and
+  :func:`hard_negatives` (label mask) use it.
+* :func:`_probe_cells` — IVF probe selection, shared by the three IVF
+  query paths so single and batch queries probe the same cells.
+* :func:`hyperplane_bucket` — the random-hyperplane bucket id, also the
+  candidate key of ``dedup.embedding_cosine_pairs``.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd  # module-level: pandas_udf resolves string type hints
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from go_jsonschema_spark.functions.literals import lit_doubles, lit_matrix
 
 __all__ = [
     "topk_cosine",
     "topk_cosine_many",
     "topk_cosine_many_ivf_indexed",
-    "topk_cosine_lsh",
     "topk_cosine_lsh_multi",
     "hyperplane_bucket",
     "kmeans_centroids",
@@ -35,17 +46,9 @@ __all__ = [
 ]
 
 
-def _dot_lit(vec: Column, q: list[float]) -> Column:
-    # ONE array literal node (see _lit_doubles), not a CreateArray of
-    # len(q) scalar literals: the value is identical, but an unrolled
-    # 64-element array costs ~65 plan nodes + a py4j round trip per
-    # element, and analyzer time is super-linear in plan size — with 16
-    # centroids the argmin expression alone cost ~1.1 s of pure driver
-    # time per query at sf0.1 (measured r7; guide §7.3 "planning very
-    # large expression trees").
+def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
-        F.zip_with(vec, _lit_doubles([float(x) for x in q]),
-                   lambda x, y: x * y),
+        F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
@@ -55,11 +58,39 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
+def _dot_lit(vec: Column, q: list[float]) -> Column:
+    # ONE array literal node (see lit_doubles), not a CreateArray of
+    # len(q) scalar literals: the value is identical, but an unrolled
+    # 64-element array costs ~65 plan nodes + a py4j round trip per
+    # element, and analyzer time is super-linear in plan size — with 16
+    # centroids the argmin expression alone cost ~1.1 s of pure driver
+    # time per query at sf0.1 (measured r7; guide §7.3 "planning very
+    # large expression trees").
+    return _dot(vec, lit_doubles([float(x) for x in q]))
+
+
 def cosine_to(vec: Column, q: list[float]) -> Column:
     import math
 
     qn = math.sqrt(sum(x * x for x in q)) or 1.0
     return _dot_lit(vec, q) / (_norm(vec) * F.lit(qn))
+
+
+def _unit_rows(X):
+    """Row-normalize a float64 matrix; zero rows stay zero."""
+    n = np.linalg.norm(X, axis=1)
+    n[n == 0] = 1.0
+    return X / n[:, None]
+
+
+def _cosine_block(vecs: pd.Series, RnT, decimals: int = 6):
+    """One Arrow batch against a normalized, transposed reference matrix
+    ``(dim, m)``: stack → normalize → ONE BLAS matmul → round.  Arrow
+    hands array<float> rows as numpy arrays, so stacking is a C-speed
+    copy (a per-element float() loop here would dominate the whole scan
+    at 10^7+ rows)."""
+    M = np.asarray(vecs.to_list(), dtype=np.float64)
+    return np.round(_unit_rows(M) @ RnT, decimals)
 
 
 def topk_cosine(
@@ -89,8 +120,6 @@ def _query_matrix(queries: DataFrame, q_id_col: str, q_vec_col: str,
     """Collect the bounded query set driver-side and return
     ``(query_ids, normalized_query_matrix.T)`` for closure broadcast —
     the cosine_pairs_exact shape: 10k × 64 floats ≈ 2.5 MB."""
-    import numpy as np
-
     rows = queries.select(q_id_col, q_vec_col).limit(max_queries + 1).collect()
     if len(rows) > max_queries:
         raise ValueError(
@@ -107,9 +136,74 @@ def _query_matrix(queries: DataFrame, q_id_col: str, q_vec_col: str,
             f"{q_id_col} in {bad[:5]!r}")
     qids = np.asarray([r[q_id_col] for r in rows])
     Q = np.asarray([list(map(float, r[q_vec_col])) for r in rows])
-    qn = np.linalg.norm(Q, axis=1)
-    qn[qn == 0] = 1.0
-    return qids, Q, (Q / qn[:, None]).T  # ids, raw (m, dim), normᵀ (dim, m)
+    return qids, Q, _unit_rows(Q).T  # ids, raw (m, dim), normᵀ (dim, m)
+
+
+def _topk_batched(
+    scan: DataFrame,
+    qids,
+    QnT,
+    k: int,
+    *,
+    vec_col: str,
+    id_col: str,
+    qid_col: str = "query_id",
+    allow=None,
+    distinct: bool = False,
+) -> DataFrame:
+    """The batch top-k kernel: ``(qid_col, id_col, cosine, rank)``, rank
+    1..k per query, cosine rounded to 6, ties broken on id.
+
+    The normalized query matrix ``QnT`` (dim, m) is closure-broadcast and
+    every Arrow batch of ``scan`` does ONE BLAS matmul
+    (:func:`_cosine_block`), keeping a per-batch per-query top-k with the
+    exact final tie-break ``(cosine desc, id asc)`` — any global top-k
+    row is necessarily in its batch's top-k under the same order, so the
+    final ``row_number`` re-rank shuffles only ``k·m·n_partitions``
+    candidate rows, never the table.
+
+    ``allow`` (optional) maps a batch's pandas frame to an ``(n, m)``
+    boolean mask of admissible (row, query) pairs; the others score
+    −inf BEFORE the per-batch top-k and never leave the batch, so the
+    result is the exact top-k among admissible rows.  Without a mask the
+    batch does no extra work.  ``distinct`` drops repeated
+    ``(query, id)`` candidates before ranking (a vector indexed under
+    several scanned cells)."""
+    m = len(qids)
+
+    def partials(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids = pdf[id_col].to_numpy()
+            C = _cosine_block(pdf[vec_col], QnT)  # (n, m)
+            if allow is not None:
+                C = np.where(allow(pdf), C, -np.inf)
+            top = min(k, len(ids))
+            qcol, icol, ccol = [], [], []
+            for j in range(m):
+                order = np.lexsort((ids, -C[:, j]))[:top]
+                if allow is not None:
+                    order = order[C[order, j] > -np.inf]
+                qcol.append(np.full(len(order), qids[j]))
+                icol.append(ids[order])
+                ccol.append(C[order, j])
+            yield pd.DataFrame({
+                qid_col: np.concatenate(qcol),
+                id_col: np.concatenate(icol),
+                "cosine": np.concatenate(ccol),
+            })
+
+    part = scan.mapInPandas(
+        partials, f"{qid_col} long, {id_col} long, cosine double")
+    if distinct:
+        part = part.dropDuplicates([qid_col, id_col])
+    w = Window.partitionBy(qid_col).orderBy(
+        F.col("cosine").desc(), F.col(id_col))
+    return (
+        part.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+    )
 
 
 def topk_cosine_many(
@@ -126,59 +220,13 @@ def topk_cosine_many(
     """Exact cosine top-k for a BATCH of query vectors in ONE scan of the
     table (VERDICT r4 item 5 — a curation pipeline scores thousands of
     queries; one :func:`topk_cosine` job per query rescans the table m
-    times).
-
-    Execution: the normalized query matrix is closure-broadcast and every
-    Arrow batch does ONE BLAS matmul ``(batch, dim) @ (dim, m)`` inside
-    ``mapInPandas``, keeping a per-batch per-query top-k with the exact
-    final tie-break ``(cosine desc, id asc)`` — any global top-k row is
-    necessarily in its batch's top-k under the same order, so the final
-    ``row_number`` re-rank shuffles only ``k·m·n_partitions`` candidate
-    rows, never the table.  Returns ``(query_id, id_col, cosine, rank)``
-    with rank 1..k per query; cosines rounded to 6 like
-    :func:`topk_cosine`."""
-    import numpy as np
-    from pyspark.sql import Window
-
+    times).  Execution is the unmasked :func:`_topk_batched` kernel.
+    Returns ``(query_id, id_col, cosine, rank)`` with rank 1..k per
+    query; cosines rounded to 6 like :func:`topk_cosine`."""
     qids, _, QnT = _query_matrix(queries, q_id_col or id_col,
                                  q_vec_col or vec_col, max_queries)
-    m = len(qids)
-    kk = k
-
-    def partials(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            # Arrow hands array<float> rows as numpy arrays — stacking is
-            # a C-speed copy (a per-element float() loop here would
-            # dominate the whole scan at 10^7+ rows); nulls raise rather
-            # than corrupt
-            M = np.asarray(pdf[vec_col].to_list(), dtype=np.float64)
-            mn = np.linalg.norm(M, axis=1)
-            mn[mn == 0] = 1.0
-            C = np.round((M / mn[:, None]) @ QnT, 6)  # (n, m)
-            top = min(kk, len(ids))
-            qcol, icol, ccol = [], [], []
-            for j in range(m):
-                order = np.lexsort((ids, -C[:, j]))[:top]
-                qcol.append(np.full(top, qids[j]))
-                icol.append(ids[order])
-                ccol.append(C[order, j])
-            yield pd.DataFrame({
-                "query_id": np.concatenate(qcol),
-                id_col: np.concatenate(icol),
-                "cosine": np.concatenate(ccol),
-            })
-
-    part = df.select(id_col, vec_col).mapInPandas(
-        partials, f"query_id long, {id_col} long, cosine double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col(id_col))
-    return (
-        part.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk_batched(df.select(id_col, vec_col), qids, QnT, k,
+                         vec_col=vec_col, id_col=id_col)
 
 
 def topk_cosine_many_ivf_indexed(
@@ -200,11 +248,11 @@ def topk_cosine_many_ivf_indexed(
     (:func:`ivf_write_index`): scan the UNION of every query's ``n_probe``
     cells ONCE (partition pruning — unprobed cells are never read), score
     each candidate row only against the queries whose probe set contains
-    its cell (a per-batch boolean mask over the same single matmul), and
-    re-rank the per-batch partials exactly as :func:`topk_cosine_many`.
-    With ``n_assign > 1`` a vector can surface from several probed cells
-    for the same query — identical candidate rows the final step dedups
-    before ranking.  Output shape matches :func:`topk_cosine_many`.
+    its cell (the :func:`_topk_batched` kernel with a cell mask over the
+    same single matmul).  With ``n_assign > 1`` a vector can surface from
+    several probed cells for the same query — identical candidate rows
+    the kernel dedups before ranking.  Output shape matches
+    :func:`topk_cosine_many`.
 
     Design boundary (measured at 10M rows, BENCH/ann_scale.json): the
     pruning win exists only while the UNION of the batch's probed cells
@@ -214,69 +262,28 @@ def topk_cosine_many_ivf_indexed(
     :func:`topk_cosine_many` wins outright.  Prefer this variant for
     small or clustered query batches (shared probe cells), or raise
     ``n_centroids`` so the union stays sparse."""
-    import numpy as np
-    from pyspark.sql import Window
-
     qids, Qraw, QnT = _query_matrix(queries, q_id_col or id_col,
                                     q_vec_col or vec_col, max_queries)
-    m = len(qids)
-    cent = np.asarray(centroids, dtype=float)
-    # probe selection matches the single-query path: squared distance of
-    # the RAW query vector to each centroid
-    d2 = ((Qraw[:, None, :] - cent[None, :, :]) ** 2).sum(-1)  # (m, C)
-    probe = d2.argsort(1)[:, :n_probe]                         # (m, n_probe)
-    allow = np.zeros((len(cent), m), dtype=bool)
-    for j in range(m):
-        allow[probe[j], j] = True
-    union = sorted({int(c) for j in range(m) for c in probe[j]})
+    probes = _probe_cells(centroids, Qraw, n_probe)
+    allow = np.zeros((len(centroids), len(qids)), dtype=bool)  # (C, m)
+    for j, probe in enumerate(probes):
+        allow[probe, j] = True
+    union = sorted({c for probe in probes for c in probe})
 
-    kk = k
-
-    def partials(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            cells = pdf["cell"].to_numpy().astype(int)
-            M = np.asarray(pdf[vec_col].to_list(), dtype=np.float64)
-            mn = np.linalg.norm(M, axis=1)
-            mn[mn == 0] = 1.0
-            C = np.round((M / mn[:, None]) @ QnT, 6)  # (n, m)
-            C = np.where(allow[cells], C, -2.0)  # mask unprobed pairs
-            top = min(kk, len(ids))
-            qcol, icol, ccol = [], [], []
-            for j in range(m):
-                order = np.lexsort((ids, -C[:, j]))[:top]
-                keep = C[order, j] > -1.5
-                qcol.append(np.full(int(keep.sum()), qids[j]))
-                icol.append(ids[order][keep])
-                ccol.append(C[order, j][keep])
-            yield pd.DataFrame({
-                "query_id": np.concatenate(qcol),
-                id_col: np.concatenate(icol),
-                "cosine": np.concatenate(ccol),
-            })
-
-    scan = spark.read.parquet(path).filter(
-        F.col("cell").isin([int(c) for c in union]))
-    part = scan.select(id_col, vec_col, "cell").mapInPandas(
-        partials, f"query_id long, {id_col} long, cosine double")
-    if n_assign > 1:
-        part = part.dropDuplicates(["query_id", id_col])
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col(id_col))
-    return (
-        part.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    scan = spark.read.parquet(path).filter(F.col("cell").isin(union))
+    return _topk_batched(
+        scan.select(id_col, vec_col, "cell"), qids, QnT, k,
+        vec_col=vec_col, id_col=id_col,
+        allow=lambda pdf: allow[pdf["cell"].to_numpy().astype(int)],
+        distinct=n_assign > 1)
 
 
 def hyperplane_bucket(
     vec: Column, *, n_planes: int = 10, dim: int = 64, seed: int = 42
 ) -> Column:
-    """Random-hyperplane sign-bit bucket id (long) for a vector column."""
-    import numpy as np
-
+    """Random-hyperplane sign-bit bucket id (long) for a vector column:
+    bit i is set when the vector lies on the positive side of the i-th
+    seeded Gaussian hyperplane (Charikar'02)."""
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_planes, dim))
     bucket = F.lit(0).cast("long")
@@ -302,8 +309,6 @@ def kmeans_centroids(
     """Driver-side mini-KMeans on a deterministic sample → the IVF coarse
     quantizer (numpy; the sample is tiny relative to the table — at 10^12
     rows you train on 10^5-10^6 sampled vectors, never the full set)."""
-    import numpy as np
-
     rows = (
         df.select(id_col, vec_col).orderBy(id_col).limit(sample).collect()
     )
@@ -320,33 +325,6 @@ def kmeans_centroids(
     return cent
 
 
-def _lit_doubles(vals: list[float]) -> Column:
-    """A flat ``array<double>`` literal as ONE parsed SQL expression.
-    ``F.lit(x)`` per element costs a py4j round trip each (a 16×64
-    matrix ≈ 1000 round trips ≈ 0.4 s of pure driver time per query,
-    measured r7); ``repr(float)`` is the shortest round-trip form, so
-    Java's parser returns the bit-identical double.  Non-finite values
-    fall back to the element-wise path (no SQL literal syntax)."""
-    import math
-
-    if all(math.isfinite(v) for v in vals):
-        return F.expr(
-            "array(" + ",".join(repr(v) + "D" for v in vals) + ")")
-    return F.array(*[F.lit(v) for v in vals])
-
-
-def _lit_matrix(rows: list[list[float]]) -> Column:
-    """Nested ``array<array<double>>`` literal, same contract as
-    :func:`_lit_doubles`."""
-    import math
-
-    if all(math.isfinite(v) for r in rows for v in r):
-        return F.expr("array(" + ",".join(
-            "array(" + ",".join(repr(v) + "D" for v in r) + ")"
-            for r in rows) + ")")
-    return F.array(*[F.array(*[F.lit(v) for v in r]) for r in rows])
-
-
 def _centroid_scores(vec: Column, centroids) -> Column:
     """``array<double>`` of per-centroid scores ``-2·v·c + ||c||²``
     built from TWO literal nodes (the centroid matrix as one nested
@@ -356,16 +334,10 @@ def _centroid_scores(vec: Column, centroids) -> Column:
     score is bit-identical; only the PLAN shrinks, from
     O(n_centroids·dim) literal nodes (~1.1 s of driver-side analysis
     per query at 16×64, measured r7 — guide §7.3) to O(1)."""
-    import numpy as np
-
-    mat = _lit_matrix([[float(x) for x in c] for c in centroids])
-    ccs = _lit_doubles([float(np.dot(c, c)) for c in centroids])
+    mat = lit_matrix([[float(x) for x in c] for c in centroids])
+    ccs = lit_doubles([float(np.dot(c, c)) for c in centroids])
     return F.zip_with(
-        mat, ccs,
-        lambda c, cc: F.lit(-2.0) * F.aggregate(
-            F.zip_with(vec, c, lambda x, y: x * y),
-            F.lit(0.0), lambda acc, x: acc + x) + cc,
-    )
+        mat, ccs, lambda c, cc: F.lit(-2.0) * _dot(vec, c) + cc)
 
 
 def assign_centroid(vec: Column, centroids) -> Column:
@@ -390,6 +362,16 @@ def assign_centroids_multi(vec: Column, centroids, n_assign: int) -> Column:
         F.transform(F.array_sort(scored), lambda x: x["i"]), 1, n_assign)
 
 
+def _probe_cells(centroids, queries, n_probe: int) -> list[list[int]]:
+    """The ``n_probe`` cells each query row probes: centroids ranked by
+    squared distance to the RAW query vector.  One ``argsort`` per query
+    row, so a batch probes exactly the cells its queries probe alone."""
+    cent = np.asarray(centroids, dtype=float)
+    Q = np.atleast_2d(np.asarray(queries, dtype=float))
+    return [[int(i) for i in ((cent - q[None, :]) ** 2).sum(1)
+             .argsort()[:n_probe]] for q in Q]
+
+
 def topk_cosine_ivf(
     df: DataFrame,
     query: list[float],
@@ -412,16 +394,12 @@ def topk_cosine_ivf(
     identical.  ``n_assign > 1`` trades posting-list storage for recall
     (measured on the synthetic embeddings: 1→2 assignment lifts
     recall@10 from 0.5-0.9 to 0.9-1.0 at n_probe=6)."""
-    import numpy as np
-
     if centroids is None:
         centroids = kmeans_centroids(
             df, vec_col=vec_col, id_col=id_col,
             n_centroids=n_centroids, seed=seed,
         )
-    q = np.asarray(query, dtype=float)
-    d2 = ((centroids - q[None, :]) ** 2).sum(1)
-    probe = [int(i) for i in d2.argsort()[:n_probe]]
+    probe = _probe_cells(centroids, query, n_probe)[0]
 
     if n_assign <= 1:
         cell = assign_centroid(F.col(vec_col), centroids)
@@ -430,16 +408,8 @@ def topk_cosine_ivf(
         cells = assign_centroids_multi(F.col(vec_col), centroids, n_assign)
         hit = F.arrays_overlap(
             cells, F.array(*[F.lit(p) for p in probe]))
-    return (
-        df.select(F.col(id_col), F.col(vec_col), hit.alias("hit"))
-        .filter(F.col("hit"))
-        .select(
-            F.col(id_col),
-            F.round(cosine_to(F.col(vec_col), query), 6).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return topk_cosine(df.filter(hit), query, k,
+                       vec_col=vec_col, id_col=id_col)
 
 
 def ivf_write_index(
@@ -500,64 +470,13 @@ def topk_cosine_ivf_indexed(
     settings.  Pass the index's ``n_assign`` so the reader knows whether
     an id-dedup (one small shuffle over the PROBED cells only) is
     needed; the single-assign path stays shuffle-free."""
-    import numpy as np
-
-    q = np.asarray(query, dtype=float)
-    d2 = ((np.asarray(centroids) - q[None, :]) ** 2).sum(1)
-    probe = [int(i) for i in d2.argsort()[:n_probe]]
+    probe = _probe_cells(centroids, query, n_probe)[0]
     scan = spark.read.parquet(path).filter(F.col("cell").isin(probe))
     if n_assign > 1:
         # a multi-assigned index can hold a vector in several probed
         # cells — dedup by id before ranking
         scan = scan.dropDuplicates([id_col])
-    return (
-        scan.select(
-            F.col(id_col),
-            F.round(cosine_to(F.col(vec_col), query), 6).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def topk_cosine_lsh(
-    df: DataFrame,
-    query: list[float],
-    k: int = 10,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_planes: int = 10,
-    seed: int = 42,
-) -> DataFrame:
-    """ANN top-k: restrict the exact ranking to vectors whose hyperplane
-    bucket is within hamming distance 1 of the query's bucket
-    (multi-probe LSH), then brute-force only those."""
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, len(query)))
-    qbits = 0
-    for i in range(n_planes):
-        if float(np.dot(planes[i], np.asarray(query))) > 0:
-            qbits |= 1 << i
-    probe = [qbits] + [qbits ^ (1 << i) for i in range(n_planes)]
-
-    bucket = hyperplane_bucket(
-        F.col(vec_col), n_planes=n_planes, dim=len(query), seed=seed
-    )
-    return (
-        df.select(
-            F.col(id_col), F.col(vec_col), bucket.alias("bkt")
-        )
-        .filter(F.col("bkt").isin(probe))
-        .select(
-            F.col(id_col),
-            F.round(cosine_to(F.col(vec_col), query), 6).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return topk_cosine(scan, query, k, vec_col=vec_col, id_col=id_col)
 
 
 def topk_cosine_lsh_multi(
@@ -599,7 +518,6 @@ def topk_cosine_lsh_multi(
     0.8, per-plane agreement p ≈ 0.8) the same harness prunes hard with
     b=12, L=16: per-table hit ≈ 0.26 → recall ≈ 0.99 while a random
     row survives with probability ≈ 1-(1-13/4096)^16 ≈ 5%."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     qa = np.asarray(query, dtype=np.float64)
@@ -626,15 +544,8 @@ def topk_cosine_lsh_multi(
             len(M), n_tables, n_planes).sum(axis=2)
         return pd.Series((ham <= r).any(axis=1))
 
-    return (
-        df.filter(is_candidate(F.col(vec_col)))
-        .select(
-            F.col(id_col),
-            F.round(cosine_to(F.col(vec_col), query), 6).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return topk_cosine(df.filter(is_candidate(F.col(vec_col))), query, k,
+                       vec_col=vec_col, id_col=id_col)
 
 
 def label_centroid_similarity(
@@ -675,15 +586,8 @@ def label_centroid_similarity(
     a = cent.select(F.col("l").alias("label_a"), F.col("c").alias("ca"))
     b = cent.select(F.col("l").alias("label_b"), F.col("c").alias("cb"))
     pairs = a.join(b, F.col("label_a") < F.col("label_b"))
-
-    def _dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda u, v: u * v),
-            F.lit(0.0), lambda acc, t: acc + t)
-
     cos = _dot(F.col("ca"), F.col("cb")) / (
-        F.sqrt(_dot(F.col("ca"), F.col("ca")))
-        * F.sqrt(_dot(F.col("cb"), F.col("cb"))))
+        _norm(F.col("ca")) * _norm(F.col("cb")))
     return pairs.select(
         "label_a", "label_b", F.round(cos, 6).alias("cos_sim"))
 
@@ -718,53 +622,21 @@ def hard_negatives(
     Output: ``(anchor_id, id_col, cosine, rank)``, rank 1..k per
     anchor, cosine rounded to 6, ties broken on id.
     """
-    import numpy as np
-    from pyspark.sql import Window
-
     qids, _, QnT = _query_matrix(anchors, id_col, vec_col, max_anchors)
     lab_rows = anchors.select(id_col, label_col).collect()
     lab_by_id = {r[id_col]: r[label_col] for r in lab_rows}
     qlabels = np.asarray(
         [lab_by_id.get(q) for q in qids.tolist()], dtype=object)
-    m = len(qids)
-    kk = k
+    labelled = np.asarray([ql is not None for ql in qlabels])
 
-    def partials(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            labs = pdf[label_col].to_numpy(dtype=object)
-            M = np.asarray(pdf[vec_col].to_list(), dtype=np.float64)
-            mn = np.linalg.norm(M, axis=1)
-            mn[mn == 0] = 1.0
-            C = np.round((M / mn[:, None]) @ QnT, 6)  # (n, m)
-            top = min(kk, len(ids))
-            qcol, icol, ccol = [], [], []
-            for j in range(m):
-                col = C[:, j].copy()
-                ql = qlabels[j]
-                if ql is not None:
-                    col[labs == ql] = -np.inf
-                col[ids == qids[j]] = -np.inf
-                order = np.lexsort((ids, -col))[:top]
-                keep = col[order] > -np.inf
-                order = order[keep]
-                qcol.append(np.full(len(order), qids[j]))
-                icol.append(ids[order])
-                ccol.append(col[order])
-            if qcol:
-                yield pd.DataFrame({
-                    "anchor_id": np.concatenate(qcol),
-                    id_col: np.concatenate(icol),
-                    "cosine": np.concatenate(ccol),
-                })
+    def allow(pdf):
+        # (n, m): not the anchor itself, and not the anchor's label
+        # (a NULL anchor label masks nothing)
+        ids = pdf[id_col].to_numpy()
+        labs = pdf[label_col].to_numpy(dtype=object)
+        same = (labs[:, None] == qlabels[None, :]) & labelled[None, :]
+        return ~same & (ids[:, None] != qids[None, :])
 
-    part = df.select(id_col, vec_col, label_col).mapInPandas(
-        partials, f"anchor_id long, {id_col} long, cosine double")
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("cosine").desc(), F.col(id_col))
-    return (
-        part.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk_batched(
+        df.select(id_col, vec_col, label_col), qids, QnT, k,
+        vec_col=vec_col, id_col=id_col, qid_col="anchor_id", allow=allow)

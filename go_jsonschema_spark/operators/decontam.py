@@ -73,7 +73,7 @@ def semantic_contamination(
     import numpy as np
     import pandas as pd
 
-    from go_jsonschema_spark.operators.ann import _query_matrix
+    from go_jsonschema_spark.operators.ann import _cosine_block, _query_matrix
 
     qids, _, QnT = _query_matrix(probes, id_col, vec_col, max_probes)
     order = np.argsort(qids)           # argmax tie-break = smallest id
@@ -84,10 +84,7 @@ def semantic_contamination(
             if not len(pdf):
                 continue
             ids = pdf[id_col].to_numpy()
-            M = np.asarray(pdf[vec_col].to_list(), dtype=np.float64)
-            mn = np.linalg.norm(M, axis=1)
-            mn[mn == 0] = 1.0
-            C = np.round((M / mn[:, None]) @ QnT, 6)
+            C = _cosine_block(pdf[vec_col], QnT)
             best = C.argmax(1)
             bc = C[np.arange(len(ids)), best]
             keep = bc >= threshold

@@ -11,8 +11,9 @@ Four families, each shuffle-disciplined:
   Mining of Massive Datasets ch.3).
 * **SimHash** — 64-bit charikar signature via native bit arithmetic,
   banded into 4×16-bit exact-match blocks for hamming≤3 candidates.
-* **embedding cosine** — random-hyperplane LSH buckets + in-bucket exact
-  cosine (see ann.py for the search variant).
+* **embedding cosine** — random-hyperplane LSH buckets
+  (``ann.hyperplane_bucket``) + in-bucket exact cosine (see ann.py for
+  the search variant).
 
 All candidate generation is equi-join-able (bucket keys), so Catalyst plans
 shuffle-hash/sort-merge joins that scale horizontally; nothing is O(n²)
@@ -24,6 +25,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from go_jsonschema_spark.functions.text import fingerprint, word_shingles
+from go_jsonschema_spark.operators.ann import (
+    _cosine_block, _dot, _norm, _unit_rows, assign_centroid,
+    hyperplane_bucket, kmeans_centroids,
+)
 
 __all__ = [
     "exact_duplicates",
@@ -280,12 +285,32 @@ def minhash_lsh_pairs(
     count.  For recall-critical production set bands=16 (r=4) and accept
     the larger candidate join.  ``max_bucket`` caps degenerate band
     buckets (see :func:`_cap_buckets`); run exact dedup first."""
-    base = _spread(df).select(
+    return _lsh_pairs_from_shingles(
+        _shingled(df, text_col, id_col, shingle_n),
+        k=k, bands=bands, threshold=threshold, max_bucket=max_bucket)
+
+
+def _shingled(df: DataFrame, text_col: str, id_col: str,
+              shingle_n: int) -> DataFrame:
+    """``(id, sh)``: each document's non-empty word-shingle set."""
+    return _spread(df).select(
         F.col(id_col).alias("id"),
         word_shingles(F.col(text_col), shingle_n).alias("sh"),
     ).filter(F.size("sh") > 0)
-    return _lsh_pairs_from_shingles(
-        base, k=k, bands=bands, threshold=threshold, max_bucket=max_bucket)
+
+
+def _signed(base: DataFrame, k: int) -> DataFrame:
+    """``(id, sh, sig)`` from ``(id, sh)``.  The base shingle hash is
+    bound to its OWN projected column before the k permutation
+    transforms reference it: each transform re-evaluates its input
+    expression, so the inline form re-hashed the shingle strings k=64
+    times per row (CollapseProject keeps a non-cheap multi-referenced
+    alias bound — the segment_dedup/duplicate_spans discipline)."""
+    return base.select(
+        "id", "sh",
+        F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("hs"),
+    ).select(
+        "id", "sh", minhash_signature_from_hashes("hs", k).alias("sig"))
 
 
 def _band_rows(sig_df: DataFrame, *, k: int, bands: int) -> DataFrame:
@@ -316,40 +341,56 @@ def _lsh_pairs_from_shingles(
     threshold: float,
     max_bucket: int | None,
 ) -> DataFrame:
-    """The signature→band→bucket-join→exact-verify core shared by the
-    text (:func:`minhash_lsh_pairs`) and token
+    """The self-join pair path shared by the text
+    (:func:`minhash_lsh_pairs`) and token
     (operators.tokens.token_minhash_pairs) front-ends; ``base`` is
     ``(id, sh: array<string>)`` with non-empty shingle sets."""
-    # bind the base shingle hash to its OWN projected column before the
-    # k permutation transforms reference it: each transform re-evaluates
-    # its input expression, so the inline form re-hashed the shingle
-    # strings k=64 times per row (CollapseProject keeps a non-cheap
-    # multi-referenced alias bound — the segment_dedup/duplicate_spans
-    # discipline)
-    hashed = base.select(
-        "id", "sh",
-        F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("hs"))
-    sig = hashed.select(
-        "id", "sh",
-        minhash_signature_from_hashes("hs", k).alias("sig")
-    )
-    banded = _cap_buckets(_band_rows(sig, k=k, bands=bands),
-                          ["band", "bh"], max_bucket)
+    sig = _signed(base, k)
+    return _minhash_verify(sig, sig, k=k, bands=bands, threshold=threshold,
+                           max_bucket=max_bucket)
 
+
+def _minhash_verify(
+    left: DataFrame,
+    right: DataFrame,
+    *,
+    k: int,
+    bands: int,
+    threshold: float,
+    max_bucket: int | None,
+) -> DataFrame:
+    """Candidate → verify over two ``(id, sh, sig)`` frames: band rows →
+    bucket cap → ONE equi-join on ``(band, bh)`` carrying only ids (the
+    shingle arrays never enter the candidate shuffle) → pair dedup →
+    shingles re-attached by two id-joins → exact Jaccard ≥ threshold.
+
+    ``left is right`` is the self-join: each unordered pair once
+    (``a < b``), and both join sides are the same plan, so Catalyst
+    reuses the exchange.  Otherwise ``a`` comes from ``left`` and ``b``
+    from ``right``, and only a re-ingested id (``a == b``) is dropped.
+    The re-attach selects ``(id, sh)`` only, so column pruning keeps the
+    k minhash permutations out of it."""
+    def banded(sig: DataFrame) -> DataFrame:
+        return _cap_buckets(_band_rows(sig, k=k, bands=bands),
+                            ["band", "bh"], max_bucket)
+
+    lb = banded(left)
+    if right is left:
+        rb, pair = lb, F.col("l.id") < F.col("rt.id")
+    else:
+        rb, pair = banded(right), F.col("l.id") != F.col("rt.id")
     cand = (
-        banded.alias("l")
-        .join(banded.alias("rt"), on=["band", "bh"])
-        .filter(F.col("l.id") < F.col("rt.id"))
+        lb.alias("l")
+        .join(rb.alias("rt"), on=["band", "bh"])
+        .filter(pair)
         .select(F.col("l.id").alias("a"), F.col("rt.id").alias("b"))
         .dropDuplicates(["a", "b"])
     )
-    # re-attach by id from the SHINGLE table (base), not the signature
-    # plan — re-running the k minhash permutations twice more just to read
-    # back `sh` would triple the signature cost
-    sh_tbl = base.select("id", "sh")
     withsh = (
-        cand.join(sh_tbl.select(F.col("id").alias("a"), F.col("sh").alias("sh_a")), "a")
-        .join(sh_tbl.select(F.col("id").alias("b"), F.col("sh").alias("sh_b")), "b")
+        cand.join(left.select(F.col("id").alias("a"),
+                              F.col("sh").alias("sh_a")), "a")
+        .join(right.select(F.col("id").alias("b"),
+                           F.col("sh").alias("sh_b")), "b")
     )
     return (
         withsh.select(
@@ -379,17 +420,7 @@ def minhash_index(
     verify needs it; at 100 TB scale partition the store by an id range
     or ingestion date so the band join below prunes old segments it
     has already cleared."""
-    base = _spread(df).select(
-        F.col(id_col).alias("id"),
-        word_shingles(F.col(text_col), shingle_n).alias("sh"),
-    ).filter(F.size("sh") > 0)
-    # bound base hash before the k permutations (see
-    # _lsh_pairs_from_shingles) — string work once, not k times
-    return base.select(
-        "id", "sh",
-        F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("hs"),
-    ).select(
-        "id", "sh", minhash_signature_from_hashes("hs", k).alias("sig"))
+    return _signed(_shingled(df, text_col, id_col, shingle_n), k)
 
 
 def lsh_pairs_against_index(
@@ -420,30 +451,8 @@ def lsh_pairs_against_index(
     exact-dedup fact, not a near-dup discovery."""
     new_idx = minhash_index(
         new_df, text_col, id_col, k=k, shingle_n=shingle_n)
-    nb = _cap_buckets(_band_rows(new_idx, k=k, bands=bands),
-                      ["band", "bh"], max_bucket)
-    ob = _cap_buckets(_band_rows(index, k=k, bands=bands),
-                      ["band", "bh"], max_bucket)
-    cand = (
-        nb.alias("l")
-        .join(ob.alias("rt"), on=["band", "bh"])
-        .filter(F.col("l.id") != F.col("rt.id"))
-        .select(F.col("l.id").alias("a"), F.col("rt.id").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    withsh = (
-        cand.join(new_idx.select(F.col("id").alias("a"),
-                                 F.col("sh").alias("sh_a")), "a")
-        .join(index.select(F.col("id").alias("b"),
-                           F.col("sh").alias("sh_b")), "b")
-    )
-    return (
-        withsh.select(
-            "a", "b",
-            F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _minhash_verify(new_idx, index, k=k, bands=bands,
+                           threshold=threshold, max_bucket=max_bucket)
 
 
 # ---------------------------------------------------------------------------
@@ -809,18 +818,6 @@ def _clusters_star(
 # embedding near-dup (cosine)
 # ---------------------------------------------------------------------------
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
 def cosine_pairs_exact(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -867,20 +864,14 @@ def cosine_pairs_exact(
             "filter or impute nulls before the all-pairs baseline")
     all_ids = np.asarray([r[id_col] for r in rows])
     X = np.asarray([list(map(float, r[vec_col])) for r in rows])
-    norms = np.linalg.norm(X, axis=1)
-    norms[norms == 0] = 1.0
-    Xn = (X / norms[:, None]).T  # (dim, n), closure-captured
+    Xn = _unit_rows(X).T  # (dim, n), closure-captured
 
     out_schema = "a long, b long, cosine double"
 
     def pairs(batches):
         for pdf in batches:
             ids = pdf[id_col].to_numpy()
-            M = np.asarray([list(map(float, v))
-                            for v in pdf[vec_col]])
-            mn = np.linalg.norm(M, axis=1)
-            mn[mn == 0] = 1.0
-            C = np.round((M / mn[:, None]) @ Xn, 4)  # (batch, n)
+            C = _cosine_block(pdf[vec_col], Xn, 4)  # (batch, n)
             bi, ai = np.nonzero((C >= threshold)
                                 & (ids[:, None] > all_ids[None, :]))
             yield pd.DataFrame({
@@ -910,27 +901,12 @@ def embedding_cosine_pairs(
     verifies.  P(same bucket) = (1 - θ/π)^n_planes — for cosine ≥ .95
     (θ≤18°) ≈ 0.29 per table; production would OR multiple tables, here one
     keeps the test cheap and the plan shape identical."""
-    import numpy as np
-
     if dim is None:
         dim = len(df.select(vec_col).first()[0])
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-
-    from go_jsonschema_spark.operators.ann import _lit_doubles
-
-    vec = F.col(vec_col)
-    bucket = F.lit(0).cast("long")
-    for i in range(n_planes):
-        # one parsed literal per plane (vs dim py4j round trips each —
-        # the r7 _lit_doubles rationale; identical doubles via repr)
-        lit_plane = _lit_doubles([float(x) for x in planes[i]])
-        bit = F.when(_dot(vec, lit_plane) > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bucket.bitwiseOR(F.shiftleft(bit, i))
-
-    b = _spread(df).select(F.col(id_col).alias("id"), vec.alias("v"), bucket.alias("bkt"))
+    bucket = hyperplane_bucket(
+        F.col(vec_col), n_planes=n_planes, dim=dim, seed=seed)
+    b = _spread(df).select(F.col(id_col).alias("id"),
+                           F.col(vec_col).alias("v"), bucket.alias("bkt"))
     b = _cap_buckets(b, ["bkt"], max_bucket)
     cos = _dot(F.col("l.v"), F.col("rt.v")) / (
         _norm(F.col("l.v")) * _norm(F.col("rt.v"))
@@ -987,10 +963,6 @@ def semantic_dedup(
     """
     import pandas as pd
 
-    from go_jsonschema_spark.operators.ann import (
-        assign_centroid, kmeans_centroids,
-    )
-
     if centroids is None:
         centroids = kmeans_centroids(
             df, vec_col=vec_col, id_col=key, n_centroids=n_clusters,
@@ -1019,9 +991,7 @@ def semantic_dedup(
                         for v in pdf["v"]])
         if np.isnan(X).any():
             raise ValueError("semantic_dedup: null/NaN vector elements")
-        norms = np.linalg.norm(X, axis=1)
-        norms[norms == 0.0] = 1.0
-        Xn = X / norms[:, None]
+        Xn = _unit_rows(X)
         S = Xn @ Xn.T
         # strictly-lower-triangular MASK = similarities to earlier rows
         # (np.tril would zero-fill and clobber negative sims)

@@ -468,11 +468,15 @@ def token_ngram_heavy_hitters(
     top = counted.orderBy(F.desc("cnt"), F.asc("code")).limit(k)
 
     # ---- phase 3: certificate — N windows vs the k-th candidate count
-    # (n_windows arrives with the recount job via the Observation)
+    # (n_windows arrives with the recount job via the Observation).  Read
+    # it only when the certificate needs it: with no candidate at all
+    # (empty input, every array shorter than n) AQE prunes the observed
+    # scan and the metric is never collected.
     rows = top.collect()
-    n_windows = obs.get["nw"] or 0
-    kth = rows[-1]["cnt"] if len(rows) >= k else 0
-    exact = bool(len(rows) >= k and kth * capacity > n_windows)
+    exact = False
+    if len(rows) >= k:
+        n_windows = obs.get["nw"] or 0
+        exact = bool(rows[-1]["cnt"] * capacity > n_windows)
 
     # unpack codes into token-id columns; deterministic rank
     out_rows = []

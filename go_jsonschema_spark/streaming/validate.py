@@ -20,7 +20,10 @@ Dataset-level checks over unbounded input need key-scoped state:
 * :func:`stream_duplicate_keys` — running duplicate-key counts via
   ``applyInPandasWithState`` (duplicate EMISSION, not suppression).
 * :func:`dedup_stream` — watermark-bounded duplicate SUPPRESSION.
-* :func:`stream_fk_violations` — stateless stream-static anti-join.
+* referential (foreign-key) checks need no streaming twin:
+  :func:`~go_jsonschema_spark.operators.referential.referential_violations`
+  is a stateless broadcast left-anti join, and Structured Streaming runs
+  it on a streaming left side against a static dimension as is.
 * :func:`stream_histogram` — per-window binned histograms; drift (PSI)
   against a static baseline then runs as a batch transform over the sink
   (:func:`~go_jsonschema_spark.operators.drift.psi_per_window`) — chained
@@ -46,34 +49,6 @@ def stream_violations(suite: ConstraintSuite, stream: DataFrame) -> DataFrame:
     dataset-level checks need the whole table (see the module docstring
     for their streaming forms)."""
     return suite.row_only().run(stream).violations
-
-
-def stream_fk_violations(
-    stream: DataFrame,
-    column: str,
-    dim: DataFrame,
-    dim_column: str | None = None,
-    *,
-    key: str = "doc_id",
-    constraint_id: str | None = None,
-) -> DataFrame:
-    """Streaming referential check: stream rows whose ``column`` has no
-    match in the STATIC dimension — a stateless broadcast left-anti join,
-    so it runs per micro-batch with no state store at all (the dimension
-    is broadcast once per batch; Structured Streaming supports
-    stream-static joins natively)."""
-    dc = dim_column or dim.columns[0]
-    cid = constraint_id or f"fk:{column}"
-    missing = stream.join(
-        F.broadcast(dim.select(F.col(dc).alias("__dim__")).distinct()),
-        F.col(column) == F.col("__dim__"),
-        "left_anti",
-    )
-    return missing.select(
-        F.col(key).cast("string").alias("doc_id"),
-        F.lit(cid).alias("constraint_id"),
-        F.col(column).cast("string").alias("observed"),
-    )
 
 
 def stateful_group_verdicts(

@@ -182,7 +182,9 @@ def test_streaming_violations_and_verdicts(spark, tmp_path):
 def test_stream_fk_violations(spark, tmp_path):
     """Stream-static broadcast anti-join: streaming rows missing from the
     static dimension surface as violations, matching the batch check."""
-    from go_jsonschema_spark.streaming.validate import stream_fk_violations
+    from go_jsonschema_spark.operators.referential import (
+        referential_violations,
+    )
 
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     src = str(tmp_path / "fk_src")
@@ -191,8 +193,9 @@ def test_stream_fk_violations(spark, tmp_path):
         [("click",), ("view",), ("purchase",), ("signup",)], "t string"
     )
     stream = spark.readStream.schema(events.schema).parquet(src)
-    out = stream_fk_violations(
-        stream, "event_type", dim, "t", key="event_id"
+    out = referential_violations(
+        stream, "event_type", dim, "t", key="event_id",
+        constraint_id="fk:event_type",
     )
     q = (
         out.writeStream.format("memory").queryName("fk_stream_out")

@@ -53,6 +53,17 @@ def test_short_and_null_arrays_ignored(spark):
     assert got == [(7, 8, 2), (8, 7, 2)]
 
 
+@pytest.mark.parametrize("rows", [
+    [],                                   # empty input
+    [("a", [1]), ("b", []), ("c", None)],  # every array shorter than n
+], ids=["empty", "all_short"])
+def test_no_windows_returns_no_rows(spark, rows):
+    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
+    out = token_ngram_heavy_hitters(df, n=2, k=3, capacity=64)
+    assert out.collect() == []
+    assert out.columns == ["t1", "t2", "cnt", "rank", "exact"]
+
+
 def test_trigrams_pack_and_unpack(spark):
     # token ids near the 21-bit boundary survive the packing round-trip
     big = (1 << 21) - 1

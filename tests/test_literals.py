@@ -22,10 +22,23 @@ def test_bigint_literal_matches_litlist(spark):
 
 def test_string_literal_matches_litlist(spark):
     vals = ["plain", "0-1-2-3", "it's", 'say "hi"', "back\\slash",
-            "unié中", "semi;colon--", "a,b"]
+            "unié中", "semi;colon--", "a,b", "${spark.app.name}"]
     fast = _one(spark, lit_strings(vals))
     slow = _one(spark, F.lit(vals).cast("array<string>"))
     assert fast == slow == vals
+
+
+def test_string_literal_under_escaped_string_literals(spark):
+    # the legacy parser mode reads backslash escapes verbatim; strings
+    # that would need one must not take the parsed path
+    vals = ["plain", "it's", "back\\slash", 'say "hi"']
+    conf = "spark.sql.parser.escapedStringLiterals"
+    spark.conf.set(conf, "true")
+    try:
+        got = _one(spark, lit_strings(vals))
+    finally:
+        spark.conf.unset(conf)
+    assert got == vals
 
 
 def test_control_chars_fall_back_but_stay_correct(spark):

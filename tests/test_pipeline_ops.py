@@ -94,7 +94,8 @@ def test_topk_cosine_exact_vs_lsh(spark, embs):
     exact = ann.topk_cosine(embs, q, k=5).collect()
     assert exact[0]["vec_id"] == 0 and exact[0]["cosine"] == 1.0
     # LSH probe must contain the query vector itself and rank it first
-    approx = ann.topk_cosine_lsh(embs, q, k=5).collect()
+    approx = ann.topk_cosine_lsh_multi(
+        embs, q, k=5, n_planes=10, n_tables=1).collect()
     assert approx[0]["vec_id"] == 0
     # recall sanity: at least 2 of exact top-5 in approx top-5
     assert len({r["vec_id"] for r in exact} & {r["vec_id"] for r in approx}) >= 2

@@ -4,8 +4,10 @@ without runtime HTTP from executors).
 The refRemote.json suite cases run end-to-end with NO manual
 ``register`` calls: :func:`fetch_remote_refs` discovers, fetches
 (offline here, via a fetcher that maps the suite's
-``http://localhost:1234/...`` URLs onto the repo's remotes directory)
-and registers every document the schema transitively needs.
+``http://localhost:1234/...`` URLs onto a remotes directory)
+and registers every document the schema transitively needs.  The
+fetch-mechanics tests serve the three JSON-Schema-Test-Suite remotes
+they touch from an in-test fixture (:data:`FIXTURE_REMOTES`).
 """
 
 from __future__ import annotations
@@ -29,9 +31,31 @@ REMOTES = os.path.join(SUITE_ROOT, "remotes")
 DRAFTS = [("draft4", 4), ("draft6", 6), ("draft7", 7),
           ("draft2019-09", 2019), ("draft2020-12", 2019)]
 
+# JSON-Schema-Test-Suite remotes/ documents, verbatim contents
+FIXTURE_REMOTES = {
+    "integer.json": {"type": "integer"},
+    "subSchemas.json": {
+        "integer": {"type": "integer"},
+        "refToInteger": {"$ref": "#/integer"},
+    },
+    "baseUriChangeFolderInSubschema/folderInteger.json": {
+        "type": "integer"},
+}
 
-def _suite_fetcher(counter: list[str] | None = None):
-    """Map the suite's http://localhost:1234/<rel> URLs to the on-disk
+
+@pytest.fixture
+def remotes(tmp_path):
+    """The :data:`FIXTURE_REMOTES` tree written under a temp dir."""
+    root = tmp_path / "remotes"
+    for rel, doc in FIXTURE_REMOTES.items():
+        p = root / rel
+        p.parent.mkdir(parents=True, exist_ok=True)
+        p.write_text(json.dumps(doc), encoding="utf-8")
+    return str(root)
+
+
+def _suite_fetcher(counter: list[str] | None = None, root: str = REMOTES):
+    """Map the suite's http://localhost:1234/<rel> URLs to an on-disk
     remotes tree — offline stand-in for the reference's :1234 server."""
 
     def fetch(url: str) -> str:
@@ -39,7 +63,7 @@ def _suite_fetcher(counter: list[str] | None = None):
         rel = url[len("http://localhost:1234/"):]
         if counter is not None:
             counter.append(url)
-        with open(os.path.join(REMOTES, rel), encoding="utf-8") as f:
+        with open(os.path.join(root, rel), encoding="utf-8") as f:
             return f.read()
 
     return fetch
@@ -70,14 +94,15 @@ def test_refremote_suite_no_manual_registration():
     assert n == 83 and not mismatches, "\n".join(mismatches)
 
 
-def test_fetch_is_minimal_and_transitive():
+def test_fetch_is_minimal_and_transitive(remotes):
     """Only referenced documents are fetched, and documents referenced
     BY fetched documents are pulled in too (bounded BFS)."""
     fetched_urls: list[str] = []
     schema = {"$ref": "http://localhost:1234/subSchemas.json#/integer"}
-    got = fetch_remote_refs(schema, fetcher=_suite_fetcher(fetched_urls))
+    got = fetch_remote_refs(schema,
+                            fetcher=_suite_fetcher(fetched_urls, remotes))
     assert set(got) == {"http://localhost:1234/subSchemas.json"}
-    n_remote_files = len(glob.glob(os.path.join(REMOTES, "**", "*.json"),
+    n_remote_files = len(glob.glob(os.path.join(remotes, "**", "*.json"),
                                    recursive=True))
     assert len(fetched_urls) == 1 < n_remote_files
 
@@ -95,7 +120,7 @@ def test_fetch_is_minimal_and_transitive():
             },
         },
     }
-    got2 = fetch_remote_refs(schema2, fetcher=_suite_fetcher())
+    got2 = fetch_remote_refs(schema2, fetcher=_suite_fetcher(root=remotes))
     assert ("http://localhost:1234/baseUriChangeFolderInSubschema/"
             "folderInteger.json" in got2)
 
@@ -109,12 +134,12 @@ def test_refs_in_data_positions_are_not_fetched():
     assert fetch_remote_refs(schema, fetcher=_suite_fetcher()) == {}
 
 
-def test_already_registered_documents_are_not_refetched():
+def test_already_registered_documents_are_not_refetched(remotes):
     url = "http://localhost:1234/integer.json"
-    pre = {url: fetch_schema(url, fetcher=_suite_fetcher())}
+    pre = {url: fetch_schema(url, fetcher=_suite_fetcher(root=remotes))}
     counter: list[str] = []
     got = fetch_remote_refs({"$ref": url}, registry=pre,
-                            fetcher=_suite_fetcher(counter))
+                            fetcher=_suite_fetcher(counter, remotes))
     assert got == {} and counter == []
 
 
@@ -156,12 +181,14 @@ def test_http_requires_allowlist():
             {"$ref": "http://example.invalid/schema.json"})
 
 
-def test_cache_dir_round_trip(tmp_path):
+def test_cache_dir_round_trip(tmp_path, remotes):
     calls: list[str] = []
     url = "http://localhost:1234/integer.json"
     cache = str(tmp_path / "cache")
-    a = fetch_schema(url, fetcher=_suite_fetcher(calls), cache_dir=cache)
-    b = fetch_schema(url, fetcher=_suite_fetcher(calls), cache_dir=cache)
+    a = fetch_schema(url, fetcher=_suite_fetcher(calls, remotes),
+                     cache_dir=cache)
+    b = fetch_schema(url, fetcher=_suite_fetcher(calls, remotes),
+                     cache_dir=cache)
     assert len(calls) == 1  # second read came from the cache
     assert a.root == b.root
 
