@@ -585,6 +585,8 @@ class ConstraintSuite:
                     uniqueness_violations,
                 )
 
+                # one exact count aggregation, one exchange; never the
+                # hash-compact path (slower, see duplicate_keys docstring)
                 parts.append(
                     uniqueness_violations(
                         df,
@@ -592,10 +594,6 @@ class ConstraintSuite:
                         # a single-element list degrades to the plain column
                         tc["columns"] if "columns" in tc else tc["column"],
                         constraint_id=tc["id"],
-                        # rare-duplicates regime: shuffle 8-byte key
-                        # hashes instead of the keys (see operators/
-                        # uniqueness.py duplicate_keys docstring)
-                        hash_compact=tc.get("hash_compact", False),
                     )
                 )
             elif kind == "foreign_key":

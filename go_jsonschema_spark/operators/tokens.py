@@ -75,16 +75,18 @@ def oov_rate(
     # Arrow-backed toPandas: the bounded collect of up to max_vocab ids
     # lands as one Arrow batch instead of pickled Rows (the Row path
     # spent ~0.1 s deserializing a 32k vocab and scales linearly with
-    # vocab size — r7); same distinct values either way
-    ids = vocab.select(vocab_col).distinct().limit(
+    # vocab size — r7); same distinct values either way.  NULLs drop in
+    # Spark so the column stays int64 (a NULL would make it float64 and
+    # round ids above 2^53)
+    vc = F.col(vocab_col)
+    ids = vocab.select(vc).where(vc.isNotNull()).distinct().limit(
         max_vocab + 1).toPandas()[vocab_col]
     if len(ids) > max_vocab:
         raise ValueError(
             f"oov_rate: vocab has > {max_vocab} distinct {vocab_col!r} "
             "values — that is a token stream, not a tokenizer "
             "vocabulary; pre-reduce it or raise max_vocab")
-    vocab_arr = np.asarray(
-        sorted(int(x) for x in ids.dropna()), dtype=np.int64)
+    vocab_arr = np.sort(ids.to_numpy(dtype=np.int64))
 
     @pandas_udf("long")
     def oov_count(tokens: pd.Series) -> pd.Series:
@@ -95,13 +97,12 @@ def oov_rate(
             dtype=np.int64, count=len(arrs))
         if lens.sum() == 0:
             return pd.Series(out)
-        # one concatenated buffer → one np.isin per Arrow batch; NULL
-        # elements arrive as NaN in a float buffer and count as OOV
+        # one concatenated int64 buffer → one exact np.isin per Arrow
+        # batch (the arrays hold no NULLs, so Arrow never widens to float)
         flat = np.concatenate(
-            [np.asarray(a, dtype=np.float64) for a in arrs if a is not None
+            [np.asarray(a, dtype=np.int64) for a in arrs if a is not None
              and len(a)])
-        miss = ~np.isin(flat.astype(np.int64), vocab_arr)
-        miss |= np.isnan(flat)  # NaN casts to int64 garbage — force OOV
+        miss = ~np.isin(flat, vocab_arr)
         idx = np.repeat(np.arange(len(arrs)), lens)
         np.add.at(out, idx, miss.astype(np.int64))
         return pd.Series(out)
@@ -109,10 +110,12 @@ def oov_rate(
     n_tok = F.coalesce(F.size(F.col(tokens_col)), F.lit(0))
     # size() is -1 for NULL arrays pre-coalesce on some paths — clamp
     n_tok = F.when(n_tok < 0, F.lit(0)).otherwise(n_tok)
+    # NULL elements are OOV: counted natively, never shipped to Python
+    non_null = F.filter(F.col(tokens_col), lambda t: t.isNotNull())
     return df.select(
         F.col(id_col),
         n_tok.cast("long").alias("n_tok"),
-        F.when(n_tok > 0, oov_count(F.col(tokens_col)))
+        F.when(n_tok > 0, oov_count(non_null) + n_tok - F.size(non_null))
         .otherwise(F.lit(0)).cast("long").alias("n_oov"),
     ).select(
         id_col, "n_tok", "n_oov",

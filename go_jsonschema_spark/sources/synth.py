@@ -226,10 +226,9 @@ def sequences_table_spec():
             }
         ],
         table_checks=[
-            # hash_compact: duplicate doc_ids are rare plants, so the big
-            # shuffle carries 8-byte xxhash64(doc_id) rows, not strings
-            {"kind": "unique", "id": "unique:doc_id", "columns": ["doc_id"],
-             "hash_compact": True},
+            # one partial+final count over doc_id: the violations action is
+            # the predicate pass plus this doc_id-only aggregation
+            {"kind": "unique", "id": "unique:doc_id", "columns": ["doc_id"]},
             {"kind": "foreign_key", "id": "fk:source", "column": "source",
              "dim": "sources_dim"},
             {"kind": "stats", "columns": ["n_tok"]},

@@ -106,6 +106,41 @@ def test_hash_compact_duplicate_keys_exact(spark):
     assert p2 == c2 == {(1, "x", 2)}
 
 
+def test_run_unique_rows_match_both_operator_paths(spark):
+    """run()'s unique:* rows equal uniqueness_violations on the plain and
+    the hash-compact path: hot key, pairwise duplicates, two NULL keys,
+    and a composite key with a NULL member (today's NULL-key output)."""
+    from go_jsonschema_spark.operators.uniqueness import (
+        uniqueness_violations,
+    )
+
+    rows = ([("hot", 1, "x")] * 9 + [("p1", 2, "y")] * 2
+            + [("p2", 3, None)] * 2 + [(None, 4, "z")] * 2
+            + [("solo", 5, "w")])
+    df = spark.createDataFrame(rows, "k string, a long, b string")
+    cases = [
+        ("k", {"hot": "count=9", "p1": "count=2", "p2": "count=2",
+               None: "count=2"}),
+        (["a", "b"], {'{"a":1,"b":"x"}': "count=9",
+                      '{"a":2,"b":"y"}': "count=2",
+                      '{"a":3}': "count=2",  # NULL member: to_json drops it
+                      '{"a":4,"b":"z"}': "count=2"}),
+    ]
+    for key, want in cases:
+        cols = key if isinstance(key, list) else [key]
+        cid = "unique:" + "+".join(cols)
+        suite = ConstraintSuite(TableSpec(table_checks=[
+            {"kind": "unique", "id": cid, "columns": cols}]), key="k")
+        got = sorted(map(tuple, suite.run(df).violations.collect()), key=str)
+        assert {d: o for d, c, o in got if c == cid} == want, key
+        assert all(c == cid for _, c, _ in got)
+        for compact in (False, True):
+            op = sorted(map(tuple, uniqueness_violations(
+                df, key, constraint_id=cid, hash_compact=compact,
+            ).collect()), key=str)
+            assert got == op, (key, compact)
+
+
 # ------------------------------------------------------ quarantine split
 def test_split_routes_rows_one_plan(spark):
     from go_jsonschema_spark import ConstraintSuite, TableSpec

@@ -50,6 +50,22 @@ def test_uniqueness_single_shuffle_and_pruned(spark, seq_parquet):
     assert "struct<doc_id:string>" in plan
 
 
+def test_flagship_violations_single_exchange_no_join(spark, seq_parquet):
+    """The flagship violations action is the predicate pass plus ONE
+    exact count aggregation over doc_id: one Exchange, no join-back and
+    no key hashing (the hash-compact path is never taken by run())."""
+    suite = ConstraintSuite(synth.sequences_table_spec(), key="doc_id",
+                            non_null_elements=("tokens",))
+    res = suite.run(
+        seq_parquet, partition_col="part",
+        dims={"sources_dim": synth.sources_dim(spark)},
+    )
+    plan = _plan(res.violations)
+    assert plan.count("Exchange (") == 1
+    assert "Join" not in plan
+    assert "xxhash64" not in plan
+
+
 def test_verdict_rowcount_scan_is_single_column(spark, seq_parquet):
     suite = ConstraintSuite(synth.sequences_table_spec(), key="doc_id")
     res = suite.run(

@@ -43,6 +43,18 @@ def test_oov_vocab_nulls_ignored(spark):
     assert r["n_oov"] == 1  # 3 is OOV; NULL vocab row grants nothing
 
 
+def test_oov_vocab_ids_above_2_53_stay_exact(spark):
+    """A NULL vocab row must not round the other ids through float64:
+    2**53 + 1 is in the vocabulary, its float neighbour 2**53 is not."""
+    big = 2**53 + 1
+    vocab = spark.createDataFrame([(None,), (big,), (7,)], "token_id bigint")
+    df = spark.createDataFrame(
+        [("a", [big, 7]), ("b", [big - 1, big, None])],
+        "doc_id string, tokens array<bigint>")
+    got = {r["doc_id"]: r["n_oov"] for r in oov_rate(df, vocab).collect()}
+    assert got == {"a": 0, "b": 2}  # 2**53 and the NULL element
+
+
 def test_oov_rate_expr_tiny_vocab(spark):
     df = _df(spark, [("a", [1, 2, 99])])
     out = df.select(oov_rate_expr(F.col("tokens"), [1, 2, 3]).alias("n"))
