@@ -9,8 +9,10 @@ The Spark lifecycle replacing the reference's per-document loop
       ──► violations = explode(entries); verdicts = per-partition row
           counts (single-column scan) ⋈ aggregates over the SMALL
           violation set — the predicate forest is never evaluated twice
-    table checks (unique / foreign_key / stats / drift) run as separate
-    aggregate stages over narrow projections of the same table.
+    foreign_key checks are membership flags in that same select (a left
+    join against the distinct dim keys); the other table checks (unique /
+    stats / drift) run as separate aggregate stages over narrow
+    projections of the same table.
 
 All pass/fail arithmetic lives in one :class:`VerdictKernel` per compiled
 plan: the predicate projection, the violation-entries array, the fail
@@ -63,11 +65,6 @@ _BOUND_PAIRS = {
     "exclusiveMaximum": ("exclusiveMaximum",),
     "exclusiveMinimum": ("exclusiveMinimum",),
 }
-# foreign_key dims at or below this many distinct values fold into the
-# row-predicate pass as an `isin` (one collected list, same size contract
-# as broadcasting the dim); larger dims keep the broadcast anti-join
-_FK_INLINE_MAX = 10_000
-
 _ANNOTATIONS = {
     # annotations — parsed, preserved, never validated (parser.go:90-99 and
     # the reference's non-validating keywords)
@@ -107,9 +104,10 @@ class ConstraintPlan:
     # memo of derived Column bundles (the VerdictKernel per key and
     # tolerances): Columns are immutable unbound expressions, so the
     # ~1000 py4j round trips that assemble them are pure fixed driver
-    # cost — paid once per compiled plan.  Never holds DataFrames, data,
-    # or anything input-derived (the fk-fold value list stays per-run in
-    # run()).
+    # cost — paid once per compiled plan.  Invariant: never holds
+    # DataFrames, data, or dim-bound Columns (the kernel's fk entries
+    # name only the __fk{i}__ flag columns; run() joins each call's dims
+    # afresh).
     derived: dict[tuple, Any] = field(default_factory=dict)
 
 
@@ -124,23 +122,31 @@ class VerdictKernel:
 
     A predicate that evaluates to NULL counts as passing everywhere —
     it never survives a violation filter, and every counter is
-    ``sum(~coalesce(col, true))``."""
+    ``sum(~coalesce(col, true))``.
+
+    The foreign-key checks of the plan enter only :attr:`entries` and
+    :attr:`emit`, over the ``__fk{i}__`` flags that ``run()`` joins in;
+    they never reach a counter."""
 
     ids: list[str]  # constraint ids, plan order
     names: list[str]  # internal boolean column per id: __c{i}__
     checks: list[Column]  # predicate i aliased names[i]
     pass_col: Column  # AND over names (the __pass__ column)
-    row_entries: list[Column]  # per id: when(~ok, struct(id, observed))
-    entries: Column  # row_entries as an array, NULLs filtered out
+    fk_checks: list[dict[str, Any]]  # the plan's foreign_key checks
+    fk_names: list[str]  # flag column per fk check: __fk{i}__
+    # per id and fk: when(~ok, struct(id, observed)) as an array, NULLs
+    # filtered out
+    entries: Column
+    emit: Column  # a row fails some constraint or fk
     doc_id: Column  # key cast to string, aliased doc_id
     n_rows: Column  # count(1) aliased n_rows
     counters: list[Column]  # n_fail, __n{i}__ aggregates
     # n_rows, n_fail, fail_by_constraint, n_pass, passed over the counters
     verdict: list[Column]
 
-    def project(self, df: DataFrame, *extra: Column) -> DataFrame:
-        """``df`` plus the predicate columns, ``extra`` and ``__pass__``."""
-        return df.select("*", *self.checks, *extra).withColumn(
+    def project(self, df: DataFrame) -> DataFrame:
+        """``df`` plus the predicate columns and ``__pass__``."""
+        return df.select("*", *self.checks).withColumn(
             "__pass__", self.pass_col)
 
     def verdicts(self, checked: DataFrame, group: Column, name: str
@@ -161,9 +167,9 @@ class SuiteResult:
     verdicts: DataFrame  # per-partition pass/fail + counts
     constraint_ids: list[str] = field(default_factory=list)
     row_violations: DataFrame | None = None  # persisted handle (unpersist me)
-    fk_constraint_ids: list[str] = field(default_factory=list)  # folded fks
-    # internal boolean column of each constraint id / folded fk in
-    # ``checked`` (the kernel's names, the fold's __fk{i}__)
+    fk_constraint_ids: list[str] = field(default_factory=list)  # fk checks
+    # internal boolean column of each constraint id / fk check in
+    # ``checked`` (the kernel's names, run()'s __fk{i}__ flags)
     check_cols: list[str] = field(default_factory=list)
     fk_cols: list[str] = field(default_factory=list)
 
@@ -174,10 +180,10 @@ class SuiteResult:
         derived from the SAME one-pass ``checked`` plan the verdicts
         came from: no second scan, no join back.
 
-        ``quarantine_fk`` also routes rows failing a folded
-        foreign-key check (they are table-check violations, so they
-        never count in verdict ``n_fail`` — but a row with an unknown
-        source is usually not a row to ship).  ``include_reasons``
+        ``quarantine_fk`` also routes rows failing any foreign-key
+        check (they are table-check violations, so they never count in
+        verdict ``n_fail`` — but a row with an unknown source is usually
+        not a row to ship).  ``include_reasons``
         appends a ``__reasons__`` array of failed constraint ids to
         the quarantined side (original column set otherwise —
         internal predicate columns are dropped from both sides)."""
@@ -370,12 +376,17 @@ class ConstraintSuite:
         # Column resolution would read as struct access
         names = [f"__c{i}__" for i in range(len(ids))]
         counts = [f"__n{i}__" for i in range(len(ids))]
+        fks = [tc for tc in plan.table_checks if tc["kind"] == "foreign_key"]
+        fk_names = [f"__fk{i}__" for i in range(len(fks))]
+        observed = [plan.observed[cid] for cid in ids] + [
+            F.col(tc["column"]).cast("string") for tc in fks]
         row_entries = [
             F.when(~F.col(name), F.struct(
                 F.lit(cid).alias("constraint_id"),
-                plan.observed[cid].alias("observed"),
+                obs.alias("observed"),
             ))
-            for name, cid in zip(names, ids)
+            for name, cid, obs in zip(
+                names + fk_names, ids + [tc["id"] for tc in fks], observed)
         ]
         entries = F.filter(
             F.array(*row_entries) if row_entries else F.array().cast(
@@ -407,8 +418,11 @@ class ConstraintSuite:
                     for name, (_, p) in zip(names, plan.predicates)],
             pass_col=(functools.reduce(operator.and_, map(F.col, names))
                       if names else F.lit(True)),
-            row_entries=row_entries,
+            fk_checks=fks,
+            fk_names=fk_names,
             entries=entries,
+            emit=functools.reduce(operator.or_, [
+                ~F.col(c) for c in ["__pass__", *fk_names]]),
             doc_id=F.col(self.key).cast("string").alias("doc_id"),
             n_rows=F.count(F.lit(1)).alias("n_rows"),
             counters=[n_failed("__pass__", "n_fail"),
@@ -568,17 +582,18 @@ class ConstraintSuite:
     # duplicates; the checkpoint layer runs them as their own phase) -------
     def table_check_violations(
         self, df: DataFrame, *, dims: dict[str, DataFrame] | None = None,
-        skip_ids: set[str] | None = None,
     ) -> DataFrame | None:
-        """Violations from the table-level checks (unique / foreign_key),
-        or None if the spec has none.  ``skip_ids`` names checks already
-        evaluated elsewhere (run() folds small-dim foreign keys into the
-        row-predicate pass)."""
-        dims = dims or {}
+        """Violations from the table-level checks (unique / foreign_key /
+        functional_dependency / reconcile), or None if the spec has
+        none."""
+        return self._table_violations(df, self.spec.table_checks, dims or {})
+
+    def _table_violations(
+        self, df: DataFrame, checks: list[dict[str, Any]],
+        dims: dict[str, DataFrame],
+    ) -> DataFrame | None:
         parts: list[DataFrame] = []
-        for tc in self.spec.table_checks:
-            if skip_ids and tc.get("id") in skip_ids:
-                continue
+        for tc in checks:
             kind = tc["kind"]
             if kind == "unique":
                 from go_jsonschema_spark.operators.uniqueness import (
@@ -795,90 +810,52 @@ class ConstraintSuite:
         (MEMORY_AND_DISK) so violations + verdicts together still cost one
         predicate pass."""
         k = self.kernel(df)
+        dims = dims or {}
 
-        import functools
-        import operator
-
-        # Fold SMALL-dimension foreign_key table checks into the one
-        # predicate pass: the allowed-value set collects once on the
-        # driver (bounded by _FK_INLINE_MAX, same contract as a broadcast
-        # dim) and the check becomes an `isin` on a column the scan very
-        # often already reads — the separate anti-join job (its own full
-        # pass over the fact table) disappears.  Fact-side NULLs match
-        # the anti-join semantics: no dim value equals NULL, so NULL is a
-        # violation (isin yields NULL → coalesce False).  Folded checks
-        # contribute VIOLATION rows identical to referential_violations
-        # but stay OUT of the verdict fail counts, exactly like the
-        # table-check path they replace.  Dims above the bound keep the
-        # broadcast anti-join.
-        fk_folded: list[tuple[str, Column, Column]] = []  # (cid, ok, obs)
-        fk_folded_ids: set[str] = set()
-        for tc in self.spec.table_checks:
-            if tc.get("kind") != "foreign_key":
-                continue
-            if tc["dim"] not in (dims or {}):
+        # Every foreign_key check is a membership flag computed in the one
+        # predicate pass: the fact frame left-joins the distinct dim keys,
+        # which carry a true marker, and the flag __fk{i}__ is
+        # coalesce(marker, false).  The optimizer picks broadcast or
+        # shuffle from the dim's measured size; no dim value reaches the
+        # driver.  A NULL fact key matches nothing (a violation, as in the
+        # anti-join) and NULL dim values never match.  FK checks emit
+        # VIOLATION rows identical to referential_violations but stay OUT
+        # of the verdict fail counts, like every table check.
+        fact = df
+        for col, tc in zip(k.fk_names, k.fk_checks):
+            if tc["dim"] not in dims:
                 raise KeyError(
                     f"foreign_key check {tc['id']!r} needs dimension "
                     f"{tc['dim']!r} passed via run(..., dims={{...}})"
                 )
-            dcol = tc.get("dim_column") or tc["column"]
-            vals = [
-                r[0]
-                for r in dims[tc["dim"]]
-                .select(dcol)
-                .distinct()
-                .limit(_FK_INLINE_MAX + 1)
-                .collect()
-            ]
-            if len(vals) > _FK_INLINE_MAX:
-                continue  # genuinely large dim → anti-join path below
-            vals = [v for v in vals if v is not None]
-            ok = F.coalesce(
-                F.col(tc["column"]).isin(*vals) if vals else F.lit(False),
-                F.lit(False),
-            )
-            fk_folded.append(
-                (tc["id"], ok, F.col(tc["column"]).cast("string")))
-            fk_folded_ids.add(tc["id"])
+            dkey = f"{col}key"
+            dim_keys = dims[tc["dim"]].select(
+                F.col(tc.get("dim_column") or tc["column"]).alias(dkey),
+                F.lit(True).alias(col),
+            ).distinct()
+            fact = fact.join(
+                dim_keys, F.col(tc["column"]) == F.col(dkey), "left"
+            ).drop(dkey)
+        if k.fk_names:
+            fact = fact.withColumns({col: F.coalesce(F.col(col), F.lit(False))
+                                     for col in k.fk_names})
 
         part = F.col(partition_col) if partition_col else F.lit("__all__")
-        fk_cols = [f"__fk{i}__" for i in range(len(fk_folded))]
-        checked = k.project(df, *[
-            ok.alias(col) for col, (_, ok, _) in zip(fk_cols, fk_folded)])
+        checked = k.project(fact)
 
         # violations: one row per FAILING source row with the array of its
         # failed constraints (kept un-exploded so row identity survives —
         # a nondeterministic row id would be re-evaluated per exploded row
         # and doc_id may legitimately repeat via duplicate rows); the
         # exploded per-constraint view and the per-partition counts all
-        # derive from this one DF.  The fk entries embed this run's
-        # collected dim values, so the combined array is rebuilt whenever
-        # a folded fk is present; without one the kernel's array is the
-        # identical expression.
-        if fk_folded:
-            entries = F.filter(F.array(*k.row_entries, *[
-                F.when(~F.col(col), F.struct(
-                    F.lit(cid).alias("constraint_id"),
-                    obs.alias("observed"),
-                ))
-                for col, (cid, _ok, obs) in zip(fk_cols, fk_folded)
-            ]), lambda x: x.isNotNull())
-        else:
-            entries = k.entries
-        # rows are emitted when ANY row constraint OR folded fk fails; a
-        # row emitted only for a folded fk has __pass__ true and adds 0 to
-        # every kernel counter (fk failures are table-check violations,
-        # never verdict fail counts)
-        emit = functools.reduce(
-            operator.or_,
-            [~F.col("__pass__")] + [~F.col(col) for col in fk_cols],
-        )
-        failed_rows = checked.filter(emit).select(
+        # derive from this one DF.  A row emitted only for an fk has
+        # __pass__ true and adds 0 to every kernel counter.
+        failed_rows = checked.filter(k.emit).select(
             k.doc_id,
             part.alias("__part__"),
             "__pass__",
             *k.names,
-            entries.alias("entries"),
+            k.entries.alias("entries"),
         )
         if persist_violations:
             from pyspark import StorageLevel
@@ -888,11 +865,12 @@ class ConstraintSuite:
             "doc_id", F.explode("entries").alias("v")
         ).select("doc_id", "v.constraint_id", "v.observed")
 
-        # table checks → more violations + metrics (folded fk checks
-        # already produced their violations in the predicate pass)
+        # the other table checks → more violations (the fk checks
+        # already produced theirs in the predicate pass)
         viol_parts = [row_viol]
-        tv = self.table_check_violations(
-            df, dims=dims, skip_ids=fk_folded_ids)
+        tv = self._table_violations(
+            df, [tc for tc in self.spec.table_checks
+                 if tc["kind"] != "foreign_key"], dims)
         if tv is not None:
             viol_parts.append(tv)
 
@@ -913,7 +891,7 @@ class ConstraintSuite:
         return SuiteResult(
             checked, violations, verdicts, k.ids,
             row_violations=failed_rows if persist_violations else None,
-            fk_constraint_ids=[cid for cid, _, _ in fk_folded],
+            fk_constraint_ids=[tc["id"] for tc in k.fk_checks],
             check_cols=k.names,
-            fk_cols=fk_cols,
+            fk_cols=k.fk_names,
         )

@@ -6,9 +6,11 @@ closure per present keyword; validation is then just running the chain.
 ``interp.validate_instance`` re-examines the schema dict per value — fine
 for the parity harness, wasteful inside a pandas UDF evaluating millions of
 payloads.  This module compiles the same semantics into nested Python
-closures (2-4× faster per value); parity is enforced by running the entire
-official test suite through BOTH paths (tests/test_parity_suite.py,
-tests/test_interp_compile.py).
+closures (2-4× faster per value).  Parity with the interpreter is checked
+by the hypothesis differential in tests/test_differential.py and the
+draft-specific cases in tests/test_json_native.py; the full official-suite
+runs (tests/test_parity_suite.py, tests/test_interp_compile.py) skip unless
+the JSON-Schema-Test-Suite corpus is installed.
 
 Semantics are delegated to interp's primitives (json_type, exact-rational
 comparison, deep_equal, canonical_key, format checkers, ECMA-regex cache)
@@ -22,11 +24,11 @@ from typing import Any, Callable
 from go_jsonschema_spark.interp import (
     _FORMAT_CHECKS,
     _as_fraction,
+    _owning_spec,
     canonical_key,
     compile_ecma_regex,
     deep_equal,
     json_type,
-    _meta_specs,
 )
 from go_jsonschema_spark.spec import SchemaSpec, SpecError
 
@@ -71,20 +73,6 @@ def compile_validator(
     return _compile(schema, spec, draft, registry or {}, assert_formats, memo)
 
 
-def _owning(spec: SchemaSpec, node: Any, registry: dict[str, Any]) -> SchemaSpec:
-    if node is spec.root or id(node) in spec.base_of:
-        return spec
-    for ms in _meta_specs():
-        if id(node) in ms.base_of:
-            return ms
-    for v in registry.values():
-        if isinstance(v, SchemaSpec) and (
-            node is v.root or id(node) in v.base_of
-        ):
-            return v
-    return spec
-
-
 def _compile(
     schema: Any,
     spec: SchemaSpec,
@@ -117,7 +105,9 @@ def _compile(
 
     sub = lambda s: _compile(s, spec, draft, registry, fmt, memo)  # noqa: E731
 
-    # $ref short-circuits siblings (parser.go:323-326); resolve lazily ONCE.
+    # $ref short-circuits siblings in draft<=7 (parser.go:323-326); from
+    # 2019-09 it is an in-place applicator evaluated WITH its siblings.
+    # The target resolves lazily ONCE.
     # A shared per-compilation depth counter bounds RUNTIME recursion: a
     # cycle that does not shrink the value ({"$ref": "#"} or
     # {"allOf": [{"$ref": "#"}]}) would otherwise recurse until the Python
@@ -131,9 +121,9 @@ def _compile(
 
         def ref_v(v: Any) -> bool:
             if not cell:
-                owner = _owning(spec, schema, registry)
+                owner = _owning_spec(spec, schema, registry)
                 target = owner.resolve_ref(ref, at=schema, extra=registry)
-                towner = _owning(spec, target, registry)
+                towner = _owning_spec(spec, target, registry)
                 cell.append(
                     _compile(target, towner if towner is not spec else spec,
                              draft, registry, fmt, memo)
@@ -147,7 +137,8 @@ def _compile(
                 depth[0] -= 1
 
         fns.append(ref_v)
-        return run
+        if draft < 2019:
+            return run
 
     t = schema.get("type")
     if t is not None:

@@ -1,9 +1,10 @@
-"""Round-6 engine scaling changes.
+"""Engine table checks inside run().
 
-1. Small-dimension foreign_key table checks fold into the row-predicate
-   pass (one less full scan + anti-join job); violations are identical
-   to the anti-join path and verdict fail counts still EXCLUDE fk
-   failures.
+1. Every foreign_key check is a membership flag computed in the
+   row-predicate pass (a left join against the distinct dim keys, no
+   anti-join job, whatever the dim size); its violation rows equal
+   referential_violations, verdict fail counts still EXCLUDE fk
+   failures, and split() quarantines fk failures.
 2. duplicate_keys(hash_compact=True) shuffles 8-byte key hashes and
    exactly reproduces the plain aggregation's output.
 """
@@ -65,17 +66,31 @@ def test_folded_fk_stays_out_of_verdicts(spark):
     assert "fk:src" not in v["fail_by_constraint"]
 
 
-def test_large_dim_falls_back_to_anti_join(spark, monkeypatch):
-    import go_jsonschema_spark.engine as eng
+def test_large_dim_matches_anti_join_and_quarantines(spark):
+    """A dim of 10,001 distinct values plus a NULL takes the same in-plan
+    flag as a small one: its fk rows equal referential_violations and
+    split() quarantines the unknown-key and NULL-key rows."""
+    from go_jsonschema_spark.operators.referential import (
+        referential_violations,
+    )
 
-    monkeypatch.setattr(eng, "_FK_INLINE_MAX", 2)  # force the fallback
-    suite = _suite()
-    res = suite.run(_facts(spark), dims={"srcdim": _dim(spark)})
-    got = {(r["doc_id"], r["constraint_id"]) for r in
-           res.violations.collect()}
-    assert ("d3", "fk:src") in got and ("d5", "fk:src") in got
+    dim = spark.range(9_999).select(
+        F.concat(F.lit("k"), F.col("id").cast("string")).alias("src")
+    ).union(spark.createDataFrame([("a",), ("b",), (None,)], "src string"))
+    assert dim.dropna().distinct().count() == 10_001
+    facts = _facts(spark)
+    res = _suite().run(facts, dims={"srcdim": dim})
+    got = sorted(map(tuple, res.violations.filter(
+        F.col("constraint_id") == "fk:src").collect()), key=str)
+    want = sorted(map(tuple, referential_violations(
+        facts, "src", dim, constraint_id="fk:src").collect()), key=str)
+    assert got == want
+    assert [d for d, _, _ in got] == ["d3", "d4", "d5"]
+    clean, bad = res.split()
+    assert {r["doc_id"] for r in clean.collect()} == {"d1"}
+    assert {r["doc_id"] for r in bad.collect()} == {"d2", "d3", "d4", "d5"}
     plan = res.violations._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in plan  # big dims keep the broadcast anti-join
+    assert "LeftAnti" not in plan
 
 
 def test_missing_dim_still_raises(spark):

@@ -223,3 +223,28 @@ def test_json_column_errors_surface(spark):
     assert any("required" in e for e in got["{}"])
     assert any("invalid JSON" in e for e in got["garbage"])
     assert any("null payload" in e for e in got[None])
+
+
+def test_ref_siblings_follow_the_draft(spark):
+    """From 2019-09 ``$ref`` is an in-place applicator evaluated WITH its
+    siblings; in draft 7 and earlier it short-circuits them.  The
+    closure-compiled predicate, the errors UDF and ``jsonschema`` agree
+    under both drafts."""
+    import jsonschema
+
+    from go_jsonschema_spark.compile import json_column_errors
+
+    schema = {"$ref": "#/$defs/a", "maxLength": 2,
+              "$defs": {"a": {"type": "string"}}}
+    df = spark.createDataFrame([('"abcdef"',)], "j string")
+    for draft, validator, want in (
+        (2020, jsonschema.Draft202012Validator, False),
+        (7, jsonschema.Draft7Validator, True),
+    ):
+        assert validator(schema).is_valid("abcdef") is want
+        row = df.select(
+            json_column_predicate(schema, draft=draft)(F.col("j")),
+            json_column_errors(schema, draft=draft)(F.col("j")),
+        ).first()
+        assert row[0] is want, draft
+        assert any("maxLength" in e for e in row[1]) is (not want), draft

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -52,8 +53,11 @@ def test_uniqueness_single_shuffle_and_pruned(spark, seq_parquet):
 
 def test_flagship_violations_single_exchange_no_join(spark, seq_parquet):
     """The flagship violations action is the predicate pass plus ONE
-    exact count aggregation over doc_id: one Exchange, no join-back and
-    no key hashing (the hash-compact path is never taken by run())."""
+    exact count aggregation over doc_id: the fact table shuffles once,
+    with no join-back and no key hashing (the hash-compact path is never
+    taken by run()).  The foreign key is one left join against the
+    distinct sources_dim keys inside the predicate pass (no anti-join);
+    the only other shuffle is that distinct over the dim."""
     suite = ConstraintSuite(synth.sequences_table_spec(), key="doc_id",
                             non_null_elements=("tokens",))
     res = suite.run(
@@ -61,9 +65,14 @@ def test_flagship_violations_single_exchange_no_join(spark, seq_parquet):
         dims={"sources_dim": synth.sources_dim(spark)},
     )
     plan = _plan(res.violations)
-    assert plan.count("Exchange (") == 1
-    assert "Join" not in plan
-    assert "xxhash64" not in plan
+    shuffles = re.findall(r"Arguments: hashpartitioning\((\w+)#", plan)
+    # fact side: the doc_id count (aliased key); dim side: its distinct
+    assert sorted(shuffles) == ["__fk0__key", "key"]
+    assert "xxhash64" not in plan and "LeftAnti" not in plan
+    joins = re.findall(r"(\w*Join \w+).* \(\d+\)$", plan, re.M)
+    assert joins == ["BroadcastHashJoin LeftOuter"]
+    # sources_dim (a spark.range) is read once
+    assert len(re.findall(r"^\(\d+\) Range$", plan, re.M)) == 1
 
 
 def test_verdict_rowcount_scan_is_single_column(spark, seq_parquet):
@@ -91,11 +100,14 @@ def test_predicates_stay_in_codegen(spark, seq_parquet):
     res = suite.run(
         seq_parquet, dims={"sources_dim": synth.sources_dim(spark)}
     )
-    plan = _plan(res.checked)
-    # '*' marks codegen'd operators in formatted plans; the HOF (forall)
-    # predicates are JVM-interpreted expressions (Spark doesn't codegen
-    # lambda functions) but must never fall to a Python eval node
-    assert "* " in plan
+    # the fk join puts an AdaptiveSparkPlan around the query, whose
+    # pre-execution explain shows no codegen stages: read the final plan
+    res.checked.collect()
+    plan = res.checked._jdf.queryExecution().executedPlan().toString()
+    # '*(n)' marks codegen'd operators; the HOF (forall) predicates are
+    # JVM-interpreted expressions (Spark doesn't codegen lambda
+    # functions) but must never fall to a Python eval node
+    assert re.search(r"\*\(\d+\) Project", plan)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
