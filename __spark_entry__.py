@@ -1547,8 +1547,8 @@ def _q_props_json_validation(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _q_props_json_native(spark: SparkSession, sf: str) -> DataFrame:
-    """Same validation as props_json_validation but fully JVM-side:
-    from_json + the typed Catalyst compiler + variant type witnesses
+    """Same validation as props_json_validation but fully JVM-side: one
+    from_json parse per value feeding the typed Catalyst compiler
     (functions/json_native.py) — zero Python in the row path.  Checked
     against the same DuckDB oracle as the UDF path."""
     from go_jsonschema_spark.functions.json_native import (

@@ -16,9 +16,10 @@ compile-time decision — ``type`` checks become ``lit(True)``/``isNotNull``/
 role of JSON ``null``; type-specific keywords are vacuously true on NULL,
 exactly as JSON Schema keywords ignore non-matching types.
 
-Dynamic JSON columns (arbitrary nested values, e.g. a JSON-string props
-column) go through :func:`json_column_predicate` instead — an Arrow-batched
-pandas UDF wrapping the parity interpreter (interp.py).
+JSON-string columns go through functions/json_native.py (one native
+``from_json`` parse) when the schema is static, and through
+:func:`json_column_predicate` otherwise — an Arrow-batched pandas UDF
+wrapping the parity interpreter (interp.py).
 """
 
 from __future__ import annotations
@@ -614,8 +615,10 @@ def json_column_predicate(
 ):
     """Pandas UDF: validate a column of JSON *strings* against ``schema``.
 
-    The slow-path escape hatch for truly dynamic payloads (e.g. an
-    ``events.props`` JSON column): the spec is CLOSURE-COMPILED once per
+    The slow-path escape hatch for truly dynamic payloads (e.g. a JSON
+    column whose schema uses ``patternProperties``, ``propertyNames`` or
+    combinators — static object schemas take the native path in
+    functions/json_native.py): the spec is CLOSURE-COMPILED once per
     Python worker (interp_compile.py — the setupValidators analogue,
     ~2× the re-walking interpreter) and runs once per Arrow batch over
     ~10k parsed values — never a per-row pyspark UDF.  Unparseable JSON is

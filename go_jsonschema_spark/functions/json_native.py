@@ -2,87 +2,116 @@
 
 The dynamic path (compile.json_column_predicate) runs an Arrow-batched
 Python interpreter — correct for arbitrary schemas, but Python-side.  For
-the common production case — a STATIC object schema with typed properties
-(e.g. ``events.props``) — the same verdicts can stay entirely JVM-side:
+static object schemas with typed properties (e.g. ``events.props``, or a
+closed ``attrs`` object with a string array and an optional score) the
+same verdicts stay JVM-side, with each JSON string parsed exactly once:
 
-    from_json(col, derived_struct, corrupt-record option)
-      → compile_predicate(schema, parsed_struct)      # typed Catalyst path
+    from_json(col, derived struct, corrupt-record option)
+      → per property: typed leaf  → compile_predicate(prop, leaf)
+                      VARIANT leaf → schema_of_variant type test
+                                     AND compile_predicate(prop,
+                                         try_variant_get(leaf, '$', T))
       → AND parse-success (corrupt-record field IS NULL)
-      → AND per-string-field type witnesses (variant schema_of)
+      → AND (additionalProperties: false) json_object_keys(col) ⊆ declared
 
-``from_json``'s PERMISSIVE corrupt-record column flags malformed JSON,
-non-object JSON, and type-mismatched numeric/boolean/array/object values —
-exactly the cases the interpreter rejects for a typed property.  Two
-parser lenient spots are closed explicitly (both verified empirically and
-differential-tested in tests/test_json_native.py):
+The derived struct picks, per property, the leaf the parser gets right:
 
-* STRING targets coerce any JSON value to its text (``5`` → ``"5"``) — a
-  per-field type witness ``schema_of_variant(try_variant_get(
-  try_parse_json(col), '$.path', 'variant'))`` must read STRING/VOID;
-* array elements parse JSON ``null`` without tripping the corrupt record —
-  non-nullable item types get a ``forall(x IS NOT NULL)`` conjunct.
+* **typed leaves** (DoubleType, BooleanType, ``array<double|boolean>``,
+  nested structs) where Spark's parser is strict — a wrong JSON type lands
+  in the corrupt record — and where JSON ``null`` and an absent key both
+  fail anyway: the property is ``required`` and its type excludes
+  ``null``;
+* **VARIANT leaves** everywhere else: string-typed properties (a string
+  target coerces ``5`` to ``"5"``), string array elements, and optional
+  or nullable properties.  A VARIANT keeps the exact JSON type
+  (``schema_of_variant`` reads ``STRING``, ``BIGINT``, ``DECIMAL(p,s)``,
+  ``DOUBLE``, ``BOOLEAN``, ``ARRAY<...>``, ``VOID`` for JSON ``null``) and
+  tells JSON ``null`` (``VOID``) from an absent key (SQL NULL).  The
+  decoded value feeds the same typed compiler, so ``floor``-based
+  integer tests and draft rules are shared with typed leaves.
+
+Parser options close the remaining lenient spots: ``allowSingleQuotes``
+and ``allowNonNumericNumbers`` are off, so ``{'k': 1}`` and
+``{"n": "NaN"}`` are corrupt, as ``json.loads`` + ``jsonschema`` judge
+them.  Duplicate keys keep the last value, as ``json.loads`` does.
 
 Soundness preconditions (raise :class:`CompileError` otherwise — callers
 fall back to the UDF path via :func:`json_column_predicate_auto`):
 
-* root: ``type: object`` with a ``properties`` dict; no
-  patternProperties / additionalProperties(false|schema) / propertyNames /
-  min-maxProperties / dependencies (those need key introspection a struct
-  parse discards);
-* every property declares an explicit ``type`` (scalar, object, array, or
-  ``[T, "null"]``) — an untyped property would be vacuously valid to the
-  interpreter on "wrong" types but corrupt to the parser;
-* every property whose type excludes ``null`` is ``required`` (JSON
-  ``null`` parses to SQL NULL without tripping the corrupt record; for a
-  required property both paths reject it — required-fail natively,
-  type-fail in the interpreter — for an optional one verdicts diverge);
-* string-typed properties sit at a dotted path of word-character keys and
-  not under an array (the type witness needs an addressable JSON path);
-  arrays *of strings* stay on the UDF path.
+* root: ``type: object`` with a ``properties`` dict; object nodes carry
+  only ``properties``, ``required`` (each key declared) and
+  ``additionalProperties`` (``true``, or ``false`` at the root only —
+  ``get_json_object`` keeps the *first* of duplicate nested keys, the
+  struct parse the last, so a nested key test would disagree);
+* every property and array ``items`` schema declares one explicit
+  ``type`` (optionally with ``"null"``) and only the keywords of that
+  type from ``_KEYWORDS`` — no ``$ref``, combinators, ``format``,
+  ``patternProperties``/``propertyNames``/min-maxProperties/
+  dependencies or ``unevaluated*``;
+* nested objects are required and non-nullable; arrays have one scalar
+  ``items`` schema; property names differ case-insensitively (struct
+  field access ignores case);
+* a ``pattern`` compiles as a Java regex (an ECMA-only pattern needs the
+  batch UDF, and a Python UDF cannot run inside the binding lambda);
+* ``integer`` needs draft ≥ 6 (a parsed ``1.0`` and ``1`` are the same
+  double, and draft 4 says only the latter is an integer).
 
-Known precision caveat: JSON integers beyond 2^53 lose precision in the
-DoubleType parse (the interpreter keeps exact ints).
+Known caveats (the UDF path has none of them): JSON integers beyond 2^53
+lose precision as doubles (the interpreter keeps exact ints); trailing
+content after the root object (``{"k": 1} x``) is ignored by the parser,
+where ``json.loads`` rejects it; ``NaN``/``Infinity`` literals, which
+``json.loads`` accepts, are corrupt here; and a duplicate key whose
+*earlier* value has the wrong type corrupts a typed leaf even when the
+last value is valid.
 """
 
 from __future__ import annotations
 
-import re
 from typing import Any, Callable
 
 from pyspark.sql import Column, functions as F, types as T
 
-from go_jsonschema_spark.compile import CompileError, compile_predicate
+from go_jsonschema_spark.compile import (
+    _ANNOTATION_KEYS,
+    CompileError,
+    compile_predicate,
+)
+from go_jsonschema_spark.functions.regex import routes_to_udf
 
 __all__ = ["json_column_predicate_native", "json_column_predicate_auto"]
 
 _CORRUPT = "__corrupt__"
-_KEY_RE = re.compile(r"^[A-Za-z0-9_]+$")
+_PARSE_OPTIONS = {
+    "columnNameOfCorruptRecord": _CORRUPT,
+    "allowSingleQuotes": "false",
+    "allowNonNumericNumbers": "false",
+}
 
-_SCALARS = {
+_NUMERIC_KW = {"minimum", "maximum", "exclusiveMinimum", "exclusiveMaximum",
+               "multipleOf", "enum", "const"}
+# keywords the native path compiles, per declared JSON type
+_KEYWORDS = {
+    "string": {"minLength", "maxLength", "pattern", "enum", "const"},
+    "number": _NUMERIC_KW,
+    "integer": _NUMERIC_KW,
+    "boolean": {"enum", "const"},
+    "array": {"items", "minItems", "maxItems", "uniqueItems"},
+    "object": {"properties", "required", "additionalProperties"},
+}
+_VALUE_TYPES = {
     "integer": T.DoubleType,   # + compile's floor() integer-valuedness test
     "number": T.DoubleType,
     "string": T.StringType,
     "boolean": T.BooleanType,
 }
 
-_UNSUPPORTED_ROOT = (
-    "patternProperties", "propertyNames", "minProperties", "maxProperties",
-    "dependencies", "dependentSchemas", "dependentRequired",
-)
-
-# conjunct: (raw json column, parsed field column) -> boolean Column
-_Conjunct = Callable[[Column, Column], Column]
+# check: parsed (non-NULL) property value -> boolean Column
+_Check = Callable[[Column], Column]
 
 
-def _witness(raw: Column, path: str) -> Column:
-    """Per-row JSON type name at ``path`` ('STRING', 'BIGINT', 'VOID', ...)
-    — the native escape from from_json's lenient string coercion."""
-    return F.schema_of_variant(
-        F.try_variant_get(F.try_parse_json(raw), path, "variant")
-    )
-
-
-def _types_of(name: str, s: Any) -> tuple[str, bool]:
+def _types_of(name: str, s: Any, draft: int) -> tuple[str, bool]:
+    """The one declared JSON type of ``s`` and whether it admits null;
+    refuses keywords outside ``_KEYWORDS`` for that type."""
     if not isinstance(s, dict) or "type" not in s:
         raise CompileError(
             f"property {name!r}: native JSON path needs an explicit 'type'"
@@ -91,109 +120,154 @@ def _types_of(name: str, s: Any) -> tuple[str, bool]:
     types = list(t) if isinstance(t, list) else [t]
     nullable = "null" in types
     types = [x for x in types if x != "null"]
-    if len(types) != 1:
-        raise CompileError(f"property {name!r}: union types stay on the UDF path")
+    if len(types) != 1 or types[0] not in _KEYWORDS:
+        raise CompileError(
+            f"property {name!r}: type {t!r} stays on the UDF path")
+    if types[0] == "integer" and draft < 6:
+        raise CompileError(
+            f"property {name!r}: draft-4 integer needs the JSON text — "
+            "UDF path"
+        )
+    extra = set(s) - _KEYWORDS[types[0]] - _ANNOTATION_KEYS - {"type"}
+    if extra:
+        raise CompileError(
+            f"property {name!r}: {sorted(extra)} stay on the UDF path"
+        )
+    if "pattern" in s and routes_to_udf(s["pattern"]):
+        # a Python UDF cannot run inside the binding lambda
+        raise CompileError(
+            f"property {name!r}: ECMA-only pattern — UDF path")
     return types[0], nullable
 
 
-def _walk(
-    name: str, s: Any, required: bool, path: str | None
-) -> tuple[T.DataType, list[_Conjunct]]:
-    """Derive the Spark type for one property schema + the strictness
-    conjuncts from the module docstring.  ``path`` is the JSON path of this
-    property, or None when unaddressable (under an array)."""
-    t, nullable = _types_of(name, s)
-    if not nullable and not required:
+# per JSON type: the schema_of_variant prefix length and the prefixes
+# that pass (BIGINT, DOUBLE, DECIMAL(p,s), ARRAY<...>; VOID is JSON null)
+_VARIANT_TYPES = {
+    "string": (6, ("STRING", "VOID")),
+    "boolean": (7, ("BOOLEAN", "VOID")),
+    "number": (4, ("BIGI", "DOUB", "DECI", "VOID")),
+    "integer": (4, ("BIGI", "DOUB", "DECI", "VOID")),
+    "array": (5, ("ARRAY", "VOID")),
+}
+
+
+def _let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row: lambda bodies
+    get no common-subexpression elimination, so a single-element
+    ``transform`` binds it."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def _variant_is(t: str, v: Column) -> Column:
+    """``v`` holds JSON type ``t`` or JSON null (VOID)."""
+    n, prefixes = _VARIANT_TYPES[t]
+    return F.substring(F.schema_of_variant(v), 1, n).isin(*prefixes)
+
+
+def _variant_value(t: str, v: Column) -> Column:
+    return F.try_variant_get(v, "$", _VALUE_TYPES[t]().simpleString())
+
+
+def _items(name: str, s: dict, draft: int, variant: bool
+           ) -> tuple[T.DataType, Callable[[Column], Column] | None,
+                      Callable[[Column], Column], T.DataType]:
+    """Element handling for an array property: (parse type, per-element
+    type test or None, element → typed value, typed value type)."""
+    items = s.get("items")
+    if not isinstance(items, dict):
         raise CompileError(
-            f"property {name!r}: optional non-nullable property — JSON null "
-            "vs absent is indistinguishable after a struct parse"
-        )
-    if t in _SCALARS:
-        conj: list[_Conjunct] = []
-        if t == "string":
-            if path is None:
-                raise CompileError(
-                    f"property {name!r}: string under an array — no "
-                    "addressable path for the type witness"
-                )
-            p = path
+            f"property {name!r}: array needs a single items schema")
+    it, _ = _types_of(f"{name}[]", items, draft)
+    if it not in _VALUE_TYPES:
+        raise CompileError(f"property {name!r}: array of {it} — UDF path")
+    if variant or it == "string":
+        return (T.VariantType(), lambda x: _variant_is(it, x),
+                lambda x: _variant_value(it, x), _VALUE_TYPES[it]())
+    et = _VALUE_TYPES[it]()
+    return et, None, lambda x: x, et
 
-            def string_witness(raw: Column, field: Column) -> Column:
-                w = _witness(raw, p)
-                return w.isNull() | w.isin("STRING", "VOID")
 
-            conj.append(string_witness)
-        return _SCALARS[t](), conj
+def _property(name: str, s: Any, required: bool, draft: int
+              ) -> tuple[T.DataType, _Check]:
+    """(parse type, check) for one property; the check sees the parsed
+    value only when the key is present."""
+    t, nullable = _types_of(name, s, draft)
     if t == "object":
-        return _object_struct(s, path)
-    if t == "array":
-        items = s.get("items")
-        if not isinstance(items, dict):
+        if nullable or not required:
             raise CompileError(
-                f"property {name!r}: array needs a single items schema"
+                f"property {name!r}: optional or nullable object — UDF path"
             )
-        it, it_nullable = _types_of(f"{name}[]", items)
-        if it == "string":
-            raise CompileError(
-                f"property {name!r}: array of strings — per-element type "
-                "witnesses are not addressable; UDF path"
-            )
-        # element position is not addressable → recurse with path=None and
-        # required=True (the null case is handled by the forall conjunct)
-        et, econj = _walk(f"{name}[]", items, required=True, path=None)
-        if econj:
-            raise CompileError(
-                f"property {name!r}: array elements need witnesses; UDF path"
-            )
-        conj = []
-        if not it_nullable:
-            def no_null_elements(raw: Column, field: Column) -> Column:
-                return F.when(field.isNull(), F.lit(True)).otherwise(
-                    F.forall(field, lambda x: x.isNotNull())
-                )
+        return _object(s, draft, root=False)
+    strict = required and not nullable and t != "string"
+    if t != "array":
+        if strict:
+            dt = _VALUE_TYPES[t]()
+            return dt, lambda f: compile_predicate(s, f, dt, draft=draft)
+        vt = _VALUE_TYPES[t]()
+        return T.VariantType(), lambda f: _variant_is(t, f) & _let(
+            _variant_value(t, f),
+            lambda v: compile_predicate(s, v, vt, draft=draft))
+    et, elem_ok, elem_value, vet = _items(name, s, draft, variant=not strict)
+    at = T.ArrayType(vet)
 
-            conj.append(no_null_elements)
-        return T.ArrayType(et), conj
-    raise CompileError(f"property {name!r}: unsupported type {t!r}")
+    def typed(arr: Column) -> Column:
+        if elem_ok is None:
+            return compile_predicate(s, arr, at, draft=draft)
+        return F.coalesce(F.forall(arr, elem_ok), F.lit(True)) & _let(
+            F.transform(arr, elem_value),
+            lambda v: compile_predicate(s, v, at, draft=draft))
+
+    def check(f: Column) -> Column:
+        if strict:
+            return typed(f)
+        return _variant_is("array", f) & _let(
+            F.try_variant_get(f, "$", "array<variant>"), typed)
+
+    return (T.ArrayType(et) if strict else T.VariantType()), check
 
 
-def _object_struct(
-    schema: dict, path: str | None
-) -> tuple[T.StructType, list[_Conjunct]]:
-    if schema.get("type") != "object" or not isinstance(
+def _object(schema: Any, draft: int, root: bool
+            ) -> tuple[T.StructType, _Check]:
+    if not isinstance(schema, dict) or not isinstance(
         schema.get("properties"), dict
     ):
         raise CompileError(
             "native JSON path needs 'type: object' with 'properties'"
         )
-    for kw in _UNSUPPORTED_ROOT:
-        if kw in schema:
-            raise CompileError(f"{kw} needs key introspection — UDF path")
-    ap = schema.get("additionalProperties", True)
-    if ap is not True:
-        raise CompileError("additionalProperties != true — UDF path")
+    props = schema["properties"]
+    names = [k.lower() for k in props] + [_CORRUPT]
+    if len(set(names)) != len(names):
+        # struct field access is case-insensitive by default
+        raise CompileError(
+            "property names clash case-insensitively — UDF path")
     req = set(schema.get("required", []))
-    missing = req - set(schema["properties"])
+    missing = req - set(props)
     if missing:
         raise CompileError(f"required without property schema: {missing}")
+    ap = schema.get("additionalProperties", True)
+    if ap is not True and not (ap is False and root):
+        raise CompileError(
+            "additionalProperties other than true (false at the root) — "
+            "UDF path"
+        )
     fields: list[T.StructField] = []
-    conjuncts: list[_Conjunct] = []
-    for k, s in schema["properties"].items():
-        child_path = None
-        if path is not None and _KEY_RE.match(k):
-            child_path = f"{path}.{k}"
-        dt, child_conj = _walk(k, s, k in req, child_path)
+    checks: list[tuple[str, bool, _Check]] = []
+    for k, s in props.items():
+        dt, check = _property(k, s, k in req, draft)
         fields.append(T.StructField(k, dt))
-        for c in child_conj:
-            def lifted(raw: Column, obj: Column, _c=c, _k=k) -> Column:
-                field = obj.getField(_k)
-                # child checks are vacuous when the whole object is null
-                return F.when(obj.isNull(), F.lit(True)).otherwise(
-                    _c(raw, field)
-                )
+        checks.append((k, k in req, check))
 
-            conjuncts.append(lifted)
-    return T.StructType(fields), conjuncts
+    def check_object(obj: Column) -> Column:
+        ok = F.lit(True)
+        for k, is_req, check in checks:
+            field = obj.getField(k)
+            if is_req:
+                ok = ok & field.isNotNull()
+            ok = ok & F.when(field.isNull(), F.lit(True)).otherwise(
+                F.coalesce(check(field), F.lit(False)))
+        return ok
+
+    return T.StructType(fields), check_object
 
 
 def json_column_predicate_native(
@@ -202,36 +276,38 @@ def json_column_predicate_native(
     """Column → boolean Column: validate JSON strings against a static
     object schema with zero Python in the row path.
 
-    The plan is scan → from_json (+ one try_parse_json per string-typed
-    property for the type witness) → whole-stage-codegen predicate; at
-    100 TB this removes the Arrow hop and the Python worker pool."""
+    The plan is scan → one from_json per row → whole-stage-codegen
+    predicate (plus one top-level key scan when the root is closed)."""
     if not isinstance(schema, dict):
         raise CompileError("boolean/invalid schema — UDF path")
-    st, conjuncts = _object_struct(schema, "$")
+    t, nullable = _types_of("$", schema, draft)
+    if t != "object" or nullable:
+        raise CompileError("native JSON path needs a non-null object root")
+    st, check = _object(schema, draft, root=True)
     st_parse = T.StructType(
         [*st.fields, T.StructField(_CORRUPT, T.StringType())]
     )
+    closed = (sorted(schema["properties"])
+              if schema.get("additionalProperties") is False else None)
 
     def apply(col: Column) -> Column:
-        parsed = F.from_json(
-            col, st_parse, {"columnNameOfCorruptRecord": _CORRUPT}
-        )
+        parsed = F.from_json(col, st_parse, _PARSE_OPTIONS)
 
-        # let-bind the parsed struct ONCE via a single-element transform:
-        # JsonToStructs is CodegenFallback, so it gets no common-
-        # subexpression elimination — without the binding, CollapseProject
-        # inlines the predicate into every reference and the engine's
-        # violations plan re-parses the JSON ~10× per row (measured 2.9 s
-        # → 0.9 s on the sf0.1 suite).  The lambda variable is evaluated
-        # exactly once per row; everything inside stays native.
+        # let-bind the parsed struct ONCE: JsonToStructs is
+        # CodegenFallback, so it gets no common-subexpression elimination
+        # — without the binding, CollapseProject inlines the predicate
+        # into every reference and the engine's violations plan re-parses
+        # the JSON ~10× per row (measured 2.9 s → 0.9 s on the sf0.1
+        # suite).  Everything inside the lambda stays native.
         def body(p: Column) -> Column:
-            ok = col.isNotNull() & p.getField(_CORRUPT).isNull()
-            ok = ok & compile_predicate(schema, p, st_parse, draft=draft)
-            for c in conjuncts:
-                ok = ok & F.coalesce(c(col, p), F.lit(False))
+            ok = col.isNotNull() & p.getField(_CORRUPT).isNull() & check(p)
+            if closed is not None:
+                keys = F.json_object_keys(col)
+                ok = ok & (F.forall(keys, lambda k: k.isin(closed))
+                           if closed else F.size(keys) == 0)
             return F.coalesce(ok, F.lit(False))
 
-        return F.element_at(F.transform(F.array(parsed), body), 1)
+        return _let(parsed, body)
 
     return apply
 

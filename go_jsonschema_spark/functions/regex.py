@@ -38,7 +38,8 @@ import pandas as pd
 from pyspark.sql import Column, functions as F, types as T
 
 __all__ = ["java_regex_ok", "ecma_rlike", "ecma_pattern_predicate",
-           "has_dialect_classes", "set_unicode_class_routing"]
+           "has_dialect_classes", "routes_to_udf",
+           "set_unicode_class_routing"]
 
 _JAVA_OK_CACHE: dict[str, bool] = {}
 
@@ -130,8 +131,13 @@ def ecma_pattern_predicate(col: Column, pattern: str) -> Column:
     classes (``\\w``/``\\d``/``\\s``/``\\b`` …) also take the shim so
     non-ASCII input is classified the way the reference's converted
     patterns classify it (helpers.go:69-86)."""
-    if _UNICODE_CLASS_ROUTING and has_dialect_classes(pattern):
+    if routes_to_udf(pattern):
         return ecma_rlike(col, pattern)
-    if java_regex_ok(pattern):
-        return col.rlike(pattern)
-    return ecma_rlike(col, pattern)
+    return col.rlike(pattern)
+
+
+def routes_to_udf(pattern: str) -> bool:
+    """Whether :func:`ecma_pattern_predicate` evaluates ``pattern`` in the
+    ECMA batch UDF rather than with native ``rlike``."""
+    return (_UNICODE_CLASS_ROUTING and has_dialect_classes(pattern)) or \
+        not java_regex_ok(pattern)

@@ -605,9 +605,10 @@ class TableSpec:
                     "overflow BIGINT at 10^12-row partitions")
         for name, spec in self.columns.items():
             # {"kind": "json", "schema": ...} declares a STRING column of
-            # dynamic JSON payloads; the engine routes it through
-            # json_column_predicate_auto (native from_json compilation when
-            # the schema qualifies, Arrow-batched interpreter otherwise)
+            # JSON payloads; the engine routes it through
+            # json_column_predicate_auto (one native from_json parse when
+            # the schema is a static object schema — typed and VARIANT
+            # leaves, closed root — Arrow-batched interpreter otherwise)
             if isinstance(spec, dict) and spec.get("kind") == "json":
                 if "schema" not in spec:
                     raise SpecError(

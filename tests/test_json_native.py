@@ -181,21 +181,65 @@ def test_native_plan_has_no_python(spark):
     [
         {"properties": {"k": {"type": "integer"}}},  # no root type
         {"type": "object", "properties": {"k": {"minimum": 0}}},  # untyped prop
-        # optional non-nullable property: JSON null vs absent diverges
-        {"type": "object", "properties": {"k": {"type": "integer"}}},
-        {"type": "object", "required": ["k"], "additionalProperties": False,
-         "properties": {"k": {"type": "integer"}}},
         {"type": "object", "required": ["k"], "patternProperties": {"^x": {}},
          "properties": {"k": {"type": "integer"}}},
-        # arrays of strings: per-element witnesses unaddressable
-        {"type": "object", "required": ["k"],
-         "properties": {"k": {"type": "array", "items": {"type": "string"}}}},
+        {"type": "object", "propertyNames": {"maxLength": 3},
+         "minProperties": 1, "properties": {"k": {"type": "integer"}}},
+        # closed nested object: get_json_object keeps the first duplicate key
+        {"type": "object", "required": ["m"], "properties": {"m": {
+            "type": "object", "additionalProperties": False,
+            "properties": {"k": {"type": "integer"}}}}},
+        {"type": "object",
+         "properties": {"k": {"type": "string", "format": "date"}}},
+        {"type": "object", "properties": {"k": {"$ref": "#/definitions/x"}},
+         "definitions": {"x": {"type": "integer"}}},
+        {"type": "object",
+         "properties": {"k": {"type": "integer", "anyOf": [{"minimum": 1}]}}},
         True,
     ],
 )
 def test_native_rejects_dynamic_schemas(schema):
     with pytest.raises(CompileError):
         json_column_predicate_native(schema)
+
+
+@pytest.mark.parametrize(
+    "schema",
+    [
+        # optional non-nullable property: a VARIANT leaf tells JSON null
+        # (VOID) from an absent key (SQL NULL)
+        {"type": "object", "properties": {"k": {"type": "integer"}}},
+        # closed root: json_object_keys(raw) against the declared keys
+        {"type": "object", "required": ["k"], "additionalProperties": False,
+         "properties": {"k": {"type": "integer"}}},
+        # arrays of strings: array<variant> elements, per-element type test
+        {"type": "object", "required": ["k"],
+         "properties": {"k": {"type": "array", "items": {"type": "string"}}}},
+    ],
+)
+def test_native_accepts_variant_leaf_schemas(schema):
+    json_column_predicate_native(schema)
+
+
+def test_ecma_only_pattern_and_case_clash_fall_back(spark):
+    """A pattern only the ECMA batch UDF can run, and property names that
+    clash under case-insensitive struct access, stay on the UDF path
+    (a Python UDF cannot run inside the native binding lambda)."""
+    ecma = {"type": "object", "required": ["n"],
+            "properties": {"n": {"type": "string",
+                                 "pattern": "^(?<first_name>[a-z]+)$"}}}
+    clash = {"type": "object", "required": ["a"],
+             "properties": {"a": {"type": "integer"},
+                            "A": {"type": "string"}}}
+    for schema in (ecma, clash):
+        with pytest.raises(CompileError):
+            json_column_predicate_native(schema)
+    payloads = ['{"n": "ab"}', '{"n": "a1"}', '{"n": 5}']
+    df = spark.createDataFrame([(p,) for p in payloads], "j string")
+    got = [r[0] for r in df.select(
+        json_column_predicate_auto(ecma)(F.col("j"))).collect()]
+    assert got == [validate_instance(ecma, json.loads(p)).valid
+                   for p in payloads] == [True, False, False]
 
 
 def test_auto_falls_back_to_udf(spark):

@@ -306,3 +306,58 @@ def test_pmi_and_vocab_overlap_native_plans(spark):
     assert "BroadcastExchange" in vo_plan         # sizes skeleton
     # the fact scan is pruned to the two needed columns
     assert "n_chars" not in vo_plan
+
+
+def test_json_columns_parse_once_without_python(spark):
+    """``kind: json`` columns of the props class (typed numbers, a string
+    enum, a number array) and the attrs class (closed root, an array of
+    strings, an optional number) stay on the native path: no Python eval
+    operator, no whole-column ``parse_json``/``try_parse_json``, and the
+    counts plan — which evaluates each predicate once — holds exactly one
+    ``from_json`` per JSON column."""
+    from go_jsonschema_spark.spec import TableSpec
+
+    props = {
+        "type": "object",
+        "properties": {
+            "user": {"type": "integer", "minimum": 0},
+            "amount": {"type": "number", "minimum": 0, "maximum": 10000},
+            "kind": {"type": "string", "enum": ["click", "view", "buy"]},
+            "items": {"type": "array", "items": {"type": "integer",
+                                                 "minimum": 1}},
+            "ok": {"type": "boolean"},
+        },
+        "required": ["user", "amount", "kind", "items", "ok"],
+    }
+    attrs = {
+        "type": "object",
+        "properties": {
+            "labels": {"type": "array", "maxItems": 6,
+                       "items": {"type": "string", "maxLength": 12}},
+            "score": {"type": "number", "minimum": -1, "maximum": 1},
+        },
+        "required": ["labels"],
+        "additionalProperties": False,
+    }
+    df = spark.createDataFrame(
+        [("e1", '{"user": 1, "amount": 2, "kind": "buy", "items": [1],'
+                ' "ok": true}', '{"labels": ["a"], "score": 0.5}'),
+         ("e2", '{"user": -1}', '{"labels": [7], "extra": 1}')],
+        "event_id string, props string, attrs string")
+    suite = ConstraintSuite(TableSpec(columns={
+        "props": {"kind": "json", "schema": props},
+        "attrs": {"kind": "json", "schema": attrs},
+    }), key="event_id")
+    res = suite.run(df)
+    counts = suite.verdict_counts(df)
+    for out in (res.violations, res.verdicts, counts):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan
+        assert "BatchEvalPython" not in plan
+        # the executed plan prints (try_)parse_json as a parseJson invoke
+        assert not re.search(r"parse_json\(|parseJson", plan)
+    plan = counts._jdf.queryExecution().executedPlan().toString()
+    for col in ("props", "attrs"):
+        assert len(re.findall(rf"from_json\([^#]*?, {col}#\d+", plan)) == 1
+    assert counts.first()["fail_by_constraint"] == {"props.json": 1,
+                                                    "attrs.json": 1}

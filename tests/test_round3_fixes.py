@@ -115,6 +115,33 @@ def test_plan_fallback_attribution_not_double_counted(spark, payload_df):
     assert rows == 0
 
 
+def test_fallback_compiles_validators_once_per_task(monkeypatch):
+    """The fallback's Arrow-batch function compiles the full and the rest
+    validator on its first batch only; later batches reuse them."""
+    import json
+
+    import pandas as pd
+
+    from go_jsonschema_spark import interp_compile
+    from go_jsonschema_spark.engine import _interp_group_judge
+
+    compiled = []
+    real = interp_compile.compile_validator
+
+    def counting(schema, **kw):
+        compiled.append(schema)
+        return real(schema, **kw)
+
+    monkeypatch.setattr(interp_compile, "compile_validator", counting)
+    judge = _interp_group_judge(("unevaluatedProperties",), UNEVAL_SCHEMA,
+                                {}, 2019)
+    batch = pd.Series([json.dumps({"v": {"a": 1}}),
+                       json.dumps({"v": {"a": 1, "b": 2}}), None])
+    assert list(judge(batch)) == [True, False, True]
+    assert list(judge(batch)) == [True, False, True]
+    assert compiled == [UNEVAL_SCHEMA, {"properties": {"a": {}}}]
+
+
 # -- kind=json column through the suite --------------------------------------
 
 JSON_ROWS = [
