@@ -11,16 +11,16 @@ same verdicts stay JVM-side, with each JSON string parsed exactly once:
                       VARIANT leaf → schema_of_variant type test
                                      AND compile_predicate(prop,
                                          try_variant_get(leaf, '$', T))
-      → AND parse-success (corrupt-record field IS NULL)
+      → AND parse-success (struct non-NULL, corrupt-record field NULL)
       → AND (additionalProperties: false) json_object_keys(col) ⊆ declared
 
 The derived struct picks, per property, the leaf the parser gets right:
 
-* **typed leaves** (DoubleType, BooleanType, ``array<double|boolean>``,
-  nested structs) where Spark's parser is strict — a wrong JSON type lands
-  in the corrupt record — and where JSON ``null`` and an absent key both
-  fail anyway: the property is ``required`` and its type excludes
-  ``null``;
+* **typed leaves** (DoubleType, BooleanType, arrays of those, nested
+  structs, arrays of structs or arrays) where Spark's parser is strict — a
+  wrong JSON type lands in the corrupt record — and where JSON ``null``
+  and an absent key both fail anyway: the property is ``required`` and
+  its type excludes ``null``;
 * **VARIANT leaves** everywhere else: string-typed properties (a string
   target coerces ``5`` to ``"5"``), string array elements, and optional
   or nullable properties.  A VARIANT keeps the exact JSON type
@@ -29,6 +29,13 @@ The derived struct picks, per property, the leaf the parser gets right:
   tells JSON ``null`` (``VOID``) from an absent key (SQL NULL).  The
   decoded value feeds the same typed compiler, so ``floor``-based
   integer tests and draft rules are shared with typed leaves.
+
+A leaf is judged by ``compile_predicate`` on its exact typed value, so it
+may carry any keyword that compiler handles — bounds, ``enum``/``const``,
+``contains``, combinators, ``not``, ``if``/``then``/``else``.  An array of
+objects or of arrays is a typed leaf with ``minItems``/``maxItems`` and a
+per-element check.  Input with no JSON token (``''``) parses to a NULL
+struct and fails.
 
 Parser options close the remaining lenient spots: ``allowSingleQuotes``
 and ``allowNonNumericNumbers`` are off, so ``{'k': 1}`` and
@@ -42,17 +49,20 @@ fall back to the UDF path via :func:`json_column_predicate_auto`):
   only ``properties``, ``required`` (each key declared) and
   ``additionalProperties`` (``true``, or ``false`` at the root only —
   ``get_json_object`` keeps the *first* of duplicate nested keys, the
-  struct parse the last, so a nested key test would disagree);
+  struct parse the last, so a nested key test would disagree).
+  Object-level combinators, ``enum``/``const``, ``patternProperties``,
+  ``propertyNames``, min/maxProperties and dependencies need the whole
+  document, not the declared fields;
 * every property and array ``items`` schema declares one explicit
-  ``type`` (optionally with ``"null"``) and only the keywords of that
-  type from ``_KEYWORDS`` — no ``$ref``, combinators, ``format``,
-  ``patternProperties``/``propertyNames``/min-maxProperties/
-  dependencies or ``unevaluated*``;
-* nested objects are required and non-nullable; arrays have one scalar
+  ``type`` (optionally with ``"null"``); no ``$ref`` (it would resolve
+  against the leaf), ``unevaluated*`` or ``prefixItems`` anywhere in a
+  leaf;
+* nested objects and arrays of objects or arrays are required and
+  non-nullable (a VARIANT leaf decodes scalars only); arrays have one
   ``items`` schema; property names differ case-insensitively (struct
   field access ignores case);
-* a ``pattern`` compiles as a Java regex (an ECMA-only pattern needs the
-  batch UDF, and a Python UDF cannot run inside the binding lambda);
+* no ``pattern`` that needs the ECMA batch UDF and no ``format`` checked
+  in Python (a Python UDF cannot run inside the binding lambda);
 * ``integer`` needs draft ≥ 6 (a parsed ``1.0`` and ``1`` are the same
   double, and draft 4 says only the latter is an integer).
 
@@ -76,6 +86,7 @@ from go_jsonschema_spark.compile import (
     CompileError,
     compile_predicate,
 )
+from go_jsonschema_spark.functions.formats import _PYTHON_FORMATS
 from go_jsonschema_spark.functions.regex import routes_to_udf
 
 __all__ = ["json_column_predicate_native", "json_column_predicate_auto"]
@@ -87,17 +98,20 @@ _PARSE_OPTIONS = {
     "allowNonNumericNumbers": "false",
 }
 
-_NUMERIC_KW = {"minimum", "maximum", "exclusiveMinimum", "exclusiveMaximum",
-               "multipleOf", "enum", "const"}
-# keywords the native path compiles, per declared JSON type
-_KEYWORDS = {
-    "string": {"minLength", "maxLength", "pattern", "enum", "const"},
-    "number": _NUMERIC_KW,
-    "integer": _NUMERIC_KW,
-    "boolean": {"enum", "const"},
-    "array": {"items", "minItems", "maxItems", "uniqueItems"},
-    "object": {"properties", "required", "additionalProperties"},
-}
+# keywords an object node may carry: object-level combinators,
+# enum/const and key introspection would need the whole document
+_OBJECT_KEYWORDS = {"type", "properties", "required",
+                    "additionalProperties"} | _ANNOTATION_KEYS
+# keywords an array of objects or of arrays may carry besides ``items``
+_NESTED_ARRAY_KEYWORDS = {"type", "items", "minItems",
+                          "maxItems"} | _ANNOTATION_KEYS
+# refused anywhere in a leaf schema: references resolve against the leaf,
+# not the document; unevaluated* needs annotations; prefixItems is
+# compiled under every draft and would meet elements parsed by ``items``
+_LEAF_REFUSED = {"$ref", "$recursiveRef", "$dynamicRef",
+                 "unevaluatedProperties", "unevaluatedItems", "prefixItems"}
+_SUBSCHEMA_LISTS = ("allOf", "anyOf", "oneOf")
+_SUBSCHEMAS = ("not", "if", "then", "else", "contains")
 _VALUE_TYPES = {
     "integer": T.DoubleType,   # + compile's floor() integer-valuedness test
     "number": T.DoubleType,
@@ -109,9 +123,8 @@ _VALUE_TYPES = {
 _Check = Callable[[Column], Column]
 
 
-def _types_of(name: str, s: Any, draft: int) -> tuple[str, bool]:
-    """The one declared JSON type of ``s`` and whether it admits null;
-    refuses keywords outside ``_KEYWORDS`` for that type."""
+def _types_of(name: str, s: Any) -> tuple[str, bool]:
+    """The one declared JSON type of ``s`` and whether it admits null."""
     if not isinstance(s, dict) or "type" not in s:
         raise CompileError(
             f"property {name!r}: native JSON path needs an explicit 'type'"
@@ -120,24 +133,57 @@ def _types_of(name: str, s: Any, draft: int) -> tuple[str, bool]:
     types = list(t) if isinstance(t, list) else [t]
     nullable = "null" in types
     types = [x for x in types if x != "null"]
-    if len(types) != 1 or types[0] not in _KEYWORDS:
+    if len(types) != 1 or types[0] not in (*_VALUE_TYPES, "array",
+                                           "object"):
         raise CompileError(
             f"property {name!r}: type {t!r} stays on the UDF path")
-    if types[0] == "integer" and draft < 6:
-        raise CompileError(
-            f"property {name!r}: draft-4 integer needs the JSON text — "
-            "UDF path"
-        )
-    extra = set(s) - _KEYWORDS[types[0]] - _ANNOTATION_KEYS - {"type"}
+    return types[0], nullable
+
+
+def _only(name: str, s: dict, allowed: set) -> None:
+    extra = set(s) - allowed
     if extra:
         raise CompileError(
-            f"property {name!r}: {sorted(extra)} stay on the UDF path"
-        )
-    if "pattern" in s and routes_to_udf(s["pattern"]):
+            f"property {name!r}: {sorted(extra)} stay on the UDF path")
+
+
+def _leaf_keywords(name: str, s: dict, draft: int) -> None:
+    """Refuse what ``compile_predicate`` cannot judge on the parsed leaf
+    value inside the binding lambda; everything else it compiles."""
+    def refuse(why: str):
+        raise CompileError(f"property {name!r}: {why} — UDF path")
+
+    def walk(node: Any) -> None:
+        if isinstance(node, list):
+            for x in node:
+                walk(x)
+            return
+        if not isinstance(node, dict):
+            return
+        if _LEAF_REFUSED & set(node):
+            refuse(str(sorted(_LEAF_REFUSED & set(node))))
+        for k in _SUBSCHEMA_LISTS:
+            if k in node and not (isinstance(node[k], list) and all(
+                    isinstance(x, (dict, bool)) for x in node[k])):
+                refuse(f"invalid {k}")
+        for k in _SUBSCHEMAS:
+            if k in node and not isinstance(node[k], (dict, bool)):
+                refuse(f"invalid {k}")
         # a Python UDF cannot run inside the binding lambda
-        raise CompileError(
-            f"property {name!r}: ECMA-only pattern — UDF path")
-    return types[0], nullable
+        pattern, fmt = node.get("pattern"), node.get("format")
+        if isinstance(pattern, str) and routes_to_udf(pattern):
+            refuse("ECMA-only pattern")
+        if isinstance(fmt, str) and fmt in _PYTHON_FORMATS:
+            refuse(f"format {fmt!r}")
+        t = node.get("type")
+        if draft < 6 and (t == "integer"
+                          or isinstance(t, list) and "integer" in t):
+            # a parsed 1.0 and 1 are the same double
+            refuse("draft-4 integer needs the JSON text")
+        for v in node.values():
+            walk(v)
+
+    walk(s)
 
 
 # per JSON type: the schema_of_variant prefix length and the prefixes
@@ -168,62 +214,84 @@ def _variant_value(t: str, v: Column) -> Column:
     return F.try_variant_get(v, "$", _VALUE_TYPES[t]().simpleString())
 
 
-def _items(name: str, s: dict, draft: int, variant: bool
-           ) -> tuple[T.DataType, Callable[[Column], Column] | None,
-                      Callable[[Column], Column], T.DataType]:
-    """Element handling for an array property: (parse type, per-element
-    type test or None, element → typed value, typed value type)."""
+def _scalar_items(name: str, s: dict) -> str:
     items = s.get("items")
     if not isinstance(items, dict):
         raise CompileError(
             f"property {name!r}: array needs a single items schema")
-    it, _ = _types_of(f"{name}[]", items, draft)
+    it, _ = _types_of(f"{name}[]", items)
     if it not in _VALUE_TYPES:
         raise CompileError(f"property {name!r}: array of {it} — UDF path")
-    if variant or it == "string":
-        return (T.VariantType(), lambda x: _variant_is(it, x),
-                lambda x: _variant_value(it, x), _VALUE_TYPES[it]())
-    et = _VALUE_TYPES[it]()
-    return et, None, lambda x: x, et
+    return it
+
+
+def _variant_elements(s: dict, it: str, draft: int) -> _Check:
+    """Check over ``array<variant>``: every element holds JSON type ``it``
+    (or null), and the decoded array feeds the typed compiler."""
+    at = T.ArrayType(_VALUE_TYPES[it]())
+    return lambda arr: F.coalesce(
+        F.forall(arr, lambda x: _variant_is(it, x)), F.lit(True)
+    ) & _let(F.transform(arr, lambda x: _variant_value(it, x)),
+             lambda v: compile_predicate(s, v, at, draft=draft))
+
+
+def _typed(name: str, s: dict, t: str, draft: int
+           ) -> tuple[T.DataType, _Check]:
+    """(parse type, check) for a value the parser types strictly — a
+    wrong JSON type lands in the corrupt record; strings, which the
+    parser coerces, become ``variant`` elements."""
+    if t == "object":
+        return _object(s, draft, root=False)
+    if t != "array":
+        _leaf_keywords(name, s, draft)
+        dt = _VALUE_TYPES[t]()
+        return dt, lambda f: compile_predicate(s, f, dt, draft=draft)
+    items = s.get("items")
+    it, it_nullable = (_types_of(f"{name}[]", items)
+                       if isinstance(items, dict) else ("", False))
+    if it in ("array", "object"):
+        # array-level bounds, then each element against its own check
+        _only(name, s, _NESTED_ARRAY_KEYWORDS)
+        et, elem = _typed(f"{name}[]", items, it, draft)
+        at = T.ArrayType(et)
+        bounds = {k: s[k] for k in ("minItems", "maxItems") if k in s}
+        return at, lambda arr: compile_predicate(
+            bounds, arr, at, draft=draft
+        ) & F.forall(arr, lambda x: F.when(
+            x.isNull(), F.lit(it_nullable)).otherwise(elem(x)))
+    _leaf_keywords(name, s, draft)
+    it = _scalar_items(name, s)
+    if it == "string":
+        return T.ArrayType(T.VariantType()), _variant_elements(s, it, draft)
+    at = T.ArrayType(_VALUE_TYPES[it]())
+    return at, lambda arr: compile_predicate(s, arr, at, draft=draft)
+
+
+def _variant(name: str, s: dict, t: str, draft: int) -> _Check:
+    """Check over a VARIANT leaf: its JSON type, then its decoded value
+    against the typed compiler."""
+    if t == "object":
+        raise CompileError(
+            f"property {name!r}: optional or nullable object — UDF path")
+    _leaf_keywords(name, s, draft)
+    if t == "array":
+        elements = _variant_elements(s, _scalar_items(name, s), draft)
+        return lambda f: _variant_is("array", f) & _let(
+            F.try_variant_get(f, "$", "array<variant>"), elements)
+    vt = _VALUE_TYPES[t]()
+    return lambda f: _variant_is(t, f) & _let(
+        _variant_value(t, f),
+        lambda v: compile_predicate(s, v, vt, draft=draft))
 
 
 def _property(name: str, s: Any, required: bool, draft: int
               ) -> tuple[T.DataType, _Check]:
     """(parse type, check) for one property; the check sees the parsed
     value only when the key is present."""
-    t, nullable = _types_of(name, s, draft)
-    if t == "object":
-        if nullable or not required:
-            raise CompileError(
-                f"property {name!r}: optional or nullable object — UDF path"
-            )
-        return _object(s, draft, root=False)
-    strict = required and not nullable and t != "string"
-    if t != "array":
-        if strict:
-            dt = _VALUE_TYPES[t]()
-            return dt, lambda f: compile_predicate(s, f, dt, draft=draft)
-        vt = _VALUE_TYPES[t]()
-        return T.VariantType(), lambda f: _variant_is(t, f) & _let(
-            _variant_value(t, f),
-            lambda v: compile_predicate(s, v, vt, draft=draft))
-    et, elem_ok, elem_value, vet = _items(name, s, draft, variant=not strict)
-    at = T.ArrayType(vet)
-
-    def typed(arr: Column) -> Column:
-        if elem_ok is None:
-            return compile_predicate(s, arr, at, draft=draft)
-        return F.coalesce(F.forall(arr, elem_ok), F.lit(True)) & _let(
-            F.transform(arr, elem_value),
-            lambda v: compile_predicate(s, v, at, draft=draft))
-
-    def check(f: Column) -> Column:
-        if strict:
-            return typed(f)
-        return _variant_is("array", f) & _let(
-            F.try_variant_get(f, "$", "array<variant>"), typed)
-
-    return (T.ArrayType(et) if strict else T.VariantType()), check
+    t, nullable = _types_of(name, s)
+    if required and not nullable and t != "string":
+        return _typed(name, s, t, draft)
+    return T.VariantType(), _variant(name, s, t, draft)
 
 
 def _object(schema: Any, draft: int, root: bool
@@ -234,6 +302,7 @@ def _object(schema: Any, draft: int, root: bool
         raise CompileError(
             "native JSON path needs 'type: object' with 'properties'"
         )
+    _only("$" if root else "object", schema, _OBJECT_KEYWORDS)
     props = schema["properties"]
     names = [k.lower() for k in props] + [_CORRUPT]
     if len(set(names)) != len(names):
@@ -280,7 +349,7 @@ def json_column_predicate_native(
     predicate (plus one top-level key scan when the root is closed)."""
     if not isinstance(schema, dict):
         raise CompileError("boolean/invalid schema — UDF path")
-    t, nullable = _types_of("$", schema, draft)
+    t, nullable = _types_of("$", schema)
     if t != "object" or nullable:
         raise CompileError("native JSON path needs a non-null object root")
     st, check = _object(schema, draft, root=True)
@@ -300,7 +369,9 @@ def json_column_predicate_native(
         # the JSON ~10× per row (measured 2.9 s → 0.9 s on the sf0.1
         # suite).  Everything inside the lambda stays native.
         def body(p: Column) -> Column:
-            ok = col.isNotNull() & p.getField(_CORRUPT).isNull() & check(p)
+            # input with no JSON token ('', '   ') parses to a NULL struct
+            # with a NULL corrupt field
+            ok = p.isNotNull() & p.getField(_CORRUPT).isNull() & check(p)
             if closed is not None:
                 keys = F.json_object_keys(col)
                 ok = ok & (F.forall(keys, lambda k: k.isin(closed))

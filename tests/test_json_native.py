@@ -193,32 +193,26 @@ def test_native_plan_has_no_python(spark):
          "properties": {"k": {"type": "string", "format": "date"}}},
         {"type": "object", "properties": {"k": {"$ref": "#/definitions/x"}},
          "definitions": {"x": {"type": "integer"}}},
-        {"type": "object",
-         "properties": {"k": {"type": "integer", "anyOf": [{"minimum": 1}]}}},
+        # object-level keywords need the whole document: a struct of the
+        # declared fields cannot see "b" in {"a": 1, "b": 2}
+        {"type": "object", "required": ["a"],
+         "properties": {"a": {"type": "number"}},
+         "anyOf": [{"required": ["b"]},
+                   {"properties": {"a": {"minimum": 5}}}]},
+        # a VARIANT leaf decodes scalars only
+        {"type": "object", "properties": {"p": {
+            "type": ["array", "null"],
+            "items": {"type": "object", "properties": {}}}}},
+        # prefixItems next to the items the array is parsed by
+        {"type": "object", "required": ["p"], "properties": {"p": {
+            "type": "array", "prefixItems": [{"type": "string"}],
+            "items": {"type": "number"}}}},
         True,
     ],
 )
 def test_native_rejects_dynamic_schemas(schema):
     with pytest.raises(CompileError):
         json_column_predicate_native(schema)
-
-
-@pytest.mark.parametrize(
-    "schema",
-    [
-        # optional non-nullable property: a VARIANT leaf tells JSON null
-        # (VOID) from an absent key (SQL NULL)
-        {"type": "object", "properties": {"k": {"type": "integer"}}},
-        # closed root: json_object_keys(raw) against the declared keys
-        {"type": "object", "required": ["k"], "additionalProperties": False,
-         "properties": {"k": {"type": "integer"}}},
-        # arrays of strings: array<variant> elements, per-element type test
-        {"type": "object", "required": ["k"],
-         "properties": {"k": {"type": "array", "items": {"type": "string"}}}},
-    ],
-)
-def test_native_accepts_variant_leaf_schemas(schema):
-    json_column_predicate_native(schema)
 
 
 def test_ecma_only_pattern_and_case_clash_fall_back(spark):

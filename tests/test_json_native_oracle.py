@@ -6,7 +6,10 @@ against the installed ``jsonschema`` package — ``Draft7Validator`` and
 seeded corpus of payloads is judged by every schema × draft in a single
 Spark job.  The schemas are the classes the native path was widened for:
 typed numeric leaves, string leaves, arrays of strings, optional and
-nullable properties, a closed root and a required nested object.
+nullable properties, a closed root and a required nested object; the
+classes it keeps from before: arrays of objects and of arrays, and leaf
+combinators, ``not``, ``contains`` and array ``enum``; and a root with no
+``required``, which only the parse itself can fail.
 """
 
 from __future__ import annotations
@@ -68,7 +71,40 @@ OPTIONAL = {
     "required": ["b", "meta"],
 }
 
-SCHEMAS = {"props": PROPS, "attrs": ATTRS, "optional": OPTIONAL}
+# arrays of objects and of arrays, leaf-level keywords the typed compiler
+# judges on the parsed value
+NESTED = {
+    "type": "object",
+    "properties": {
+        "pts": {"type": "array", "maxItems": 3, "items": {
+            "type": "object", "required": ["x"],
+            "properties": {
+                "x": {"type": "number", "not": {"minimum": 100}},
+                "tag": {"type": "string",
+                        "anyOf": [{"maxLength": 1}, {"enum": ["long"]}]},
+            }}},
+        "grid": {"type": "array", "items": {
+            "type": "array", "items": {"type": "integer"},
+            "contains": {"const": 0}}},
+        "pair": {"type": "array", "items": {"type": "number"},
+                 "enum": [[1, 2], [3, 4]]},
+        "k": {"type": "integer", "minimum": 0,
+              "anyOf": [{"multipleOf": 2}, {"maximum": 3}]},
+    },
+    "required": ["pts", "grid"],
+}
+
+# no required key: a document fails only by its parse or a present value
+OPEN = {
+    "type": "object",
+    "properties": {
+        "k": {"type": "integer", "minimum": 0},
+        "score": {"type": ["number", "null"], "maximum": 1},
+    },
+}
+
+SCHEMAS = {"props": PROPS, "attrs": ATTRS, "optional": OPTIONAL,
+           "nested": NESTED, "open": OPEN}
 DRAFTS = {7: jsonschema.Draft7Validator, 2020: jsonschema.Draft202012Validator}
 
 _MISSING = object()
@@ -145,6 +181,25 @@ def _optional_doc(rng):
     })
 
 
+def _nested_doc(rng):
+    def mostly(good: list, bad: list):
+        return lambda: rng.choice(good if rng.random() < 0.85 else bad)
+
+    point = mostly([{"x": 1}, {"x": 2.5, "tag": "a"}, {"x": 3, "tag": "long"}],
+                   [{"x": 100}, {"x": 1, "tag": "ab"}, {"tag": "a"},
+                    {"x": "1"}, {"x": 1, "tag": 5}, {"x": 1, "tag": None},
+                    None, 5, [1]])
+    row = mostly([[0], [1, 0], [2, 0.0]],
+                 [[1], [0.5, 0], [None, 0], ["0"], [], None, 0])
+    return _doc(rng, {
+        "pts": lambda: [point() for _ in range(rng.randrange(0, 5))],
+        "grid": lambda: [row() for _ in range(rng.randrange(0, 3))],
+        "pair": mostly([[1, 2], [3, 4], [1.0, 2]],
+                       [[2, 1], [1], [], None, ["1", 2], [1, 2, 3]]),
+        "k": mostly([0, 2, 3, 8, 1.0, 3.0], [5, -2, None, "2", 2.5, True]),
+    })
+
+
 # hand-written payloads: duplicate and extra keys, escaped key names,
 # top-level non-objects, malformed JSON and parser-lenient spellings
 _TEXT = [
@@ -182,7 +237,7 @@ _TEXT = [
 def _corpus(seed: int = 7, n: int = 300) -> list:
     rng = random.Random(seed)
     out = []
-    for make in (_props_doc, _attrs_doc, _optional_doc):
+    for make in (_props_doc, _attrs_doc, _optional_doc, _nested_doc):
         for _ in range(n):
             doc = make(rng)
             # both spellings of non-BMP text: surrogate escapes and UTF-8
@@ -254,3 +309,20 @@ def test_draft4_auto_matches_jsonschema(spark):
     validator = jsonschema.Draft4Validator(schema)
     assert got == [_oracle(validator, p) for p in payloads] \
         == [True, False, False, False]
+
+
+def test_object_level_combinator_falls_back(spark):
+    """A root ``anyOf`` that reads an undeclared key: the chooser takes
+    the UDF path, whose verdicts match ``jsonschema``."""
+    schema = {"type": "object", "required": ["a"],
+              "properties": {"a": {"type": "number"}},
+              "anyOf": [{"required": ["b"]},
+                        {"properties": {"a": {"minimum": 5}}}]}
+    payloads = ['{"a": 1, "b": 2}', '{"a": 7}', '{"a": 1}', '{"b": 2}']
+    fn = json_column_predicate_auto(schema)
+    assert hasattr(fn, "evalType")
+    df = spark.createDataFrame([(p,) for p in payloads], "j string")
+    got = [r[0] for r in df.select(fn(F.col("j"))).collect()]
+    validator = jsonschema.Draft7Validator(schema)
+    assert got == [_oracle(validator, p) for p in payloads] \
+        == [True, True, False, False]
