@@ -17,7 +17,8 @@ becomes a driver-side spec→Column compiler.
 Public surface:
     ConstraintSuite   — parse/compile/run a table spec
     compile_predicate — one JSON-Schema-like spec → pyspark Column predicate
-    validate_instance — reference-parity Python interpreter (dynamic JSON path)
+    validate_instance — one parsed JSON value through the closure-compiled
+                        evaluator (dynamic JSON path, interp_compile.py)
 """
 
 from go_jsonschema_spark.spec import (

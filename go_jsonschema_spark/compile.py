@@ -619,11 +619,10 @@ def json_column_predicate(
     column whose schema uses ``patternProperties``, ``propertyNames`` or
     combinators — static object schemas take the native path in
     functions/json_native.py): the spec is CLOSURE-COMPILED once per
-    Python worker (interp_compile.py — the setupValidators analogue,
-    ~2× the re-walking interpreter) and runs once per Arrow batch over
-    ~10k parsed values — never a per-row pyspark UDF.  Unparseable JSON is
-    invalid, matching the reference's empty/garbage handling
-    (validators.go:55-62)."""
+    Python worker (interp_compile.py — the setupValidators analogue) and
+    runs once per Arrow batch over ~10k parsed values — never a per-row
+    pyspark UDF.  Unparseable JSON is invalid, matching the reference's
+    empty/garbage handling (validators.go:55-62)."""
     import json as _json
 
     from go_jsonschema_spark.interp_compile import compile_validator
@@ -664,16 +663,27 @@ def json_column_errors(
     """Pandas UDF: ALL validation errors for a column of JSON strings as
     ``array<string>`` (empty = valid) — the violations-with-details
     counterpart of :func:`json_column_predicate`, mirroring the
-    reference's chained error strings (helpers.go:58-67) but as data."""
+    reference's chained error strings (helpers.go:58-67) but as data.
+    Compiled once per Python worker like the predicate; only invalid
+    values pay for error collection."""
     import json as _json
 
-    from go_jsonschema_spark.interp import validate_instance
+    from go_jsonschema_spark.interp_compile import compile_validator
     from go_jsonschema_spark.spec import SchemaSpec
 
     spec = SchemaSpec(schema)
+    cell: list = []  # compile lazily inside the worker, once
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def _errors(s: pd.Series) -> pd.Series:
+        if not cell:
+            cell.append(
+                compile_validator(
+                    schema, spec=spec, draft=draft,
+                    assert_formats=assert_formats,
+                ).errors
+            )
+        errors = cell[0]
         out = []
         for raw in s:
             if raw is None:
@@ -684,11 +694,7 @@ def json_column_errors(
             except (ValueError, TypeError) as e:
                 out.append([f"$: invalid JSON: {e}"])
                 continue
-            r = validate_instance(
-                schema, v, draft=draft, spec=spec,
-                assert_formats=assert_formats, collect_all=True,
-            )
-            out.append([] if r.valid else r.errors)
+            out.append(errors(v))
         return pd.Series(out)
 
     return _errors

@@ -1,13 +1,11 @@
-"""Reference-parity interpreter for schema specs over parsed JSON values.
+"""JSON-value primitives of the dynamic path, and ``validate_instance``.
 
-This is the *dynamic* path of the engine: when a column holds arbitrary JSON
-(e.g. ``events.props``) the compiled spec is evaluated by this interpreter
-inside an Arrow-batched pandas UDF (one Python call per ~10k-row batch, never
-per-row pyspark UDFs).  It is also the oracle for the parity harness: the
-accept/reject sets it produces on the official JSON-Schema-Test-Suite cases
-must match the reference validator exactly.
-
-Semantics are matched keyword-for-keyword against the reference:
+When a column holds arbitrary JSON (e.g. ``events.props``) the spec is
+evaluated over parsed values inside an Arrow-batched pandas UDF (one
+Python call per ~10k-row batch, never per-row pyspark UDFs).  The keyword
+semantics live once, in the closure compiler (interp_compile.py);
+:func:`validate_instance` compiles there and runs the result.  This module
+keeps the primitives that compiler and the typed/native paths share:
 
 * type detection incl. integer-valued floats: /root/reference/helpers.go:88-95
   (``isInteger`` via big.Float.IsInt) and validators.go:306-349.  Draft 4
@@ -18,13 +16,10 @@ Semantics are matched keyword-for-keyword against the reference:
   string repr.
 * deep equality with numeric normalization and bool≠number:
   validate_unique.go:57-104 and Value.Equal schema_types_oneof.go:352-379.
-* rune-count string lengths: validators.go:562-582 (Python ``len(str)``
-  counts code points, same as utf8.RuneCount).
-* object equality key-order-insensitive: helpers.go:22-51 ``sortObject``
-  (Python dict equality is order-insensitive natively).
-* oneOf counts matches, no short-circuit past 2: validators.go:457-476.
-* lazy ``$ref`` resolution at validation time: validators.go:82-90 —
-  this is what makes bounded circular refs terminate (the value shrinks).
+* format checks (validators.go:656-857) and the ECMA-regex dialect cache
+  (helpers.go:69-86).
+* ref-owner resolution: which spec (the root, an embedded meta-schema or a
+  registered document) owns a node a ``$ref`` landed on.
 """
 
 from __future__ import annotations
@@ -35,7 +30,7 @@ from dataclasses import dataclass, field
 from fractions import Fraction
 from typing import Any
 
-from go_jsonschema_spark.spec import SchemaSpec, SpecError, unescape_pointer
+from go_jsonschema_spark.spec import SchemaSpec
 
 __all__ = ["validate_instance", "ValidationOutcome"]
 
@@ -377,7 +372,7 @@ def compile_ecma_regex(pattern: str) -> re.Pattern | None:
 
 
 # ---------------------------------------------------------------------------
-# The validator (validators.go dispatch analogue, evaluated over parsed JSON)
+# Ref-owner resolution and the entry point
 # ---------------------------------------------------------------------------
 
 _META_SPECS: list[SchemaSpec] | None = None
@@ -398,22 +393,29 @@ def _meta_specs() -> list[SchemaSpec]:
 
 
 def _owning_spec(
-    spec: SchemaSpec, node: Any, registry: dict[str, Any] | None = None
+    spec: SchemaSpec, node: Any, registry: dict[str, Any] | None = None,
+    root: SchemaSpec | None = None,
 ) -> SchemaSpec:
     """Pick the SchemaSpec whose tree contains ``node`` — after a jump into
     an embedded meta-schema or a registered remote document, pointer refs
-    must resolve inside THAT document's base context."""
-    if node is spec.root or id(node) in spec.base_of:
-        return spec
+    must resolve inside THAT document's base context.  ``root`` is the
+    validation's own spec: a ref from a registered document back into the
+    root document lands there."""
+    for cand in (spec, root):
+        if cand is not None and (
+            node is cand.root or id(node) in cand.base_of
+        ):
+            return cand
     for ms in _meta_specs():
         if id(node) in ms.base_of:
             return ms
     for v in (registry or {}).values():
-        if isinstance(v, SchemaSpec) and id(v) != id(spec) and (
+        if isinstance(v, SchemaSpec) and (
             node is v.root or id(node) in v.base_of
         ):
             return v
     return spec
+
 
 def validate_instance(
     schema: Any,
@@ -428,820 +430,15 @@ def validate_instance(
     """Validate one parsed JSON value against a schema spec.
 
     Mirrors ``Schema.Validate`` (/root/reference/validate.go:32-62) +
-    the validator chain (validators.go:26-53), but evaluates over parsed
-    Python values.  With ``collect_all`` the chain does not short-circuit on
-    the first error (violations-as-data, SURVEY.md §4.1 note)."""
-    if spec is None:
-        spec = SchemaSpec(schema)
-    errors: list[str] = []
-    ok = _validate(schema, value, spec, draft, registry or {}, assert_formats,
-                   errors, collect_all, path="$")
-    return ValidationOutcome(ok, errors)
+    the validator chain (validators.go:26-53): compiles ``schema`` with
+    :func:`interp_compile.compile_validator` and runs it once.  The errors
+    are ``path: keyword: msg`` strings; with ``collect_all`` the chain does
+    not stop at the first failed keyword (violations-as-data, SURVEY.md
+    §4.1 note)."""
+    from go_jsonschema_spark.interp_compile import compile_validator
 
-
-def _err(errors: list[str], path: str, kw: str, msg: str) -> bool:
-    errors.append(f"{path}: {kw}: {msg}")
-    return False
-
-
-def _push_resource(
-    registry: dict[str, Any], spec: SchemaSpec, schema: Any
-) -> bool:
-    """Push this node's schema resource onto the dynamic-scope stack
-    (shared via the call's registry) when the walk enters a different
-    resource.  Returns True when a pop is owed."""
-    dyn = registry.setdefault("__dyn_scope__", [])
-    base = spec.base_of.get(id(schema), (None, ""))[0]
-    if base is not None and (not dyn or dyn[-1][0] is not base):
-        dyn.append(
-            (
-                base,
-                isinstance(base, dict)
-                and base.get("$recursiveAnchor") is True,
-                spec.dyn_anchors.get(id(base), {}),
-            )
-        )
-        return True
-    return False
-
-
-def _resolve_recursive_target(
-    spec: SchemaSpec, schema: Any, registry: dict[str, Any]
-) -> Any:
-    """2019-09 $recursiveRef '#': the current base — or, when that base
-    carries `$recursiveAnchor: true`, the OUTERMOST dynamically-entered
-    resource that also carries it."""
-    cur_base = spec.base_of.get(id(schema), (spec.root, ""))[0]
-    target = cur_base
-    if isinstance(cur_base, dict) and cur_base.get("$recursiveAnchor") is True:
-        for entry in registry.get("__dyn_scope__", []):
-            if entry[1]:
-                return entry[0]
-    return target
-
-
-def _resolve_dynamic_target(
-    spec: SchemaSpec, schema: Any, dref: str, registry: dict[str, Any]
-) -> Any:
-    """2020-12 $dynamicRef: resolve statically first; if the landing spot
-    is a matching $dynamicAnchor (bookending), hop to the OUTERMOST
-    dynamic-scope resource defining that anchor name."""
-    owner = _owning_spec(spec, schema, registry)
-    target = owner.resolve_ref(dref, at=schema, extra=registry)
-    name = dref.split("#", 1)[1] if "#" in dref else ""
-    if (
-        name
-        and isinstance(target, dict)
-        and target.get("$dynamicAnchor") == name
-    ):
-        for entry in registry.get("__dyn_scope__", []):
-            if name in entry[2]:
-                return entry[2][name]
-    return target
-
-
-def _validate(
-    schema: Any,
-    v: Any,
-    spec: SchemaSpec,
-    draft: int,
-    registry: dict[str, Any],
-    fmt: bool,
-    errors: list[str],
-    all_: bool,
-    path: str,
-    _ref_depth: int = 0,
-) -> bool:
-    # boolean schemas (validators.go:64-80)
-    if schema is True:
-        return True
-    if schema is False:
-        return _err(errors, path, "false-schema", "schema rejects everything")
-    if not isinstance(schema, dict):
-        raise SpecError(f"invalid schema node at {path}")
-
-    # resource-boundary tracking for $recursiveRef/$dynamicRef: push this
-    # node's base when the walk enters a different schema resource — BEFORE
-    # any evaluation path (incl. the unevaluated* evaluator), so dynamic
-    # refs below always see the full scope
-    __entered = _push_resource(registry, spec, schema)
-    try:
-        # 2019-09 unevaluated* keywords need annotation collection across
-        # the in-place applicators of this node → dedicated evaluator (the
-        # reference skips these files entirely).  Draft-gated: in draft<=7
-        # these are unknown keywords and MUST be ignored as annotations
-        # (same treatment as the reference's unknown-keyword handling).
-        if draft >= 2019 and ("unevaluatedProperties" in schema
-                              or "unevaluatedItems" in schema):
-            ok_u, _ = _validate_ann(schema, v, spec, draft, registry, fmt,
-                                    errors, path, _ref_depth)
-            return ok_u
-
-        ok = True
-        # 2019-09 $recursiveRef — an in-place applicator evaluated WITH its
-        # siblings.  Unknown keyword in earlier drafts → not evaluated.
-        rref = schema.get("$recursiveRef")
-        if draft >= 2019 and isinstance(rref, str):
-            if _ref_depth > 100:
-                ok = _err(errors, path, "$recursiveRef",
-                          "ref recursion limit")
-                if not all_:
-                    return False
-            else:
-                target = _resolve_recursive_target(spec, schema, registry)
-                towner = _owning_spec(spec, target, registry)
-                r_ok = _validate(target, v, towner, draft, registry, fmt,
-                                 errors, all_, path, _ref_depth + 1)
-                ok = ok and r_ok
-                if not ok and not all_:
-                    return False
-
-        # $ref short-circuits sibling keywords in draft<=7
-        # (parser.go:323-326); from 2019-09 it is an in-place applicator
-        # evaluated WITH its siblings
-        ref = schema.get("$ref")
-        if isinstance(ref, str):
-            if _ref_depth > 100:
-                return _err(errors, path, "$ref", "ref recursion limit")
-            owner = _owning_spec(spec, schema, registry)
-            target = owner.resolve_ref(ref, at=schema, extra=registry)
-            r_ok = _validate(target, v, owner, draft, registry, fmt, errors,
-                             all_, path, _ref_depth + 1)
-            if draft < 2019:
-                return r_ok
-            ok = ok and r_ok
-            if not ok and not all_:
-                return False
-
-        dref = schema.get("$dynamicRef")
-        if draft >= 2019 and isinstance(dref, str):
-            if _ref_depth > 100:
-                ok = _err(errors, path, "$dynamicRef", "ref recursion limit")
-                if not all_:
-                    return False
-            else:
-                target = _resolve_dynamic_target(spec, schema, dref, registry)
-                towner = _owning_spec(spec, target, registry)
-                d_ok = _validate(target, v, towner, draft, registry, fmt,
-                                 errors, all_, path, _ref_depth + 1)
-                ok = ok and d_ok
-                if not ok and not all_:
-                    return False
-        return _validate_body(schema, v, spec, draft, registry, fmt, errors,
-                              all_, path, _ref_depth) and ok
-    finally:
-        if __entered:
-            registry["__dyn_scope__"].pop()
-
-
-def _validate_body(
-    schema: Any,
-    v: Any,
-    spec: SchemaSpec,
-    draft: int,
-    registry: dict[str, Any],
-    fmt: bool,
-    errors: list[str],
-    all_: bool,
-    path: str,
-    _ref_depth: int = 0,
-) -> bool:
-
-    ok = True
-
-    def fail(kw: str, msg: str) -> bool:
-        nonlocal ok
-        ok = False
-        _err(errors, path, kw, msg)
-        return all_  # keep going only when collecting all violations
-
-    # type (validators.go:306-349)
-    t = schema.get("type")
-    if t is not None:
-        types = t if isinstance(t, list) else [t]
-        if not any(_matches_type(v, x, draft) for x in types):
-            if not fail("type", f"got {json_type(v, draft)}, want {types}"):
-                return False
-
-    # enum (validators.go:584-596)
-    if "enum" in schema:
-        if not any(deep_equal(v, e) for e in schema["enum"]):
-            if not fail("enum", f"{v!r} not in enum"):
-                return False
-
-    # const (validators.go:598-628)
-    if "const" in schema:
-        if not deep_equal(v, schema["const"]):
-            if not fail("const", f"{v!r} != const"):
-                return False
-
-    is_num = isinstance(v, (int, float)) and not isinstance(v, bool)
-    if is_num:
-        fv = _as_fraction(v)
-        # multipleOf — exact rational division (validators.go:486-500)
-        if "multipleOf" in schema:
-            q = fv / _as_fraction(schema["multipleOf"])
-            if q.denominator != 1:
-                if not fail("multipleOf", f"{v} not multiple of {schema['multipleOf']}"):
-                    return False
-        # maximum / exclusiveMaximum (validators.go:502-533; draft-4 boolean
-        # exclusive flags, schema.go:173-178)
-        if "maximum" in schema:
-            mx = _as_fraction(schema["maximum"])
-            excl = schema.get("exclusiveMaximum") is True
-            if (fv >= mx) if excl else (fv > mx):
-                if not fail("maximum", f"{v} > {schema['maximum']}"):
-                    return False
-        if "exclusiveMaximum" in schema and not isinstance(
-            schema["exclusiveMaximum"], bool
-        ):
-            if fv >= _as_fraction(schema["exclusiveMaximum"]):
-                if not fail("exclusiveMaximum", f"{v} >= bound"):
-                    return False
-        # minimum / exclusiveMinimum (validators.go:535-560)
-        if "minimum" in schema:
-            mn = _as_fraction(schema["minimum"])
-            excl = schema.get("exclusiveMinimum") is True
-            if (fv <= mn) if excl else (fv < mn):
-                if not fail("minimum", f"{v} < {schema['minimum']}"):
-                    return False
-        if "exclusiveMinimum" in schema and not isinstance(
-            schema["exclusiveMinimum"], bool
-        ):
-            if fv <= _as_fraction(schema["exclusiveMinimum"]):
-                if not fail("exclusiveMinimum", f"{v} <= bound"):
-                    return False
-
-    if isinstance(v, str):
-        # rune-count lengths (validators.go:562-582)
-        if "maxLength" in schema and len(v) > schema["maxLength"]:
-            if not fail("maxLength", f"len {len(v)} > {schema['maxLength']}"):
-                return False
-        if "minLength" in schema and len(v) < schema["minLength"]:
-            if not fail("minLength", f"len {len(v)} < {schema['minLength']}"):
-                return False
-        # pattern (validators.go:279-290)
-        if "pattern" in schema:
-            rx = compile_ecma_regex(schema["pattern"])
-            if rx is not None and not rx.search(v):
-                if not fail("pattern", f"{v!r} !~ /{schema['pattern']}/"):
-                    return False
-        # format (validators.go:656-857)
-        if fmt and "format" in schema:
-            check = _FORMAT_CHECKS.get(schema["format"])
-            if check is not None and not check(v):
-                if not fail("format", f"{v!r} is not a {schema['format']}"):
-                    return False
-        # content* — validated here (the reference skips content.json);
-        # draft-7 semantics: assertions on encoded string content
-        if fmt and ("contentEncoding" in schema or "contentMediaType" in schema):
-            decoded: Any = v
-            ok_content = True
-            if schema.get("contentEncoding") == "base64":
-                import base64
-                import binascii
-
-                try:
-                    decoded = base64.b64decode(v, validate=True)
-                except (binascii.Error, ValueError):
-                    ok_content = False
-            if ok_content and schema.get("contentMediaType") == "application/json":
-                import json as _json
-
-                try:
-                    _json.loads(decoded)
-                except (ValueError, TypeError, UnicodeDecodeError):
-                    ok_content = False
-            if not ok_content:
-                if not fail("content", "content assertion failed"):
-                    return False
-
-    if isinstance(v, list):
-        # 2020-12: prefixItems is the tuple form; items then validates the
-        # rest (equivalent to draft-7 tuple items + additionalItems)
-        prefix = schema.get("prefixItems")
-        if prefix is not None:
-            for i, (s, el) in enumerate(zip(prefix, v)):
-                if not _validate(s, el, spec, draft, registry, fmt, errors,
-                                 all_, f"{path}[{i}]"):
-                    if not fail("prefixItems", f"element {i} invalid"):
-                        return False
-            rest = schema.get("items")
-            if rest is not None and len(v) > len(prefix):
-                for i in range(len(prefix), len(v)):
-                    if not _validate(rest, v[i], spec, draft, registry, fmt,
-                                     errors, all_, f"{path}[{i}]"):
-                        if not fail("items", f"element {i} invalid"):
-                            return False
-        items = None if prefix is not None else schema.get("items")
-        if items is not None:
-            if isinstance(items, list):
-                # tuple validation (validators.go:151-153)
-                for i, (s, el) in enumerate(zip(items, v)):
-                    if not _validate(s, el, spec, draft, registry, fmt, errors,
-                                     all_, f"{path}[{i}]"):
-                        if not fail("items", f"element {i} invalid"):
-                            return False
-                # additionalItems beyond the tuple (validators.go:155-166)
-                add = schema.get("additionalItems")
-                if add is not None and len(v) > len(items):
-                    for i in range(len(items), len(v)):
-                        if not _validate(add, v[i], spec, draft, registry, fmt,
-                                         errors, all_, f"{path}[{i}]"):
-                            if not fail("additionalItems", f"element {i} invalid"):
-                                return False
-            else:
-                # single-schema items (validators.go:143-149) — incl. boolean
-                for i, el in enumerate(v):
-                    if not _validate(items, el, spec, draft, registry, fmt,
-                                     errors, all_, f"{path}[{i}]"):
-                        if not fail("items", f"element {i} invalid"):
-                            return False
-        if "maxItems" in schema and len(v) > schema["maxItems"]:
-            if not fail("maxItems", f"{len(v)} > {schema['maxItems']}"):
-                return False
-        if "minItems" in schema and len(v) < schema["minItems"]:
-            if not fail("minItems", f"{len(v)} < {schema['minItems']}"):
-                return False
-        # uniqueItems (validate_unique.go:14-104)
-        if schema.get("uniqueItems") is True:
-            seen = set()
-            for el in v:
-                k = canonical_key(el)
-                if k in seen:
-                    if not fail("uniqueItems", "duplicate element"):
-                        return False
-                    break
-                seen.add(k)
-        # contains (validators.go:136-141, 169-171) + 2019-09 min/maxContains
-        if "contains" in schema:
-            n_match = sum(
-                1
-                for el in v
-                if _validate(schema["contains"], el, spec, draft, registry,
-                             fmt, [], False, path)
-            )
-            min_c = schema.get("minContains", 1)
-            max_c = schema.get("maxContains")
-            if n_match < min_c:
-                if not fail("contains", f"{n_match} matches < minContains {min_c}"):
-                    return False
-            if max_c is not None and n_match > max_c:
-                if not fail("maxContains", f"{n_match} matches > {max_c}"):
-                    return False
-
-    if isinstance(v, dict):
-        if "maxProperties" in schema and len(v) > schema["maxProperties"]:
-            if not fail("maxProperties", f"{len(v)} > {schema['maxProperties']}"):
-                return False
-        if "minProperties" in schema and len(v) < schema["minProperties"]:
-            if not fail("minProperties", f"{len(v)} < {schema['minProperties']}"):
-                return False
-        # required (validators.go:351-389)
-        for k in schema.get("required", []):
-            if k not in v:
-                if not fail("required", f"missing {k!r}"):
-                    return False
-        props = schema.get("properties", {})
-        pprops = schema.get("patternProperties", {})
-        add = schema.get("additionalProperties")
-        # properties + patternProperties + additionalProperties
-        # (validators.go:196-263)
-        for k, val in v.items():
-            matched = False
-            if k in props:
-                matched = True
-                if not _validate(props[k], val, spec, draft, registry, fmt,
-                                 errors, all_, f"{path}.{k}"):
-                    if not fail("properties", f"property {k!r} invalid"):
-                        return False
-            for pat, ps in pprops.items():
-                rx = compile_ecma_regex(pat)
-                if rx is not None and rx.search(k):
-                    matched = True
-                    if not _validate(ps, val, spec, draft, registry, fmt,
-                                     errors, all_, f"{path}.{k}"):
-                        if not fail("patternProperties", f"property {k!r} invalid"):
-                            return False
-            if not matched and add is not None:
-                if not _validate(add, val, spec, draft, registry, fmt, errors,
-                                 all_, f"{path}.{k}"):
-                    if not fail("additionalProperties", f"property {k!r} invalid"):
-                        return False
-        # propertyNames (validators.go:295-304)
-        if "propertyNames" in schema:
-            for k in v:
-                if not _validate(schema["propertyNames"], k, spec, draft,
-                                 registry, fmt, errors, all_, f"{path}.{k}"):
-                    if not fail("propertyNames", f"name {k!r} invalid"):
-                        return False
-        # dependencies (validators.go:391-433) + the 2019-09 split forms
-        deps = schema.get("dependencies", {})
-        for k, dep in deps.items():
-            if k not in v:
-                continue
-            if isinstance(dep, list):
-                for need in dep:
-                    if need not in v:
-                        if not fail("dependencies", f"{k!r} requires {need!r}"):
-                            return False
-            else:
-                if not _validate(dep, v, spec, draft, registry, fmt, errors,
-                                 all_, path, _ref_depth):
-                    if not fail("dependencies", f"schema dep on {k!r} failed"):
-                        return False
-        for k, need_list in (schema.get("dependentRequired") or {}).items():
-            if k in v:
-                for need in need_list:
-                    if need not in v:
-                        if not fail("dependentRequired",
-                                    f"{k!r} requires {need!r}"):
-                            return False
-        for k, dep in (schema.get("dependentSchemas") or {}).items():
-            if k in v:
-                if not _validate(dep, v, spec, draft, registry, fmt, errors,
-                                 all_, path, _ref_depth):
-                    if not fail("dependentSchemas",
-                                f"schema dep on {k!r} failed"):
-                        return False
-
-    # combinators (validators.go:435-484)
-    if "allOf" in schema:
-        for i, s in enumerate(schema["allOf"]):
-            if not _validate(s, v, spec, draft, registry, fmt, errors, all_,
-                             path, _ref_depth):
-                if not fail("allOf", f"subschema {i} failed"):
-                    return False
-    if "anyOf" in schema:
-        if not any(
-            _validate(s, v, spec, draft, registry, fmt, [], False, path,
-                      _ref_depth)
-            for s in schema["anyOf"]
-        ):
-            if not fail("anyOf", "no subschema matched"):
-                return False
-    if "oneOf" in schema:
-        n = sum(
-            1
-            for s in schema["oneOf"]
-            if _validate(s, v, spec, draft, registry, fmt, [], False, path,
-                         _ref_depth)
-        )
-        if n != 1:
-            if not fail("oneOf", f"{n} subschemas matched, want exactly 1"):
-                return False
-    if "not" in schema:
-        if _validate(schema["not"], v, spec, draft, registry, fmt, [], False,
-                     path, _ref_depth):
-            if not fail("not", "subschema matched"):
-                return False
-    # if/then/else (validators.go:630-648)
-    if "if" in schema:
-        cond = _validate(schema["if"], v, spec, draft, registry, fmt, [], False,
-                         path, _ref_depth)
-        branch = schema.get("then" if cond else "else")
-        if branch is not None:
-            if not _validate(branch, v, spec, draft, registry, fmt, errors,
-                             all_, path, _ref_depth):
-                if not fail("then" if cond else "else", "branch failed"):
-                    return False
-
-    return ok
-
-
-# ---------------------------------------------------------------------------
-# 2019-09 unevaluatedProperties / unevaluatedItems — annotation-collecting
-# evaluation (a verified superset of the reference, which skips these suite
-# files entirely; validate_test.go:37-80)
-# ---------------------------------------------------------------------------
-
-# keywords whose checks don't produce property/item annotations — delegated
-# to the plain validator on a pruned schema
-_ANN_LEAF_KEYWORDS = (
-    "type", "enum", "const", "multipleOf", "maximum", "exclusiveMaximum",
-    "minimum", "exclusiveMinimum", "maxLength", "minLength", "pattern",
-    "format", "contentEncoding", "contentMediaType", "maxItems", "minItems",
-    "uniqueItems", "maxProperties", "minProperties", "required",
-    "dependentRequired", "propertyNames",
-)
-
-
-class _Ann:
-    """Annotations at ONE instance location: evaluated property names,
-    evaluated item prefix length, all-items flag, extra item indexes."""
-
-    __slots__ = ("props", "prefix", "all_items", "idxs")
-
-    def __init__(self) -> None:
-        self.props: set[str] = set()
-        self.prefix = 0
-        self.all_items = False
-        self.idxs: set[int] = set()
-
-    def merge(self, other: "_Ann") -> None:
-        self.props |= other.props
-        self.prefix = max(self.prefix, other.prefix)
-        self.all_items = self.all_items or other.all_items
-        self.idxs |= other.idxs
-
-
-def schema_has_unevaluated(schema: Any) -> bool:
-    """True when the schema subtree mentions an annotation- or
-    dynamic-scope-dependent keyword (unevaluatedProperties/Items,
-    $recursiveRef) — used by the closure compiler to route such schemas
-    to this interpreter instead of the closure chain."""
-    needy = ("unevaluatedProperties", "unevaluatedItems", "$recursiveRef",
-             "$dynamicRef")
-    stack = [schema]
-    seen: set[int] = set()
-    while stack:
-        node = stack.pop()
-        if id(node) in seen:
-            continue
-        seen.add(id(node))
-        if isinstance(node, dict):
-            if any(k in node for k in needy):
-                return True
-            stack.extend(node.values())
-        elif isinstance(node, list):
-            stack.extend(node)
-    return False
-
-
-def _validate_ann(
-    schema: Any,
-    v: Any,
-    spec: SchemaSpec,
-    draft: int,
-    registry: dict[str, Any],
-    fmt: bool,
-    errors: list[str],
-    path: str,
-    _ref_depth: int = 0,
-) -> tuple[bool, _Ann]:
-    """Validate with annotation collection (2019-09 semantics: ``$ref``
-    does NOT short-circuit siblings, in-place applicators contribute the
-    annotations their SUCCESSFUL subschemas produced).  Pushes the node's
-    schema resource like :func:`_validate` so $recursiveRef/$dynamicRef
-    below an unevaluated*-bearing node still see the full dynamic scope."""
-    if not isinstance(schema, dict):
-        return _validate_ann_body(schema, v, spec, draft, registry, fmt,
-                                  errors, path, _ref_depth)
-    entered = _push_resource(registry, spec, schema)
-    try:
-        return _validate_ann_body(schema, v, spec, draft, registry, fmt,
-                                  errors, path, _ref_depth)
-    finally:
-        if entered:
-            registry["__dyn_scope__"].pop()
-
-
-def _validate_ann_body(
-    schema: Any,
-    v: Any,
-    spec: SchemaSpec,
-    draft: int,
-    registry: dict[str, Any],
-    fmt: bool,
-    errors: list[str],
-    path: str,
-    _ref_depth: int = 0,
-) -> tuple[bool, _Ann]:
-    ann = _Ann()
-    if schema is True:
-        return True, ann
-    if schema is False:
-        return (
-            bool(_err(errors, path, "false-schema", "schema rejects everything")),
-            ann,
-        )
-    if not isinstance(schema, dict):
-        raise SpecError(f"invalid schema node at {path}")
-
-    ok = True
-
-    def sub_plain(s: Any, val: Any, p: str) -> bool:
-        return _validate(s, val, spec, draft, registry, fmt, [], False, p)
-
-    def sub_ann(s: Any, depth: int = 0) -> tuple[bool, _Ann]:
-        return _validate_ann(s, v, spec, draft, registry, fmt, [], path,
-                             _ref_depth + depth)
-
-    # leaf keywords via the plain validator on a pruned node
-    pruned = {k: schema[k] for k in _ANN_LEAF_KEYWORDS if k in schema}
-    deps = schema.get("dependencies")
-    if isinstance(deps, dict):
-        list_deps = {k: d for k, d in deps.items() if isinstance(d, list)}
-        if list_deps:
-            pruned["dependencies"] = list_deps
-    if pruned and not _validate(pruned, v, spec, draft, registry, fmt,
-                                errors, False, path):
-        ok = False
-
-    # $ref — 2019-09: an in-place applicator evaluated WITH its siblings
-    ref = schema.get("$ref")
-    if isinstance(ref, str):
-        if _ref_depth > 100:
-            ok = bool(_err(errors, path, "$ref", "ref recursion limit"))
-        else:
-            owner = _owning_spec(spec, schema, registry)
-            target = owner.resolve_ref(ref, at=schema, extra=registry)
-            r_ok, r_ann = _validate_ann(
-                target, v, owner, draft,
-                registry, fmt, errors, path, _ref_depth + 1,
-            )
-            ok = ok and r_ok
-            if r_ok:
-                ann.merge(r_ann)
-    # $recursiveRef / $dynamicRef — same in-place-applicator treatment,
-    # resolved through the dynamic-scope stack.  Draft-gated like the plain
-    # path: unknown keywords in draft<=7 are ignored.
-    rref = schema.get("$recursiveRef")
-    if draft >= 2019 and isinstance(rref, str):
-        if _ref_depth > 100:
-            ok = bool(_err(errors, path, "$recursiveRef",
-                           "ref recursion limit"))
-        else:
-            target = _resolve_recursive_target(spec, schema, registry)
-            towner = _owning_spec(spec, target, registry)
-            r_ok, r_ann = _validate_ann(
-                target, v, towner, draft,
-                registry, fmt, errors, path, _ref_depth + 1,
-            )
-            ok = ok and r_ok
-            if r_ok:
-                ann.merge(r_ann)
-    dref = schema.get("$dynamicRef")
-    if draft >= 2019 and isinstance(dref, str):
-        if _ref_depth > 100:
-            ok = bool(_err(errors, path, "$dynamicRef",
-                           "ref recursion limit"))
-        else:
-            target = _resolve_dynamic_target(spec, schema, dref, registry)
-            towner = _owning_spec(spec, target, registry)
-            d_ok, d_ann = _validate_ann(
-                target, v, towner, draft,
-                registry, fmt, errors, path, _ref_depth + 1,
-            )
-            ok = ok and d_ok
-            if d_ok:
-                ann.merge(d_ann)
-
-    # object applicators (child locations → plain validation; annotation =
-    # which keys were successfully applied)
-    if isinstance(v, dict):
-        props = schema.get("properties", {})
-        pprops = schema.get("patternProperties", {})
-        add = schema.get("additionalProperties")
-        for k, val in v.items():
-            matched = False
-            k_ok = True
-            if k in props:
-                matched = True
-                k_ok = sub_plain(props[k], val, f"{path}.{k}") and k_ok
-            for pat, ps in pprops.items():
-                rx = compile_ecma_regex(pat)
-                if rx is not None and rx.search(k):
-                    matched = True
-                    k_ok = sub_plain(ps, val, f"{path}.{k}") and k_ok
-            if matched:
-                if k_ok:
-                    ann.props.add(k)
-                else:
-                    ok = bool(_err(errors, path, "properties",
-                                   f"property {k!r} invalid"))
-            elif add is not None:
-                if sub_plain(add, val, f"{path}.{k}"):
-                    ann.props.add(k)
-                else:
-                    ok = bool(_err(errors, path, "additionalProperties",
-                                   f"property {k!r} invalid"))
-        for k, dep in (schema.get("dependentSchemas") or {}).items():
-            if k in v:
-                d_ok, d_ann = _validate_ann(dep, v, spec, draft, registry,
-                                            fmt, errors, path, _ref_depth)
-                ok = ok and d_ok
-                if d_ok:
-                    ann.merge(d_ann)
-        if isinstance(deps, dict):
-            for k, dep in deps.items():
-                if k in v and not isinstance(dep, list):
-                    d_ok, d_ann = _validate_ann(dep, v, spec, draft,
-                                                registry, fmt, errors, path,
-                                                _ref_depth)
-                    ok = ok and d_ok
-                    if d_ok:
-                        ann.merge(d_ann)
-
-    # array applicators
-    if isinstance(v, list):
-        prefix = schema.get("prefixItems")
-        items = schema.get("items")
-        rest = None
-        tuple_schemas = None
-        if prefix is not None:
-            tuple_schemas = prefix
-            rest = items
-        elif isinstance(items, list):
-            tuple_schemas = items
-            rest = schema.get("additionalItems")
-        elif items is not None:
-            rest = items
-        if tuple_schemas is not None:
-            n_pref = min(len(tuple_schemas), len(v))
-            for i in range(n_pref):
-                if sub_plain(tuple_schemas[i], v[i], f"{path}[{i}]"):
-                    continue
-                ok = bool(_err(errors, path, "prefixItems",
-                               f"element {i} invalid"))
-            ann.prefix = max(ann.prefix, n_pref)
-        n_pref = len(tuple_schemas) if tuple_schemas is not None else 0
-        if rest is not None:
-            for i in range(n_pref, len(v)):
-                if not sub_plain(rest, v[i], f"{path}[{i}]"):
-                    ok = bool(_err(errors, path, "items",
-                                   f"element {i} invalid"))
-            if len(v) > n_pref:
-                ann.all_items = True
-        if "contains" in schema:
-            hit = {
-                i for i, el in enumerate(v)
-                if sub_plain(schema["contains"], el, f"{path}[{i}]")
-            }
-            min_c = schema.get("minContains", 1)
-            max_c = schema.get("maxContains")
-            if len(hit) < min_c:
-                ok = bool(_err(errors, path, "contains",
-                               f"{len(hit)} matches < minContains {min_c}"))
-            if max_c is not None and len(hit) > max_c:
-                ok = bool(_err(errors, path, "maxContains",
-                               f"{len(hit)} matches > {max_c}"))
-            ann.idxs |= hit
-
-    # in-place combinators — successful subschemas contribute annotations
-    if "allOf" in schema:
-        for s in schema["allOf"]:
-            s_ok, s_ann = sub_ann(s)
-            ok = ok and s_ok
-            if s_ok:
-                ann.merge(s_ann)
-        if not ok:
-            _err([], path, "allOf", "")
-    if "anyOf" in schema:
-        hit_any = False
-        for s in schema["anyOf"]:
-            s_ok, s_ann = sub_ann(s)
-            if s_ok:
-                hit_any = True
-                ann.merge(s_ann)
-        if not hit_any:
-            ok = bool(_err(errors, path, "anyOf", "no subschema matched"))
-    if "oneOf" in schema:
-        n_hit = 0
-        for s in schema["oneOf"]:
-            s_ok, s_ann = sub_ann(s)
-            if s_ok:
-                n_hit += 1
-                ann.merge(s_ann)
-        if n_hit != 1:
-            ok = bool(_err(errors, path, "oneOf",
-                           f"{n_hit} subschemas matched, want exactly 1"))
-    if "not" in schema:
-        s_ok, _sa = sub_ann(schema["not"])
-        if s_ok:
-            ok = bool(_err(errors, path, "not", "subschema matched"))
-    if "if" in schema:
-        c_ok, c_ann = sub_ann(schema["if"])
-        if c_ok:
-            ann.merge(c_ann)
-        branch = schema.get("then" if c_ok else "else")
-        if branch is not None:
-            b_ok, b_ann = sub_ann(branch)
-            ok = ok and b_ok
-            if b_ok:
-                ann.merge(b_ann)
-
-    # unevaluated* — LAST, over everything the node's own keywords and
-    # in-place applicators evaluated
-    if isinstance(v, dict) and "unevaluatedProperties" in schema:
-        us = schema["unevaluatedProperties"]
-        for k, val in v.items():
-            if k in ann.props:
-                continue
-            if sub_plain(us, val, f"{path}.{k}"):
-                ann.props.add(k)
-            else:
-                ok = bool(_err(errors, path, "unevaluatedProperties",
-                               f"property {k!r} unevaluated/invalid"))
-    if isinstance(v, list) and "unevaluatedItems" in schema:
-        us = schema["unevaluatedItems"]
-        if not ann.all_items:
-            for i in range(ann.prefix, len(v)):
-                if i in ann.idxs:
-                    continue
-                if not sub_plain(us, v[i], f"{path}[{i}]"):
-                    ok = bool(_err(errors, path, "unevaluatedItems",
-                                   f"element {i} unevaluated/invalid"))
-            ann.all_items = True
-
-    return ok, ann
+    errors = compile_validator(
+        schema, spec=spec, draft=draft, registry=registry,
+        assert_formats=assert_formats,
+    ).errors(value, collect_all=collect_all)
+    return ValidationOutcome(not errors, errors)

@@ -1,24 +1,37 @@
-"""Closure-compiled validator for the dynamic-JSON path.
+"""The dynamic-JSON evaluator: schema specs compiled into closures.
 
 The faithful analogue of the reference's plan step: ``setupValidators``
 (/root/reference/parser.go:313-407) walks the schema ONCE and attaches one
 closure per present keyword; validation is then just running the chain.
-``interp.validate_instance`` re-examines the schema dict per value — fine
-for the parity harness, wasteful inside a pandas UDF evaluating millions of
-payloads.  This module compiles the same semantics into nested Python
-closures (2-4× faster per value).  Parity with the interpreter is checked
-by the hypothesis differential in tests/test_differential.py and the
-draft-specific cases in tests/test_json_native.py; the full official-suite
-runs (tests/test_parity_suite.py, tests/test_interp_compile.py) skip unless
-the JSON-Schema-Test-Suite corpus is installed.
+This module is the only implementation of keyword semantics over parsed
+JSON values: ``interp.validate_instance``, the Arrow-batched JSON-column
+UDFs in compile.py and the engine, and
+``spec.validate_spec_against_metaschema`` all compile here and run the
+result.  It is checked against the installed ``jsonschema`` package by
+tests/test_evaluator_oracle.py; the official-suite sweeps
+(tests/test_parity_suite.py) run when the JSON-Schema-Test-Suite corpus is
+installed.
 
-Semantics are delegated to interp's primitives (json_type, exact-rational
-comparison, deep_equal, canonical_key, format checkers, ECMA-regex cache)
-so the two paths cannot drift on the hard parts.
+Every compiled node is a function ``(value, cx) -> bool``.  ``cx`` is
+``None`` on the plain verdict path, which then builds no error strings,
+paths or annotation sets.  Otherwise it is the per-call :class:`_Cx`,
+carrying whatever this call needs beyond a verdict:
+
+* ``path: keyword: msg`` error collection (``Validator.errors``);
+* the dynamic scope of ``$recursiveRef``/``$dynamicRef`` (2019-09+), used
+  only when the compiled graph, registry documents included, holds one;
+* the annotations ``unevaluatedProperties``/``unevaluatedItems`` read —
+  property names and item indexes evaluated at one instance location,
+  gathered only below a node carrying such a keyword.
+
+The hard primitives (json_type, exact-rational comparison, deep_equal,
+canonical_key, format checkers, the ECMA-regex cache, ref-owner lookup)
+live in interp.py.
 """
 
 from __future__ import annotations
 
+from itertools import chain, repeat
 from typing import Any, Callable
 
 from go_jsonschema_spark.interp import (
@@ -35,8 +48,102 @@ from go_jsonschema_spark.spec import SchemaSpec, SpecError
 __all__ = ["compile_validator"]
 
 Validator = Callable[[Any], bool]
+Fn = Callable[[Any, "_Cx | None"], bool]
 
 _NUM = (int, float)
+
+
+class _Evaluated:
+    """Annotations at one instance location: evaluated property names, the
+    evaluated item prefix length and further evaluated item indexes."""
+
+    __slots__ = ("props", "upto", "idxs")
+
+    def __init__(self) -> None:
+        self.props: set[str] = set()
+        self.upto = 0
+        self.idxs: set[int] = set()
+
+    def merge(self, other: "_Evaluated") -> None:
+        self.props |= other.props
+        self.upto = max(self.upto, other.upto)
+        self.idxs |= other.idxs
+
+
+class _Cx:
+    """Per-call state of one validation that needs more than a verdict.
+
+    ``errors`` is the list messages go to (None: quiet), ``collect`` keeps
+    evaluating after a failure, ``path`` is the instance location,
+    ``scope`` the stack of entered ``(resource, owning spec)`` pairs (None
+    when the graph has no dynamic refs) and ``ann`` the annotations of this
+    location (None when nothing reads them)."""
+
+    __slots__ = ("errors", "collect", "path", "scope", "ann")
+
+    def __init__(self, errors: list[str] | None, collect: bool, path: str,
+                 scope: list | None, ann: _Evaluated | None) -> None:
+        self.errors = errors
+        self.collect = collect
+        self.path = path
+        self.scope = scope
+        self.ann = ann
+
+    def at(self, key: str | int) -> "_Cx | None":
+        """The state for a child location (property name or item index)."""
+        if self.errors is None:
+            if self.scope is None:
+                return None
+            return _Cx(None, False, "", self.scope, None)
+        path = (f"{self.path}.{key}" if isinstance(key, str)
+                else f"{self.path}[{key}]")
+        return _Cx(self.errors, self.collect, path, self.scope, None)
+
+    def quiet(self) -> "_Cx | None":
+        """The same location with errors off (anyOf, oneOf, not, if,
+        contains judge without reporting)."""
+        if self.scope is None and self.ann is None:
+            return None
+        return _Cx(None, False, self.path, self.scope, self.ann)
+
+    def fork(self) -> "_Cx":
+        """The same location with fresh annotations."""
+        return _Cx(self.errors, self.collect, self.path, self.scope,
+                   _Evaluated())
+
+
+def _inplace(f: Fn, v: Any, cx: _Cx | None) -> bool:
+    """Apply an in-place subschema: its annotations count for this
+    location only when it succeeds."""
+    if cx is None or cx.ann is None:
+        return f(v, cx)
+    sub = cx.fork()
+    if not f(v, sub):
+        return False
+    cx.ann.merge(sub.ann)  # type: ignore[arg-type]
+    return True
+
+
+def _all(cx: _Cx | None, oks) -> bool:
+    """``all(oks)``, except that an error-collecting call evaluates every
+    member so each reports its errors."""
+    if cx is None or not cx.collect:
+        return all(oks)
+    return all([*oks])
+
+
+def _recursive_anchor(node: Any) -> bool:
+    return isinstance(node, dict) and node.get("$recursiveAnchor") is True
+
+
+def _true(v: Any, cx: _Cx | None) -> bool:
+    return True
+
+
+def _false(v: Any, cx: _Cx | None) -> bool:
+    if cx is not None and cx.errors is not None:
+        cx.errors.append(f"{cx.path}: false-schema: schema rejects everything")
+    return False
 
 
 def compile_validator(
@@ -47,389 +154,559 @@ def compile_validator(
     registry: dict[str, Any] | None = None,
     assert_formats: bool = True,
 ) -> Validator:
-    """Compile ``schema`` into a ``value -> bool`` closure chain."""
+    """Compile ``schema`` into a ``value -> bool`` closure chain.
+
+    The returned callable also has ``errors(value, collect_all=True)``,
+    which gives the ``path: keyword: msg`` list (empty = valid); without
+    ``collect_all`` it stops at the first failed keyword.  The registry is
+    read, never written."""
     if spec is None:
         spec = SchemaSpec(schema if isinstance(schema, (dict, bool)) else {})
-    from go_jsonschema_spark.interp import (
-        schema_has_unevaluated, validate_instance,
-    )
+    g = _Graph(spec, draft, registry or {}, assert_formats)
+    root = g.compile(schema, spec)
+    scoped = g.scoped
 
-    if draft >= 2019 and schema_has_unevaluated(schema):
-        # unevaluated* needs annotation collection across in-place
-        # applicators — route to the interpreter's annotated evaluator
-        # instead of the closure chain (same verdicts, parity-tested).
-        # In draft<=7 these are unknown keywords (ignored), so the plain
-        # closure chain is both correct and faster there.
-        reg = registry or {}
+    # A value nested deeper than the interpreter stack — or a ref cycle
+    # that never consumes it, {"$ref": "#"} — is invalid rather than a
+    # crashed worker: the reference's circularThreshold (schema.go:24-26)
+    def validate(v: Any) -> bool:
+        try:
+            return root(v, _Cx(None, False, "", [], None) if scoped else None)
+        except RecursionError:
+            return False
 
-        def _ann_validator(v: Any) -> bool:
-            return validate_instance(
-                schema, v, draft=draft, spec=spec, registry=reg,
-                assert_formats=assert_formats,
-            ).valid
+    def errors(v: Any, collect_all: bool = True) -> list[str]:
+        if validate(v):
+            return []
+        out: list[str] = []
+        try:
+            root(v, _Cx(out, collect_all, "$", [] if scoped else None, None))
+        except RecursionError:
+            out.append("$: $ref: recursion too deep")
+        return out
 
-        return _ann_validator
-    memo: dict[int, Validator] = {}
-    return _compile(schema, spec, draft, registry or {}, assert_formats, memo)
+    validate.errors = errors  # type: ignore[attr-defined]
+    return validate
 
 
-def _compile(
-    schema: Any,
-    spec: SchemaSpec,
-    draft: int,
-    registry: dict[str, Any],
-    fmt: bool,
-    memo: dict[int, Validator],
-) -> Validator:
-    if schema is True:
-        return lambda v: True
-    if schema is False:
-        return lambda v: False
-    if not isinstance(schema, dict):
-        raise SpecError(f"invalid schema node: {schema!r}")
+class _Graph:
+    """One compilation: the schema graph and the state its closures share.
 
-    if id(schema) in memo:
-        return memo[id(schema)]
+    Nodes are compiled once (memo by identity, registered BEFORE their
+    children, so circular ``$ref``s compile), ``$ref`` targets eagerly;
+    ``scoped`` records whether a ``$recursiveRef``/``$dynamicRef`` that
+    reads the dynamic scope was."""
 
-    fns: list[Validator] = []
+    def __init__(self, spec: SchemaSpec, draft: int,
+                 registry: dict[str, Any], fmt: bool) -> None:
+        self.spec = spec
+        self.draft = draft
+        self.registry = registry
+        self.fmt = fmt
+        self.memo: dict[int, tuple[Any, Fn]] = {}
+        self.scoped = False
 
-    def run(v: Any) -> bool:
-        for f in fns:
-            if not f(v):
-                return False
-        return True
+    def compile(self, schema: Any, owner: SchemaSpec) -> Fn:
+        if schema is True:
+            return _true
+        if schema is False:
+            return _false
+        if not isinstance(schema, dict):
+            raise SpecError(f"invalid schema node: {schema!r}")
+        hit = self.memo.get(id(schema))
+        if hit is not None:
+            return hit[1]
+        return self._node(schema, owner)
 
-    # register BEFORE compiling children → bounded recursion on circular
-    # $refs (the closure-world circularThreshold, schema.go:24-26)
-    memo[id(schema)] = run
+    def _target(self, schema: dict, owner: SchemaSpec, ref: str
+                ) -> tuple[Any, Fn]:
+        """Resolve and compile a ref target; an unresolvable ref raises
+        when a value reaches it, as ``jsonschema`` does."""
+        try:
+            target = owner.resolve_ref(ref, at=schema, extra=self.registry)
+            towner = _owning_spec(owner, target, self.registry, self.spec)
+            return target, self.compile(target, towner)
+        except SpecError as e:
+            msg = str(e)
 
-    sub = lambda s: _compile(s, spec, draft, registry, fmt, memo)  # noqa: E731
+            def unresolved(v: Any, cx: _Cx | None) -> bool:
+                raise SpecError(msg)
 
-    # $ref short-circuits siblings in draft<=7 (parser.go:323-326); from
-    # 2019-09 it is an in-place applicator evaluated WITH its siblings.
-    # The target resolves lazily ONCE.
-    # A shared per-compilation depth counter bounds RUNTIME recursion: a
-    # cycle that does not shrink the value ({"$ref": "#"} or
-    # {"allOf": [{"$ref": "#"}]}) would otherwise recurse until the Python
-    # UDF worker dies with RecursionError; instead it fails the value like
-    # the interpreter's _ref_depth > 100 guard (circularThreshold analogue,
-    # /root/reference/schema.go:24-26).
-    ref = schema.get("$ref")
-    if isinstance(ref, str):
-        cell: list[Validator] = []
-        depth = memo.setdefault("__ref_depth__", [0])  # type: ignore[arg-type]
+            return None, unresolved
 
-        def ref_v(v: Any) -> bool:
-            if not cell:
-                owner = _owning_spec(spec, schema, registry)
-                target = owner.resolve_ref(ref, at=schema, extra=registry)
-                towner = _owning_spec(spec, target, registry)
-                cell.append(
-                    _compile(target, towner if towner is not spec else spec,
-                             draft, registry, fmt, memo)
-                )
-            if depth[0] > 100:
-                return False
-            depth[0] += 1
+    def _recursive_ref(self, schema: dict, owner: SchemaSpec) -> Fn:
+        """2019-09 ``$recursiveRef: "#"``: the current base — or, when that
+        base carries ``$recursiveAnchor: true``, the OUTERMOST resource in
+        the dynamic scope that also carries it."""
+        base = owner.base_of.get(id(schema), (owner.root, ""))[0]
+        static = self.compile(base, owner)
+        if not _recursive_anchor(base):
+            return lambda v, cx: _inplace(static, v, cx)
+        self.scoped = True
+
+        def pick(cx: _Cx | None) -> Fn:
+            for res, res_owner in cx.scope:  # type: ignore[union-attr]
+                if _recursive_anchor(res):
+                    return self.compile(res, res_owner)
+            return static
+
+        return lambda v, cx: _inplace(pick(cx), v, cx)
+
+    def _dynamic_ref(self, schema: dict, owner: SchemaSpec, dref: str) -> Fn:
+        """2020-12 ``$dynamicRef``: resolve statically; when that lands on a
+        matching ``$dynamicAnchor`` (bookending), take the OUTERMOST
+        resource in the dynamic scope defining that anchor name."""
+        target, static = self._target(schema, owner, dref)
+        name = dref.split("#", 1)[1] if "#" in dref else ""
+        if not (name and isinstance(target, dict)
+                and target.get("$dynamicAnchor") == name):
+            return lambda v, cx: _inplace(static, v, cx)
+        self.scoped = True
+
+        def pick(cx: _Cx | None) -> Fn:
+            for res, res_owner in cx.scope:  # type: ignore[union-attr]
+                node = res_owner.dyn_anchors.get(id(res), {}).get(name)
+                if node is not None:
+                    return self.compile(node, res_owner)
+            return static
+
+        return lambda v, cx: _inplace(pick(cx), v, cx)
+
+    def _node(self, schema: dict, owner: SchemaSpec) -> Fn:
+        draft = self.draft
+        fns: list[Fn] = []
+        kws: list[str] = []
+        details: list[str] = []
+
+        def add(kw: str, f: Fn, detail: str = "failed") -> None:
+            fns.append(f)
+            kws.append(kw)
+            details.append(detail)
+
+        uneval = draft >= 2019 and (
+            "unevaluatedProperties" in schema or "unevaluatedItems" in schema)
+        base = owner.base_of.get(id(schema), (None, ""))[0]
+        entry = (base, owner)
+
+        def full(v: Any, cx: _Cx) -> bool:
+            scope = cx.scope
+            pushed = (scope is not None and base is not None
+                      and (not scope or scope[-1][0] is not base))
+            if pushed:
+                scope.append(entry)  # type: ignore[union-attr]
             try:
-                return cell[0](v)
+                ok = True
+                for i, f in enumerate(fns):
+                    if not f(v, cx):
+                        ok = False
+                        if cx.errors is not None:
+                            cx.errors.append(
+                                f"{cx.path}: {kws[i]}: {details[i]}")
+                        if not cx.collect:
+                            break
+                return ok
             finally:
-                depth[0] -= 1
+                if pushed:
+                    scope.pop()  # type: ignore[union-attr]
 
-        fns.append(ref_v)
-        if draft < 2019:
-            return run
-
-    t = schema.get("type")
-    if t is not None:
-        types = tuple(t) if isinstance(t, list) else (t,)
-
-        def type_v(v, types=types):
-            jt = json_type(v, draft)
-            return any(
-                jt == x or (x == "number" and jt == "integer") for x in types
-            )
-
-        fns.append(type_v)
-
-    if "enum" in schema:
-        keys = set()
-        unkeyable = []
-        for e in schema["enum"]:
-            try:
-                keys.add(canonical_key(e))
-            except TypeError:
-                unkeyable.append(e)
-
-        def enum_v(v, keys=keys, unkeyable=unkeyable):
-            try:
-                if canonical_key(v) in keys:
-                    return True
-            except TypeError:
-                pass
-            return any(deep_equal(v, e) for e in unkeyable)
-
-        fns.append(enum_v)
-
-    if "const" in schema:
-        cval = schema["const"]
-        fns.append(lambda v, c=cval: deep_equal(v, c))
-
-    # numeric keywords — precompute Fractions once
-    if "multipleOf" in schema:
-        m = _as_fraction(schema["multipleOf"])
-        fns.append(
-            lambda v, m=m: not (isinstance(v, _NUM) and not isinstance(v, bool))
-            or (_as_fraction(v) / m).denominator == 1
-        )
-    for kw, exclkw, op in (
-        ("maximum", "exclusiveMaximum", "gt"),
-        ("minimum", "exclusiveMinimum", "lt"),
-    ):
-        if kw in schema:
-            bound = _as_fraction(schema[kw])
-            excl = schema.get(exclkw) is True  # draft-4 boolean rider
-
-            def bound_v(v, bound=bound, excl=excl, op=op):
-                if not isinstance(v, _NUM) or isinstance(v, bool):
-                    return True
-                fv = _as_fraction(v)
-                if op == "gt":
-                    return fv < bound or (not excl and fv == bound)
-                return fv > bound or (not excl and fv == bound)
-
-            fns.append(bound_v)
-        if exclkw in schema and not isinstance(schema[exclkw], bool):
-            ebound = _as_fraction(schema[exclkw])
-
-            def ebound_v(v, ebound=ebound, op=op):
-                if not isinstance(v, _NUM) or isinstance(v, bool):
-                    return True
-                return (
-                    _as_fraction(v) < ebound
-                    if op == "gt"
-                    else _as_fraction(v) > ebound
-                )
-
-            fns.append(ebound_v)
-
-    # string keywords
-    if "maxLength" in schema:
-        n = schema["maxLength"]
-        fns.append(lambda v, n=n: not isinstance(v, str) or len(v) <= n)
-    if "minLength" in schema:
-        n = schema["minLength"]
-        fns.append(lambda v, n=n: not isinstance(v, str) or len(v) >= n)
-    if "pattern" in schema:
-        rx = compile_ecma_regex(schema["pattern"])
-        if rx is not None:
-            fns.append(
-                lambda v, rx=rx: not isinstance(v, str) or bool(rx.search(v))
-            )
-    if fmt and "format" in schema:
-        check = _FORMAT_CHECKS.get(schema["format"])
-        if check is not None:
-            fns.append(
-                lambda v, c=check: not isinstance(v, str) or bool(c(v))
-            )
-    if fmt and ("contentEncoding" in schema or "contentMediaType" in schema):
-        enc = schema.get("contentEncoding")
-        media = schema.get("contentMediaType")
-
-        def content_v(v, enc=enc, media=media):
-            if not isinstance(v, str):
-                return True
-            decoded: Any = v
-            if enc == "base64":
-                import base64
-                import binascii
-
-                try:
-                    decoded = base64.b64decode(v, validate=True)
-                except (binascii.Error, ValueError):
-                    return False
-            if media == "application/json":
-                import json as _json
-
-                try:
-                    _json.loads(decoded)
-                except (ValueError, TypeError, UnicodeDecodeError):
-                    return False
-            return True
-
-        fns.append(content_v)
-
-    # array keywords
-    prefix = schema.get("prefixItems")
-    items = schema.get("items")
-    if prefix is not None:
-        pvs = [sub(s) for s in prefix]
-        rest = sub(items) if items is not None else None
-
-        def prefix_v(v, pvs=pvs, rest=rest):
-            if not isinstance(v, list):
-                return True
-            for f, el in zip(pvs, v):
-                if not f(el):
-                    return False
-            if rest is not None:
-                for el in v[len(pvs):]:
-                    if not rest(el):
+        if uneval:
+            # unevaluated* read this location's annotations: the node
+            # gathers its own unless its in-place parent hands it a fresh set
+            def run(v: Any, cx: _Cx | None) -> bool:
+                if cx is None:
+                    cx = _Cx(None, False, "", None, _Evaluated())
+                elif cx.ann is None:
+                    cx = cx.fork()
+                return full(v, cx)
+        else:
+            def run(v: Any, cx: _Cx | None) -> bool:
+                if cx is not None:
+                    return full(v, cx)
+                for f in fns:
+                    if not f(v, None):
                         return False
-            return True
+                return True
 
-        fns.append(prefix_v)
-    elif items is not None:
-        if isinstance(items, list):
-            tvs = [sub(s) for s in items]
-            add = schema.get("additionalItems")
-            addv = None if add is None else sub(add)
+        self.memo[id(schema)] = (schema, run)
+        sub = lambda s: self.compile(s, owner)  # noqa: E731
 
-            def tuple_v(v, tvs=tvs, addv=addv):
+        # $ref short-circuits siblings in draft<=7 (parser.go:323-326); from
+        # 2019-09 it is an in-place applicator evaluated WITH its siblings,
+        # as are $recursiveRef and $dynamicRef (unknown keywords before)
+        ref = schema.get("$ref")
+        if isinstance(ref, str):
+            target = self._target(schema, owner, ref)[1]
+            add("$ref", lambda v, cx, f=target: _inplace(f, v, cx),
+                f"{ref} failed")
+            if draft < 2019:
+                return run
+        if draft >= 2019:
+            if isinstance(schema.get("$recursiveRef"), str):
+                add("$recursiveRef", self._recursive_ref(schema, owner))
+            dref = schema.get("$dynamicRef")
+            if isinstance(dref, str):
+                add("$dynamicRef", self._dynamic_ref(schema, owner, dref),
+                    f"{dref} failed")
+
+        t = schema.get("type")
+        if t is not None:
+            types = t if isinstance(t, list) else [t]
+            # integer always satisfies "number" (validators.go:321-323)
+            ok_types = frozenset(types) | (
+                {"integer"} if "number" in types else set())
+            add("type",
+                lambda v, cx, ts=ok_types: json_type(v, draft) in ts,
+                f"want {'/'.join(types)}")
+
+        if "enum" in schema:
+            keys = set()
+            unkeyable = []
+            for e in schema["enum"]:
+                try:
+                    keys.add(canonical_key(e))
+                except TypeError:
+                    unkeyable.append(e)
+
+            def enum_v(v, cx, keys=keys, unkeyable=unkeyable):
+                try:
+                    if canonical_key(v) in keys:
+                        return True
+                except TypeError:
+                    pass
+                return any(deep_equal(v, e) for e in unkeyable)
+
+            add("enum", enum_v, "not in enum")
+
+        if "const" in schema:
+            cval = schema["const"]
+            add("const", lambda v, cx, c=cval: deep_equal(v, c),
+                "not equal to const")
+
+        # numeric keywords — precompute Fractions once
+        if "multipleOf" in schema:
+            m = _as_fraction(schema["multipleOf"])
+            add("multipleOf",
+                lambda v, cx, m=m: not isinstance(v, _NUM)
+                or isinstance(v, bool)
+                or (_as_fraction(v) / m).denominator == 1,
+                f"not a multiple of {schema['multipleOf']}")
+        for kw, exclkw, op in (
+            ("maximum", "exclusiveMaximum", "gt"),
+            ("minimum", "exclusiveMinimum", "lt"),
+        ):
+            if kw in schema:
+                bound = _as_fraction(schema[kw])
+                excl = schema.get(exclkw) is True  # draft-4 boolean rider
+
+                def bound_v(v, cx, bound=bound, excl=excl, op=op):
+                    if not isinstance(v, _NUM) or isinstance(v, bool):
+                        return True
+                    fv = _as_fraction(v)
+                    if op == "gt":
+                        return fv < bound or (not excl and fv == bound)
+                    return fv > bound or (not excl and fv == bound)
+
+                add(kw, bound_v, f"out of bound {schema[kw]}")
+            if exclkw in schema and not isinstance(schema[exclkw], bool):
+                ebound = _as_fraction(schema[exclkw])
+
+                def ebound_v(v, cx, ebound=ebound, op=op):
+                    if not isinstance(v, _NUM) or isinstance(v, bool):
+                        return True
+                    return (
+                        _as_fraction(v) < ebound
+                        if op == "gt"
+                        else _as_fraction(v) > ebound
+                    )
+
+                add(exclkw, ebound_v, f"out of bound {schema[exclkw]}")
+
+        # string keywords (rune-count lengths, validators.go:562-582)
+        if "maxLength" in schema:
+            n = schema["maxLength"]
+            add("maxLength",
+                lambda v, cx, n=n: not isinstance(v, str) or len(v) <= n,
+                f"longer than {n}")
+        if "minLength" in schema:
+            n = schema["minLength"]
+            add("minLength",
+                lambda v, cx, n=n: not isinstance(v, str) or len(v) >= n,
+                f"shorter than {n}")
+        if "pattern" in schema:
+            rx = compile_ecma_regex(schema["pattern"])
+            if rx is not None:
+                add("pattern",
+                    lambda v, cx, rx=rx: not isinstance(v, str)
+                    or bool(rx.search(v)),
+                    f"does not match /{schema['pattern']}/")
+        if self.fmt and "format" in schema:
+            check = _FORMAT_CHECKS.get(schema["format"])
+            if check is not None:
+                add("format",
+                    lambda v, cx, c=check: not isinstance(v, str)
+                    or bool(c(v)),
+                    f"not a {schema['format']}")
+        if self.fmt and ("contentEncoding" in schema
+                         or "contentMediaType" in schema):
+            enc = schema.get("contentEncoding")
+            media = schema.get("contentMediaType")
+
+            def content_v(v, cx, enc=enc, media=media):
+                if not isinstance(v, str):
+                    return True
+                decoded: Any = v
+                if enc == "base64":
+                    import base64
+                    import binascii
+
+                    try:
+                        decoded = base64.b64decode(v, validate=True)
+                    except (binascii.Error, ValueError):
+                        return False
+                if media == "application/json":
+                    import json as _json
+
+                    try:
+                        _json.loads(decoded)
+                    except (ValueError, TypeError, UnicodeDecodeError):
+                        return False
+                return True
+
+            add("content", content_v, "content assertion failed")
+
+        # array keywords: 2020-12 prefixItems + items, or the draft-7 tuple
+        # items + additionalItems, or one items schema for every element
+        prefix = schema.get("prefixItems")
+        items = schema.get("items")
+        if prefix is not None:
+            tup, rest = prefix, items
+        elif isinstance(items, list):
+            tup, rest = items, schema.get("additionalItems")
+        else:
+            tup, rest = [], items
+        tvs = [sub(s) for s in tup]
+        rv = None if rest is None else sub(rest)
+        if tvs or rv is not None:
+
+            def items_v(v, cx, tvs=tvs, rv=rv):
                 if not isinstance(v, list):
                     return True
-                for f, el in zip(tvs, v):
-                    if not f(el):
+                n = len(tvs)
+                if cx is None and not n:
+                    return all(rv(el, None) for el in v)
+                fs = tvs if rv is None else chain(tvs, repeat(rv))
+                ok = _all(cx, (f(el, cx and cx.at(i))
+                               for i, (f, el) in enumerate(zip(fs, v))))
+                ann = cx and cx.ann
+                if ok and ann is not None:
+                    done = len(v) if rv is not None else min(n, len(v))
+                    ann.upto = max(ann.upto, done)
+                return ok
+
+            add("prefixItems" if prefix is not None else "items", items_v,
+                "an element is invalid")
+        if "maxItems" in schema:
+            n = schema["maxItems"]
+            add("maxItems",
+                lambda v, cx, n=n: not isinstance(v, list) or len(v) <= n,
+                f"more than {n} items")
+        if "minItems" in schema:
+            n = schema["minItems"]
+            add("minItems",
+                lambda v, cx, n=n: not isinstance(v, list) or len(v) >= n,
+                f"fewer than {n} items")
+        if schema.get("uniqueItems") is True:
+
+            def uniq_v(v, cx):
+                if not isinstance(v, list):
+                    return True
+                seen = set()
+                for el in v:
+                    k = canonical_key(el)
+                    if k in seen:
                         return False
-                if addv is not None:
-                    for el in v[len(tvs):]:
-                        if not addv(el):
-                            return False
+                    seen.add(k)
                 return True
 
-            fns.append(tuple_v)
-        else:
-            iv = sub(items)
-            fns.append(
-                lambda v, iv=iv: not isinstance(v, list)
-                or all(iv(el) for el in v)
+            add("uniqueItems", uniq_v, "duplicate element")
+        if "contains" in schema:
+            cv = sub(schema["contains"])
+            min_c = schema.get("minContains", 1)
+            max_c = schema.get("maxContains")
+
+            def contains_v(v, cx, cv=cv, min_c=min_c, max_c=max_c):
+                if not isinstance(v, list):
+                    return True
+                q = cx and cx.quiet()
+                hits = [i for i, el in enumerate(v) if cv(el, q and q.at(i))]
+                if len(hits) < min_c or (max_c is not None
+                                         and len(hits) > max_c):
+                    return False
+                if q is not None and q.ann is not None:
+                    q.ann.idxs.update(hits)
+                return True
+
+            add("contains", contains_v,
+                f"want {min_c}..{'' if max_c is None else max_c} matches")
+
+        # object keywords
+        if "maxProperties" in schema:
+            n = schema["maxProperties"]
+            add("maxProperties",
+                lambda v, cx, n=n: not isinstance(v, dict) or len(v) <= n,
+                f"more than {n} properties")
+        if "minProperties" in schema:
+            n = schema["minProperties"]
+            add("minProperties",
+                lambda v, cx, n=n: not isinstance(v, dict) or len(v) >= n,
+                f"fewer than {n} properties")
+        if "required" in schema:
+            req = tuple(schema["required"])
+            add("required",
+                lambda v, cx, req=req: not isinstance(v, dict)
+                or all(k in v for k in req),
+                f"missing one of {list(req)}")
+        props = {k: sub(s)
+                 for k, s in (schema.get("properties") or {}).items()}
+        pprops = [
+            (rx, sub(s))
+            for rx, s in (
+                (compile_ecma_regex(p), s)
+                for p, s in (schema.get("patternProperties") or {}).items()
             )
-    if "maxItems" in schema:
-        n = schema["maxItems"]
-        fns.append(lambda v, n=n: not isinstance(v, list) or len(v) <= n)
-    if "minItems" in schema:
-        n = schema["minItems"]
-        fns.append(lambda v, n=n: not isinstance(v, list) or len(v) >= n)
-    if schema.get("uniqueItems") is True:
+            if rx is not None
+        ]
+        add_s = schema.get("additionalProperties")
+        addv = None if add_s is None else sub(add_s)
+        if props or pprops or addv is not None:
 
-        def uniq_v(v):
-            if not isinstance(v, list):
-                return True
-            seen = set()
-            for el in v:
-                k = canonical_key(el)
-                if k in seen:
-                    return False
-                seen.add(k)
-            return True
-
-        fns.append(uniq_v)
-    if "contains" in schema:
-        cv = sub(schema["contains"])
-        min_c = schema.get("minContains", 1)
-        max_c = schema.get("maxContains")
-
-        def contains_v(v, cv=cv, min_c=min_c, max_c=max_c):
-            if not isinstance(v, list):
-                return True
-            n = sum(1 for el in v if cv(el))
-            return n >= min_c and (max_c is None or n <= max_c)
-
-        fns.append(contains_v)
-
-    # object keywords
-    if "maxProperties" in schema:
-        n = schema["maxProperties"]
-        fns.append(lambda v, n=n: not isinstance(v, dict) or len(v) <= n)
-    if "minProperties" in schema:
-        n = schema["minProperties"]
-        fns.append(lambda v, n=n: not isinstance(v, dict) or len(v) >= n)
-    if "required" in schema:
-        req = tuple(schema["required"])
-        fns.append(
-            lambda v, req=req: not isinstance(v, dict)
-            or all(k in v for k in req)
-        )
-    props = {k: sub(s) for k, s in (schema.get("properties") or {}).items()}
-    pprops = [
-        (compile_ecma_regex(p), sub(s))
-        for p, s in (schema.get("patternProperties") or {}).items()
-    ]
-    add = schema.get("additionalProperties")
-    addv = None if add is None else sub(add)
-    if props or pprops or addv is not None:
-
-        def props_v(v, props=props, pprops=pprops, addv=addv):
-            if not isinstance(v, dict):
-                return True
-            for k, val in v.items():
-                matched = False
-                f = props.get(k)
-                if f is not None:
-                    matched = True
-                    if not f(val):
-                        return False
-                for rx, pf in pprops:
-                    if rx is not None and rx.search(k):
-                        matched = True
-                        if not pf(val):
+            def props_v(v, cx, props=props, pprops=pprops, addv=addv):
+                if not isinstance(v, dict):
+                    return True
+                ann = cx and cx.ann
+                collect = cx is not None and cx.collect
+                ok = True
+                for k, val in v.items():
+                    c = cx and cx.at(k)
+                    f = props.get(k)
+                    hit = f is not None
+                    good = not hit or f(val, c)
+                    for rx, pf in pprops:
+                        if rx.search(k):
+                            hit = True
+                            good = pf(val, c) and good
+                    if not hit and addv is not None:
+                        hit = True
+                        good = addv(val, c)
+                    if not good:
+                        if not collect:
                             return False
-                if not matched and addv is not None and not addv(val):
+                        ok = False
+                    elif hit and ann is not None:
+                        ann.props.add(k)
+                return ok
+
+            add("properties", props_v, "a property is invalid")
+        if "propertyNames" in schema:
+            pnv = sub(schema["propertyNames"])
+            add("propertyNames",
+                lambda v, cx, pnv=pnv: not isinstance(v, dict)
+                or _all(cx, (pnv(k, cx and cx.at(k)) for k in v)),
+                "a property name is invalid")
+        dep_req: list[tuple[str, tuple[str, ...]]] = []
+        dep_sch: list[tuple[str, Fn]] = []
+        for k, dep in (schema.get("dependencies") or {}).items():
+            if isinstance(dep, list):
+                dep_req.append((k, tuple(dep)))
+            else:
+                dep_sch.append((k, sub(dep)))
+        dep_req += [(k, tuple(n)) for k, n in
+                    (schema.get("dependentRequired") or {}).items()]
+        dep_sch += [(k, sub(d)) for k, d in
+                    (schema.get("dependentSchemas") or {}).items()]
+        if dep_req:
+            add("dependentRequired",
+                lambda v, cx, dep_req=dep_req: not isinstance(v, dict) or all(
+                    k not in v or all(n in v for n in needs)
+                    for k, needs in dep_req),
+                "a dependent property is missing")
+        if dep_sch:
+            add("dependentSchemas",
+                lambda v, cx, dep_sch=dep_sch: not isinstance(v, dict) or _all(
+                    cx, (_inplace(f, v, cx) for k, f in dep_sch if k in v)),
+                "a dependent schema failed")
+
+        # combinators (validators.go:435-484); anyOf/oneOf try every branch
+        # when annotations are gathered, so each successful one contributes
+        if "allOf" in schema:
+            avs = [sub(s) for s in schema["allOf"]]
+            add("allOf",
+                lambda v, cx, avs=avs: _all(
+                    cx, (_inplace(f, v, cx) for f in avs)),
+                "a subschema failed")
+        if "anyOf" in schema:
+            ovs = [sub(s) for s in schema["anyOf"]]
+
+            def any_v(v, cx, ovs=ovs):
+                q = cx and cx.quiet()
+                if q is None or q.ann is None:
+                    return any(f(v, q) for f in ovs)
+                return True in [_inplace(f, v, q) for f in ovs]
+
+            add("anyOf", any_v, "no subschema matched")
+        if "oneOf" in schema:
+            xvs = [sub(s) for s in schema["oneOf"]]
+
+            def one_v(v, cx, xvs=xvs):
+                q = cx and cx.quiet()
+                return [_inplace(f, v, q) for f in xvs].count(True) == 1
+
+            add("oneOf", one_v, "not exactly one subschema matched")
+        if "not" in schema:
+            nv = sub(schema["not"])
+            add("not",
+                lambda v, cx, nv=nv: not _inplace(nv, v, cx and cx.quiet()),
+                "subschema matched")
+        if "if" in schema:
+            cv = sub(schema["if"])
+            tv = sub(schema["then"]) if "then" in schema else _true
+            ev = sub(schema["else"]) if "else" in schema else _true
+            add("if",
+                lambda v, cx, cv=cv, tv=tv, ev=ev: _inplace(
+                    tv if _inplace(cv, v, cx and cx.quiet()) else ev, v, cx),
+                "branch failed")
+
+        # unevaluated* LAST, over everything the node's own keywords and
+        # in-place applicators evaluated; cx and cx.ann are always set here
+        if uneval and "unevaluatedProperties" in schema:
+            upv = sub(schema["unevaluatedProperties"])
+
+            def uprops_v(v, cx, upv=upv):
+                if not isinstance(v, dict):
+                    return True
+                seen = cx.ann.props
+                new = [k for k in v if k not in seen]
+                if not _all(cx, (upv(v[k], cx.at(k)) for k in new)):
                     return False
-            return True
-
-        fns.append(props_v)
-    if "propertyNames" in schema:
-        pnv = sub(schema["propertyNames"])
-        fns.append(
-            lambda v, pnv=pnv: not isinstance(v, dict)
-            or all(pnv(k) for k in v)
-        )
-    dep_req: list[tuple[str, tuple[str, ...]]] = []
-    dep_sch: list[tuple[str, Validator]] = []
-    for k, dep in (schema.get("dependencies") or {}).items():
-        if isinstance(dep, list):
-            dep_req.append((k, tuple(dep)))
-        else:
-            dep_sch.append((k, sub(dep)))
-    dep_req += [
-        (k, tuple(n)) for k, n in (schema.get("dependentRequired") or {}).items()
-    ]
-    dep_sch += [
-        (k, sub(d)) for k, d in (schema.get("dependentSchemas") or {}).items()
-    ]
-    if dep_req or dep_sch:
-
-        def deps_v(v, dep_req=dep_req, dep_sch=dep_sch):
-            if not isinstance(v, dict):
+                seen.update(new)
                 return True
-            for k, needs in dep_req:
-                if k in v and any(n not in v for n in needs):
+
+            add("unevaluatedProperties", uprops_v,
+                "an unevaluated property is invalid")
+        if uneval and "unevaluatedItems" in schema:
+            uiv = sub(schema["unevaluatedItems"])
+
+            def uitems_v(v, cx, uiv=uiv):
+                if not isinstance(v, list):
+                    return True
+                ann = cx.ann
+                if not _all(cx, (uiv(v[i], cx.at(i))
+                                 for i in range(ann.upto, len(v))
+                                 if i not in ann.idxs)):
                     return False
-            for k, f in dep_sch:
-                if k in v and not f(v):
-                    return False
-            return True
+                ann.upto = len(v)
+                return True
 
-        fns.append(deps_v)
+            add("unevaluatedItems", uitems_v, "an unevaluated item is invalid")
 
-    # combinators
-    if "allOf" in schema:
-        avs = [sub(s) for s in schema["allOf"]]
-        fns.append(lambda v, avs=avs: all(f(v) for f in avs))
-    if "anyOf" in schema:
-        ovs = [sub(s) for s in schema["anyOf"]]
-        fns.append(lambda v, ovs=ovs: any(f(v) for f in ovs))
-    if "oneOf" in schema:
-        xvs = [sub(s) for s in schema["oneOf"]]
-        fns.append(lambda v, xvs=xvs: sum(1 for f in xvs if f(v)) == 1)
-    if "not" in schema:
-        nv = sub(schema["not"])
-        fns.append(lambda v, nv=nv: not nv(v))
-    if "if" in schema:
-        cv = sub(schema["if"])
-        tv = sub(schema["then"]) if "then" in schema else (lambda v: True)
-        ev = sub(schema["else"]) if "else" in schema else (lambda v: True)
-        fns.append(lambda v, cv=cv, tv=tv, ev=ev: tv(v) if cv(v) else ev(v))
-
-    return run
+        return run

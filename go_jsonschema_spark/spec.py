@@ -11,7 +11,8 @@ Design choice vs the reference: the reference materializes a recursive
 (/root/reference/schema.go:31-179).  Here a schema stays a JSON-shaped dict
 ("spec") — lossless round-trip (unknown keywords preserved, like
 /root/reference/parser.go:90-99) comes for free, and the compile step
-(compile.py) and interpreter (interp.py) consume the dict directly.
+(compile.py) and the closure compiler (interp_compile.py) consume the dict
+directly.
 """
 
 from __future__ import annotations
@@ -518,15 +519,14 @@ def validate_spec_against_metaschema(spec: Any, draft: int = 7) -> list[str]:
     the analogue of the reference's package-level ``Validate``
     (/root/reference/validate.go:12-29): compile-time self-validation, no
     Spark involved.  Returns a list of errors (empty = valid)."""
-    from go_jsonschema_spark.interp import validate_instance
+    from go_jsonschema_spark.interp_compile import compile_validator
     from go_jsonschema_spark.metaschema import (
         DRAFT04, DRAFT06, DRAFT07, DRAFT2020,
     )
 
     meta = {4: DRAFT04, 6: DRAFT06, 7: DRAFT07,
             2019: DRAFT2020, 2020: DRAFT2020}[draft]
-    out = validate_instance(meta, spec, draft=draft, collect_all=True)
-    return out.errors
+    return compile_validator(meta, draft=draft).errors(spec)
 
 
 # ---------------------------------------------------------------------------

@@ -76,17 +76,14 @@ _KEYWORDS = st.fixed_dictionaries(
 @given(_KEYWORDS, json_values)
 @settings(max_examples=300, deadline=None)
 def test_validator_total_and_consistent(schema, value):
-    """The interpreter is total (no exceptions on any JSON input),
-    collect_all doesn't change the verdict, and the closure-compiled
-    validator agrees with the interpreter."""
-    from go_jsonschema_spark.interp_compile import compile_validator
-
+    """The evaluator is total (no exceptions on any JSON input) and
+    collect_all doesn't change the verdict.  Its verdicts are checked
+    against ``jsonschema`` by tests/test_evaluator_oracle.py."""
     fast = validate_instance(schema, value)
     full = validate_instance(schema, value, collect_all=True)
     assert fast.valid == full.valid
     if not full.valid:
         assert full.errors
-    assert compile_validator(schema)(value) == fast.valid
 
 
 @given(_KEYWORDS)

@@ -436,3 +436,72 @@ def test_cross_draft_keyword_policy():
             assert ORACLES[draft](schema).is_valid(value)
             assert not validate_instance(schema, value, draft=draft).valid
             assert not compile_validator(schema, draft=draft)(value)
+
+
+# -- drift the single evaluator removed ---------------------------------------
+
+CLOSED = {"$id": "http://x.test/closed.json", "properties": {"a": {}},
+          "unevaluatedProperties": False}
+
+
+def test_unevaluated_in_registered_document():
+    """A ``$ref`` into a registered document that closes itself with
+    ``unevaluatedProperties: false`` is enforced on the closure path too."""
+    import referencing
+    from referencing.jsonschema import DRAFT202012
+
+    schema = {"$ref": CLOSED["$id"]}
+    oracle = jsonschema.Draft202012Validator(
+        schema,
+        registry=referencing.Registry().with_resource(
+            CLOSED["$id"],
+            referencing.Resource.from_contents(
+                CLOSED, default_specification=DRAFT202012),
+        ),
+    )
+    registry = {CLOSED["$id"]: SchemaSpec(CLOSED)}
+    validate = compile_validator(schema, draft=2020, registry=registry)
+    for value in ({"a": 1}, {"a": 1, "b": 2}):
+        want = oracle.is_valid(value)
+        assert validate(value) is want
+        assert validate_instance(schema, value, draft=2020,
+                                 registry=registry).valid is want
+
+
+def test_metaschema_root_dict_with_registered_vocabularies():
+    """``jsonschema``'s own 2020-12 META_SCHEMA dict as the root, with the
+    ``jsonschema_specifications`` vocabularies in the registry: a
+    ``$dynamicRef`` hop back to the root resolves the root's relative
+    ``$ref``s against the root, not against the vocabulary it came from."""
+    meta = jsonschema.Draft202012Validator.META_SCHEMA
+    _, docs = _meta(2020)
+    registry = {uri: s for uri, s in docs.items() if "/meta/" in uri}
+    value = {"$defs": {"d": {"allOf": [{}]}}}
+    assert jsonschema.Draft202012Validator(meta).is_valid(value)
+    for root in (meta, copy.deepcopy(meta)):
+        assert compile_validator(root, draft=2020, registry=registry)(value)
+        assert validate_instance(root, value, draft=2020,
+                                 registry=registry).valid
+
+
+def test_registry_is_not_mutated():
+    registry = {CLOSED["$id"]: SchemaSpec(CLOSED)}
+    schema = {"$ref": CLOSED["$id"], "$defs": {
+        "x": {"$dynamicAnchor": "x"}}, "$dynamicRef": "#x"}
+    validate_instance(schema, {"a": 1}, draft=2020, registry=registry)
+    compile_validator(schema, draft=2020, registry=registry)({"a": 1})
+    assert list(registry) == [CLOSED["$id"]]
+
+
+def test_errors_match_the_verdict():
+    """The error list is empty exactly when the value is valid, on gate
+    cases of every draft, in first-error and collect-all mode alike."""
+    for draft in sorted(ORACLES):
+        for schema, values in _cases(draft)[:60]:
+            spec = SchemaSpec(schema)
+            for value in values:
+                for collect_all in (False, True):
+                    out = validate_instance(schema, value, draft=draft,
+                                            spec=spec, assert_formats=False,
+                                            collect_all=collect_all)
+                    assert out.valid is not bool(out.errors), (schema, value)

@@ -68,11 +68,14 @@ def _cases(draft_dir: str, subdir: str = "", skip: set[str] = SKIP_FILES):
     return out
 
 
-pytestmark = pytest.mark.skipif(
+# only the corpus-reading tests skip without the corpus;
+# test_spec_self_validation needs none
+needs_corpus = pytest.mark.skipif(
     not os.path.isdir(SUITE_ROOT), reason="reference test corpus not present"
 )
 
 
+@needs_corpus
 @pytest.mark.parametrize("draft_dir,draft", DRAFTS)
 def test_mandatory_suite(draft_dir: str, draft: int):
     """Whole-draft sweep in one test (fast) — per-case IDs would be 2000+
@@ -104,6 +107,7 @@ def test_mandatory_suite(draft_dir: str, draft: int):
     assert n > 500  # sanity: the corpus actually loaded
 
 
+@needs_corpus
 @pytest.mark.parametrize("draft_dir,draft", DRAFTS)
 def test_optional_format_suite(draft_dir: str, draft: int):
     """optional/format files, minus the reference's own skip list."""
@@ -134,6 +138,7 @@ def test_optional_format_suite(draft_dir: str, draft: int):
     )
 
 
+@needs_corpus
 def test_optional_content():
     """optional/content.json — contentEncoding/contentMediaType assertions
     (the reference skips this file; we validate them)."""
@@ -150,6 +155,7 @@ def test_optional_content():
     assert not mismatches, "\n".join(mismatches)
 
 
+@needs_corpus
 def test_optional_bignum():
     """optional/bignum.json — arbitrary-precision parity
     (validators.go:486-560 big.Float semantics via Fraction)."""
@@ -168,6 +174,7 @@ def test_optional_bignum():
     assert not mismatches, "\n".join(mismatches)
 
 
+@needs_corpus
 def test_draft2019_keywords_beyond_reference():
     """dependentRequired/dependentSchemas/min+maxContains — 2019-09
     keywords the reference skips (validate_test.go:37-56) but this engine
@@ -206,6 +213,7 @@ def test_draft2019_keywords_beyond_reference():
     assert not mismatches, "\n".join(mismatches)
 
 
+@needs_corpus
 def test_full_draft2019_and_2020_mandatory_sweep():
     """WHOLE-DRAFT sweep for 2019-09 and 2020-12 (every mandatory file,
     refRemote covered separately via the registry): 1009 + 1001 cases at
@@ -239,6 +247,7 @@ def test_full_draft2019_and_2020_mandatory_sweep():
     )
 
 
+@needs_corpus
 def test_draft2019_2020_optional_format_assertion_mode():
     """optional/format for 2019-09 + 2020-12 in ASSERTION mode (the drafts
     default to annotation-only; assertion mode is the engine's
@@ -274,6 +283,7 @@ def test_draft2019_2020_optional_format_assertion_mode():
     assert n >= 300 and not mismatches, "\n".join(mismatches[:10])
 
 
+@needs_corpus
 def test_refremote_via_registry():
     """refRemote.json WITHOUT any HTTP: the remote documents are
     pre-registered as SchemaSpecs keyed by their URLs (the AddSchema
@@ -325,6 +335,7 @@ def test_spec_self_validation():
         ) == []
 
 
+@needs_corpus
 def test_roundtrip_spec_json():
     """Spec ⇄ JSON round-trip equality — the parser-completeness oracle
     (validate_test.go:293-316 analogue): every suite schema survives
