@@ -555,9 +555,8 @@ def _q_cosine_sims_embeddings(spark: SparkSession, sf: str) -> DataFrame:
 def _q_embedding_pairs_exact(spark: SparkSession, sf: str) -> DataFrame:
     """Exact all-pairs cosine ≥ 0.4 (operators/dedup.py
     cosine_pairs_exact) — the O(n²) baseline that oracle-checks the
-    embedding pair math; the LSH-bucketed embedding_cosine_pairs is the
-    scale path (its approximate family carries the ann.py recall-floor
-    oracles)."""
+    embedding pair math; the approximate ann.py family carries the
+    recall-floor oracles."""
     from go_jsonschema_spark.operators.dedup import cosine_pairs_exact
 
     return cosine_pairs_exact(
@@ -1528,8 +1527,8 @@ def _q_props_json_validation(spark: SparkSession, sf: str) -> DataFrame:
     """Dynamic-JSON path: validate events.props with the Arrow-batched
     closure-compiled validator UDF; return failing event ids + payload.
     (Engine-specific error strings stay out of the output so DuckDB's JSON
-    functions can express the oracle; json_column_errors is covered by
-    tests/test_compile_typed.py.)"""
+    functions can express the oracle; the error lists are
+    validate_instance's, covered by tests/test_evaluator_oracle.py.)"""
     from go_jsonschema_spark.compile import json_column_predicate
 
     schema = {
@@ -2110,9 +2109,7 @@ def _q_spec_suggestions_documents(spark: SparkSession, sf: str) -> DataFrame:
     deequ-style data→spec direction): one bounded aggregation pass +
     one distinct pass over enum-candidate columns; every emitted
     (column, keyword, value) row is deterministic and the DuckDB
-    oracle re-derives it.  suggest_spec's self-consistency (suggested
-    spec → zero violations on the profiled table) is pinned in
-    tests/test_profile_suggest.py."""
+    oracle re-derives it."""
     from go_jsonschema_spark.operators.profile import suggest_constraints
 
     d = _t(spark, sf, "documents")
@@ -2291,9 +2288,7 @@ def _q_token_freq_sequences(spark: SparkSession, sf: str) -> DataFrame:
     is vocab-bounded, not token-stream-bounded): top-50 tokens with
     deterministic (cnt desc, token asc) ranks and the cumulative share
     of the stream they cover.  cum_share divides two exact integer
-    sums — single rounding, engine-portable.  zipf_slope over the same
-    spectrum is pinned by pytest against numpy's OLS (float-fragile
-    regression is not oracle material)."""
+    sums — single rounding, engine-portable."""
     import os
 
     from pyspark.sql import Window

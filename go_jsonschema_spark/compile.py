@@ -656,45 +656,3 @@ def json_column_predicate(
 
     return _judge
 
-
-def json_column_errors(
-    schema: Any, *, draft: int = 7, assert_formats: bool = True
-):
-    """Pandas UDF: ALL validation errors for a column of JSON strings as
-    ``array<string>`` (empty = valid) — the violations-with-details
-    counterpart of :func:`json_column_predicate`, mirroring the
-    reference's chained error strings (helpers.go:58-67) but as data.
-    Compiled once per Python worker like the predicate; only invalid
-    values pay for error collection."""
-    import json as _json
-
-    from go_jsonschema_spark.interp_compile import compile_validator
-    from go_jsonschema_spark.spec import SchemaSpec
-
-    spec = SchemaSpec(schema)
-    cell: list = []  # compile lazily inside the worker, once
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _errors(s: pd.Series) -> pd.Series:
-        if not cell:
-            cell.append(
-                compile_validator(
-                    schema, spec=spec, draft=draft,
-                    assert_formats=assert_formats,
-                ).errors
-            )
-        errors = cell[0]
-        out = []
-        for raw in s:
-            if raw is None:
-                out.append(["$: null payload"])
-                continue
-            try:
-                v = _json.loads(raw)
-            except (ValueError, TypeError) as e:
-                out.append([f"$: invalid JSON: {e}"])
-                continue
-            out.append(errors(v))
-        return pd.Series(out)
-
-    return _errors

@@ -21,9 +21,9 @@ contain digit groups; redacting it first keeps the counts disjoint).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
-__all__ = ["PII_PATTERNS", "redact_pii", "redact_documents"]
+__all__ = ["PII_PATTERNS", "redact_pii"]
 
 # (kind, regex, replacement) — applied in order; identical strings are
 # interpolated into the DuckDB oracle (__spark_entry__.py)
@@ -48,15 +48,3 @@ def redact_pii(text: Column) -> dict[str, Column]:
     out["text"] = cur
     return out
 
-
-def redact_documents(
-    df: DataFrame, *, text_col: str = "text",
-) -> DataFrame:
-    """Adds ``text_redacted`` + per-kind removal counts; all original
-    columns pass through.  One narrow projection, no shuffle."""
-    cols = redact_pii(F.col(text_col))
-    return df.select(
-        "*",
-        cols["text"].alias("text_redacted"),
-        *[cols[f"n_{k}"].alias(f"n_{k}") for k, _, _ in PII_PATTERNS],
-    )

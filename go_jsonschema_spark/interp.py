@@ -77,14 +77,6 @@ def _float_is_integer(v: float) -> bool:
         return False
 
 
-def _matches_type(v: Any, t: str, draft: int) -> bool:
-    jt = json_type(v, draft)
-    if jt == t:
-        return True
-    # integer always satisfies "number" (validators.go:321-323, 336-339)
-    return t == "number" and jt == "integer"
-
-
 def _as_fraction(v: Any) -> Fraction:
     """Exact rational from a JSON number.
 

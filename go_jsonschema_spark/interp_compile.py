@@ -162,7 +162,15 @@ def compile_validator(
     read, never written."""
     if spec is None:
         spec = SchemaSpec(schema if isinstance(schema, (dict, bool)) else {})
-    g = _Graph(spec, draft, registry or {}, assert_formats)
+    # a plain-dict document owns its nodes only once wrapped: a pointer
+    # ``$ref`` inside it must walk THAT document, not the root schema.
+    # Anchor entries (``uri#name``) stay raw: their document is unknown.
+    registry = {
+        k: SchemaSpec(v, base_uri=k)
+        if isinstance(v, dict) and "#" not in k else v
+        for k, v in (registry or {}).items()
+    }
+    g = _Graph(spec, draft, registry, assert_formats)
     root = g.compile(schema, spec)
     scoped = g.scoped
 

@@ -7,19 +7,13 @@ Every operator here is a front-end over a few shared primitives:
   cosine top-k as one narrow scan, native arithmetic
   (``zip_with``/``aggregate``) and a single ``TakeOrderedAndProject``.
   The approximate single-query paths only FILTER the table first —
-  :func:`topk_cosine_lsh_multi` (multi-table hyperplane LSH),
-  :func:`topk_cosine_ivf` (inline coarse quantizer) and
-  :func:`topk_cosine_ivf_indexed` (partition-pruned materialized index)
-  — and hand the survivors to :func:`topk_cosine`.
+  :func:`topk_cosine_lsh_multi` (multi-table hyperplane LSH) and
+  :func:`topk_cosine_ivf` (inline coarse quantizer) — and hand the
+  survivors to :func:`topk_cosine`.
 * :func:`_topk_batched` — the batch kernel: m queries in ONE scan, one
   BLAS matmul per Arrow batch (:func:`_cosine_block`), per-batch top-k
-  and a ``row_number`` re-rank.  :func:`topk_cosine_many`,
-  :func:`topk_cosine_many_ivf_indexed` (cell mask) and
+  and a ``row_number`` re-rank.  :func:`topk_cosine_many` and
   :func:`hard_negatives` (label mask) use it.
-* :func:`_probe_cells` — IVF probe selection, shared by the three IVF
-  query paths so single and batch queries probe the same cells.
-* :func:`hyperplane_bucket` — the random-hyperplane bucket id, also the
-  candidate key of ``dedup.embedding_cosine_pairs``.
 """
 
 from __future__ import annotations
@@ -33,14 +27,10 @@ from go_jsonschema_spark.functions.literals import lit_doubles, lit_matrix
 __all__ = [
     "topk_cosine",
     "topk_cosine_many",
-    "topk_cosine_many_ivf_indexed",
     "topk_cosine_lsh_multi",
-    "hyperplane_bucket",
     "kmeans_centroids",
     "assign_centroid",
     "topk_cosine_ivf",
-    "ivf_write_index",
-    "topk_cosine_ivf_indexed",
     "label_centroid_similarity",
     "hard_negatives",
 ]
@@ -125,7 +115,7 @@ def _query_matrix(queries: DataFrame, q_id_col: str, q_vec_col: str,
         raise ValueError(
             f"topk_cosine_many broadcasts the query matrix to every task; "
             f"> {max_queries} queries is a self-join, not a query batch — "
-            "use cosine_pairs_exact / embedding_cosine_pairs instead")
+            "use cosine_pairs_exact instead")
     if not rows:
         raise ValueError("topk_cosine_many: empty query set")
     bad = [r[q_id_col] for r in rows
@@ -136,7 +126,7 @@ def _query_matrix(queries: DataFrame, q_id_col: str, q_vec_col: str,
             f"{q_id_col} in {bad[:5]!r}")
     qids = np.asarray([r[q_id_col] for r in rows])
     Q = np.asarray([list(map(float, r[q_vec_col])) for r in rows])
-    return qids, Q, _unit_rows(Q).T  # ids, raw (m, dim), normᵀ (dim, m)
+    return qids, _unit_rows(Q).T  # ids, normᵀ (dim, m)
 
 
 def _topk_batched(
@@ -149,7 +139,6 @@ def _topk_batched(
     id_col: str,
     qid_col: str = "query_id",
     allow=None,
-    distinct: bool = False,
 ) -> DataFrame:
     """The batch top-k kernel: ``(qid_col, id_col, cosine, rank)``, rank
     1..k per query, cosine rounded to 6, ties broken on id.
@@ -166,9 +155,7 @@ def _topk_batched(
     boolean mask of admissible (row, query) pairs; the others score
     −inf BEFORE the per-batch top-k and never leave the batch, so the
     result is the exact top-k among admissible rows.  Without a mask the
-    batch does no extra work.  ``distinct`` drops repeated
-    ``(query, id)`` candidates before ranking (a vector indexed under
-    several scanned cells)."""
+    batch does no extra work."""
     m = len(qids)
 
     def partials(batches):
@@ -196,8 +183,6 @@ def _topk_batched(
 
     part = scan.mapInPandas(
         partials, f"{qid_col} long, {id_col} long, cosine double")
-    if distinct:
-        part = part.dropDuplicates([qid_col, id_col])
     w = Window.partitionBy(qid_col).orderBy(
         F.col("cosine").desc(), F.col(id_col))
     return (
@@ -223,77 +208,10 @@ def topk_cosine_many(
     times).  Execution is the unmasked :func:`_topk_batched` kernel.
     Returns ``(query_id, id_col, cosine, rank)`` with rank 1..k per
     query; cosines rounded to 6 like :func:`topk_cosine`."""
-    qids, _, QnT = _query_matrix(queries, q_id_col or id_col,
+    qids, QnT = _query_matrix(queries, q_id_col or id_col,
                                  q_vec_col or vec_col, max_queries)
     return _topk_batched(df.select(id_col, vec_col), qids, QnT, k,
                          vec_col=vec_col, id_col=id_col)
-
-
-def topk_cosine_many_ivf_indexed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    centroids,
-    k: int = 10,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    q_vec_col: str | None = None,
-    q_id_col: str | None = None,
-    n_probe: int = 4,
-    n_assign: int = 1,
-    max_queries: int = 10_000,
-) -> DataFrame:
-    """Batch-query ANN over a materialized IVF index
-    (:func:`ivf_write_index`): scan the UNION of every query's ``n_probe``
-    cells ONCE (partition pruning — unprobed cells are never read), score
-    each candidate row only against the queries whose probe set contains
-    its cell (the :func:`_topk_batched` kernel with a cell mask over the
-    same single matmul).  With ``n_assign > 1`` a vector can surface from
-    several probed cells for the same query — identical candidate rows
-    the kernel dedups before ranking.  Output shape matches
-    :func:`topk_cosine_many`.
-
-    Design boundary (measured at 10M rows, BENCH/ann_scale.json): the
-    pruning win exists only while the UNION of the batch's probed cells
-    stays well under ``n_centroids`` — random queries cover
-    ``~C·(1-(1-n_probe/C)^m)`` cells, so a large diverse batch
-    degenerates to a full scan plus mask overhead and
-    :func:`topk_cosine_many` wins outright.  Prefer this variant for
-    small or clustered query batches (shared probe cells), or raise
-    ``n_centroids`` so the union stays sparse."""
-    qids, Qraw, QnT = _query_matrix(queries, q_id_col or id_col,
-                                    q_vec_col or vec_col, max_queries)
-    probes = _probe_cells(centroids, Qraw, n_probe)
-    allow = np.zeros((len(centroids), len(qids)), dtype=bool)  # (C, m)
-    for j, probe in enumerate(probes):
-        allow[probe, j] = True
-    union = sorted({c for probe in probes for c in probe})
-
-    scan = spark.read.parquet(path).filter(F.col("cell").isin(union))
-    return _topk_batched(
-        scan.select(id_col, vec_col, "cell"), qids, QnT, k,
-        vec_col=vec_col, id_col=id_col,
-        allow=lambda pdf: allow[pdf["cell"].to_numpy().astype(int)],
-        distinct=n_assign > 1)
-
-
-def hyperplane_bucket(
-    vec: Column, *, n_planes: int = 10, dim: int = 64, seed: int = 42
-) -> Column:
-    """Random-hyperplane sign-bit bucket id (long) for a vector column:
-    bit i is set when the vector lies on the positive side of the i-th
-    seeded Gaussian hyperplane (Charikar'02)."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-    bucket = F.lit(0).cast("long")
-    for i in range(n_planes):
-        bit = F.when(
-            _dot_lit(vec, [float(x) for x in planes[i]]) > 0,
-            F.lit(1).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        bucket = bucket.bitwiseOR(F.shiftleft(bit, i))
-    return bucket
 
 
 def kmeans_centroids(
@@ -362,16 +280,6 @@ def assign_centroids_multi(vec: Column, centroids, n_assign: int) -> Column:
         F.transform(F.array_sort(scored), lambda x: x["i"]), 1, n_assign)
 
 
-def _probe_cells(centroids, queries, n_probe: int) -> list[list[int]]:
-    """The ``n_probe`` cells each query row probes: centroids ranked by
-    squared distance to the RAW query vector.  One ``argsort`` per query
-    row, so a batch probes exactly the cells its queries probe alone."""
-    cent = np.asarray(centroids, dtype=float)
-    Q = np.atleast_2d(np.asarray(queries, dtype=float))
-    return [[int(i) for i in ((cent - q[None, :]) ** 2).sum(1)
-             .argsort()[:n_probe]] for q in Q]
-
-
 def topk_cosine_ivf(
     df: DataFrame,
     query: list[float],
@@ -399,7 +307,10 @@ def topk_cosine_ivf(
             df, vec_col=vec_col, id_col=id_col,
             n_centroids=n_centroids, seed=seed,
         )
-    probe = _probe_cells(centroids, query, n_probe)[0]
+    # probe the centroids nearest the RAW query vector (squared distance)
+    d2 = ((np.asarray(centroids, dtype=float)
+           - np.asarray(query, dtype=float)[None, :]) ** 2).sum(1)
+    probe = [int(i) for i in d2.argsort()[:n_probe]]
 
     if n_assign <= 1:
         cell = assign_centroid(F.col(vec_col), centroids)
@@ -410,73 +321,6 @@ def topk_cosine_ivf(
             cells, F.array(*[F.lit(p) for p in probe]))
     return topk_cosine(df.filter(hit), query, k,
                        vec_col=vec_col, id_col=id_col)
-
-
-def ivf_write_index(
-    df: DataFrame,
-    path: str,
-    centroids,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_assign: int = 1,
-) -> None:
-    """Materialize the IVF index: the table written partitioned by its
-    coarse-quantizer cell.  This is the deployment shape the inline
-    :func:`topk_cosine_ivf` docstring promises — after this one narrow
-    pass, every query's ``n_probe`` cell filter is PARTITION PRUNING at
-    the scan (``PartitionFilters`` in the plan; unprobed cells are never
-    read from storage), which is what makes IVF pay at 10^12 rows.
-
-    ``n_assign > 1`` writes each vector into its ``n_assign`` nearest
-    cell partitions ("spilled posting lists": n_assign× storage for the
-    same recall lift the inline path gets) — the reader dedups by id."""
-    if n_assign <= 1:
-        cells = F.array(assign_centroid(F.col(vec_col), centroids))
-    else:
-        cells = assign_centroids_multi(F.col(vec_col), centroids, n_assign)
-    (
-        df.select(F.col(id_col), F.col(vec_col),
-                  F.explode(cells).alias("cell"))
-        # cluster by cell before the partitioned write: without this,
-        # every input partition writes a sliver into every cell —
-        # input_partitions × n_centroids small files — and the per-file
-        # open tax erases the pruning win at query time (measured at 1M
-        # rows: 2048 files → pruned query no faster than brute force).
-        # One shuffle at BUILD time, amortized over every query after.
-        .repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-
-
-def topk_cosine_ivf_indexed(
-    spark,
-    path: str,
-    query: list[float],
-    centroids,
-    k: int = 10,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_probe: int = 4,
-    n_assign: int = 1,
-) -> DataFrame:
-    """Query a materialized IVF index (:func:`ivf_write_index`): pick the
-    ``n_probe`` nearest centroids driver-side, scan ONLY those cell
-    partitions, exact-rank the survivors.  Identical results to the
-    inline :func:`topk_cosine_ivf` for the same centroids/probe/assign
-    settings.  Pass the index's ``n_assign`` so the reader knows whether
-    an id-dedup (one small shuffle over the PROBED cells only) is
-    needed; the single-assign path stays shuffle-free."""
-    probe = _probe_cells(centroids, query, n_probe)[0]
-    scan = spark.read.parquet(path).filter(F.col("cell").isin(probe))
-    if n_assign > 1:
-        # a multi-assigned index can hold a vector in several probed
-        # cells — dedup by id before ranking
-        scan = scan.dropDuplicates([id_col])
-    return topk_cosine(scan, query, k, vec_col=vec_col, id_col=id_col)
 
 
 def topk_cosine_lsh_multi(
@@ -505,8 +349,8 @@ def topk_cosine_lsh_multi(
     codegen expression tree at 256 planes, while the matmul costs
     microseconds per thousand rows.  The exact ranking of survivors stays
     native (``TakeOrderedAndProject``).  At 10^12 rows the signatures
-    would be precomputed once and stored (cf. :func:`ivf_write_index`),
-    making the probe a metadata-only filter.
+    would be precomputed once and stored, making the probe a
+    metadata-only filter.
 
     Defaults (b=8, L=24, r=1) are tuned on the synthetic embeddings
     table, whose "near" neighbors sit at cosine ≈ 0.3-0.4 — barely 2σ
@@ -622,7 +466,7 @@ def hard_negatives(
     Output: ``(anchor_id, id_col, cosine, rank)``, rank 1..k per
     anchor, cosine rounded to 6, ties broken on id.
     """
-    qids, _, QnT = _query_matrix(anchors, id_col, vec_col, max_anchors)
+    qids, QnT = _query_matrix(anchors, id_col, vec_col, max_anchors)
     lab_rows = anchors.select(id_col, label_col).collect()
     lab_by_id = {r[id_col]: r[label_col] for r in lab_rows}
     qlabels = np.asarray(

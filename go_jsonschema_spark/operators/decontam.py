@@ -75,7 +75,7 @@ def semantic_contamination(
 
     from go_jsonschema_spark.operators.ann import _cosine_block, _query_matrix
 
-    qids, _, QnT = _query_matrix(probes, id_col, vec_col, max_probes)
+    qids, QnT = _query_matrix(probes, id_col, vec_col, max_probes)
     order = np.argsort(qids)           # argmax tie-break = smallest id
     qids, QnT = qids[order], QnT[:, order]
 

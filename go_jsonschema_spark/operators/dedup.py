@@ -11,13 +11,14 @@ Four families, each shuffle-disciplined:
   Mining of Massive Datasets ch.3).
 * **SimHash** — 64-bit charikar signature via native bit arithmetic,
   banded into 4×16-bit exact-match blocks for hamming≤3 candidates.
-* **embedding cosine** — random-hyperplane LSH buckets
-  (``ann.hyperplane_bucket``) + in-bucket exact cosine (see ann.py for
-  the search variant).
+* **embedding cosine** — exact all-pairs cosine for dimension-sized
+  tables (one BLAS matmul per Arrow batch), and the centroid-pruned
+  :func:`semantic_dedup` (see ann.py for the search variants).
 
 All candidate generation is equi-join-able (bucket keys), so Catalyst plans
 shuffle-hash/sort-merge joins that scale horizontally; nothing is O(n²)
-except within a bucket, which the band width bounds.
+except within a bucket, which the band width bounds, and the
+dimension-table baseline :func:`cosine_pairs_exact`.
 """
 
 from __future__ import annotations
@@ -26,23 +27,20 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from go_jsonschema_spark.functions.text import fingerprint, word_shingles
 from go_jsonschema_spark.operators.ann import (
-    _cosine_block, _dot, _norm, _unit_rows, assign_centroid,
-    hyperplane_bucket, kmeans_centroids,
+    _cosine_block, _unit_rows, assign_centroid, kmeans_centroids,
 )
 
 __all__ = [
     "exact_duplicates",
-    "minhash_signature",
     "minhash_lsh_pairs",
     "simhash",
-    "simhash_dup_pairs", "minhash_index", "lsh_pairs_against_index",
+    "minhash_index", "lsh_pairs_against_index",
     "duplicate_spans", "strip_spans",
     "simhash_feature_hashes",
     "simhash_pairs_from_hashes",
     "jaccard",
     "edit_distance_pairs",
     "duplicate_clusters",
-    "embedding_cosine_pairs",
     "cosine_pairs_exact",
 ]
 
@@ -128,26 +126,13 @@ def _hash_with_seed(seed: int):
     return lambda h: F.xxhash64(h, F.lit(seed))
 
 
-def minhash_signature(shingles: Column, k: int = 64) -> Column:
-    """k-permutation MinHash signature as ``array<bigint>`` — fully native
-    and inside whole-stage codegen.
-
-    The variable-length shingle STRINGS are hashed exactly once
-    (``xxhash64``); the k permutations then re-hash only the resulting
-    8-byte longs (``xxhash64(h, seed_i)``) — O(len) string work × 1
-    instead of × k, a ~2× wall-time cut on the signature stage measured at
-    sf0.1.  Permuting a universal hash preserves the MinHash estimator."""
-    base = F.transform(shingles, lambda s: F.xxhash64(s))
-    return minhash_signature_from_hashes(base, k)
-
-
 def minhash_signature_from_hashes(hashes: Column | str,
                                   k: int = 64) -> Column:
     """The k permutations over an ALREADY-HASHED shingle set
     (``array<bigint>``).  Callers that can bind the base hash to its own
     projected column first should do so and call this — the k
     ``transform``s each re-evaluate their input expression, so an inline
-    ``minhash_signature`` re-hashes the shingle STRINGS k times (the
+    signature would re-hash the shingle STRINGS k times (the
     duplicate_spans free-subexpression lesson; measured 5.6 s → 3.4 s on
     the LSH-pair query at sf0.1, r7).  Values are identical either way:
     ``xxhash64(xxhash64(s), seed_i)`` is the same permutation chain.
@@ -504,31 +489,6 @@ def simhash(hashes: Column | str, bits: int = 63) -> Column:
     return _ft.reduce(_op.add, words)
 
 
-def simhash_dup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    max_hamming: int = 3,
-    shingle_n: int = 2,
-    max_bucket: int | None = 1024,
-) -> DataFrame:
-    """Near-dup pairs by SimHash: band the 64-bit signature into 4 16-bit
-    blocks (pigeonhole: hamming ≤ 3 ⟹ at least one block identical),
-    equi-join on (block_idx, block_value), verify exact hamming distance.
-
-    Returns ``(a, b, hamming)``.  Stage layout mirrors minhash_lsh_pairs:
-    hash once (narrow) → signature (narrow) → explode 4 block keys →
-    ONE shuffle for the self-join → exact verify.  The self-join takes the
-    SAME DataFrame on both sides (aliases, not re-derived selects) so
-    Catalyst plans one Exchange + ReusedExchange — the 63-expression
-    signature is computed once, not once per side."""
-    hashed = simhash_feature_hashes(
-        df, text_col=text_col, id_col=id_col, shingle_n=shingle_n)
-    return simhash_pairs_from_hashes(
-        hashed, max_hamming=max_hamming, max_bucket=max_bucket)
-
-
 def simhash_feature_hashes(
     df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id",
     shingle_n: int = 2,
@@ -548,9 +508,14 @@ def simhash_feature_hashes(
 def simhash_pairs_from_hashes(
     hashed: DataFrame, *, max_hamming: int = 3, max_bucket: int | None = 1024,
 ) -> DataFrame:
-    """Signature → 16-bit block banding → equi-join → exact-hamming verify,
-    over pre-computed feature hashes ``(id, hs)`` (see
-    :func:`simhash_dup_pairs` for the plan rationale).
+    """Near-dup pairs ``(a, b, hamming)`` by SimHash over pre-computed
+    feature hashes ``(id, hs)`` (:func:`simhash_feature_hashes`): band the
+    64-bit signature into 4 16-bit blocks (pigeonhole: hamming ≤ 3 ⟹ at
+    least one block identical), equi-join on (block_idx, block_value),
+    verify exact hamming distance.  The self-join takes the SAME
+    DataFrame on both sides (aliases, not re-derived selects) so Catalyst
+    plans one Exchange + ReusedExchange — the 63-expression signature is
+    computed once, not once per side.
 
     Pair dedup is FREE here (r5): a pair sharing several blocks surfaces
     once per shared block, but both full signatures already travel
@@ -827,10 +792,8 @@ def cosine_pairs_exact(
     max_rows: int = 100_000,
 ) -> DataFrame:
     """Exact all-pairs cosine ≥ threshold for a DIMENSION-SIZED table —
-    the O(n²) correctness baseline that oracle-checks the pair math;
-    :func:`embedding_cosine_pairs` (LSH buckets, one equi-join) is the
-    scale path, whose approximate family carries the recall-floor
-    oracles in ann.py.
+    the O(n²) pair math; the approximate search family in ann.py
+    carries the recall-floor oracles.
 
     Execution: the whole (normalized) matrix is captured in the UDF
     closure and every Arrow batch does ONE BLAS matmul against it inside
@@ -840,7 +803,7 @@ def cosine_pairs_exact(
     aggregate PER PAIR and took 38 s on 2 M pairs; the matmul form does
     the identical arithmetic in ~1 s.  ``max_rows`` guards the closure
     capture (100k × 64 floats ≈ 25 MB) — a bigger table is not a
-    dimension table, use the LSH path."""
+    dimension table, use :func:`semantic_dedup` or ann.py."""
     import numpy as np
     import pandas as pd
 
@@ -849,7 +812,7 @@ def cosine_pairs_exact(
         raise ValueError(
             f"cosine_pairs_exact is the O(n²) baseline for dimension-"
             f"sized tables (> {max_rows} rows); use "
-            f"embedding_cosine_pairs / ann.py for large tables")
+            f"semantic_dedup / ann.py for large tables")
     if not rows:
         # np.linalg.norm(axis=1) on a 0-row matrix would raise; an empty
         # input simply has no pairs
@@ -880,48 +843,6 @@ def cosine_pairs_exact(
             })
 
     return df.select(id_col, vec_col).mapInPandas(pairs, out_schema)
-
-
-def embedding_cosine_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    *,
-    threshold: float = 0.95,
-    n_planes: int = 12,
-    seed: int = 42,
-    dim: int | None = None,
-    max_bucket: int | None = 4096,
-) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine ≥ threshold.
-
-    Random-hyperplane LSH (Charikar'02): bucket = sign-bit string of dot
-    products with ``n_planes`` seeded Gaussian hyperplanes; candidates =
-    same-bucket pairs (ONE equi-join shuffle on a 64-bit key); exact cosine
-    verifies.  P(same bucket) = (1 - θ/π)^n_planes — for cosine ≥ .95
-    (θ≤18°) ≈ 0.29 per table; production would OR multiple tables, here one
-    keeps the test cheap and the plan shape identical."""
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
-    bucket = hyperplane_bucket(
-        F.col(vec_col), n_planes=n_planes, dim=dim, seed=seed)
-    b = _spread(df).select(F.col(id_col).alias("id"),
-                           F.col(vec_col).alias("v"), bucket.alias("bkt"))
-    b = _cap_buckets(b, ["bkt"], max_bucket)
-    cos = _dot(F.col("l.v"), F.col("rt.v")) / (
-        _norm(F.col("l.v")) * _norm(F.col("rt.v"))
-    )
-    return (
-        b.alias("l")
-        .join(b.alias("rt"), on="bkt")
-        .filter(F.col("l.id") < F.col("rt.id"))
-        .select(
-            F.col("l.id").alias("a"),
-            F.col("rt.id").alias("b"),
-            F.round(cos, 6).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
 
 
 def semantic_dedup(

@@ -125,98 +125,6 @@ def extract_features(
     return media.mapInPandas(_extract, FEATURE_SCHEMA)
 
 
-RESIZED_SCHEMA = "media_id string, width int, height int, payload binary"
-FRAMES_SCHEMA = "media_id string, frame_idx int, frame binary"
-
-
-def resize_images(
-    media: DataFrame, *, width: int = 32, height: int = 32, fake: bool = True
-) -> DataFrame:
-    """Image resize over mapInPandas.  ``fake=True`` stubs the pixel work
-    (deterministic byte truncation/padding to width*height); ``fake=False``
-    uses Pillow's ``Image.resize`` — only the inner lambda changes; batch
-    shape, schema and partitioning are identical on both paths."""
-    if not fake:
-        try:
-            from PIL import Image  # noqa: F401
-        except ImportError as e:  # pragma: no cover - PIL absent in sandbox
-            raise NotImplementedError(
-                "Pillow not installed in this sandbox; use fake=True"
-            ) from e
-
-    target = width * height
-
-    def _fake_resize(p: bytes) -> bytes:
-        return (bytes(p) * (target // max(len(p), 1) + 1))[:target]
-
-    def _pil_resize(p: bytes) -> bytes:
-        import io
-
-        from PIL import Image
-
-        img = Image.open(io.BytesIO(bytes(p))).convert("L")
-        return img.resize((width, height)).tobytes()
-
-    one = _fake_resize if fake else _pil_resize
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf[pdf["kind"] == "image"]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": width,
-                    "height": height,
-                    "payload": pdf["payload"].map(one),
-                }
-            )
-
-    return media.mapInPandas(_resize, RESIZED_SCHEMA)
-
-
-def sample_frames(
-    media: DataFrame, *, every_ms: int = 250, fake: bool = True
-) -> DataFrame:
-    """Video frame sampling over mapInPandas: one output row per sampled
-    frame index (duration_ms / every_ms frames).  Frame extraction is
-    stubbed (fake frame = payload slice keyed by index); the real version
-    calls ffmpeg/pyav in the same batch loop."""
-    if not fake:
-        raise NotImplementedError("ffmpeg/pyav not installed in this sandbox")
-
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            pdf = pdf[pdf["kind"] == "video"]
-            if pdf.empty:
-                yield pd.DataFrame(
-                    {"media_id": pd.Series(dtype=object),
-                     "frame_idx": pd.Series(dtype="int32"),
-                     "frame": pd.Series(dtype=object)}
-                )
-                continue
-            # vectorized explode: one np.repeat over the batch instead of
-            # per-row iterrows; the per-frame slice stays a cheap list
-            # comprehension over (payload, idx) pairs (the real decoder
-            # would batch-decode here)
-            durs = pdf["meta"].map(lambda m: (m["duration_ms"] or 0))
-            n_frames = np.maximum(durs.to_numpy() // every_ms, 1)
-            ids = np.repeat(pdf["media_id"].to_numpy(), n_frames)
-            payloads = np.repeat(pdf["payload"].to_numpy(), n_frames)
-            idx = np.concatenate([np.arange(n) for n in n_frames])
-            frames = [
-                bytes(p or b"")[i % max(len(p or b""), 1):][:16]
-                for p, i in zip(payloads, idx)
-            ]
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idx.astype("int32"),
-                 "frame": frames}
-            )
-
-    return media.mapInPandas(_frames, FRAMES_SCHEMA)
-
-
 def synth_media(spark, n: int = 64) -> DataFrame:
     """Deterministic synthetic media table (payload = seeded bytes).
     Partition count is sized to the row count — spinning up one Python

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
-__all__ = ["pack_chunks", "pack_greedy", "pack_summary", "chunk_grid",
+__all__ = ["pack_chunks", "pack_greedy", "chunk_grid",
            "packing_efficiency"]
 
 
@@ -138,19 +138,6 @@ def pack_greedy(
 
     out = src.groupBy(gcol).applyInPandas(fill, schema)
     return out.drop("__g__") if one_group else out
-
-
-def pack_summary(
-    packed: DataFrame, *, group_col: str | None = None
-) -> DataFrame:
-    """Per-pack fill accounting: docs per pack and tokens contributed
-    (straddling docs count toward their STARTING pack here — exact
-    per-pack fill is budget except the tail pack by construction)."""
-    keys = ([group_col] if group_col else []) + ["pack_id"]
-    return packed.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tok").alias("tokens_started"),
-    )
 
 
 def chunk_grid(

@@ -15,10 +15,8 @@ infer.py's TableSpec generator deliberately maps to bounds instead)
 and the row-shaped output.
 
 Suggestions are DETERMINISTIC rows ``(column, keyword, value)`` —
-DuckDB replays every one — and :func:`suggest_spec` assembles them
-into a runnable :class:`~go_jsonschema_spark.spec.TableSpec` whose
-defining property is self-consistency: running the suggested spec on
-the profiled table yields zero violations (pinned by test).
+DuckDB replays every one.  ``infer.infer_table_spec`` turns the same
+profile into a runnable TableSpec.
 """
 
 from __future__ import annotations
@@ -31,8 +29,7 @@ from pyspark.sql import types as T
 from go_jsonschema_spark.infer import _NUMERIC as _INFER_NUMERIC
 from go_jsonschema_spark.infer import _profile_rows
 
-__all__ = ["dataset_card", "suggest_constraints", "suggest_spec",
-           "suggest_tolerances"]
+__all__ = ["dataset_card", "suggest_constraints"]
 
 _NUMERIC = _INFER_NUMERIC + (T.DecimalType,)
 _TYPED = {"string", "integer", "number", "boolean"}
@@ -126,65 +123,6 @@ def suggest_constraints(
         out, "column string, keyword string, value string")
 
 
-def suggest_spec(
-    df: DataFrame,
-    columns: list[str] | None = None,
-    *,
-    enum_max: int = 20,
-    key: str | None = None,
-) -> "TableSpec":
-    """Assemble :func:`suggest_constraints` rows into a runnable
-    TableSpec.  Numeric bounds/enums become per-column keywords;
-    ``unique`` suggestions become table checks.
-
-    Self-consistency contract (pinned by test): running the suggested
-    spec over the profiled DataFrame produces ZERO violations.  NULL
-    is a JSON type, so a column observed WITH nulls gets
-    ``[type, "null"]`` and a NULL-admitting enum — same rule as
-    ``infer.infer_table_spec``, which remains the direct one-call
-    data→TableSpec path (and adds array-shape constraints this
-    keyword-row surface does not model).
-    """
-    from go_jsonschema_spark.spec import TableSpec
-
-    fields = {f.name: f.dataType for f in df.schema.fields}
-    rows = suggest_constraints(df, columns, enum_max=enum_max).collect()
-    col_specs: dict[str, dict] = {}
-    table_checks: list[dict] = []
-    required = {r["column"] for r in rows if r["keyword"] == "required"}
-    for r in rows:
-        c, kw, v = r["column"], r["keyword"], r["value"]
-        spec = col_specs.setdefault(c, {})
-        if kw == "type":
-            spec["type"] = v if c in required else [v, "null"]
-        elif kw == "required":
-            pass  # already folded into the type suggestion above
-        elif kw == "enum":
-            vals = json.loads(v)
-            if isinstance(fields[c], _NUMERIC):
-                cast = (float if isinstance(
-                    fields[c], (T.FloatType, T.DoubleType, T.DecimalType))
-                    else int)
-                vals = [cast(x) for x in vals]
-            if c not in required:
-                vals = vals + [None]  # observed NULLs stay admissible
-            spec["enum"] = vals
-        elif kw in ("minimum", "maximum"):
-            # int first, float fallback: _fmt renders small/large doubles
-            # in scientific notation ('1e-05' has no '.'), so a
-            # contains-'.' test crashed on such columns (ADVICE r6);
-            # values that parsed before parse to the same number
-            try:
-                spec[kw] = int(v)
-            except ValueError:
-                spec[kw] = float(v)
-        elif kw in ("minLength", "maxLength"):
-            spec[kw] = int(v)
-        elif kw == "unique":
-            table_checks.append(
-                {"kind": "unique", "id": f"unique:{c}", "columns": [c]})
-    return TableSpec(columns=col_specs, table_checks=table_checks)
-
 def dataset_card(
     df: DataFrame,
     suite=None,
@@ -265,41 +203,3 @@ def dataset_card(
         F.explode(F.array(*fail_entries)).alias("e")).select(
         "e.metric", "e.value")
     return card.unionByName(suite_rows)
-
-def suggest_tolerances(
-    df: DataFrame,
-    suite,
-    *,
-    margin: float = 0.0,
-    quantize: int = 4,
-) -> dict[str, float]:
-    """Propose ``TableSpec.tolerances`` from observed failure rates — the
-    budget-review analogue of :func:`suggest_spec`: profile the batch
-    with the suite's counts-only pass (ONE predicate-scan aggregation,
-    zero violation materialization), then for every constraint that has
-    failures suggest the largest ``mostly`` the batch satisfies,
-    floored to ``quantize`` decimal places (≤ 6 — the spec's BIGINT
-    overflow cap) minus ``margin``.
-
-    Self-consistency contract (pinned by test): re-running the suite
-    with the suggested tolerances on the SAME batch passes.  Constraints
-    with zero failures are omitted — absence means strict, and a clean
-    constraint should stay strict."""
-    if not 0 < quantize <= 6:
-        raise ValueError("quantize must be in 1..6 (spec denominator cap)")
-    row = suite.verdict_counts(df).first()
-    if row is None or not row["n_rows"]:
-        return {}
-    n = row["n_rows"]
-    fails = row["fail_by_constraint"] or {}
-    scale = 10 ** quantize
-    out: dict[str, float] = {}
-    for cid, f in sorted(fails.items()):
-        if not f:
-            continue
-        # floor((n-f)/n * scale) in exact integer math, then the margin
-        q = ((n - f) * scale) // n - round(margin * scale)
-        if q <= 0:
-            q = 1  # an all-failing constraint still gets a valid budget
-        out[cid] = q / scale
-    return out

@@ -10,12 +10,13 @@ nothing needs to be persisted to re-derive a split.
 
 * :func:`hash_split` — train/val/test assignment by hash bucket; zero
   shuffle, zero state.
-* :func:`hash_sample` — deterministic Bernoulli-by-hash sampling; zero
-  shuffle — the 100 TB scale path.
+* :func:`weighted_sample` — deterministic Bernoulli-by-hash sampling
+  (a constant ``weight`` is a fixed-rate sample); zero shuffle — the
+  100 TB scale path.
 * :func:`stratified_sample` — EXACT n-per-stratum: rank by hash inside
   each stratum, keep the first n.  One shuffle on the stratum key; the
   per-stratum sort is the price of exactness — for massive strata use
-  :func:`hash_sample` with a per-stratum rate instead.
+  :func:`weighted_sample` with a per-stratum rate instead.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from fractions import Fraction
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-__all__ = ["hash_split", "hash_sample", "stratified_sample", "hash_bucket",
+__all__ = ["hash_split", "stratified_sample", "hash_bucket",
            "mixing_weights", "rebalance_by_token_share",
            "cap_per_group", "diversity_sample", "weighted_sample"]
 
@@ -62,18 +63,6 @@ def hash_split(
     last = F.lit(names[-1])
     expr = last if expr is None else expr.otherwise(last)
     return df.withColumn("split", expr)
-
-
-def hash_sample(
-    df: DataFrame, key: str, rate: float, *, salt: str = "sample"
-) -> DataFrame:
-    """Deterministic Bernoulli-by-hash sample: keeps rows whose bucket
-    falls below ``rate`` of the hash space.  No shuffle, no RNG state —
-    the same rows survive on any cluster."""
-    if not 0.0 <= rate <= 1.0:
-        raise ValueError(f"rate {rate} outside [0, 1]")
-    return df.filter(
-        hash_bucket(F.col(key), salt) < int(round(rate * _BUCKETS)))
 
 
 def stratified_sample(
@@ -135,7 +124,7 @@ def weighted_sample(
     deterministic hash-uniform falls below ``weight`` (any Column
     expression, clamped to [0, 1]) — e.g. ``quality_score(text)`` to
     upsample high-quality documents fractionally instead of a hard
-    threshold.  Same discipline as :func:`hash_sample`: pure-hash
+    threshold.  Same discipline as :func:`hash_split`: pure-hash
     decision keyed on ``key``, so the kept set is reproducible across
     partitioning, cluster size and re-runs, and the filter is a zero-
     shuffle narrow pass.  Null weights drop the row (explicit beats a

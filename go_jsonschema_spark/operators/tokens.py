@@ -14,31 +14,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ["oov_rate", "oov_rate_expr", "sequence_audit",
+__all__ = ["oov_rate", "sequence_audit",
            "token_frequency", "token_ngram_contamination",
-           "token_minhash_pairs", "token_ngram_heavy_hitters",
-           "zipf_slope"]
-
-
-def oov_rate_expr(tokens_col, vocab_ids) -> "F.Column":
-    """Per-row OOV count as a native column expression: a fold over the
-    token array against a broadcast-by-closure vocab set.
-
-    For vocab sets small enough to inline (the common 32k-250k
-    tokenizer range produces a large literal — see :func:`oov_rate`
-    for the Arrow path), this uses ``array_except``-free membership
-    via a sorted-literal ``isin``-style fold only when the vocab is
-    TINY (≤ 64 ids, e.g. special-token audits).  Raises otherwise."""
-    ids = sorted(set(int(x) for x in vocab_ids))
-    if len(ids) > 64:
-        raise ValueError(
-            "oov_rate_expr inlines the vocab into the plan; "
-            f"{len(ids)} ids would bloat codegen — use oov_rate()")
-    return F.aggregate(
-        tokens_col,
-        F.lit(0),
-        lambda acc, t: acc + (~t.isin(ids)).cast("int"),
-    )
+           "token_minhash_pairs", "token_ngram_heavy_hitters"]
 
 
 def oov_rate(
@@ -331,27 +309,6 @@ def token_frequency(
     return freq.select(
         "token", "cnt", F.row_number().over(w).cast("long").alias("rank"))
 
-
-def zipf_slope(
-    freq: DataFrame,
-    *,
-    max_rank: int | None = None,
-) -> float:
-    """OLS slope of ``ln(cnt) ~ ln(rank)`` over the frequency spectrum
-    of :func:`token_frequency` — a healthy natural-language corpus sits
-    near -1 (Zipf's law); a flat slope (~0) means synthetic/uniform
-    token noise, a cliff means a degenerate vocabulary.  One JVM-side
-    ``regr_slope`` aggregate over the (vocab-bounded) spectrum; driver
-    receives a single float.  ``max_rank`` restricts the fit to the
-    head, where Zipf behaviour is diagnostic and rank estimates are
-    stable."""
-    if max_rank is not None:
-        freq = freq.filter(F.col("rank") <= max_rank)
-    row = freq.agg(
-        F.regr_slope(F.log(F.col("cnt").cast("double")),
-                     F.log(F.col("rank").cast("double"))).alias("slope")
-    ).first()
-    return None if row is None else row["slope"]
 
 def token_ngram_heavy_hitters(
     df: DataFrame,

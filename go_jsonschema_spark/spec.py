@@ -202,12 +202,6 @@ def unescape_pointer(token: str) -> str:
     return token.replace("~1", "/").replace("~0", "~")
 
 
-def escape_pointer(token: str) -> str:
-    """Inverse of :func:`unescape_pointer`
-    (/root/reference/schema_refs.go:46-70)."""
-    return token.replace("~", "~0").replace("/", "~1")
-
-
 def _pointer_token(raw: str) -> str:
     """Decode one JSON-Pointer token: RFC3986 %-decode then RFC6901
     ``~1``/``~0`` unescape (schema_refs.go:20-44 analogue + URI escaping)."""

@@ -12,14 +12,20 @@ its own, so stream and batch verdicts agree by construction.
   ``run().violations`` of the row-only suite.
 * :func:`windowed_verdicts` — event-time-windowed verdicts with a
   watermark for late data: the kernel grouped by ``window(ts)``.
-* :func:`stateful_group_verdicts` — running per-group counters of the
-  kernel's ``__pass__`` across micro-batches.
+* running per-group totals need no operator of their own: with
+  ``k = suite.kernel(stream)``,
+  ``k.verdicts(k.project(stream), F.col(group), "group")`` written in
+  ``update`` output mode re-emits each group's cumulative
+  ``(n_rows, n_fail, fail_by_constraint, n_pass, passed)`` every
+  micro-batch it grows — the batch verdict under a grouping, with no
+  Python state.
 
 Dataset-level checks over unbounded input need key-scoped state:
 
 * :func:`stream_duplicate_keys` — running duplicate-key counts via
-  ``applyInPandasWithState`` (duplicate EMISSION, not suppression).
-* :func:`dedup_stream` — watermark-bounded duplicate SUPPRESSION.
+  ``applyInPandasWithState`` (duplicate EMISSION, not suppression;
+  watermark-bounded suppression is Spark's own
+  ``withWatermark(...).dropDuplicates([key])``).
 * referential (foreign-key) checks need no streaming twin:
   :func:`~go_jsonschema_spark.operators.referential.referential_violations`
   is a stateless broadcast left-anti join, and Structured Streaming runs
@@ -49,44 +55,6 @@ def stream_violations(suite: ConstraintSuite, stream: DataFrame) -> DataFrame:
     dataset-level checks need the whole table (see the module docstring
     for their streaming forms)."""
     return suite.row_only().run(stream).violations
-
-
-def stateful_group_verdicts(
-    suite: ConstraintSuite, stream: DataFrame, *, group_col: str
-) -> DataFrame:
-    """Custom stateful streaming operator: RUNNING per-group verdict
-    counters across micro-batches via ``applyInPandasWithState`` —
-    arbitrary state the built-in windowed aggregation can't express
-    (cumulative totals over the whole stream lifetime, no window).
-
-    Output (update mode): one row per group per batch with the running
-    ``(n_rows, n_fail)`` totals."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    checked = suite.kernel(stream).project(stream)
-    # a NULL __pass__ counts as passing, as in every kernel counter
-    slim = checked.select(
-        group_col, F.coalesce("__pass__", F.lit(True)).alias("ok"))
-
-    def update(key, pdfs, state: GroupState):
-        n_rows, n_fail = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n_rows += len(pdf)
-            n_fail += int((~pdf["ok"]).sum())
-        state.update((n_rows, n_fail))
-        yield pd.DataFrame(
-            {"group": [key[0]], "n_rows": [n_rows], "n_fail": [n_fail]}
-        )
-
-    return slim.groupBy(group_col).applyInPandasWithState(
-        update,
-        outputStructType="group string, n_rows long, n_fail long",
-        stateStructType="n_rows long, n_fail long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def stream_histogram(
@@ -162,24 +130,6 @@ def stream_duplicate_keys(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def dedup_stream(
-    stream: DataFrame,
-    key: str,
-    *,
-    ts_col: str,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup on ``key``: keep the first record per key,
-    with state bounded by the watermark (Spark's native stateful
-    ``dropDuplicates`` — late duplicates beyond the watermark age out of
-    state, the standard unbounded-dedup tradeoff)."""
-    ts_field = dict((f.name, f.dataType.simpleString())
-                    for f in stream.schema.fields).get(ts_col)
-    if ts_field == "timestamp_ntz":
-        stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return stream.withWatermark(ts_col, watermark).dropDuplicates([key])
 
 
 def windowed_verdicts(

@@ -68,27 +68,33 @@ def test_resume_skips_completed_batches(spark, suite, tmp_path):
 
 
 def test_stateful_group_verdicts(spark, tmp_path):
-    """applyInPandasWithState custom operator: running per-type verdict
-    counters must converge to the batch counts."""
+    """Running per-group verdicts are the kernel under a grouping: its
+    aggregation over a stream in update mode must converge to the batch
+    counts, across several micro-batches."""
     from go_jsonschema_spark.spec import TableSpec
-    from go_jsonschema_spark.streaming.validate import stateful_group_verdicts
 
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     src = str(tmp_path / "state_src")
-    events.write.mode("overwrite").parquet(src)
+    events.repartition(3).write.mode("overwrite").parquet(src)
     ts = TableSpec(columns={"value": {"type": "number", "maximum": 100}})
     suite = ConstraintSuite(ts, key="event_id")
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    out = stateful_group_verdicts(suite, stream, group_col="event_type")
+    stream = (spark.readStream.schema(events.schema)
+              .option("maxFilesPerTrigger", 1).parquet(src))
+    k = suite.kernel(stream)
+    out = k.verdicts(k.project(stream), F.col("event_type"), "group")
     q = (
         out.writeStream.format("memory").queryName("state_out")
         .outputMode("update").trigger(availableNow=True).start()
     )
     q.awaitTermination(120)
-    # last update per group = cumulative totals == batch ground truth
+    assert len(q.recentProgress) > 1  # several micro-batches, not one
+    # the running totals only grow, so the largest update per group is
+    # its cumulative total == batch ground truth
     got = {
         r["group"]: (r["n_rows"], r["n_fail"])
-        for r in spark.sql("SELECT * FROM state_out").collect()
+        for r in spark.sql(
+            "SELECT `group`, max(n_rows) n_rows, max(n_fail) n_fail "
+            "FROM state_out GROUP BY `group`").collect()
     }
     want = {
         r["event_type"]: (r["n"], r["f"])
@@ -100,25 +106,6 @@ def test_stateful_group_verdicts(spark, tmp_path):
         .collect()
     }
     assert got == want
-
-
-def test_streaming_dedup(spark, tmp_path):
-    """Stateful streaming dedup keeps first record per key."""
-    from go_jsonschema_spark.streaming.validate import dedup_stream
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    dup = events.unionByName(events.limit(200))  # plant duplicates
-    src = str(tmp_path / "dedup_src")
-    dup.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(dup.schema).parquet(src)
-    out = dedup_stream(stream, "event_id", ts_col="ts", watermark="1 day")
-    q = (
-        out.writeStream.format("memory").queryName("dedup_out")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    n = spark.sql("SELECT count(DISTINCT event_id) d, count(*) n FROM dedup_out").first()
-    assert n["n"] == n["d"] == events.count()
 
 
 def test_streaming_violations_and_verdicts(spark, tmp_path):

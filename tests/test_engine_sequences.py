@@ -189,25 +189,6 @@ def test_suite_metrics(spark, seq):
     assert rep.psi > 0
 
 
-def test_grouped_drift(spark, seq):
-    """Per-group drift: the drifted slice lives in part==N_PARTS-1; every
-    other part should pass vs the clean baseline histogram."""
-    from go_jsonschema_spark.operators.group_checks import grouped_drift
-
-    base = {
-        int(r["bucket"]): int(r["count"])
-        for r in synth.ntok_baseline(spark, N).collect()
-    }
-    rows = {r["group"]: r for r in grouped_drift(
-        seq, "part", "n_tok", base, bucket_width=32, psi_threshold=0.25
-    ).collect()}
-    assert set(rows) == {str(p) for p in range(synth.N_PARTS)}
-    drifted = str(synth.N_PARTS - 1)
-    assert not rows[drifted]["passed"]
-    others_passed = [r["passed"] for g, r in rows.items() if g != drifted]
-    assert sum(others_passed) >= len(others_passed) - 1  # allow 1 borderline
-
-
 def test_stats_single_pass(spark, seq):
     from go_jsonschema_spark.operators.stats import column_stats
 

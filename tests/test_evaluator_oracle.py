@@ -468,6 +468,32 @@ def test_unevaluated_in_registered_document():
                                  registry=registry).valid is want
 
 
+def test_plain_dict_registry_document_owns_its_pointers():
+    """A registry value given as a plain dict resolves a JSON-pointer
+    ``$ref`` inside itself against itself, as a ``SchemaSpec`` does."""
+    import referencing
+    from referencing.jsonschema import DRAFT202012
+
+    uri = "http://x.test/d.json"
+    doc = {"$defs": {"pos": {"type": "integer", "minimum": 0}},
+           "properties": {"a": {"$ref": "#/$defs/pos"}}}
+    schema = {"$ref": uri}
+    oracle = jsonschema.Draft202012Validator(
+        schema,
+        registry=referencing.Registry().with_resource(
+            uri, referencing.Resource.from_contents(
+                doc, default_specification=DRAFT202012)),
+    )
+    registry = {uri: doc}
+    validate = compile_validator(schema, draft=2020, registry=registry)
+    for value in ({"a": -1}, {"a": 1}, {"a": "x"}, {}):
+        want = oracle.is_valid(value)
+        assert validate(value) is want, value
+        assert validate_instance(schema, value, draft=2020,
+                                 registry=registry).valid is want
+    assert registry == {uri: doc}
+
+
 def test_metaschema_root_dict_with_registered_vocabularies():
     """``jsonschema``'s own 2020-12 META_SCHEMA dict as the root, with the
     ``jsonschema_specifications`` vocabularies in the registry: a

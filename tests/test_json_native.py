@@ -244,33 +244,14 @@ def test_auto_falls_back_to_udf(spark):
     assert got == [False, True]  # minimum vacuous on strings (interp parity)
 
 
-def test_json_column_errors_surface(spark):
-    """Errors-as-data UDF: ALL failed keywords per payload as
-    array<string> (the reference's chained error strings, but as data)."""
-    from go_jsonschema_spark.compile import json_column_errors
-
-    errs = json_column_errors(PROPS_SCHEMA)
-    df = spark.createDataFrame(
-        [('{"k": 12}',), ('{"k": 99}',), ('{}',), ("garbage",), (None,)],
-        "j string",
-    )
-    rows = df.select("j", errs(F.col("j")).alias("e")).collect()
-    got = {r["j"]: list(r["e"]) for r in rows}
-    assert got['{"k": 12}'] == []
-    assert any("maximum" in e for e in got['{"k": 99}'])
-    assert any("required" in e for e in got["{}"])
-    assert any("invalid JSON" in e for e in got["garbage"])
-    assert any("null payload" in e for e in got[None])
-
-
 def test_ref_siblings_follow_the_draft(spark):
     """From 2019-09 ``$ref`` is an in-place applicator evaluated WITH its
     siblings; in draft 7 and earlier it short-circuits them.  The
-    closure-compiled predicate, the errors UDF and ``jsonschema`` agree
-    under both drafts."""
+    closure-compiled predicate, the collected error list and
+    ``jsonschema`` agree under both drafts."""
     import jsonschema
 
-    from go_jsonschema_spark.compile import json_column_errors
+    from go_jsonschema_spark.interp import validate_instance
 
     schema = {"$ref": "#/$defs/a", "maxLength": 2,
               "$defs": {"a": {"type": "string"}}}
@@ -281,8 +262,8 @@ def test_ref_siblings_follow_the_draft(spark):
     ):
         assert validator(schema).is_valid("abcdef") is want
         row = df.select(
-            json_column_predicate(schema, draft=draft)(F.col("j")),
-            json_column_errors(schema, draft=draft)(F.col("j")),
-        ).first()
+            json_column_predicate(schema, draft=draft)(F.col("j"))).first()
         assert row[0] is want, draft
-        assert any("maxLength" in e for e in row[1]) is (not want), draft
+        errors = validate_instance(schema, "abcdef", draft=draft,
+                                   collect_all=True).errors
+        assert any("maxLength" in e for e in errors) is (not want), draft

@@ -19,7 +19,7 @@ def _has(mod: str) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Pillow decode/resize
+# Pillow decode
 # ---------------------------------------------------------------------------
 
 def test_decode_image_real_path():
@@ -43,33 +43,6 @@ def test_decode_image_raises_cleanly_without_pil():
 
     with pytest.raises(NotImplementedError, match="Pillow"):
         decode_image(b"\x89PNG")
-
-
-@pytest.mark.skipif(_has("PIL"), reason="PIL installed; real path covered")
-def test_resize_real_path_raises_cleanly_without_pil(spark):
-    from go_jsonschema_spark.operators import multimodal
-
-    media = multimodal.synth_media(spark, 4)
-    with pytest.raises(NotImplementedError, match="Pillow"):
-        multimodal.resize_images(media, fake=False)
-
-
-def test_resize_real_path_with_pil(spark):
-    pytest.importorskip("PIL")
-    import io
-
-    from PIL import Image
-    from pyspark.sql import functions as F
-
-    from go_jsonschema_spark.operators import multimodal
-
-    buf = io.BytesIO()
-    Image.new("L", (16, 16), 99).save(buf, format="PNG")
-    media = spark.createDataFrame(
-        [("m1", "image", buf.getvalue(), None)], multimodal.MEDIA_SCHEMA
-    )
-    out = multimodal.resize_images(media, width=4, height=4, fake=False).collect()
-    assert len(out) == 1 and len(out[0]["payload"]) == 16
 
 
 # ---------------------------------------------------------------------------

@@ -7,9 +7,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from go_jsonschema_spark.operators.decontam import contamination_hits
-from go_jsonschema_spark.operators.packing import pack_chunks, pack_summary
+from go_jsonschema_spark.operators.packing import pack_chunks
 from go_jsonschema_spark.operators.sampling import (
-    hash_sample, hash_split, stratified_sample,
+    hash_split, stratified_sample, weighted_sample,
 )
 
 
@@ -43,14 +43,15 @@ def test_hash_split_rejects_bad_weights(docs):
 
 
 def test_hash_sample_subset_and_rate(docs):
-    s = hash_sample(docs, "doc_id", 0.2)
+    """A constant weight is a fixed-rate Bernoulli-by-hash sample."""
+    s = weighted_sample(docs, F.lit(0.2))
     ids = {r["doc_id"] for r in s.select("doc_id").collect()}
     all_ids = {r["doc_id"] for r in docs.select("doc_id").collect()}
     assert ids <= all_ids
     assert len(ids) / len(all_ids) == pytest.approx(0.2, abs=0.08)
     # nested property: a higher-rate sample contains the lower-rate one
     ids5 = {r["doc_id"]
-            for r in hash_sample(docs, "doc_id", 0.5).select("doc_id").collect()}
+            for r in weighted_sample(docs, F.lit(0.5)).select("doc_id").collect()}
     assert ids <= ids5
 
 
@@ -86,12 +87,8 @@ def test_pack_chunks_grid_invariants(spark):
             last = start + max(r["n_tok"] - 1, 0)
             assert r["pack_span"] == last // 100 - start // 100 + 1
             start += r["n_tok"]
-    # summary: started tokens add up to the group totals
-    summ = pack_summary(
-        pack_chunks(df, token_col="n_tok", key="doc_id", budget=100,
-                    group_col="source"), group_col="source")
-    tot = {r["source"]: r["t"] for r in summ.groupBy("source")
-           .agg(F.sum("tokens_started").alias("t")).collect()}
+    # every document is packed: packed tokens add up to the group totals
+    tot = {g: sum(r["n_tok"] for r in rs) for g, rs in by_group.items()}
     want = {r["source"]: r["t"] for r in df.groupBy("source")
             .agg(F.sum("n_tok").alias("t")).collect()}
     assert tot == want

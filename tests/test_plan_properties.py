@@ -117,7 +117,7 @@ def test_dedup_selfjoins_reuse_exchange_and_prune(spark):
     prune to (id, text).  Static reuse is only visible with AQE off — at
     runtime AQE performs the same reuse via its stage cache."""
     from go_jsonschema_spark.operators.dedup import (
-        minhash_lsh_pairs, simhash_dup_pairs,
+        minhash_lsh_pairs, simhash_feature_hashes, simhash_pairs_from_hashes,
     )
 
     # other tests may have cached this path — a cache hit swaps the scan
@@ -126,62 +126,27 @@ def test_dedup_selfjoins_reuse_exchange_and_prune(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        for op in (simhash_dup_pairs, minhash_lsh_pairs):
-            plan = _plan(op(docs))
-            assert "ReusedExchange" in plan, op.__name__
+        for name, pairs in (
+            ("simhash", simhash_pairs_from_hashes(
+                simhash_feature_hashes(docs))),
+            ("minhash", minhash_lsh_pairs(docs)),
+        ):
+            plan = _plan(pairs)
+            assert "ReusedExchange" in plan, name
             assert "struct<doc_id:bigint,text:string>" in plan.replace(
                 "doc_id:long", "doc_id:bigint"
-            ), op.__name__
+            ), name
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """Two tables bucketed on the join key → sort-merge join with ZERO
-    Exchange (the co-location contract repeated validations rely on)."""
-    from pyspark.sql import functions as F
-
-    from go_jsonschema_spark.sources.bucketing import (
-        is_bucketed_on, write_bucketed,
-    )
-
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bdb LOCATION '{tmp_path}/wh'")
-    try:
-        orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
-        write_bucketed(orders, "bdb.orders_b", key="o_custkey", buckets=8)
-        write_bucketed(cust, "bdb.cust_b", key="c_custkey", buckets=8)
-        assert is_bucketed_on(spark, "bdb.orders_b", "o_custkey")
-
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            j = spark.table("bdb.orders_b").join(
-                spark.table("bdb.cust_b"),
-                F.col("o_custkey") == F.col("c_custkey"),
-            )
-            plan = _plan(j)
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan  # co-located: no shuffle at all
-            # and the result is right
-            n = j.count()
-            want = orders.join(
-                cust, orders.o_custkey == cust.c_custkey
-            ).count()
-            assert n == want
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS bdb CASCADE")
-
-
 def test_redact_is_fully_native(spark):
     """PII redaction must stay JVM-side: regexp chains, no Python eval."""
-    from go_jsonschema_spark.functions.redact import redact_documents
+    from go_jsonschema_spark.functions.redact import redact_pii
 
     df = spark.createDataFrame([(0, "a@b.co")], "doc_id int, text string")
-    plan = _plan(redact_documents(df))
+    cols = redact_pii(F.col("text"))
+    plan = _plan(df.select("*", *[c.alias(k) for k, c in cols.items()]))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
@@ -275,10 +240,12 @@ def test_simhash_pairs_no_dedup_exchange(spark):
     filter over the two signatures already present — the plan must show
     exactly the banding-join exchange pattern (one Exchange reused for
     both sides) with NO extra exchange for a dropDuplicates."""
-    from go_jsonschema_spark.operators.dedup import simhash_dup_pairs
+    from go_jsonschema_spark.operators.dedup import (
+        simhash_feature_hashes, simhash_pairs_from_hashes,
+    )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = _plan(simhash_dup_pairs(docs))
+    plan = _plan(simhash_pairs_from_hashes(simhash_feature_hashes(docs)))
     # dropDuplicates(a, b) would compile to an aggregate behind an
     # exchange hash-partitioned on the PAIR columns — assert that
     # exchange is gone (the banding/cap exchanges key on blk/bv/id)

@@ -1,14 +1,9 @@
-"""suggest_constraints / suggest_spec (operators/profile.py)."""
+"""suggest_constraints (operators/profile.py)."""
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
-from go_jsonschema_spark import ConstraintSuite
-from go_jsonschema_spark.operators.profile import (
-    suggest_constraints,
-    suggest_spec,
-)
+from go_jsonschema_spark.operators.profile import suggest_constraints
 
 
 @pytest.fixture(scope="module")
@@ -62,29 +57,3 @@ def test_empty_table_no_value_suggestions(spark):
     got = _rows(suggest_constraints(df))
     # types still known from schema; nothing data-derived
     assert got == {("id", "type"): "integer", ("s", "type"): "string"}
-
-
-def test_suggest_spec_self_consistency(table):
-    ts = suggest_spec(table)
-    res = ConstraintSuite(ts, key="id").run(table)
-    assert res.violations.count() == 0
-    assert any(tc["id"] == "unique:id" for tc in ts.table_checks)
-
-
-def test_suggest_spec_self_consistency_on_testdata(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    ts = suggest_spec(docs)
-    assert ConstraintSuite(ts, key="doc_id").run(docs).violations.count() == 0
-
-
-def test_suggested_spec_catches_new_violations(spark, table):
-    ts = suggest_spec(table)
-    drifted = spark.createDataFrame(
-        [(9, "xx", 99, 0.5, "too-long-tag")],
-        ["id", "lang", "score", "ratio", "tag"],
-    )
-    viol = ConstraintSuite(ts, key="id").run(drifted).violations
-    cids = {r["constraint_id"] for r in viol.collect()}
-    # the drifted row breaks lang enum, score enum/max, tag maxLength
-    assert any("lang" in c for c in cids)
-    assert any("tag" in c for c in cids)

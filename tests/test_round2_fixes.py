@@ -288,7 +288,8 @@ def test_lsh_degenerate_bucket_capped(spark):
     import time
 
     from go_jsonschema_spark.operators.dedup import (
-        exact_duplicates, minhash_lsh_pairs, simhash_dup_pairs,
+        exact_duplicates, minhash_lsh_pairs, simhash_feature_hashes,
+        simhash_pairs_from_hashes,
     )
 
     df = spark.range(10_000).select(
@@ -297,7 +298,8 @@ def test_lsh_degenerate_bucket_capped(spark):
     )
     t0 = time.time()
     assert minhash_lsh_pairs(df, max_bucket=256).count() == 0
-    assert simhash_dup_pairs(df, max_bucket=256).count() == 0
+    assert simhash_pairs_from_hashes(
+        simhash_feature_hashes(df), max_bucket=256).count() == 0
     assert time.time() - t0 < 120
     # the exact pass is the right tool for these rows
     assert exact_duplicates(df).count() == 9_999
@@ -476,54 +478,8 @@ def test_typed_compiler_refuses_dynamic_scope_keywords(spark):
 
 
 # ---------------------------------------------------------------------------
-# corrupt-capturing source readers + completeness check
+# completeness check
 # ---------------------------------------------------------------------------
-
-def test_read_jsonl_with_corrupt_capture(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from go_jsonschema_spark.sources.readers import read_with_corrupt_capture
-
-    p = tmp_path / "in.jsonl"
-    p.write_text(
-        '{"doc_id": "1", "n": 10}\n'
-        '{"doc_id": "2", "n": 20}\n'
-        'THIS IS NOT JSON {{{\n'
-        '{"doc_id": "4", "n": "not-a-number"}\n'
-    )
-    schema = T.StructType([
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("n", T.LongType()),
-    ])
-    clean, viol = read_with_corrupt_capture(
-        spark, str(p), schema, key="doc_id"
-    )
-    assert {r["doc_id"] for r in clean.collect()} == {"1", "2"}
-    v = viol.collect()
-    assert len(v) == 2
-    assert all(r["constraint_id"] == "source.malformed:json" for r in v)
-    obs = {r["observed"] for r in v}
-    assert any("NOT JSON" in o for o in obs)
-    assert any("not-a-number" in o for o in obs)
-
-
-def test_read_csv_with_corrupt_capture(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from go_jsonschema_spark.sources.readers import read_with_corrupt_capture
-
-    p = tmp_path / "in.csv"
-    p.write_text("1,10\n2,twenty\n3,30\n")
-    schema = T.StructType([
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("n", T.LongType()),
-    ])
-    clean, viol = read_with_corrupt_capture(
-        spark, str(p), schema, format="csv", key="doc_id"
-    )
-    assert {r["doc_id"] for r in clean.collect()} == {"1", "3"}
-    assert [r["observed"] for r in viol.collect()] == ["2,twenty"]
-
 
 def test_completeness_check(spark):
     suite = ConstraintSuite(

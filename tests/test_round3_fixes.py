@@ -393,34 +393,6 @@ def test_items_fast_path_declined_for_unsupported(spark):
     assert _items_bounds_fast_path({}, F.col("x"), et) is None
 
 
-# -- IVF materialized index: probing = partition pruning ---------------------
-
-def test_ivf_indexed_prunes_partitions(spark, tmp_path):
-    from go_jsonschema_spark.operators.ann import (
-        ivf_write_index, kmeans_centroids, topk_cosine_ivf,
-        topk_cosine_ivf_indexed,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qv = [float(x)
-          for x in e.filter(F.col("vec_id") == 0).first()["embedding"]]
-    cent = kmeans_centroids(e, n_centroids=8)
-    path = str(tmp_path / "ivf_index")
-    ivf_write_index(e, path, cent)
-
-    idx = topk_cosine_ivf_indexed(spark, path, qv, cent, k=10, n_probe=3)
-    inline = topk_cosine_ivf(e, qv, k=10, n_centroids=8, n_probe=3,
-                             centroids=cent)
-    assert [tuple(r) for r in idx.collect()] == \
-           [tuple(r) for r in inline.collect()]
-
-    # the cell filter must reach the SCAN as a partition filter — unprobed
-    # cells are never read
-    plan = idx._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan.split(
-        "PartitionFilters", 1)[1][:200]
-
-
 # -- 3. checkpoint global-phase membership ----------------------------------
 
 def test_global_phase_reruns_on_membership_change(spark, tmp_path):

@@ -153,33 +153,6 @@ def test_pack_greedy_whole_table_single_group(spark):
     assert "__g__" not in pack_greedy(df, budget=100).columns
 
 
-# -- IVF multi-assigned materialized index -----------------------------------
-
-def test_ivf_indexed_multi_assign_matches_inline(spark, tmp_path):
-    """The spilled-posting-list index (each vector in its 2 nearest cell
-    partitions) must return exactly the inline multi-assign results; the
-    reader dedups by id only when told the index is multi-assigned."""
-    from go_jsonschema_spark.operators.ann import (
-        ivf_write_index, kmeans_centroids, topk_cosine_ivf,
-        topk_cosine_ivf_indexed,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qv = [float(x)
-          for x in e.filter(F.col("vec_id") == 0).first()["embedding"]]
-    cent = kmeans_centroids(e, n_centroids=8)
-    path = str(tmp_path / "ivfidx2")
-    ivf_write_index(e, path, cent, n_assign=2)
-    idx = topk_cosine_ivf_indexed(
-        spark, path, qv, cent, k=10, n_probe=3, n_assign=2).collect()
-    inline = topk_cosine_ivf(
-        e, qv, k=10, n_probe=3, n_assign=2, centroids=cent).collect()
-    assert [(r["vec_id"], r["cosine"]) for r in idx] \
-        == [(r["vec_id"], r["cosine"]) for r in inline]
-    # no duplicate ids despite vectors living in 2 probed partitions
-    assert len({r["vec_id"] for r in idx}) == len(idx) == 10
-
-
 # -- non_null_elements storage contract --------------------------------------
 
 def test_non_null_elements_contract(spark):
@@ -240,7 +213,7 @@ def test_gopher_metrics(spark):
 # -- PII redaction -----------------------------------------------------------
 
 def test_redact_pii(spark):
-    from go_jsonschema_spark.functions.redact import redact_documents
+    from go_jsonschema_spark.functions.redact import redact_pii
 
     df = spark.createDataFrame(
         [(0, "mail a.b+c@ex-1.org or b@c.io, host 10.0.0.1, "
@@ -248,7 +221,11 @@ def test_redact_pii(spark):
          (1, "no pii here, just 1.2 numbers and v1.2.3.4.5 dots"),
          (2, None)],
         "doc_id int, text string")
-    out = {r["doc_id"]: r for r in redact_documents(df).collect()}
+    cols = redact_pii(F.col("text"))
+    out = {r["doc_id"]: r for r in df.select(
+        "doc_id", cols["text"].alias("text_redacted"),
+        *[cols[k].alias(k) for k in ("n_email", "n_ipv4", "n_phone")],
+    ).collect()}
     r0 = out[0]
     assert (r0["n_email"], r0["n_ipv4"], r0["n_phone"]) == (2, 1, 2)
     assert r0["text_redacted"] == (

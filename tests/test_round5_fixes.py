@@ -89,45 +89,6 @@ def test_topk_cosine_many_matches_single_query(spark):
             assert got[(qid, rank)] == (r["vec_id"], r["cosine"]), (qid, rank)
 
 
-def test_topk_cosine_many_ivf_indexed_matches_single(spark, tmp_path):
-    from go_jsonschema_spark.operators.ann import (
-        ivf_write_index, kmeans_centroids, topk_cosine_ivf_indexed,
-        topk_cosine_many_ivf_indexed)
-
-    df = _toy_vectors(spark, n=120)
-    cent = kmeans_centroids(df, n_centroids=4, sample=120)
-    idx = str(tmp_path / "ivf")
-    ivf_write_index(df, idx, cent, n_assign=2)
-    qs = df.filter(F.col("vec_id") % 40 == 0)
-    got = {(r["query_id"], r["rank"]): (r["vec_id"], r["cosine"])
-           for r in topk_cosine_many_ivf_indexed(
-               spark, idx, qs, cent, k=5, n_probe=2, n_assign=2).collect()}
-    for qid in (0, 40, 80):
-        qv = [float(x) for x in
-              df.filter(F.col("vec_id") == qid).first()["embedding"]]
-        single = topk_cosine_ivf_indexed(
-            spark, idx, qv, cent, k=5, n_probe=2, n_assign=2).collect()
-        for rank, r in enumerate(single, 1):
-            assert got[(qid, rank)] == (r["vec_id"], r["cosine"]), (qid, rank)
-
-
-def test_topk_cosine_many_ivf_scan_is_partition_pruned(spark, tmp_path):
-    """The union-of-probes filter must reach the scan as PartitionFilters
-    — unprobed cells never read (the property that pays at 10^12 rows)."""
-    from go_jsonschema_spark.operators.ann import (
-        ivf_write_index, kmeans_centroids, topk_cosine_many_ivf_indexed)
-
-    df = _toy_vectors(spark, n=120)
-    cent = kmeans_centroids(df, n_centroids=8, sample=120)
-    idx = str(tmp_path / "ivf_pruned")
-    ivf_write_index(df, idx, cent, n_assign=1)
-    qs = df.filter(F.col("vec_id") == 0)
-    out = topk_cosine_many_ivf_indexed(
-        spark, idx, qs, cent, k=5, n_probe=2, n_assign=1)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan
-
-
 def test_topk_cosine_many_contracts(spark):
     from go_jsonschema_spark.operators.ann import topk_cosine_many
 

@@ -1,20 +1,19 @@
 """Round-7 (optimization round) regression tests.
 
-1. minhash_signature_from_hashes over a bound base-hash column equals
-   the inline minhash_signature — the free-subexpression fix must be a
-   pure plan transformation (identical permutation chain).
+1. minhash_signature_from_hashes over a bound base-hash column NAME
+   equals the signature over the inline hash expression — the
+   free-subexpression fix must be a pure plan transformation (identical
+   permutation chain).
 2. _centroid_scores (one nested-literal zip_with) equals the unrolled
    per-centroid expression form it replaced, bit-for-bit, and
    assign_centroids_multi keeps its int cell ids.
 3. oov_rate refuses a vocabulary wider than max_vocab with an error
    naming the knob (VERDICT r6 item 4 — the bounded-collect
    discipline).
-4. suggest_spec parses scientific-notation numeric bounds (ADVICE r6:
-   '1e-05' has no '.', int() raised).
-5. The default remote-$ref fetcher refuses file:// URLs (ADVICE r6:
+4. The default remote-$ref fetcher refuses file:// URLs (ADVICE r6:
    the allowlist only governs http(s); local reads need an explicit
    caller-supplied fetcher).
-6. pagerank still matches the reference integer fixed-point after the
+5. pagerank still matches the reference integer fixed-point after the
    broadcast gating + eager per-iteration materialization, on a graph
    with dangling nodes, above AND below the broadcast gate.
 """
@@ -27,22 +26,23 @@ from pyspark.sql import functions as F
 
 def test_minhash_bound_hash_signature_equals_inline(spark):
     from go_jsonschema_spark.operators.dedup import (
-        minhash_signature, minhash_signature_from_hashes,
+        minhash_signature_from_hashes,
     )
 
     df = spark.createDataFrame(
         [(1, ["a b c", "b c d", "c d e"]), (2, ["x y z"]), (3, [])],
         "id long, sh array<string>",
     )
-    inline = df.select(
-        "id", minhash_signature(F.col("sh"), 16).alias("sig")).collect()
+    inline = df.select("id", minhash_signature_from_hashes(
+        F.transform(F.col("sh"), lambda s: F.xxhash64(s)), 16)
+        .alias("sig")).collect()
     bound = (
         df.select(
             "id",
             F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("hs"))
         .select(
             "id",
-            minhash_signature_from_hashes(F.col("hs"), 16).alias("sig"))
+            minhash_signature_from_hashes("hs", 16).alias("sig"))
         .collect()
     )
     assert sorted((r["id"], tuple(r["sig"])) for r in inline) == \
@@ -100,19 +100,6 @@ def test_oov_rate_max_vocab_guard(spark):
     # under the cap: unchanged behavior
     out = oov_rate(df, vocab, max_vocab=1000).collect()
     assert out[0]["n_oov"] == 0
-
-
-def test_suggest_spec_scientific_notation_bounds(spark):
-    from go_jsonschema_spark.operators.profile import suggest_spec
-
-    df = spark.createDataFrame(
-        [("a", 1e-05), ("b", 2e-05), ("c", 3e-05)],
-        "k string, tiny double",
-    )
-    ts = suggest_spec(df)  # used to raise ValueError on int('1e-05')
-    spec = ts.columns["tiny"]
-    assert spec["minimum"] == pytest.approx(1e-05)
-    assert spec["maximum"] == pytest.approx(3e-05)
 
 
 def test_default_fetcher_refuses_file_scheme():

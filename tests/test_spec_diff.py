@@ -51,13 +51,13 @@ def test_unkeyed_checks_key_by_index():
 
 
 def test_suggester_vs_deployed_roundtrip(spark):
-    # the workflow spec_diff exists for: suggest a spec from data, diff
+    # the workflow spec_diff exists for: infer a spec from data, diff
     # it against the deployed one, read which constraint ids move
-    from go_jsonschema_spark.operators.profile import suggest_spec
+    from go_jsonschema_spark.infer import infer_table_spec
 
     df = spark.createDataFrame(
         [("a", 1), ("b", 2), ("c", 3)], "doc_id string, v int")
-    suggested = suggest_spec(df, ["v"])
+    suggested, _ = infer_table_spec(df, ["v"])
     deployed = TableSpec(columns={"v": {"type": "integer", "minimum": 0,
                                         "maximum": 2}})
     rows = spec_diff(deployed, suggested)

@@ -1,16 +1,12 @@
-"""tokens.token_frequency + zipf_slope — spectrum correctness, slope
-vs numpy OLS, plan shape (partial aggregation before the exchange)."""
+"""tokens.token_frequency — spectrum correctness and plan shape (partial
+aggregation before the exchange)."""
 
 from __future__ import annotations
 
 import contextlib
 import io
-import math
 
-import numpy as np
-from pyspark.sql import functions as F
-
-from go_jsonschema_spark.operators.tokens import token_frequency, zipf_slope
+from go_jsonschema_spark.operators.tokens import token_frequency
 
 
 def _plan(df) -> str:
@@ -35,25 +31,6 @@ def test_tie_break_by_token_id(spark):
     got = [(r["token"], r["rank"])
            for r in token_frequency(df).orderBy("rank").collect()]
     assert got == [(3, 1), (5, 2)]  # equal counts -> smaller id first
-
-
-def test_zipf_slope_matches_numpy(spark):
-    # construct an exact Zipf-ish spectrum: cnt_r = round(1000 / r)
-    rows = []
-    tok = 0
-    for r in range(1, 21):
-        for _ in range(round(1000 / r)):
-            rows.append(tok)
-        tok += 1
-    df = spark.createDataFrame([(rows,)], "tokens array<int>")
-    freq = token_frequency(df)
-    got = zipf_slope(freq, max_rank=20)
-    pairs = [(math.log(r["rank"]), math.log(r["cnt"]))
-             for r in freq.filter(F.col("rank") <= 20).collect()]
-    x, y = zip(*pairs)
-    exp = np.polyfit(x, y, 1)[0]
-    assert abs(got - exp) < 1e-9
-    assert -1.1 < got < -0.9  # near Zipf's -1 by construction
 
 
 def test_plan_partial_aggregation(spark):

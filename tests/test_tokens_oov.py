@@ -1,8 +1,7 @@
-"""oov_rate / oov_rate_expr (operators/tokens.py)."""
+"""oov_rate (operators/tokens.py)."""
 import pytest
-from pyspark.sql import functions as F
 
-from go_jsonschema_spark.operators.tokens import oov_rate, oov_rate_expr
+from go_jsonschema_spark.operators.tokens import oov_rate
 
 
 @pytest.fixture(scope="module")
@@ -53,14 +52,3 @@ def test_oov_vocab_ids_above_2_53_stay_exact(spark):
         "doc_id string, tokens array<bigint>")
     got = {r["doc_id"]: r["n_oov"] for r in oov_rate(df, vocab).collect()}
     assert got == {"a": 0, "b": 2}  # 2**53 and the NULL element
-
-
-def test_oov_rate_expr_tiny_vocab(spark):
-    df = _df(spark, [("a", [1, 2, 99])])
-    out = df.select(oov_rate_expr(F.col("tokens"), [1, 2, 3]).alias("n"))
-    assert out.collect()[0]["n"] == 1
-
-
-def test_oov_rate_expr_rejects_big_vocab(spark):
-    with pytest.raises(ValueError):
-        oov_rate_expr(F.col("tokens"), list(range(100)))

@@ -132,29 +132,3 @@ def test_integer_rule_property_matches_rational_comparison():
                 # and BIGINT safety at the documented ceiling
                 assert (n - f) * fr.denominator < 2**63
                 assert fr.numerator * n < 2**63
-
-
-def test_suggest_tolerances_self_consistent(spark):
-    from go_jsonschema_spark.operators.profile import suggest_tolerances
-
-    df = _df(spark)  # 33/100 rows fail v.minimum overall
-    base = ConstraintSuite(_spec())
-    tol = suggest_tolerances(df, base)
-    # only the failing constraint gets a budget; clean ones stay strict
-    assert set(tol) == {"v.minimum"}
-    assert tol["v.minimum"] == 0.67  # floor(67/100 * 10^4)/10^4
-    tolerant = ConstraintSuite(TableSpec(
-        columns={"v": {"type": "integer", "minimum": 0}},
-        tolerances=tol))
-    assert tolerant.run(df).verdicts.first()["passed"] is True
-    # margin shrinks the suggested floor
-    assert suggest_tolerances(df, base, margin=0.05)["v.minimum"] == 0.62
-
-
-def test_suggest_tolerances_validation(spark):
-    import pytest as _pytest
-
-    from go_jsonschema_spark.operators.profile import suggest_tolerances
-
-    with _pytest.raises(ValueError, match="quantize"):
-        suggest_tolerances(_df(spark), ConstraintSuite(_spec()), quantize=7)
