@@ -221,8 +221,10 @@ class ResumableValidation:
         ``out_root/batch=<key>/``; per-partition metrics go into the
         checkpoint manifests."""
         pcol = self.partition_col
+        # a NULL partition value sorts first and is its own partition
         parts = sorted(
-            r[0] for r in df.select(pcol).distinct().collect()
+            (r[0] for r in df.select(pcol).distinct().collect()),
+            key=lambda p: (p is not None, p),
         )
         batches = [
             parts[i : i + self.batch_size]
@@ -258,7 +260,11 @@ class ResumableValidation:
             # partitions are never re-read.  ROW-level checks only — the
             # dataset-level checks are global (a per-batch uniqueness scan
             # would miss cross-batch duplicates) and run as their own phase.
-            sub = df.filter(F.col(pcol).isin([*batch]))
+            # ``part IN (NULL, ...)`` never holds: NULL is matched apart
+            vals = [p for p in batch if p is not None]
+            cond = F.col(pcol).isin(vals)
+            sub = df.filter(cond | F.col(pcol).isNull()
+                            if len(vals) < len(batch) else cond)
             res = row_suite.run(
                 sub, partition_col=pcol, dims=dims, persist_violations=True
             )

@@ -5,10 +5,11 @@ The Spark lifecycle replacing the reference's per-document loop
 
     spec ──(driver: normalize → resolve refs → compile)──► ConstraintPlan
     DataFrame scan ──► ONE select() computing every row predicate
-      ──► failing rows carry their violation entries (array, un-exploded)
-      ──► violations = explode(entries); verdicts = per-partition row
-          counts (single-column scan) ⋈ aggregates over the SMALL
-          violation set — the predicate forest is never evaluated twice
+      ──► one narrow frame over every row: partition, predicate flags,
+          and — on failing rows only — key and violation entries
+      ──► violations = explode(entries); verdicts = the kernel's one
+          aggregation of the flags — persisted, the predicate forest is
+          evaluated once per row
     foreign_key checks are membership flags in that same select (a left
     join against the distinct dim keys); the other table checks (unique /
     stats / drift) run as separate aggregate stages over narrow
@@ -17,8 +18,8 @@ The Spark lifecycle replacing the reference's per-document loop
 All pass/fail arithmetic lives in one :class:`VerdictKernel` per compiled
 plan: the predicate projection, the violation-entries array, the fail
 counters and the verdict columns.  Every verdict entry point is that
-kernel plus a grouping — ``run()`` (partition column, counters over the
-failing rows), ``verdict_counts`` (partition column, counters over the
+kernel plus a grouping — ``run()`` (partition column, counters over its
+all-row frame), ``verdict_counts`` (partition column, counters over the
 scan) and the streaming ``windowed_verdicts`` (event-time window) — so
 batch and stream agree by construction ("a batch is a bounded stream").
 
@@ -121,7 +122,7 @@ class VerdictKernel:
     then selects :attr:`verdict` over ``(n_rows, n_fail, __n{i}__)``.
 
     A predicate that evaluates to NULL counts as passing everywhere —
-    it never survives a violation filter, and every counter is
+    it never yields a violation entry, and every counter is
     ``sum(~coalesce(col, true))``.
 
     The foreign-key checks of the plan enter only :attr:`entries` and
@@ -138,7 +139,7 @@ class VerdictKernel:
     # filtered out
     entries: Column
     emit: Column  # a row fails some constraint or fk
-    doc_id: Column  # key cast to string, aliased doc_id
+    doc_id: Column  # key cast to string
     n_rows: Column  # count(1) aliased n_rows
     counters: list[Column]  # n_fail, __n{i}__ aggregates
     # n_rows, n_fail, fail_by_constraint, n_pass, passed over the counters
@@ -166,7 +167,9 @@ class SuiteResult:
     violations: DataFrame  # (doc_id, constraint_id, observed)
     verdicts: DataFrame  # per-partition pass/fail + counts
     constraint_ids: list[str] = field(default_factory=list)
-    row_violations: DataFrame | None = None  # persisted handle (unpersist me)
+    # the persisted all-row frame behind violations and verdicts (one
+    # row per input row); unpersist it when done
+    row_violations: DataFrame | None = None
     fk_constraint_ids: list[str] = field(default_factory=list)  # fk checks
     # internal boolean column of each constraint id / fk check in
     # ``checked`` (the kernel's names, run()'s __fk{i}__ flags)
@@ -415,10 +418,8 @@ class ConstraintSuite:
             return F.sum((~F.coalesce(F.col(col), F.lit(True)))
                          .cast("long")).alias(alias)
 
-        # a group no counted row reached (run()'s left join) counts zero
-        n_rows = F.col("n_rows")
-        n_fail, *n_cid = (F.coalesce(F.col(c), F.lit(0))
-                          for c in ["n_fail", *counts])
+        # every group holds a row, so no counter is NULL
+        n_rows, n_fail, *n_cid = map(F.col, ["n_rows", "n_fail", *counts])
         fail_map = (
             F.when(n_fail > 0, F.map_from_arrays(
                 F.array(*[F.lit(cid) for cid in ids]), F.array(*n_cid)))
@@ -440,7 +441,7 @@ class ConstraintSuite:
             entries=entries,
             emit=functools.reduce(operator.or_, [
                 ~F.col(c) for c in ["__pass__", *fk_names]]),
-            doc_id=F.col(self.key).cast("string").alias("doc_id"),
+            doc_id=F.col(self.key).cast("string"),
             n_rows=F.count(F.lit(1)).alias("n_rows"),
             counters=[n_failed("__pass__", "n_fail"),
                       *map(n_failed, names, counts)],
@@ -816,15 +817,18 @@ class ConstraintSuite:
         """Build the lazy result DataFrames.  ``partition_col`` keys the
         per-partition verdicts (defaults to a constant — whole-table).
 
-        One-pass design (SURVEY.md §3.4): the heavy predicate evaluation
-        over the full table appears in exactly ONE plan — the row-violation
-        extraction.  Per-partition verdicts are then derived from (a) the
-        small violations set and (b) a column-pruned ``groupBy(part).count``
-        that reads a single column from the scan; the predicates are never
-        re-evaluated for the verdict aggregation.  With
-        ``persist_violations`` the row-violation DF is persisted
-        (MEMORY_AND_DISK) so violations + verdicts together still cost one
-        predicate pass."""
+        One-pass design (SURVEY.md §3.4): the predicates are evaluated in
+        ONE narrow frame over every row — the partition value, ``__pass__``,
+        the ``__c{i}__`` flags, and ``doc_id`` and the violation
+        ``entries`` array, both NULL on a row that fails nothing.
+        Violations explode ``entries``; verdicts are
+        :meth:`VerdictKernel.verdicts` of the frame by partition, the same
+        aggregation as :meth:`verdict_counts`.  With
+        ``persist_violations`` the frame is persisted (MEMORY_AND_DISK),
+        so violations + verdicts together cost one predicate pass and the
+        verdicts read only the cache.  Trade-off: the persisted frame holds
+        O(rows) narrow columns (booleans, the partition value, NULLs), not
+        O(failing rows)."""
         k = self.kernel(df)
         dims = dims or {}
 
@@ -859,54 +863,42 @@ class ConstraintSuite:
         part = F.col(partition_col) if partition_col else F.lit("__all__")
         checked = k.project(fact)
 
-        # violations: one row per FAILING source row with the array of its
-        # failed constraints (kept un-exploded so row identity survives —
-        # a nondeterministic row id would be re-evaluated per exploded row
-        # and doc_id may legitimately repeat via duplicate rows); the
-        # exploded per-constraint view and the per-partition counts all
-        # derive from this one DF.  A row emitted only for an fk has
-        # __pass__ true and adds 0 to every kernel counter.
-        failed_rows = checked.filter(k.emit).select(
-            k.doc_id,
+        # one narrow frame over EVERY row: the partition, the predicate
+        # booleans, and — only where a row fails something — its key and
+        # the array of its failed constraints (kept un-exploded so row
+        # identity survives: a nondeterministic row id would be
+        # re-evaluated per exploded row and doc_id may legitimately repeat
+        # via duplicate rows).  Violations and verdicts both read it, so
+        # with persist_violations the predicates run once per row, below
+        # the cache.  A row emitted only for an fk has __pass__ true and
+        # adds 0 to every kernel counter.
+        rows = checked.select(
             part.alias("__part__"),
             "__pass__",
             *k.names,
-            k.entries.alias("entries"),
+            F.when(k.emit, k.doc_id).alias("doc_id"),
+            F.when(k.emit, k.entries).alias("entries"),
         )
         if persist_violations:
             from pyspark import StorageLevel
 
-            failed_rows = failed_rows.persist(StorageLevel.MEMORY_AND_DISK)
-        row_viol = failed_rows.select(
+            rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
+        violations = rows.select(
             "doc_id", F.explode("entries").alias("v")
         ).select("doc_id", "v.constraint_id", "v.observed")
 
         # the other table checks → more violations (the fk checks
         # already produced theirs in the predicate pass)
-        viol_parts = [row_viol]
         tv = self._table_violations(
             df, [tc for tc in self.spec.table_checks
                  if tc["kind"] != "foreign_key"], dims)
         if tv is not None:
-            viol_parts.append(tv)
-
-        violations = viol_parts[0]
-        for v in viol_parts[1:]:
-            violations = violations.unionByName(v)
-
-        # verdicts WITHOUT re-running predicates: row counts come from a
-        # single-column scan; the kernel's counters aggregate the (small)
-        # failing-row set, which carries the predicate booleans.  A
-        # partition with no failing rows finds no counts row: all zero.
-        row_counts = df.groupBy(part.alias("partition")).agg(k.n_rows)
-        fail_counts = failed_rows.groupBy(
-            F.col("__part__").alias("partition")).agg(*k.counters)
-        verdicts = row_counts.join(fail_counts, "partition", "left").select(
-            "partition", *k.verdict)
+            violations = violations.unionByName(tv)
 
         return SuiteResult(
-            checked, violations, verdicts, k.ids,
-            row_violations=failed_rows if persist_violations else None,
+            checked, violations,
+            k.verdicts(rows, F.col("__part__"), "partition"), k.ids,
+            row_violations=rows if persist_violations else None,
             fk_constraint_ids=[tc["id"] for tc in k.fk_checks],
             check_cols=k.names,
             fk_cols=k.fk_names,

@@ -75,14 +75,46 @@ def test_flagship_violations_single_exchange_no_join(spark, seq_parquet):
     assert len(re.findall(r"^\(\d+\) Range$", plan, re.M)) == 1
 
 
-def test_verdict_rowcount_scan_is_single_column(spark, seq_parquet):
-    suite = ConstraintSuite(synth.sequences_table_spec(), key="doc_id")
-    res = suite.run(
-        seq_parquet, partition_col="part",
-        dims={"sources_dim": synth.sources_dim(spark)},
-    )
-    plan = _plan(res.verdicts)
-    assert "struct<part:int>" in plan  # n_rows side reads ONE column
+def _outside_cache(plan: str) -> str:
+    """``plan`` without the cached plans below its InMemoryRelation nodes."""
+    out, cached = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cached is not None and depth > cached:
+            continue
+        cached = depth if "InMemoryRelation" in line else None
+        out.append(line)
+    return "\n".join(out)
+
+
+def test_persisted_run_evaluates_predicates_once(spark, seq_parquet):
+    """Persisted, ``run()`` evaluates every predicate once per row below
+    the cache: its verdicts are one aggregation of the cached flags (no
+    parquet read, one exchange, no join) and its violations plan parses
+    each JSON column once."""
+    seq = ConstraintSuite(synth.sequences_table_spec(), key="doc_id")
+    json_suite, events = _json_suite(spark)
+    runs = [
+        seq.run(seq_parquet, partition_col="part",
+                dims={"sources_dim": synth.sources_dim(spark)},
+                persist_violations=True),
+        json_suite.run(events, persist_violations=True),
+    ]
+    try:
+        for res in runs:
+            plan = _outside_cache(
+                res.verdicts._jdf.queryExecution().executedPlan().toString())
+            assert set(re.findall(r"\w*Scan\b", plan)) == {
+                "InMemoryTableScan"}
+            assert plan.count("Exchange ") == 1
+            assert "Join" not in plan
+        plan = runs[1].violations._jdf.queryExecution().executedPlan(
+            ).toString()
+        for col in ("props", "attrs"):
+            assert len(re.findall(rf"from_json\([^#]*?, {col}#\d+", plan)) == 1
+    finally:
+        for res in runs:
+            res.row_violations.unpersist()
 
 
 def test_filters_push_to_parquet(spark, seq_parquet):
@@ -275,13 +307,9 @@ def test_pmi_and_vocab_overlap_native_plans(spark):
     assert "n_chars" not in vo_plan
 
 
-def test_json_columns_parse_once_without_python(spark):
-    """``kind: json`` columns of the props class (typed numbers, a string
-    enum, a number array) and the attrs class (closed root, an array of
-    strings, an optional number) stay on the native path: no Python eval
-    operator, no whole-column ``parse_json``/``try_parse_json``, and the
-    counts plan — which evaluates each predicate once — holds exactly one
-    ``from_json`` per JSON column."""
+def _json_suite(spark):
+    """A suite over a props-class and an attrs-class ``kind: json``
+    column, and two events to run it on."""
     from go_jsonschema_spark.spec import TableSpec
 
     props = {
@@ -315,6 +343,17 @@ def test_json_columns_parse_once_without_python(spark):
         "props": {"kind": "json", "schema": props},
         "attrs": {"kind": "json", "schema": attrs},
     }), key="event_id")
+    return suite, df
+
+
+def test_json_columns_parse_once_without_python(spark):
+    """``kind: json`` columns of the props class (typed numbers, a string
+    enum, a number array) and the attrs class (closed root, an array of
+    strings, an optional number) stay on the native path: no Python eval
+    operator, no whole-column ``parse_json``/``try_parse_json``, and the
+    counts plan — which evaluates each predicate once — holds exactly one
+    ``from_json`` per JSON column."""
+    suite, df = _json_suite(spark)
     res = suite.run(df)
     counts = suite.verdict_counts(df)
     for out in (res.violations, res.verdicts, counts):

@@ -1,8 +1,8 @@
 """One verdict kernel: every entry point that reports verdicts —
-``run().verdicts``, ``verdict_counts`` over a batch, ``verdict_counts``
-over an AvailableNow stream of the same rows, and the per-partition
-metrics ``ResumableValidation`` writes into its manifests — gives the same
-numbers for every spec shape."""
+``run().verdicts`` (persisted or not), ``verdict_counts`` over a batch,
+``verdict_counts`` over an AvailableNow stream of the same rows, and the
+per-partition metrics ``ResumableValidation`` writes into its manifests —
+gives the same numbers for every spec shape."""
 
 from __future__ import annotations
 
@@ -67,8 +67,17 @@ def _folded_fk(spark):
     return suite, df, dims
 
 
+def _null_part(spark):
+    # a NULL partition value is a group of its own, with its failures
+    rows = [("a", -1, None), ("b", 1, None), ("c", 2, 1), ("d", 3, 1)]
+    df = spark.createDataFrame(rows, "doc_id string, x int, part int")
+    suite = ConstraintSuite(TableSpec(
+        columns={"x": {"type": "integer", "minimum": 0}}))
+    return suite, df, None
+
+
 _CASES = {"strict": _strict, "tolerant": _tolerant, "scoped": _scoped,
-          "folded_fk": _folded_fk}
+          "folded_fk": _folded_fk, "null_part": _null_part}
 
 
 def _by_part(rows, cols):
@@ -87,6 +96,10 @@ def test_entry_points_agree(spark, tmp_path, case):
                     .verdicts.collect(), cols)
     got_vc = _by_part(
         suite.verdict_counts(batch, partition_col="part").collect(), cols)
+    persisted = suite.run(batch, partition_col="part", dims=dims,
+                          persist_violations=True)
+    got_persisted = _by_part(persisted.verdicts.collect(), cols)
+    persisted.row_violations.unpersist()
 
     stream = spark.readStream.schema(batch.schema).parquet(src)
     qname = f"verdict_kernel_{case}"
@@ -105,11 +118,17 @@ def test_entry_points_agree(spark, tmp_path, case):
 
     assert any(v["n_fail"] for v in want.values()), "case must fail rows"
     assert got_vc == want
+    assert got_persisted == want
     assert got_stream == want
     assert got_rv == {p: {c: v[c] for c in _GATE} for p, v in want.items()}
     if case == "tolerant":
         assert {p: v["passed"] for p, v in want.items()} == {
             "a": True, "b": False}
+    if case == "null_part":
+        assert want["None"] == {"n_rows": 2, "n_fail": 1, "n_pass": 1,
+                                "passed": False,
+                                "fail_by_constraint": {"x.minimum": 1,
+                                                       "x.type": 0}}
     if case == "folded_fk":
         assert want["p1"] == {"n_rows": 3, "n_fail": 0, "n_pass": 3,
                               "passed": True, "fail_by_constraint": None}
