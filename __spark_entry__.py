@@ -173,10 +173,11 @@ def _q_streaming_windowed_verdicts(spark: SparkSession, sf: str) -> DataFrame:
 
 def _q_streaming_dup_keys(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming DATASET-level uniqueness (VERDICT r4 item 4): running
-    per-key counts via ``applyInPandasWithState`` over an AvailableNow
-    run, folded with max(n_dup) per key (update mode re-emits growing
-    counts), locked against the identical batch ``dup_custkeys_orders``
-    DuckDB oracle — closes the last batch-vs-stream surface gap."""
+    per-key counts from one native update-mode ``count`` aggregation over
+    an AvailableNow run, folded with max(n_dup) per key (update mode
+    re-emits growing counts), locked against the identical batch
+    ``dup_custkeys_orders`` DuckDB oracle — closes the last
+    batch-vs-stream surface gap."""
     from go_jsonschema_spark.streaming.validate import stream_duplicate_keys
 
     qname = "streaming_dup_keys_mem"

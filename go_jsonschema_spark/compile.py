@@ -18,15 +18,18 @@ exactly as JSON Schema keywords ignore non-matching types.
 
 JSON-string columns go through functions/json_native.py (one native
 ``from_json`` parse) when the schema is static, and through
-:func:`json_column_predicate` otherwise — an Arrow-batched pandas UDF
-wrapping the parity interpreter (interp.py).
+:func:`json_column_predicate` otherwise.  Where Catalyst lacks the
+semantic — dynamic JSON, ``unevaluated*``/dynamic-ref keyword groups,
+ECMA-only patterns, Python-side formats — the value crosses the one
+Python boundary, :func:`_arrow_judge`: an Arrow-batched pandas UDF
+running the closure-compiled evaluator (interp_compile.py).
 """
 
 from __future__ import annotations
 
 import functools
 import operator
-from typing import Any
+from typing import Any, Callable
 
 import pandas as pd
 from pyspark.sql import Column, functions as F, types as T
@@ -309,7 +312,7 @@ def compile_predicate(
             preds.append(_null_safe(col, F.length(col) >= schema["minLength"]))
         if "pattern" in schema:
             # rlike (Java dialect) by default; patterns Java rejects are
-            # routed through the ECMA batch UDF (functions/regex.py — the
+            # judged by _arrow_judge below (functions/regex.py — the
             # helpers.go:69-86 translation, detected by JVM test-compile)
             from go_jsonschema_spark.functions.regex import (
                 ecma_pattern_predicate,
@@ -607,52 +610,73 @@ def _value_compatible(v: Any, dtype: T.DataType) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Dynamic JSON columns — Arrow-batched interpreter UDF
+# The Python boundary — one Arrow-batched judge
 # ---------------------------------------------------------------------------
+
+def _arrow_judge(
+    schema: Any, *, typed: bool = False, rest: Any = None, draft: int = 7,
+    registry: dict[str, Any] | None = None, assert_formats: bool = True,
+) -> Callable[[Column], Column]:
+    """The one pandas UDF on the validation path, for what Catalyst lacks.
+
+    ``schema`` is CLOSURE-COMPILED (interp_compile.py, the setupValidators
+    analogue) on the first Arrow batch of each Python task and reused for
+    every later batch — never a per-row pyspark UDF.  The value crosses as
+    JSON text: a ``typed`` column as ``to_json(struct(col AS v))`` with
+    null fields kept, where NULL passes (keywords are vacuous on NULL);
+    otherwise the column IS the JSON text, and NULL or unparseable text is
+    invalid (the reference's empty/garbage handling, validators.go:55-62).
+    With a ``rest`` schema the verdict is ``schema(v) or not rest(v)``:
+    the engine's keyword-group attribution."""
+    import json as _json
+
+    SchemaSpec(schema)  # a malformed schema raises here, not in a worker
+    cell: list = []  # compile lazily inside the worker, once
+
+    @F.pandas_udf(T.BooleanType())
+    def judge(s: pd.Series) -> pd.Series:
+        if not cell:
+            from go_jsonschema_spark.interp_compile import compile_validator
+
+            # built here, not pickled: SchemaSpec indexes nodes by id()
+            spec = SchemaSpec(schema)
+            for k, v in (registry or {}).items():
+                spec.registry.setdefault(k, SchemaSpec(v))
+            compiled = functools.partial(
+                compile_validator, spec=spec, draft=draft,
+                registry=spec.registry, assert_formats=assert_formats)
+            cell.append((compiled(schema),
+                         None if rest is None else compiled(rest)))
+        full, rest_ok = cell[0]
+        out = []
+        for raw in s:
+            try:
+                v = _json.loads(raw)
+            except (ValueError, TypeError):  # NULL or unparseable text
+                out.append(False)
+                continue
+            if typed:
+                v = v["v"]
+                if v is None:
+                    out.append(True)
+                    continue
+            out.append(full(v) or (rest_ok is not None and not rest_ok(v)))
+        return pd.Series(out)
+
+    if not typed:
+        return judge
+    return lambda col: judge(
+        F.to_json(F.struct(col.alias("v")), {"ignoreNullFields": "false"}))
+
 
 def json_column_predicate(
     schema: Any, *, draft: int = 7, assert_formats: bool = True
-):
-    """Pandas UDF: validate a column of JSON *strings* against ``schema``.
+) -> Callable[[Column], Column]:
+    """Predicate over a column of JSON *strings*: ``schema`` judged in
+    :func:`_arrow_judge`.
 
     The slow-path escape hatch for truly dynamic payloads (e.g. a JSON
     column whose schema uses ``patternProperties``, ``propertyNames`` or
     combinators — static object schemas take the native path in
-    functions/json_native.py): the spec is CLOSURE-COMPILED once per
-    Python worker (interp_compile.py — the setupValidators analogue) and
-    runs once per Arrow batch over ~10k parsed values — never a per-row
-    pyspark UDF.  Unparseable JSON is invalid, matching the reference's
-    empty/garbage handling (validators.go:55-62)."""
-    import json as _json
-
-    from go_jsonschema_spark.interp_compile import compile_validator
-    from go_jsonschema_spark.spec import SchemaSpec
-
-    spec = SchemaSpec(schema)
-    cell: list = []  # compile lazily inside the worker, once
-
-    @F.pandas_udf(T.BooleanType())
-    def _judge(s: pd.Series) -> pd.Series:
-        if not cell:
-            cell.append(
-                compile_validator(
-                    schema, spec=spec, draft=draft,
-                    assert_formats=assert_formats,
-                )
-            )
-        validate = cell[0]
-        out = []
-        for raw in s:
-            if raw is None:
-                out.append(False)
-                continue
-            try:
-                v = _json.loads(raw)
-            except (ValueError, TypeError):
-                out.append(False)
-                continue
-            out.append(validate(v))
-        return pd.Series(out)
-
-    return _judge
-
+    functions/json_native.py).  Unparseable JSON is invalid."""
+    return _arrow_judge(schema, draft=draft, assert_formats=assert_formats)

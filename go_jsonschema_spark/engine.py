@@ -33,12 +33,15 @@ superset of the reference's verdicts (SURVEY.md §4.1).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any, Callable
+from typing import Any
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from go_jsonschema_spark.compile import CompileError, compile_predicate
+from go_jsonschema_spark.compile import (
+    CompileError,
+    _arrow_judge,
+    compile_predicate,
+)
 from go_jsonschema_spark.spec import SchemaSpec, SpecError, TableSpec
 
 __all__ = ["ConstraintSuite", "SuiteResult", "ConstraintPlan"]
@@ -224,69 +227,6 @@ def _observed_col(col: Column, dtype: T.DataType) -> Column:
     if isinstance(dtype, (T.MapType, T.StructType)):
         return F.substring(F.to_json(col), 1, 256)
     return F.substring(col.cast("string"), 1, 256)
-
-
-def _interp_group_judge(
-    group: tuple[str, ...], full: dict, registry_raw: dict[str, Any],
-    draft: int,
-) -> Callable[[pd.Series], pd.Series]:
-    """The Arrow-batch function behind :func:`_interp_group_predicate`.
-    Both validators are compiled on the first batch and reused for every
-    later batch of the task (compile.json_column_predicate's ``cell``)."""
-    import json as _json
-
-    cell: list = []  # compile lazily inside the worker, once
-
-    def judge(s: pd.Series) -> pd.Series:
-        if not cell:
-            from go_jsonschema_spark.interp_compile import compile_validator
-            from go_jsonschema_spark.spec import SchemaSpec as _SS
-
-            spec = _SS(full)
-            for k, v in registry_raw.items():
-                spec.registry.setdefault(k, _SS(v))
-            rest = {k: v for k, v in full.items() if k not in group}
-            cell.append((
-                compile_validator(full, spec=spec, draft=draft,
-                                  registry=spec.registry),
-                compile_validator(rest, spec=spec, draft=draft,
-                                  registry=spec.registry),
-            ))
-        v_full, v_rest = cell[0]
-        out = []
-        for raw in s:
-            if raw is None:
-                out.append(True)  # null guard (validators.go:55-62)
-                continue
-            v = _json.loads(raw).get("v")
-            out.append(True if v is None else (v_full(v) or not v_rest(v)))
-        return pd.Series(out)
-
-    return judge
-
-
-def _interp_group_predicate(
-    group: tuple[str, ...], full: dict, registry_raw: dict[str, Any],
-    draft: int, col: Column,
-) -> Column:
-    """Interpreter-backed fallback for keyword groups the typed compiler
-    refuses (unevaluated*, $recursiveRef/$dynamicRef need annotation
-    collection / a dynamic scope no columnar expression carries).
-
-    These keywords are non-compositional — what counts as "unevaluated"
-    depends on the SIBLING applicators — so the group cannot be judged in
-    isolation.  The predicate therefore attributes the failure: it fails
-    exactly when the full schema fails but the schema WITHOUT this group
-    passes, keeping the per-keyword violation granularity honest.  The
-    typed value crosses to the Python worker as JSON inside an Arrow
-    batch and is judged by the closure-compiled interpreter — so valid
-    2019+ specs still plan() instead of raising (ADVICE r2)."""
-    judge = F.pandas_udf(T.BooleanType())(
-        _interp_group_judge(group, full, registry_raw, draft))
-    # to_json keeps null fields so the worker can tell null from absent
-    wrapped = F.to_json(F.struct(col.alias("v")),
-                        {"ignoreNullFields": "false"})
-    return F.when(col.isNull(), F.lit(True)).otherwise(judge(wrapped))
 
 
 class ConstraintSuite:
@@ -568,11 +508,15 @@ class ConstraintSuite:
                     pred = compile_predicate(sub, col, dt, draft=draft,
                                              spec=sspec)
                 except CompileError:
-                    # typed compiler refuses this group (unevaluated*,
-                    # dynamic refs) → interpreter fallback, same chooser
-                    # shape as json_column_predicate_auto
-                    pred = _interp_group_predicate(
-                        tuple(sub), schema, registry_raw, draft, col)
+                    # the typed compiler refuses unevaluated* and dynamic
+                    # refs, which read their SIBLING applicators: judge
+                    # the whole schema in Python, and fail the group
+                    # exactly when the schema fails but the schema
+                    # without the group passes (per-keyword attribution)
+                    rest = {k: v for k, v in schema.items() if k not in sub}
+                    pred = _arrow_judge(
+                        schema, typed=True, rest=rest, draft=draft,
+                        registry=registry_raw)(col)
                 preds.append((cid, wrap(pred)))
                 observed[cid] = _observed_col(col, dt)
 
@@ -883,9 +827,13 @@ class ConstraintSuite:
             from pyspark import StorageLevel
 
             rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
+        # explode_outer + the NULL filter, not explode: Spark infers
+        # size(entries) > 0 from explode and pushes it below the
+        # predicate Project, judging a failing row twice unpersisted
         violations = rows.select(
-            "doc_id", F.explode("entries").alias("v")
-        ).select("doc_id", "v.constraint_id", "v.observed")
+            "doc_id", F.explode_outer("entries").alias("v")
+        ).where("v IS NOT NULL").select(
+            "doc_id", "v.constraint_id", "v.observed")
 
         # the other table checks → more violations (the fk checks
         # already produced theirs in the predicate pass)

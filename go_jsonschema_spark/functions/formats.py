@@ -1,17 +1,18 @@
 """String-format predicates (the 19 formats of the reference's
 ``validateFormat``, /root/reference/validators.go:656-857).
 
-Strategy per SURVEY.md §2.3: formats with a clean regex/native expression
-stay JVM-side (``rlike`` / ``to_date`` try-parse); the rest run the parity
-interpreter's Python checkers inside ONE Arrow-batched pandas UDF shared by
-all such formats (dispatch on a constant, so the Python worker is hit once
-per batch regardless of how many format constraints a spec has).
+Strategy per SURVEY.md §2.3: formats with a clean regex expression stay
+JVM-side (``rlike``); the rest are judged as ``{"format": f}`` by the one
+Arrow-batched judge (compile._arrow_judge), whose closure compiler runs
+the interpreter's checkers (``interp._FORMAT_CHECKS``).  Every such
+constraint in a projection shares one Arrow evaluation node, so the
+Python worker is hit once per batch.  ``date`` keeps its ``rlike`` as a
+cheap pre-filter before the calendar-exact Python check.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column, functions as F, types as T
+from pyspark.sql import Column, functions as F
 
 # JVM-side formats: Java-regex equivalents of the reference's precompiled
 # patterns (validators.go:650-654).
@@ -44,31 +45,6 @@ _PYTHON_FORMATS = frozenset(
     }
 )
 
-_batch_checker = None
-
-
-def _get_batch_checker():
-    """One shared pandas UDF ``(value, format) -> bool`` for Python-side
-    formats — hoisted module-level so ``re.compile`` work is done once per
-    worker (the reference precompiles at parse time, parser.go:181-193)."""
-    global _batch_checker
-    if _batch_checker is None:
-        from go_jsonschema_spark.interp import _FORMAT_CHECKS
-
-        @F.pandas_udf(T.BooleanType())
-        def _check(values: pd.Series, fmts: pd.Series) -> pd.Series:
-            out = []
-            for v, f in zip(values, fmts):
-                if v is None:
-                    out.append(True)  # NULL handled by type checks
-                    continue
-                chk = _FORMAT_CHECKS.get(f)
-                out.append(True if chk is None else bool(chk(v)))
-            return pd.Series(out)
-
-        _batch_checker = _check
-    return _batch_checker
-
 
 def format_predicate(fmt: str, col: Column) -> Column:
     """Boolean predicate: does string ``col`` satisfy format ``fmt``?
@@ -78,8 +54,10 @@ def format_predicate(fmt: str, col: Column) -> Column:
     if fmt in _NATIVE_REGEX and fmt not in _PYTHON_FORMATS:
         return col.rlike(_NATIVE_REGEX[fmt])
     if fmt in _PYTHON_FORMATS:
-        checker = _get_batch_checker()
-        pred = checker(col, F.lit(fmt))
+        from go_jsonschema_spark.compile import _arrow_judge
+
+        pred = _arrow_judge({"format": fmt}, typed=True,
+                            assert_formats=True)(col)
         if fmt in _NATIVE_REGEX:
             # cheap JVM regex pre-filter AND exact Python check
             return col.rlike(_NATIVE_REGEX[fmt]) & pred

@@ -61,7 +61,7 @@ fall back to the UDF path via :func:`json_column_predicate_auto`):
   non-nullable (a VARIANT leaf decodes scalars only); arrays have one
   ``items`` schema; property names differ case-insensitively (struct
   field access ignores case);
-* no ``pattern`` that needs the ECMA batch UDF and no ``format`` checked
+* no ``pattern`` that needs the Arrow-batched judge and no ``format`` checked
   in Python (a Python UDF cannot run inside the binding lambda);
 * ``integer`` needs draft ≥ 6 (a parsed ``1.0`` and ``1`` are the same
   double, and draft 4 says only the latter is an integer).

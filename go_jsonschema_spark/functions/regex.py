@@ -7,13 +7,14 @@ default — but some ECMA patterns are Java *compile errors* (named groups
 with underscores, Annex-B literal braces, ...).  The reference translates a
 known-construct list (/root/reference/helpers.go:69-86); we detect the gap
 precisely instead: test-compile the pattern with ``java.util.regex`` via
-the active session's JVM, and only patterns Java rejects are routed to an
-Arrow-batched pandas UDF running the interpreter's ECMA shim
+the active session's JVM, and only patterns Java rejects are judged as
+``{"pattern": p}`` by the one Arrow-batched judge (compile._arrow_judge),
+whose closure compiler runs the interpreter's ECMA shim
 (interp.compile_ecma_regex — ``\\cX`` control escapes + ``(?<name>`` →
-``(?P<name>`` translation).
+``(?P<name>`` translation).  A pattern the shim cannot compile passes.
 
-The routed predicate is a documented slow path: one pattern per UDF, batch
-evaluation, regex compiled once per worker — never per row.
+The routed predicate is a documented slow path: batch evaluation, the
+pattern compiled once per Python task — never per row.
 
 Dialect classes (``\\w \\W \\d \\D \\s \\S \\b \\B``) compile in BOTH
 dialects but diverge on non-ASCII input: ``java.util.regex`` evaluates
@@ -34,10 +35,9 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
-from pyspark.sql import Column, functions as F, types as T
+from pyspark.sql import Column
 
-__all__ = ["java_regex_ok", "ecma_rlike", "ecma_pattern_predicate",
+__all__ = ["java_regex_ok", "ecma_pattern_predicate",
            "has_dialect_classes", "routes_to_udf",
            "set_unicode_class_routing"]
 
@@ -106,38 +106,22 @@ def java_regex_ok(pattern: str) -> bool:
     return ok
 
 
-def ecma_rlike(col: Column, pattern: str) -> Column:
-    """ECMA-dialect ``rlike``: Arrow-batched pandas UDF over the
-    interpreter's translated+cached regex.  Patterns the shim cannot
-    compile at all validate as True (the reference skips those cases too,
-    validate_test.go:261-263)."""
-
-    @F.pandas_udf(T.BooleanType())
-    def _match(s: pd.Series) -> pd.Series:
-        from go_jsonschema_spark.interp import compile_ecma_regex
-
-        rx = compile_ecma_regex(pattern)
-        if rx is None:
-            return pd.Series([True] * len(s), dtype=object)
-        return s.map(lambda v: None if v is None else bool(rx.search(v)))
-
-    return _match(col)
-
-
 def ecma_pattern_predicate(col: Column, pattern: str) -> Column:
     """``pattern`` keyword predicate with dialect routing: native ``rlike``
-    when Java accepts the pattern, the ECMA batch UDF otherwise.  With
+    when Java accepts the pattern, the one Arrow-batched judge otherwise.  With
     :func:`set_unicode_class_routing` on, patterns containing dialect
     classes (``\\w``/``\\d``/``\\s``/``\\b`` …) also take the shim so
     non-ASCII input is classified the way the reference's converted
     patterns classify it (helpers.go:69-86)."""
     if routes_to_udf(pattern):
-        return ecma_rlike(col, pattern)
+        from go_jsonschema_spark.compile import _arrow_judge
+
+        return _arrow_judge({"pattern": pattern}, typed=True)(col)
     return col.rlike(pattern)
 
 
 def routes_to_udf(pattern: str) -> bool:
     """Whether :func:`ecma_pattern_predicate` evaluates ``pattern`` in the
-    ECMA batch UDF rather than with native ``rlike``."""
+    Arrow-batched judge rather than with native ``rlike``."""
     return (_UNICODE_CLASS_ROUTING and has_dialect_classes(pattern)) or \
         not java_regex_ok(pattern)

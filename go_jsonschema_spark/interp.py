@@ -409,6 +409,11 @@ def _owning_spec(
     return spec
 
 
+# compiled validators of validate_instance, by content fingerprint
+# (bounded like engine._PLAN_CACHE)
+_VALIDATORS: dict[str, Any] = {}
+
+
 def validate_instance(
     schema: Any,
     value: Any,
@@ -423,14 +428,25 @@ def validate_instance(
 
     Mirrors ``Schema.Validate`` (/root/reference/validate.go:32-62) +
     the validator chain (validators.go:26-53): compiles ``schema`` with
-    :func:`interp_compile.compile_validator` and runs it once.  The errors
-    are ``path: keyword: msg`` strings; with ``collect_all`` the chain does
-    not stop at the first failed keyword (violations-as-data, SURVEY.md
-    §4.1 note)."""
+    :func:`interp_compile.compile_validator` — once per distinct schema,
+    spec, registry, draft and ``assert_formats`` content — and runs it.
+    The errors are ``path: keyword: msg`` strings; with ``collect_all``
+    the chain does not stop at the first failed keyword
+    (violations-as-data, SURVEY.md §4.1 note)."""
+    import json
+
     from go_jsonschema_spark.interp_compile import compile_validator
 
-    errors = compile_validator(
-        schema, spec=spec, draft=draft, registry=registry,
-        assert_formats=assert_formats,
-    ).errors(value, collect_all=collect_all)
+    key = json.dumps([schema, spec, registry, draft, assert_formats],
+                     sort_keys=True, default=repr)
+    validator = _VALIDATORS.get(key)
+    if validator is None:
+        validator = compile_validator(
+            schema, spec=spec, draft=draft, registry=registry,
+            assert_formats=assert_formats,
+        )
+        if len(_VALIDATORS) >= 128:  # bound: drop oldest entry
+            _VALIDATORS.pop(next(iter(_VALIDATORS)))
+        _VALIDATORS[key] = validator
+    errors = validator.errors(value, collect_all=collect_all)
     return ValidationOutcome(not errors, errors)

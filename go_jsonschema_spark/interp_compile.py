@@ -4,8 +4,8 @@ The faithful analogue of the reference's plan step: ``setupValidators``
 (/root/reference/parser.go:313-407) walks the schema ONCE and attaches one
 closure per present keyword; validation is then just running the chain.
 This module is the only implementation of keyword semantics over parsed
-JSON values: ``interp.validate_instance``, the Arrow-batched JSON-column
-UDFs in compile.py and the engine, and
+JSON values: ``interp.validate_instance``, the one Arrow-batched judge
+(compile._arrow_judge), and
 ``spec.validate_spec_against_metaschema`` all compile here and run the
 result.  It is checked against the installed ``jsonschema`` package by
 tests/test_evaluator_oracle.py; the official-suite sweeps

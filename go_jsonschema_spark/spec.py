@@ -513,14 +513,14 @@ def validate_spec_against_metaschema(spec: Any, draft: int = 7) -> list[str]:
     the analogue of the reference's package-level ``Validate``
     (/root/reference/validate.go:12-29): compile-time self-validation, no
     Spark involved.  Returns a list of errors (empty = valid)."""
-    from go_jsonschema_spark.interp_compile import compile_validator
+    from go_jsonschema_spark.interp import validate_instance
     from go_jsonschema_spark.metaschema import (
         DRAFT04, DRAFT06, DRAFT07, DRAFT2020,
     )
 
     meta = {4: DRAFT04, 6: DRAFT06, 7: DRAFT07,
             2019: DRAFT2020, 2020: DRAFT2020}[draft]
-    return compile_validator(meta, draft=draft).errors(spec)
+    return validate_instance(meta, spec, draft=draft, collect_all=True).errors
 
 
 # ---------------------------------------------------------------------------

@@ -22,10 +22,10 @@ its own, so stream and batch verdicts agree by construction.
 
 Dataset-level checks over unbounded input need key-scoped state:
 
-* :func:`stream_duplicate_keys` — running duplicate-key counts via
-  ``applyInPandasWithState`` (duplicate EMISSION, not suppression;
-  watermark-bounded suppression is Spark's own
-  ``withWatermark(...).dropDuplicates([key])``).
+* :func:`stream_duplicate_keys` — running duplicate-key counts, one
+  native ``count`` aggregation per key in ``update`` mode (duplicate
+  EMISSION, not suppression; watermark-bounded suppression is Spark's
+  own ``withWatermark(...).dropDuplicates([key])``).
 * referential (foreign-key) checks need no streaming twin:
   :func:`~go_jsonschema_spark.operators.referential.referential_violations`
   is a stateless broadcast left-anti join, and Structured Streaming runs
@@ -102,33 +102,17 @@ def stream_duplicate_keys(
     grows, so the latest row per key is the current count; fold with
     ``max(n_dup)`` when a sink may hold several updates).
 
-    Scale shape: only the key column is shuffled per micro-batch (id-only,
-    like the batch operator), and state is one long per distinct key —
-    the same O(#keys) a batch count aggregation holds transiently, kept
-    resident instead.  For an unbounded key domain, pair with periodic
-    batch reconciliation (module docstring)."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    ktype = {f.name: f.dataType.simpleString()
-             for f in stream.schema.fields}[key]
-    slim = stream.select(key)
-
-    def update(k, pdfs, state: GroupState):
-        (n,) = state.get if state.exists else (0,)
-        for pdf in pdfs:
-            n += len(pdf)
-        state.update((n,))
-        if n >= min_count:
-            yield pd.DataFrame({"key": [k[0]], "n_dup": [n]})
-
-    return slim.groupBy(key).applyInPandasWithState(
-        update,
-        outputStructType=f"key {ktype}, n_dup long",
-        stateStructType="n long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    One native streaming aggregation, ``count(1)`` per key, filtered on
+    the running total — no Python state.  Scale shape: only the key
+    column is shuffled per micro-batch (id-only, like the batch
+    operator), and state is one counter per distinct key — the same
+    O(#keys) a batch count aggregation holds transiently, kept resident
+    instead.  For an unbounded key domain, pair with periodic batch
+    reconciliation (module docstring)."""
+    return (
+        stream.groupBy(F.col(key).alias("key"))
+        .agg(F.count(F.lit(1)).alias("n_dup"))
+        .where(F.col("n_dup") >= min_count)
     )
 
 

@@ -531,3 +531,32 @@ def test_errors_match_the_verdict():
                                             spec=spec, assert_formats=False,
                                             collect_all=collect_all)
                     assert out.valid is not bool(out.errors), (schema, value)
+
+
+def test_validate_instance_compiles_once_per_schema(monkeypatch):
+    """Repeated calls with the same schema, spec, registry, draft and
+    ``assert_formats`` content reuse one compiled validator; a change to
+    any of them compiles anew."""
+    from go_jsonschema_spark import interp_compile
+
+    compiled = []
+    real = interp_compile.compile_validator
+
+    def counting(schema, **kw):
+        compiled.append(schema)
+        return real(schema, **kw)
+
+    monkeypatch.setattr(interp_compile, "compile_validator", counting)
+    schema = {"type": "object", "properties": {
+        "n": {"type": "integer", "maximum": 7, "title": "compile-once"}}}
+    for n in range(20):
+        assert validate_instance(schema, {"n": n}).valid is (n <= 7)
+    assert validate_instance(copy.deepcopy(schema), {"n": 3}).valid
+    assert len(compiled) == 1
+    validate_instance(schema, {"n": 3}, draft=2020)
+    validate_instance(schema, {"n": 3}, assert_formats=False)
+    validate_instance(schema, {"n": 3}, spec=SchemaSpec(schema))
+    validate_instance(schema, {"n": 3}, registry={"urn:x": {}})
+    schema["properties"]["n"]["maximum"] = 2
+    assert not validate_instance(schema, {"n": 3}).valid
+    assert len(compiled) == 6

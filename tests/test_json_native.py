@@ -216,7 +216,7 @@ def test_native_rejects_dynamic_schemas(schema):
 
 
 def test_ecma_only_pattern_and_case_clash_fall_back(spark):
-    """A pattern only the ECMA batch UDF can run, and property names that
+    """A pattern only the Arrow-batched judge can run, and property names that
     clash under case-insensitive struct access, stay on the UDF path
     (a Python UDF cannot run inside the native binding lambda)."""
     ecma = {"type": "object", "required": ["n"],
@@ -267,3 +267,26 @@ def test_ref_siblings_follow_the_draft(spark):
         errors = validate_instance(schema, "abcdef", draft=draft,
                                    collect_all=True).errors
         assert any("maxLength" in e for e in errors) is (not want), draft
+
+
+def test_json_udf_resolves_refs_inside_nested_ids(spark):
+    """A pointer ``$ref`` inside an ``$id``-carrying subschema resolves
+    against that subschema in the Python worker too: the worker builds
+    its own SchemaSpec, whose base-URI index is keyed by node identity
+    and so cannot be pickled from the driver."""
+    import jsonschema
+
+    schema = {"$id": "http://ex.com/root.json",
+              "definitions": {"A": {
+                  "$id": "http://ex.com/a.json",
+                  "definitions": {"B": {"type": "integer"}},
+                  "properties": {"x": {"$ref": "#/definitions/B"}}}},
+              "properties": {"y": {"$ref": "a.json"}}}
+    values = ['{"y": {"x": 1}}', '{"y": {"x": "s"}}']
+    want = [jsonschema.Draft7Validator(schema).is_valid(json.loads(v))
+            for v in values]
+    assert want == [True, False]
+    df = spark.createDataFrame([(v,) for v in values], "j string")
+    got = [r[0] for r in
+           df.select(json_column_predicate(schema)(F.col("j"))).collect()]
+    assert got == want

@@ -117,6 +117,22 @@ def test_persisted_run_evaluates_predicates_once(spark, seq_parquet):
             res.row_violations.unpersist()
 
 
+def test_unpersisted_violations_parse_json_once(spark):
+    """Without ``persist_violations`` the violations plan still judges a
+    failing row once: the optimized plan holds one ``from_json`` per
+    JSON column (``explode`` let Spark push an inferred
+    ``size(entries) > 0`` with its own copy of every predicate below the
+    predicate Project)."""
+    suite, events = _json_suite(spark)
+    out = suite.run(events).violations
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    for col in ("props", "attrs"):
+        assert len(re.findall(rf"from_json\([^#]*?, {col}#\d+", plan)) == 1
+    assert sorted(tuple(r) for r in out.select(
+        "doc_id", "constraint_id").collect()) == [
+        ("e2", "attrs.json"), ("e2", "props.json")]
+
+
 def test_filters_push_to_parquet(spark, seq_parquet):
     plan = _plan(
         seq_parquet.filter((F.col("part") == 3) & (F.col("n_tok") > 100))

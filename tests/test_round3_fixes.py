@@ -4,7 +4,7 @@
    draft<=7 treats them as unknown keywords (ignored annotations), matching
    the reference's unknown-keyword handling.
 2. ConstraintSuite.plan() no longer raises for 2019+ annotation-dependent
-   keywords — it falls back to an interpreter-backed predicate with honest
+   keywords — it falls back to the Arrow-batched judge with honest
    per-keyword attribution.
 3. Checkpoint resume re-runs the GLOBAL phase when the partition set
    changed (same membership rule as batch keys).
@@ -121,11 +121,12 @@ def test_fallback_compiles_validators_once_per_task(monkeypatch):
     import json
 
     import pandas as pd
+    from pyspark.sql import functions as F
 
     from go_jsonschema_spark import interp_compile
-    from go_jsonschema_spark.engine import _interp_group_judge
+    from go_jsonschema_spark.compile import _arrow_judge
 
-    compiled = []
+    compiled, batch_fns = [], []
     real = interp_compile.compile_validator
 
     def counting(schema, **kw):
@@ -133,10 +134,15 @@ def test_fallback_compiles_validators_once_per_task(monkeypatch):
         return real(schema, **kw)
 
     monkeypatch.setattr(interp_compile, "compile_validator", counting)
-    judge = _interp_group_judge(("unevaluatedProperties",), UNEVAL_SCHEMA,
-                                {}, 2019)
+    # keep the plain batch function the factory hands to pandas_udf
+    monkeypatch.setattr(
+        F, "pandas_udf", lambda rtype: lambda fn: batch_fns.append(fn) or fn)
+    _arrow_judge(UNEVAL_SCHEMA, typed=True, rest={"properties": {"a": {}}},
+                 draft=2019)
+    (judge,) = batch_fns
     batch = pd.Series([json.dumps({"v": {"a": 1}}),
-                       json.dumps({"v": {"a": 1, "b": 2}}), None])
+                       json.dumps({"v": {"a": 1, "b": 2}}),
+                       json.dumps({"v": None})])
     assert list(judge(batch)) == [True, False, True]
     assert list(judge(batch)) == [True, False, True]
     assert compiled == [UNEVAL_SCHEMA, {"properties": {"a": {}}}]
