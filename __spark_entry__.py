@@ -1852,16 +1852,13 @@ def _q_packed_greedy(spark: SparkSession, sf: str) -> DataFrame:
 def _q_contamination_documents(spark: SparkSession, sf: str) -> DataFrame:
     """Benchmark decontamination (operators/decontam.py): docs sharing a
     word 4-gram with the probe set (docs 0-4), probe n-grams shipped as
-    one literal array — zero shuffle over the corpus.  hashed=False here
-    so DuckDB recomputes the identical string intersection; the hashed
-    scale form is pytest-equivalence-checked against this one."""
+    one literal array — zero shuffle over the corpus; DuckDB recomputes
+    the identical string intersection."""
     from go_jsonschema_spark.operators.decontam import contamination_hits
 
     docs = _t(spark, sf, "documents")
     probes = docs.filter(F.col("doc_id") < 5)
-    return contamination_hits(
-        docs.filter(F.col("doc_id") >= 5), probes, n=4, hashed=False,
-    )
+    return contamination_hits(docs.filter(F.col("doc_id") >= 5), probes, n=4)
 
 
 def _q_sequences_validation(spark: SparkSession, sf: str) -> DataFrame:
@@ -2032,7 +2029,7 @@ def _q_multimodal_features(spark: SparkSession, sf: str) -> DataFrame:
     from go_jsonschema_spark.operators import multimodal
 
     media = multimodal.synth_media(spark, 128)
-    feats = multimodal.extract_features(media, fake=True)
+    feats = multimodal.extract_features(media)
     return feats.select(
         "media_id", "kind", "n_bytes", "checksum",
         *[
@@ -2261,8 +2258,7 @@ def _q_token_decontam_sequences(spark: SparkSession, sf: str) -> DataFrame:
     as ONE literal; corpus side zero shuffle/explode): the probe set is
     40-token subarrays of the snapshot's first hundred documents, so
     the contaminated set is exactly the rows containing those windows.
-    String (oracle-replayable) window form; the hashed 8-byte form is
-    pinned equal by pytest."""
+    Windows are '-'-joined id strings the oracle replays."""
     import os
 
     from go_jsonschema_spark.operators.tokens import token_ngram_contamination
@@ -2277,7 +2273,7 @@ def _q_token_decontam_sequences(spark: SparkSession, sf: str) -> DataFrame:
         F.col("doc_id").startswith("doc0000000000")
         & (F.size("tokens") >= 64)
     ).select(F.slice("tokens", 9, 40).alias("tokens"))
-    out = token_ngram_contamination(df, probes, n=13, hashed=False)
+    out = token_ngram_contamination(df, probes, n=13)
     return out.filter("contaminated").select(
         "doc_id", "n_windows", "n_hits"
     ).orderBy("doc_id", "n_hits")

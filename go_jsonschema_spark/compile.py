@@ -19,10 +19,10 @@ exactly as JSON Schema keywords ignore non-matching types.
 JSON-string columns go through functions/json_native.py (one native
 ``from_json`` parse) when the schema is static, and through
 :func:`json_column_predicate` otherwise.  Where Catalyst lacks the
-semantic — dynamic JSON, ``unevaluated*``/dynamic-ref keyword groups,
-ECMA-only patterns, Python-side formats — the value crosses the one
-Python boundary, :func:`_arrow_judge`: an Arrow-batched pandas UDF
-running the closure-compiled evaluator (interp_compile.py).
+semantic — dynamic JSON, ``unevaluated*``/dynamic-ref/``content*``
+keyword groups, ECMA-only patterns, Python-side formats — the value
+crosses the one Python boundary, :func:`_arrow_judge`: an Arrow-batched
+pandas UDF running the closure-compiled evaluator (interp_compile.py).
 """
 
 from __future__ import annotations
@@ -205,14 +205,17 @@ def compile_predicate(
     if any(
         k in schema
         for k in ("unevaluatedProperties", "unevaluatedItems",
-                  "$recursiveRef", "$dynamicRef")
+                  "$recursiveRef", "$dynamicRef",
+                  "contentEncoding", "contentMediaType")
     ):
-        # annotation- / dynamic-scope-dependent keywords need the
-        # interpreter — refuse rather than silently compiling an
-        # incomplete (always-permissive) predicate
+        # annotation- / dynamic-scope-dependent keywords and content*
+        # (base64 / JSON decoding) need the interpreter — refuse rather
+        # than silently compiling an incomplete (always-permissive)
+        # predicate
         raise CompileError(
             "unevaluatedProperties/unevaluatedItems/$recursiveRef/"
-            "$dynamicRef require the dynamic path (json_column_predicate)"
+            "$dynamicRef/contentEncoding/contentMediaType require the "
+            "dynamic path (json_column_predicate)"
         )
 
     # $ref → bounded compile-time inlining (SURVEY §2.6: refs are inlined,
@@ -615,7 +618,7 @@ def _value_compatible(v: Any, dtype: T.DataType) -> bool:
 
 def _arrow_judge(
     schema: Any, *, typed: bool = False, rest: Any = None, draft: int = 7,
-    registry: dict[str, Any] | None = None, assert_formats: bool = True,
+    registry: dict[str, Any] | None = None,
 ) -> Callable[[Column], Column]:
     """The one pandas UDF on the validation path, for what Catalyst lacks.
 
@@ -644,7 +647,7 @@ def _arrow_judge(
                 spec.registry.setdefault(k, SchemaSpec(v))
             compiled = functools.partial(
                 compile_validator, spec=spec, draft=draft,
-                registry=spec.registry, assert_formats=assert_formats)
+                registry=spec.registry)
             cell.append((compiled(schema),
                          None if rest is None else compiled(rest)))
         full, rest_ok = cell[0]
@@ -670,8 +673,7 @@ def _arrow_judge(
 
 
 def json_column_predicate(
-    schema: Any, *, draft: int = 7, assert_formats: bool = True
-) -> Callable[[Column], Column]:
+    schema: Any, *, draft: int = 7) -> Callable[[Column], Column]:
     """Predicate over a column of JSON *strings*: ``schema`` judged in
     :func:`_arrow_judge`.
 
@@ -679,4 +681,4 @@ def json_column_predicate(
     column whose schema uses ``patternProperties``, ``propertyNames`` or
     combinators — static object schemas take the native path in
     functions/json_native.py).  Unparseable JSON is invalid."""
-    return _arrow_judge(schema, draft=draft, assert_formats=assert_formats)
+    return _arrow_judge(schema, draft=draft)

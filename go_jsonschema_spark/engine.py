@@ -38,6 +38,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from go_jsonschema_spark.compile import (
+    _ANNOTATION_KEYS,
     CompileError,
     _arrow_judge,
     compile_predicate,
@@ -51,7 +52,8 @@ __all__ = ["ConstraintSuite", "SuiteResult", "ConstraintPlan"]
 _PLAN_CACHE: dict[str, ConstraintPlan] = {}
 
 # keyword groups that must compile together (draft-4 exclusive flags ride on
-# their base bound, schema.go:173-178)
+# their base bound, schema.go:173-178); a group's constraint id is
+# ``{column}.{anchor}``
 _BOUND_PAIRS = {
     "maximum": ("maximum", "exclusiveMaximum"),
     "minimum": ("minimum", "exclusiveMinimum"),
@@ -60,6 +62,8 @@ _BOUND_PAIRS = {
     "contains": ("contains", "minContains", "maxContains"),
     "properties": ("properties", "patternProperties", "additionalProperties",
                    "required"),
+    "if": ("if", "then", "else"),
+    "contentEncoding": ("contentEncoding", "contentMediaType"),
     # standalone-rider anchors: when the usual anchor keyword is absent the
     # rider becomes its own group (otherwise {"required": [...]} or a bare
     # numeric exclusiveMaximum would silently compile to zero predicates)
@@ -68,13 +72,6 @@ _BOUND_PAIRS = {
     "additionalProperties": ("additionalProperties",),
     "exclusiveMaximum": ("exclusiveMaximum",),
     "exclusiveMinimum": ("exclusiveMinimum",),
-}
-_ANNOTATIONS = {
-    # annotations — parsed, preserved, never validated (parser.go:90-99 and
-    # the reference's non-validating keywords)
-    "$id", "id", "$schema", "$comment", "title", "description", "default",
-    "readOnly", "writeOnly", "examples", "definitions", "$defs",
-    "contentMediaType", "contentEncoding",
 }
 # rider keyword -> anchors that absorb it; a rider only skips compilation
 # when at least one anchor is present in the same schema.  Riders whose
@@ -88,6 +85,8 @@ _RIDER_ANCHORS = {
     "required": ("properties",),
     "patternProperties": ("properties",),
     "additionalProperties": ("properties", "patternProperties"),
+    "items": ("prefixItems",),  # 2020-12 rest schema
+    "contentMediaType": ("contentEncoding",),
 }
 _IGNORED_WITHOUT_ANCHOR = {
     "additionalItems": ("items",),
@@ -217,6 +216,18 @@ class SuiteResult:
             )
             bad = bad.withColumn("__reasons__", reasons)
         return clean, bad.drop(*internal)
+
+
+def _dim_table(dims: dict[str, DataFrame], tc: dict[str, Any]) -> DataFrame:
+    """The table a foreign_key (``dim``) or reconcile (``child``) check
+    reads, or the KeyError that says how to pass it."""
+    field, noun = (("dim", "dimension") if tc["kind"] == "foreign_key"
+                   else ("child", "child table"))
+    if tc[field] not in dims:
+        raise KeyError(
+            f"{tc['kind']} check {tc['id']!r} needs {noun} {tc[field]!r} "
+            "passed via run(..., dims={...})")
+    return dims[tc[field]]
 
 
 def _observed_col(col: Column, dtype: T.DataType) -> Column:
@@ -479,7 +490,7 @@ class ConstraintSuite:
             # per-keyword decomposition → violation granularity matches the
             # reference's per-validator errors (setupValidators analogue)
             for kw in schema:
-                if kw in _ANNOTATIONS:
+                if kw in _ANNOTATION_KEYS:
                     continue
                 anchors = _RIDER_ANCHORS.get(kw)
                 if anchors and any(a in schema for a in anchors):
@@ -495,13 +506,8 @@ class ConstraintSuite:
                 if kw in ("exclusiveMaximum", "exclusiveMinimum") and \
                         isinstance(schema[kw], bool):
                     continue
-                if kw == "items" and "prefixItems" in schema:
-                    continue  # rider on prefixItems (2020-12 rest schema)
                 group = _BOUND_PAIRS.get(kw, (kw,))
                 sub = {k: schema[k] for k in group if k in schema}
-                if kw == "if":
-                    sub = {k: schema[k] for k in ("if", "then", "else")
-                           if k in schema}
                 # carry type info the sub-keywords may need
                 cid = f"{name}.{kw}"
                 try:
@@ -509,7 +515,8 @@ class ConstraintSuite:
                                              spec=sspec)
                 except CompileError:
                     # the typed compiler refuses unevaluated* and dynamic
-                    # refs, which read their SIBLING applicators: judge
+                    # refs, which read their SIBLING applicators, and
+                    # content*, which need a decoder: judge
                     # the whole schema in Python, and fail the group
                     # exactly when the schema fails but the schema
                     # without the group passes (per-keyword attribution)
@@ -577,16 +584,11 @@ class ConstraintSuite:
                     referential_violations,
                 )
 
-                if tc["dim"] not in dims:
-                    raise KeyError(
-                        f"foreign_key check {tc['id']!r} needs dimension "
-                        f"{tc['dim']!r} passed via run(..., dims={{...}})"
-                    )
                 parts.append(
                     referential_violations(
                         df,
                         tc["column"],
-                        dims[tc["dim"]],
+                        _dim_table(dims, tc),
                         tc.get("dim_column"),
                         key=self.key,
                         constraint_id=tc["id"],
@@ -615,15 +617,10 @@ class ConstraintSuite:
                     reconcile_totals,
                 )
 
-                if tc["child"] not in dims:
-                    raise KeyError(
-                        f"reconcile check {tc['id']!r} needs child table "
-                        f"{tc['child']!r} passed via run(..., dims={{...}})"
-                    )
                 keys = tc["key"]
                 key_cols = [keys] if isinstance(keys, str) else list(keys)
                 v = reconcile_totals(
-                    df, dims[tc["child"]], keys,
+                    df, _dim_table(dims, tc), keys,
                     tc["parent_col"], tc["child_col"],
                     atol=tc.get("atol", 1e-6),
                     how=tc.get("how", "full"),
@@ -787,13 +784,8 @@ class ConstraintSuite:
         # of the verdict fail counts, like every table check.
         fact = df
         for col, tc in zip(k.fk_names, k.fk_checks):
-            if tc["dim"] not in dims:
-                raise KeyError(
-                    f"foreign_key check {tc['id']!r} needs dimension "
-                    f"{tc['dim']!r} passed via run(..., dims={{...}})"
-                )
             dkey = f"{col}key"
-            dim_keys = dims[tc["dim"]].select(
+            dim_keys = _dim_table(dims, tc).select(
                 F.col(tc.get("dim_column") or tc["column"]).alias(dkey),
                 F.lit(True).alias(col),
             ).distinct()

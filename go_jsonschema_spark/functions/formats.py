@@ -56,8 +56,7 @@ def format_predicate(fmt: str, col: Column) -> Column:
     if fmt in _PYTHON_FORMATS:
         from go_jsonschema_spark.compile import _arrow_judge
 
-        pred = _arrow_judge({"format": fmt}, typed=True,
-                            assert_formats=True)(col)
+        pred = _arrow_judge({"format": fmt}, typed=True)(col)
         if fmt in _NATIVE_REGEX:
             # cheap JVM regex pre-filter AND exact Python check
             return col.rlike(_NATIVE_REGEX[fmt]) & pred

@@ -55,8 +55,8 @@ fall back to the UDF path via :func:`json_column_predicate_auto`):
   document, not the declared fields;
 * every property and array ``items`` schema declares one explicit
   ``type`` (optionally with ``"null"``); no ``$ref`` (it would resolve
-  against the leaf), ``unevaluated*`` or ``prefixItems`` anywhere in a
-  leaf;
+  against the leaf), ``unevaluated*``, ``prefixItems`` or ``content*``
+  anywhere in a leaf;
 * nested objects and arrays of objects or arrays are required and
   non-nullable (a VARIANT leaf decodes scalars only); arrays have one
   ``items`` schema; property names differ case-insensitively (struct
@@ -87,7 +87,7 @@ from go_jsonschema_spark.compile import (
     compile_predicate,
 )
 from go_jsonschema_spark.functions.formats import _PYTHON_FORMATS
-from go_jsonschema_spark.functions.regex import routes_to_udf
+from go_jsonschema_spark.functions.regex import java_regex_ok
 
 __all__ = ["json_column_predicate_native", "json_column_predicate_auto"]
 
@@ -107,9 +107,11 @@ _NESTED_ARRAY_KEYWORDS = {"type", "items", "minItems",
                           "maxItems"} | _ANNOTATION_KEYS
 # refused anywhere in a leaf schema: references resolve against the leaf,
 # not the document; unevaluated* needs annotations; prefixItems is
-# compiled under every draft and would meet elements parsed by ``items``
+# compiled under every draft and would meet elements parsed by ``items``;
+# content* needs a decoder
 _LEAF_REFUSED = {"$ref", "$recursiveRef", "$dynamicRef",
-                 "unevaluatedProperties", "unevaluatedItems", "prefixItems"}
+                 "unevaluatedProperties", "unevaluatedItems", "prefixItems",
+                 "contentEncoding", "contentMediaType"}
 _SUBSCHEMA_LISTS = ("allOf", "anyOf", "oneOf")
 _SUBSCHEMAS = ("not", "if", "then", "else", "contains")
 _VALUE_TYPES = {
@@ -171,7 +173,7 @@ def _leaf_keywords(name: str, s: dict, draft: int) -> None:
                 refuse(f"invalid {k}")
         # a Python UDF cannot run inside the binding lambda
         pattern, fmt = node.get("pattern"), node.get("format")
-        if isinstance(pattern, str) and routes_to_udf(pattern):
+        if isinstance(pattern, str) and not java_regex_ok(pattern):
             refuse("ECMA-only pattern")
         if isinstance(fmt, str) and fmt in _PYTHON_FORMATS:
             refuse(f"format {fmt!r}")

@@ -21,26 +21,13 @@ import re
 
 from pyspark.sql import Column, functions as F
 
-__all__ = ["lit_bigints", "lit_doubles", "lit_matrix", "lit_strings"]
+__all__ = ["lit_doubles", "lit_matrix", "lit_strings"]
 
 # a quote or backslash would need an escape, and escapes are read
 # differently under spark.sql.parser.escapedStringLiterals=true; control
 # characters could interact with the lexer; the SQL parser substitutes
 # ${...} references (spark.sql.variable.substitute, on by default)
 _UNSAFE = re.compile(r"['\\$\x00-\x1f\x7f]")
-
-
-def lit_bigints(vals: list[int]) -> Column:
-    """``array<bigint>`` literal from Python ints in one parsed
-    expression; non-int (or out-of-int64-range) input falls back to the
-    element-wise path."""
-    if vals and all(
-        isinstance(v, int) and not isinstance(v, bool)
-        and -(1 << 63) <= v < (1 << 63)
-        for v in vals
-    ):
-        return F.expr("array(" + ",".join(f"{v}L" for v in vals) + ")")
-    return F.lit(list(vals)).cast("array<bigint>")
 
 
 def lit_doubles(vals: list[float]) -> Column:

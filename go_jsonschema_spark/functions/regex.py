@@ -18,57 +18,21 @@ pattern compiled once per Python task — never per row.
 
 Dialect classes (``\\w \\W \\d \\D \\s \\S \\b \\B``) compile in BOTH
 dialects but diverge on non-ASCII input: ``java.util.regex`` evaluates
-them ASCII-only by default, while ECMA-facing engines are Unicode-aware —
-the reference rewrites them to Unicode classes before compiling
-(``\\w``→``\\pL`` etc., /root/reference/helpers.go:69-86), and the
-interpreter's Python ``re`` shim is Unicode-aware natively.  Because the
-rewrite costs the JVM-native ``rlike`` fast path, routing patterns that
-merely CONTAIN these classes through the shim is opt-in:
-``set_unicode_class_routing(True)`` (or env
-``GJS_UNICODE_REGEX_CLASSES=1``).  Off by default, the divergence matches
-the reference's own documented ecmascript-regex skip surface
-(validate_test.go:261-263); on, ``café`` matches ``^\\w+$`` exactly as
-the reference's converted pattern does.
+them ASCII-only, while the interpreter's Python ``re`` shim is
+Unicode-aware (the reference rewrites them to Unicode classes,
+helpers.go:69-86).  Such patterns stay on ``rlike``, so
+on the typed and native paths non-ASCII ``\\w``-class classification
+follows Java, and in the judge it follows Python — the reference's own
+ecmascript-regex skip surface (validate_test.go:261-263).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column
 
-__all__ = ["java_regex_ok", "ecma_pattern_predicate",
-           "has_dialect_classes", "routes_to_udf",
-           "set_unicode_class_routing"]
+__all__ = ["java_regex_ok", "ecma_pattern_predicate"]
 
 _JAVA_OK_CACHE: dict[str, bool] = {}
-
-_UNICODE_CLASS_ROUTING = (
-    os.environ.get("GJS_UNICODE_REGEX_CLASSES", "0") == "1")
-
-
-def set_unicode_class_routing(enabled: bool) -> None:
-    """Route patterns containing dialect classes (``\\w``/``\\d``/…)
-    through the Unicode-aware ECMA shim even when Java would accept them.
-    Costs the native ``rlike`` fast path for those patterns only."""
-    global _UNICODE_CLASS_ROUTING
-    _UNICODE_CLASS_ROUTING = bool(enabled)
-
-
-def has_dialect_classes(pattern: str) -> bool:
-    """True if ``pattern`` contains a ``\\w \\W \\d \\D \\s \\S \\b \\B``
-    escape TOKEN (a literal ``\\\\w`` — escaped backslash then ``w`` — is
-    not one), the classes the two dialects evaluate differently on
-    non-ASCII input."""
-    i, n = 0, len(pattern)
-    while i < n - 1:
-        if pattern[i] == "\\":
-            if pattern[i + 1] in "wWdDsSbB":
-                return True
-            i += 2  # consume the escape pair (incl. an escaped backslash)
-        else:
-            i += 1
-    return False
 
 
 def java_regex_ok(pattern: str) -> bool:
@@ -108,20 +72,10 @@ def java_regex_ok(pattern: str) -> bool:
 
 def ecma_pattern_predicate(col: Column, pattern: str) -> Column:
     """``pattern`` keyword predicate with dialect routing: native ``rlike``
-    when Java accepts the pattern, the one Arrow-batched judge otherwise.  With
-    :func:`set_unicode_class_routing` on, patterns containing dialect
-    classes (``\\w``/``\\d``/``\\s``/``\\b`` …) also take the shim so
-    non-ASCII input is classified the way the reference's converted
-    patterns classify it (helpers.go:69-86)."""
-    if routes_to_udf(pattern):
+    when Java accepts the pattern, the one Arrow-batched judge otherwise."""
+    if not java_regex_ok(pattern):
         from go_jsonschema_spark.compile import _arrow_judge
 
         return _arrow_judge({"pattern": pattern}, typed=True)(col)
     return col.rlike(pattern)
 
-
-def routes_to_udf(pattern: str) -> bool:
-    """Whether :func:`ecma_pattern_predicate` evaluates ``pattern`` in the
-    Arrow-batched judge rather than with native ``rlike``."""
-    return (_UNICODE_CLASS_ROUTING and has_dialect_classes(pattern)) or \
-        not java_regex_ok(pattern)

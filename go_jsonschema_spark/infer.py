@@ -13,9 +13,10 @@ Execution shape: ONE aggregation pass over the table computes every
 per-column statistic (map-side combinable; the result is one row), plus
 one bounded follow-up collect for the enum value lists of qualifying
 low-cardinality string columns — nothing row-scaled ever reaches the
-driver.  ``approx=True`` swaps exact ``count_distinct`` for HLL
-``approx_count_distinct`` (the 10^12-row form; enum detection then uses
-the sketch estimate with a safety margin).
+driver.  ``infer_table_spec(approx=True)`` swaps exact
+``count_distinct`` for HLL ``approx_count_distinct`` (the 10^12-row
+form; enum detection then uses the sketch estimate with a safety
+margin).
 """
 
 from __future__ import annotations
@@ -55,7 +56,6 @@ def profile_table(
     columns: list[str] | None = None,
     *,
     enum_max: int = 16,
-    approx: bool = False,
 ) -> DataFrame:
     """Per-column profile rows (``PROFILE_SCHEMA``): row/null/distinct
     counts, numeric bounds, string length bounds, and — for string
@@ -64,11 +64,15 @@ def profile_table(
     min_len/max_len and integral-element bounds under min_num/max_num
     (feeding minItems/maxItems + items bounds in
     :func:`infer_table_spec`)."""
-    rows, enums = _profile_rows(df, columns, enum_max=enum_max,
-                                approx=approx)
-    out = [r[:-1] + (",".join(enums[r[0]]) if r[0] in enums else None,)
-           for r in rows]
-    return df.sparkSession.createDataFrame(out, PROFILE_SCHEMA)
+    return _profile_frame(
+        df, *_profile_rows(df, columns, enum_max=enum_max, approx=False))
+
+
+def _profile_frame(df: DataFrame, rows, enums) -> DataFrame:
+    """The display/oracle DataFrame of :func:`_profile_rows`' output."""
+    return df.sparkSession.createDataFrame(
+        [r[:-1] + (",".join(enums[r[0]]) if r[0] in enums else None,)
+         for r in rows], PROFILE_SCHEMA)
 
 
 def _profile_rows(
@@ -161,9 +165,7 @@ def infer_table_spec(
 
     raw, enums = _profile_rows(df, columns, enum_max=enum_max,
                                approx=approx)
-    prof = df.sparkSession.createDataFrame(
-        [r[:-1] + (",".join(enums[r[0]]) if r[0] in enums else None,)
-         for r in raw], PROFILE_SCHEMA)
+    prof = _profile_frame(df, raw, enums)
     names = ["column", "jtype", "n_rows", "n_null", "n_distinct",
              "min_num", "max_num", "min_len", "max_len", "enum_csv"]
     rows = {r[0]: dict(zip(names, r)) for r in raw}

@@ -183,7 +183,7 @@ def compile_validator(
         except RecursionError:
             return False
 
-    def errors(v: Any, collect_all: bool = True) -> list[str]:
+    def errors(v: Any, collect_all: bool) -> list[str]:
         if validate(v):
             return []
         out: list[str] = []

@@ -87,9 +87,8 @@ def range_join(
     right_start: str,
     right_end: str,
     bin_width: float,
-    how: str = "inner",
 ) -> DataFrame:
-    """Point-in-interval join as ONE equi-join shuffle (guide §OLAP) —
+    """Point-in-interval inner join as ONE equi-join shuffle (guide §OLAP) —
     Spark plans a bare ``l.x BETWEEN r.lo AND r.hi`` predicate as a
     BroadcastNestedLoopJoin, which is O(|L|·|R|) work and a
     single-executor broadcast: a scale trap the moment the interval side
@@ -105,10 +104,7 @@ def range_join(
     co-partitioned, AQE-skew-splittable, no nested loop anywhere.
 
     Columns must be numeric (cast timestamps to epoch seconds/days
-    first).  ``how`` supports ``inner`` and ``left`` (``left`` keeps
-    pointless rows via a final anti-join union, still no nested loop)."""
-    if how not in ("inner", "left"):
-        raise ValueError(f"range_join: how={how!r} (inner|left)")
+    first)."""
     overlap = set(left.columns) & set(right.columns)
     if overlap:
         # a shared name would silently produce duplicate-named output
@@ -150,29 +146,9 @@ def range_join(
             F.floor(F.col(right_end) / w).cast("long"))),
     )
     l = cand.withColumn("__bin__", lbin)
-    hit = (
+    return (
         l.join(r, "__bin__")
         .filter((F.col(left_point) >= F.col(right_start))
                 & (F.col(left_point) <= F.col(right_end)))
         .drop("__bin__")
     )
-    if how == "inner":
-        return hit
-    # left join: append the never-matched left rows (including those the
-    # span pre-filter excluded — they match nothing by construction) with
-    # null right columns.  The anti-join must be NULL-SAFE per column: a
-    # matched left row carrying a NULL in any column fails plain `=`
-    # equality against its own image in `matched` and would be re-emitted
-    # as a spurious unmatched row.  eqNullSafe (`<=>`) is still an
-    # equi-join key for Spark's hash/sort-merge planners, so no nested
-    # loop appears.
-    matched = hit.select(*left.columns).distinct().alias("__rjm__")
-    lft = left.alias("__rjl__")
-    cond = None
-    for c in left.columns:  # bracket access: dot-safe, alias-scoped
-        eq = lft[c].eqNullSafe(matched[c])
-        cond = eq if cond is None else (cond & eq)
-    missed = lft.join(matched, cond, "left_anti")
-    for c in right.columns:
-        missed = missed.withColumn(c, F.lit(None).cast(right.schema[c].dataType))
-    return hit.unionByName(missed)

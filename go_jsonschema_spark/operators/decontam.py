@@ -8,12 +8,8 @@ as one literal array (small sets — zero shuffle AND zero explode) or as
 a broadcast-joined probe table (large sets, where a huge literal stalls
 Catalyst; the corpus n-grams explode narrowly into the broadcast join
 and only the hits reach an aggregation).  No Python enters the row path
-on either plan.
-
-``hashed=True`` ships 8-byte ``xxhash64`` values instead of n-gram
-strings — the scale form (a 100k-probe literal of longs is ~800 KB vs
-many MB of strings).  ``hashed=False`` keeps raw strings so an external
-SQL engine can recompute the identical intersection (the oracle form).
+on either plan.  Probe n-grams ship as raw strings, so an external SQL
+engine can recompute the identical intersection.
 """
 
 from __future__ import annotations
@@ -30,14 +26,13 @@ def probe_ngrams(
     *,
     text_col: str = "text",
     n: int = 8,
-    hashed: bool = True,
     max_probe_ngrams: int = 100_000,
 ) -> list:
-    """Distinct probe n-grams (or their xxhash64s), driver-side."""
-    g = F.explode(word_shingles(F.col(text_col), n)).alias("g")
-    col = F.xxhash64("g").alias("v") if hashed else F.col("g").alias("v")
+    """Distinct probe n-grams, driver-side."""
     rows = (
-        probes.select(g).select(col).distinct()
+        probes.select(
+            F.explode(word_shingles(F.col(text_col), n)).alias("v"))
+        .distinct()
         .limit(max_probe_ngrams + 1).collect()
     )
     if len(rows) > max_probe_ngrams:
@@ -105,7 +100,6 @@ def contamination_hits(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 8,
-    hashed: bool = True,
     max_probe_ngrams: int = 100_000,
     literal_cap: int = 2000,
 ) -> DataFrame:
@@ -115,30 +109,21 @@ def contamination_hits(
     larger sets switch to an explode + broadcast-join plan (a huge
     CreateArray literal stalls the planner)."""
     vals = probe_ngrams(
-        probes, text_col=text_col, n=n, hashed=hashed,
-        max_probe_ngrams=max_probe_ngrams,
+        probes, text_col=text_col, n=n, max_probe_ngrams=max_probe_ngrams,
     )
     if not vals:
         return docs.select(F.col(id_col).alias("doc_id")).limit(0).select(
             "doc_id", F.lit(0).alias("n_hits"))
-    grams = F.array_distinct(word_shingles(F.col(text_col), n))
-    mine = (
-        F.transform(grams, lambda s: F.xxhash64(s)) if hashed else grams
-    )
+    mine = F.array_distinct(word_shingles(F.col(text_col), n))
     if len(vals) <= literal_cap:
         # small probe set: one literal array, zero shuffle, zero explode.
         # Built as ONE parsed SQL expression — pyspark's F.lit(list)
         # expands to a per-element lit chain (one py4j round trip each,
         # ~0.3 s at the 2000-gram cap, measured r7); the parsed form is
         # the identical literal.
-        from go_jsonschema_spark.functions.literals import (
-            lit_bigints, lit_strings,
-        )
+        from go_jsonschema_spark.functions.literals import lit_strings
 
-        probe_lit = (
-            lit_bigints(list(vals)) if hashed
-            else lit_strings(list(vals)))
-        hits = F.size(F.array_intersect(mine, probe_lit))
+        hits = F.size(F.array_intersect(mine, lit_strings(vals)))
         return (
             docs.select(F.col(id_col).alias("doc_id"), hits.alias("n_hits"))
             .filter(F.col("n_hits") > 0)
@@ -149,8 +134,7 @@ def contamination_hits(
     # narrow, the join is broadcast (no corpus shuffle); only the HITS
     # reach the groupBy, so the aggregation shuffle is O(#contaminated).
     spark = docs.sparkSession
-    vtype = "bigint" if hashed else "string"
-    probe_df = spark.createDataFrame([(v,) for v in vals], f"v {vtype}")
+    probe_df = spark.createDataFrame([(v,) for v in vals], "v string")
     ex = docs.select(
         F.col(id_col).alias("doc_id"), F.explode(mine).alias("v"))
     return (

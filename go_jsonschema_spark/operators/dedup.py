@@ -577,13 +577,14 @@ def simhash_pairs_from_hashes(
 
 def duplicate_clusters(
     pairs: DataFrame, *, a_col: str = "a", b_col: str = "b",
-    max_iter: int = 25, algorithm: str = "auto",
-    star_threshold: int = 100_000, stats_out: dict | None = None,
+    max_iter: int = 25, star_threshold: int = 100_000,
+    stats_out: dict | None = None,
 ) -> DataFrame:
     """Connected components over a near-dup pair list → ``(id, cluster)``
     with ``cluster`` = min id in the component (the canonical keeper).
 
-    Two engines, picked by ``algorithm``:
+    Two engines, picked by one ``count()`` on the pair list: ``"star"`` at
+    or above ``star_threshold`` pairs, ``"local"`` below.
 
     * ``"star"`` — alternating large-star/small-star (Kiveris et al.,
       "Connected Components in MapReduce and Beyond", SoCC'14): the edge
@@ -594,38 +595,27 @@ def duplicate_clusters(
       distributed round costs more in fixed stage overhead than the whole
       problem (measured 9.8 s distributed vs <1 s local for a 25-pair
       input), exactly like broadcasting a small join side.
-    * ``"auto"`` — one ``count()`` on the pair list, then ``"star"`` at or
-      above ``star_threshold`` pairs, ``"local"`` below.
 
-    Any other ``algorithm`` raises ``ValueError``.  Both engines produce
-    identical labels (pytest-verified on hub/chain/random graphs + the
-    same DuckDB recursive-CTE oracle).
+    Both engines produce identical labels (pytest-verified on
+    hub/chain/random graphs + the same DuckDB recursive-CTE oracle).
 
     Scale notes: each round ``localCheckpoint``s to cut the growing
     lineage (without it the plan doubles per round and the DRIVER becomes
     the bottleneck); convergence is detected on a count of the edge-set
     difference only.  ``stats_out`` (optional dict) receives
     ``{"algorithm", "rounds"}`` for round-count measurement."""
-    if algorithm not in ("auto", "star", "local"):
-        raise ValueError(
-            f"duplicate_clusters: algorithm must be 'auto', 'star' or "
-            f"'local', got {algorithm!r}")
-    if algorithm in ("auto", "star"):
-        # materialize the pair plan ONCE.  The upstream plan is typically
-        # the expensive LSH candidate self-join; without this the auto
-        # count() plus the chosen engine's own consumption re-evaluate it
-        # 2-3× (count, then local's collect / star's ids+edges), doubling
-        # the most expensive dedup stage at scale (VERDICT r3 weak #1).
-        # Explicit "local" skips it: collect() is its single evaluation.
-        pairs = pairs.localCheckpoint()
-    if algorithm == "auto":
-        # below the distributed threshold the pair list fits on the driver
-        # and union-find beats ANY iterative Spark loop (each distributed
-        # round costs ~1-2 s of fixed stage overhead regardless of data —
-        # measured 9.8 s for a 25-pair/47-cluster input); above it, the
-        # contracting star engine.  Same reasoning as broadcasting a small
-        # join side.
-        algorithm = "star" if pairs.count() >= star_threshold else "local"
+    # materialize the pair plan ONCE.  The upstream plan is typically the
+    # expensive LSH candidate self-join; without this the count() plus the
+    # chosen engine's own consumption re-evaluate it 2-3× (count, then
+    # local's collect / star's ids+edges), doubling the most expensive
+    # dedup stage at scale (VERDICT r3 weak #1).
+    pairs = pairs.localCheckpoint()
+    # below the distributed threshold the pair list fits on the driver and
+    # union-find beats ANY iterative Spark loop (each distributed round
+    # costs ~1-2 s of fixed stage overhead regardless of data — measured
+    # 9.8 s for a 25-pair/47-cluster input); above it, the contracting
+    # star engine.  Same reasoning as broadcasting a small join side.
+    algorithm = "star" if pairs.count() >= star_threshold else "local"
     if stats_out is not None:
         stats_out["algorithm"] = algorithm
     if algorithm == "local":

@@ -1,12 +1,10 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
 columns with typed metadata, processed via Arrow-batched ``mapInPandas``.
 
-The decode step is STUBBED (image/audio libraries are not in this
-container): :func:`decode_image` raises ``NotImplementedError`` unless
-``fake=True``, in which case a deterministic fake decoder produces
+The decode step is STUBBED: a deterministic fake decoder produces
 byte-derived features — the Spark-side plumbing (schema, batch iteration,
 partition sizing) is real and tested; swapping the stub for Pillow/ffmpeg
-on a real cluster changes one function body.
+changes one function body.
 
 Schema convention:
 
@@ -51,8 +49,7 @@ FEATURE_SCHEMA = (
 
 def _decode_fake(payload: bytes, n_feat: int = 8) -> list[float]:
     """Deterministic fake decode: byte-histogram features.  Stands in for
-    the real decoder (Pillow / torchaudio / ffmpeg) absent from this
-    container."""
+    a real decoder (Pillow / torchaudio / ffmpeg)."""
     if payload is None:
         return [0.0] * n_feat
     buckets = [0] * n_feat
@@ -62,34 +59,7 @@ def _decode_fake(payload: bytes, n_feat: int = 8) -> list[float]:
     return [round(c / total, 6) for c in buckets]
 
 
-def decode_image(payload: bytes, n_feat: int = 8) -> list[float]:
-    """Real decoder: Pillow when importable — decode, grayscale, 8×8
-    downsample, ``n_feat``-bucket intensity histogram (normalized).  On a
-    cluster image this is the live path; in this sandbox (no Pillow) it
-    raises and ``fake=True`` exercises the identical Spark plumbing."""
-    try:
-        from PIL import Image
-    except ImportError as e:  # pragma: no cover - PIL absent in sandbox
-        raise NotImplementedError(
-            "image decoding requires Pillow, not installed in this "
-            "sandbox; use extract_features(..., fake=True) which exercises "
-            "the identical Spark plumbing"
-        ) from e
-    import io
-
-    if payload is None:
-        return [0.0] * n_feat
-    img = Image.open(io.BytesIO(payload)).convert("L").resize((8, 8))
-    px = list(img.getdata())
-    buckets = [0] * n_feat
-    for p in px:
-        buckets[int(p) * n_feat // 256] += 1
-    return [round(c / len(px), 6) for c in buckets]
-
-
-def extract_features(
-    media: DataFrame, *, n_feat: int = 8, fake: bool = True, batch_rows: int = 1024
-) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Feature extraction over binary payloads with ``mapInPandas``.
 
     Arrow ships each partition to Python in batches; the UDF is a batch
@@ -100,7 +70,6 @@ def extract_features(
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import zlib
 
-        decoder = _decode_fake if fake else (lambda p: decode_image(p))
         for pdf in batches:
             out = pd.DataFrame(
                 {
@@ -116,7 +85,7 @@ def extract_features(
                         lambda p: 0 if p is None else zlib.crc32(bytes(p))
                     ),
                     "feature": pdf["payload"].map(
-                        lambda p: decoder(None if p is None else bytes(p))
+                        lambda p: _decode_fake(None if p is None else bytes(p))
                     ),
                 }
             )

@@ -49,7 +49,6 @@ def suggest_constraints(
     columns: list[str] | None = None,
     *,
     enum_max: int = 20,
-    approx: bool = False,
 ) -> DataFrame:
     """Suggestion rows ``(column, keyword, value)``, ordered by
     (column, keyword).  Keywords emitted:
@@ -66,10 +65,7 @@ def suggest_constraints(
     - ``unique``     — when distinct == non-null == rows (a key
       candidate → ``{"kind": "unique"}`` table check)
 
-    ``approx=True`` is the 10^12-row form: HLL
-    ``approx_count_distinct`` replaces the exact distinct count, enum
-    gating uses the estimate, and ``unique`` suggestions are SUPPRESSED
-    (a sketch cannot prove exact distinctness).
+    Distinct counts are exact, so ``unique`` is proven, not estimated.
     """
     spark = df.sparkSession
     fields = {f.name: f.dataType for f in df.schema.fields}
@@ -79,7 +75,7 @@ def suggest_constraints(
             raise KeyError(f"suggest_constraints: no column {c!r}")
 
     rows, str_enums = _profile_rows(df, cols, enum_max=enum_max,
-                                    approx=approx)
+                                    approx=False)
     prof = {r[0]: r for r in rows}
 
     # numeric enum candidates — one extra bounded collect, same
@@ -116,7 +112,7 @@ def suggest_constraints(
         elif isinstance(fields[c], T.StringType) and minl is not None:
             out.append((c, "minLength", _fmt(minl)))
             out.append((c, "maxLength", _fmt(maxl)))
-        if not approx and n > 0 and nd == nn == n:
+        if n > 0 and nd == nn == n:
             out.append((c, "unique", "true"))
     out.sort()
     return spark.createDataFrame(

@@ -115,8 +115,6 @@ def robust_outliers(
     *,
     k: float = 3.5,
     consistency: float = 1.4826,
-    exact: bool = True,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Rows whose ``value_col`` lies more than ``k`` robust standard
     deviations from their group median — the median/MAD outlier rule
@@ -129,10 +127,7 @@ def robust_outliers(
     deviations FROM a median — not one-pass decomposable), each
     map-side combined; the per-group stats table is tiny and joins
     back broadcast, so the input is scanned twice but never shuffled
-    on the row key.  ``exact=False`` swaps exact ``percentile`` for
-    ``approx_percentile(…, accuracy)`` — at 10^12 rows per group the
-    exact per-group sort is the bottleneck and a 1e-4-quantile error
-    moves no materially-outlying verdict.
+    on the row key.  Medians are exact ``percentile``.
 
     NULL values join no distribution and are never flagged; groups
     with ``MAD == 0`` (a majority-constant column) have no robust
@@ -152,17 +147,14 @@ def robust_outliers(
         src = src.withColumn("__g__", F.lit(1))
         gcols = ["__g__"]
 
-    def _median(c):
-        if exact:
-            return F.percentile(c, F.lit(0.5))
-        return F.approx_percentile(c, F.lit(0.5), F.lit(accuracy))
-
-    med = src.groupBy(*gcols).agg(_median(v).alias("__med__"))
+    med = src.groupBy(*gcols).agg(
+        F.percentile(v, F.lit(0.5)).alias("__med__"))
     mad = (
         src.join(F.broadcast(med), gcols)
         .groupBy(*gcols)
         .agg(
-            _median(F.abs(v - F.col("__med__"))).alias("__mad__"),
+            F.percentile(F.abs(v - F.col("__med__")), F.lit(0.5))
+            .alias("__mad__"),
             F.first("__med__").alias("__med__"),
         )
     )
@@ -271,8 +263,6 @@ def equidepth_histogram(
     column: str,
     *,
     n_buckets: int = 10,
-    exact: bool = True,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Equi-depth (equal-frequency) histogram: bucket boundaries at the
     ``i/n`` quantiles, so each bucket holds ~the same row count no
@@ -290,9 +280,6 @@ def equidepth_histogram(
     boundary array — ``bucket = #{b : x > b}`` — so ties land in the
     lower bucket deterministically in any engine, followed by one
     bucket-keyed count.  Two scans, no row-keyed shuffle, no Python.
-    ``exact=False`` swaps in ``approx_percentile`` for the 10^12-row
-    path (boundaries shift within sketch error; counts stay exact for
-    whatever boundaries were chosen).
 
     Output: ``(bucket, n, lo, hi)`` — observed min/max per bucket,
     rounded to 6; empty buckets (possible under heavy ties) are absent.
@@ -304,13 +291,9 @@ def equidepth_histogram(
     v = F.col(column)
     src = df.where(v.isNotNull())
     fracs = [i / n_buckets for i in range(1, n_buckets)]
-    pfn = "percentile" if exact else "approx_percentile"
-    extra = "" if exact else f", {accuracy}"
     row = src.agg(
-        F.expr(
-            f"{pfn}({column}, array({', '.join(map(str, fracs))}))"
-            f"{extra}"
-        ).alias("bounds")
+        F.expr(f"percentile({column}, array({', '.join(map(str, fracs))}))")
+        .alias("bounds")
     ).collect()[0]
     bounds = row["bounds"]
     if bounds is None:
@@ -521,8 +504,6 @@ def winsorize(
     lo: float = 0.01,
     hi: float = 0.99,
     out_col: str | None = None,
-    exact: bool = True,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Winsorize (clip) ``column`` at its ``lo``/``hi`` interpolated
     percentiles — the outlier-taming transform that keeps row count
@@ -532,19 +513,16 @@ def winsorize(
     The two boundaries are one bounded collect (rounded to 6 — the
     cross-engine interpolation rule from equidepth_histogram), the clip
     is a pure narrow ``least/greatest`` projection: zero shuffles,
-    pushdown-friendly, codegen'd.  ``exact=False`` swaps in
-    ``approx_percentile`` for the 10^12-row path.  NULLs pass through
-    unclipped (they carry "missing", not "extreme").
+    pushdown-friendly, codegen'd.  NULLs pass through unclipped (they
+    carry "missing", not "extreme").
 
     Output: ``df`` with ``out_col`` (default ``{column}_w``) added.
     """
     if not (0.0 <= lo < hi <= 1.0):
         raise ValueError(f"winsorize: need 0 <= lo < hi <= 1, got {lo},{hi}")
     out_col = out_col or f"{column}_w"
-    pfn = "percentile" if exact else "approx_percentile"
-    extra = "" if exact else f", {accuracy}"
     row = df.where(F.col(column).isNotNull()).agg(F.expr(
-        f"{pfn}({column}, array({lo}, {hi}){extra})")).first()[0]
+        f"percentile({column}, array({lo}, {hi}))")).first()[0]
     if row is None:
         return df.withColumn(out_col, F.col(column).cast("double"))
     b_lo, b_hi = (round(float(x), 6) for x in row)

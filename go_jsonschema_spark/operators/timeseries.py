@@ -110,7 +110,6 @@ def distributed_cumsum(
     *,
     out_col: str = "cum",
     n_buckets: int = 64,
-    exact: bool = False,
     accuracy: int = 10_000,
 ) -> DataFrame:
     """Global running sum of ``value_col`` under the TOTAL order given
@@ -146,9 +145,9 @@ def distributed_cumsum(
     addition tree vs a sequential engine).
 
     At 10^12 rows: raise ``n_buckets`` so each bucket fits an executor
-    (boundaries stay a bounded collect); the approximate percentile
-    default is the scale path — boundary placement only balances the
-    buckets, never changes the result.
+    (boundaries stay a bounded collect).  Boundaries are
+    ``approx_percentile(…, accuracy)`` — their placement only balances
+    the buckets, never changes the result.
     """
     if not order_cols:
         raise ValueError("distributed_cumsum: empty order_cols")
@@ -181,12 +180,10 @@ def distributed_cumsum(
         key = F.unix_date(F.col(first)).cast("long")
     src = df.withColumn("__key__", key.cast("double"))
 
-    pfn = "percentile" if exact else "approx_percentile"
     fracs = [i / n_buckets for i in range(1, n_buckets)]
-    extra = "" if exact else f", {accuracy}"
     bounds = src.agg(F.expr(
-        f"{pfn}(__key__, array({', '.join(map(str, fracs))}){extra})"
-    )).first()[0] or []
+        f"approx_percentile(__key__, array({', '.join(map(str, fracs))}), "
+        f"{accuracy})")).first()[0] or []
     barr = F.array(*[F.lit(float(b)) for b in bounds]).cast("array<double>")
     bkt = F.size(F.filter(barr, lambda b: F.col("__key__") > b))
     src = src.withColumn("__bkt__", bkt)

@@ -189,22 +189,19 @@ def sequence_audit(
     return out
 
 
-def _token_windows(tokens_col, n: int, *, hashed: bool):
+def _token_windows(tokens_col, n: int):
     """All n-token windows of an array as one `transform` over a
-    position `sequence` — ``xxhash64(slice)`` (8-byte, the scale form)
-    or ``array_join(slice, '-')`` (exact string form an external SQL
-    engine can replay).  Arrays shorter than ``n`` yield an empty
-    window list (``sequence(1, k)`` with k < 1 would RAISE, so the
-    short case is gated to an empty array)."""
+    position `sequence` of ``array_join(slice, '-')`` — the exact string
+    form an external SQL engine can replay.  Arrays shorter than ``n``
+    yield an empty window list (``sequence(1, k)`` with k < 1 would
+    RAISE, so the short case is gated to an empty array)."""
     toks = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
     last = F.size(toks) - F.lit(n - 1)
-    win = (lambda i: F.xxhash64(F.slice(toks, i, n))) if hashed else (
-        lambda i: F.array_join(F.slice(toks, i, n), "-"))
-    empty = F.array().cast("array<bigint>" if hashed else "array<string>")
     return F.when(
         last >= 1,
-        F.transform(F.sequence(F.lit(1), last), win),
-    ).otherwise(empty)
+        F.transform(F.sequence(F.lit(1), last),
+                    lambda i: F.array_join(F.slice(toks, i, n), "-")),
+    ).otherwise(F.array().cast("array<string>"))
 
 
 def token_ngram_contamination(
@@ -215,7 +212,6 @@ def token_ngram_contamination(
     tokens_col: str = "tokens",
     probe_tokens_col: str | None = None,
     id_col: str = "doc_id",
-    hashed: bool = True,
     max_probe_windows: int = 200_000,
 ) -> DataFrame:
     """Token-ID-level benchmark decontamination (the Dolma/paloma-style
@@ -231,16 +227,14 @@ def token_ngram_contamination(
     ship as ONE literal array; the corpus side never shuffles and never
     explodes — each row builds its window list with a `transform` over
     a position `sequence` and intersects against the literal
-    (`array_intersect` hashes the literal once per batch).  With
-    ``hashed=True`` windows travel as 8-byte ``xxhash64`` values (a
-    100k-window probe literal ≈ 800 KB); ``hashed=False`` keeps exact
-    '-'-joined id strings so an external engine (the DuckDB oracle) can
-    recompute the identical intersection.
+    (`array_intersect` hashes the literal once per batch).  Windows are
+    exact '-'-joined id strings, so an external engine (the DuckDB
+    oracle) can recompute the identical intersection.
     """
     pcol = probe_tokens_col or tokens_col
     probe_windows = (
         probes.select(
-            F.explode(_token_windows(pcol, n, hashed=hashed)).alias("w"))
+            F.explode(_token_windows(pcol, n)).alias("w"))
         .distinct().limit(max_probe_windows + 1).collect()
     )
     if len(probe_windows) > max_probe_windows:
@@ -255,19 +249,15 @@ def token_ngram_contamination(
     # lesson; ~2× the corpus-side work)
     bound = df.select(
         F.col(id_col),
-        _token_windows(tokens_col, n, hashed=hashed).alias("__w__"),
+        _token_windows(tokens_col, n).alias("__w__"),
     )
     # one PARSED array literal: pyspark's F.lit(list) expands per
     # element (~1.2 s of driver build for a 2,400-window probe at 13
     # tokens, measured r7); the parsed form is the identical literal
-    from go_jsonschema_spark.functions.literals import (
-        lit_bigints, lit_strings,
-    )
+    from go_jsonschema_spark.functions.literals import lit_strings
 
     hits = (
-        F.size(F.array_intersect(
-            F.col("__w__"),
-            lit_bigints(plist) if hashed else lit_strings(plist)))
+        F.size(F.array_intersect(F.col("__w__"), lit_strings(plist)))
         if plist else F.lit(0)
     )
     return bound.select(
@@ -478,7 +468,7 @@ def token_minhash_pairs(
     base = df.select(
         F.col(id_col).alias("id"),
         F.array_distinct(
-            _token_windows(tokens_col, n, hashed=False)).alias("sh"),
+            _token_windows(tokens_col, n)).alias("sh"),
     ).filter(F.size("sh") > 0)
     return _lsh_pairs_from_shingles(
         base, k=k, bands=bands, threshold=threshold, max_bucket=max_bucket)

@@ -434,14 +434,6 @@ class SchemaSpec:
     def to_json(self) -> str:
         return json.dumps(self.root)
 
-    def to_json_deref(self, circular_threshold: int = 3) -> str:
-        """Serialize with every ``$ref`` expanded inline, bounded by
-        ``circular_threshold`` — the DeRef + MarshalJSON pair of the
-        reference (schema_refs.go:131-155 eager resolution;
-        schema.go:206-276 marshal with per-ref ``marshalled`` counters,
-        default threshold 3 at parser.go:11)."""
-        return json.dumps(deref_expand(self, circular_threshold))
-
 
 def deref_expand(spec: "SchemaSpec", circular_threshold: int = 3) -> Any:
     """The reference's bounded DeRef'd-expansion serialization

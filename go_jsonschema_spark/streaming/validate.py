@@ -49,6 +49,14 @@ from pyspark.sql import DataFrame, functions as F
 from go_jsonschema_spark.engine import ConstraintSuite
 
 
+def _zoned(stream: DataFrame, ts_col: str) -> DataFrame:
+    """``stream`` with a TIMESTAMP_NTZ ``ts_col`` cast to TIMESTAMP:
+    watermarks need a zoned timestamp, and parquet often stores NTZ."""
+    if dict(stream.dtypes).get(ts_col) == "timestamp_ntz":
+        return stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    return stream
+
+
 def stream_violations(suite: ConstraintSuite, stream: DataFrame) -> DataFrame:
     """Append-mode violations stream ``(doc_id, constraint_id, observed)``
     — attach ``.writeStream`` to sink it.  Row checks only: the
@@ -72,10 +80,7 @@ def stream_histogram(
     of row volume).  Bucket semantics match the batch
     :func:`~go_jsonschema_spark.operators.drift.histogram`:
     ``floor(x / bucket_width)``, nulls excluded."""
-    ts_field = dict((f.name, f.dataType.simpleString())
-                    for f in stream.schema.fields).get(ts_col)
-    if ts_field == "timestamp_ntz":
-        stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    stream = _zoned(stream, ts_col)
     return (
         stream.filter(F.col(column).isNotNull() & F.col(ts_col).isNotNull())
         .withWatermark(ts_col, watermark)
@@ -130,12 +135,7 @@ def windowed_verdicts(
     per-partition verdicts, from the same kernel counters and gate
     (strict, or ``spec.tolerances`` budgets) in ONE windowed aggregation."""
     k = suite.kernel(stream)
-    checked = k.project(stream)
-    # watermarks need TIMESTAMP (with zone); parquet often stores NTZ
-    ts_field = dict((f.name, f.dataType.simpleString())
-                    for f in stream.schema.fields).get(ts_col)
-    if ts_field == "timestamp_ntz":
-        checked = checked.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    checked = _zoned(k.project(stream), ts_col)
     return k.verdicts(checked.withWatermark(ts_col, watermark),
                       F.window(F.col(ts_col), window), "window")
 
@@ -168,10 +168,7 @@ def stream_sessions(
     (start, end, count) per OPEN session per user, aged out by the
     watermark — O(active users), not O(events).
     """
-    ts_field = dict((f.name, f.dataType.simpleString())
-                    for f in stream.schema.fields).get(ts_col)
-    if ts_field == "timestamp_ntz":
-        stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    stream = _zoned(stream, ts_col)
     return (
         stream.where(F.col(ts_col).isNotNull())
         .withWatermark(ts_col, watermark)

@@ -1,4 +1,5 @@
-"""No library code that only tests and tools reach.
+"""No library code, and no library option, that only tests and tools
+reach.
 
 Every top-level ``def``/``class`` in ``go_jsonschema_spark/`` must be
 reached, transitively through def and class bodies, from a root: the
@@ -12,7 +13,17 @@ scan can miss dead code, never flag live code.
 
 ``ALLOWED`` holds the few public functions the docs promise without a
 query or job calling them; each cites the doc line that names it, and
-counts as a root.  Pure static scan — no Spark."""
+counts as a root.
+
+The same holds for options: every library parameter with a ``True``/
+``False`` default must be set to its other value by some call in a root
+file (``go_jsonschema_spark/``, ``__spark_entry__.py``, ``jobs/*.py``)
+and left at its default by another — else one of its two code paths is
+an engine only tests reach.  Callees resolve by name, a value passed
+positionally counts, and a non-constant value (or a ``*``/``**``
+spread) counts as both.  ``ALLOWED_OPTIONS`` lists the few the docs
+promise, each citing the doc line that names it.  Pure static scan — no
+Spark."""
 
 from __future__ import annotations
 
@@ -23,15 +34,26 @@ ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "go_jsonschema_spark"
 
 ALLOWED = {
-    "validate_instance": "README.md:97",
+    "validate_instance": "README.md:98",
     "spec_diff": "README.md:66",
     "validate_spec_against_metaschema": "COVERAGE.md:33",
     "register_remote_refs": "COVERAGE.md:36",
-    "set_unicode_class_routing": "COVERAGE.md:269",
+    "deref_expand": "COVERAGE.md:81",
     "ntok_baseline": "FIXTURES.md:40",
 }
 
+ALLOWED_OPTIONS = {
+    "validate_instance.assert_formats": "README.md:99",
+    "validate_instance.collect_all": "README.md:99",
+    "split.include_reasons": "README.md:37",
+    "split.quarantine_fk": "COVERAGE.md:110",
+    # retires with the hash-compact path (ROADMAP item 6)
+    "uniqueness_violations.hash_compact": "COVERAGE.md:103",
+}
+
 _DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+_ENTRY_FILES = [ROOT / "__spark_entry__.py",
+                *sorted((ROOT / "jobs").glob("*.py"))]
 
 
 def _uses(node: ast.AST) -> set[str]:
@@ -57,7 +79,7 @@ def _scan():
                 # module-level code is a root; ``__all__`` holds strings
                 # only, so it contributes no use
                 reached |= _uses(node)
-    for path in [ROOT / "__spark_entry__.py", *(ROOT / "jobs").glob("*.py")]:
+    for path in _ENTRY_FILES:
         reached |= _uses(ast.parse(path.read_text(encoding="utf-8")))
     todo = [n for n in reached if n in defs]
     while todo:
@@ -85,3 +107,94 @@ def test_allowlist_cites_its_doc_line():
         doc, line = cite.split(":")
         text = (ROOT / doc).read_text(encoding="utf-8").splitlines()
         assert name in text[int(line) - 1], (name, cite)
+
+
+def _options():
+    """Every library parameter with a ``True``/``False`` default, as
+    ``"function.parameter" -> (default, positional index or None,
+    "path:line")``; the index skips a method's ``self``/``cls``."""
+    out = {}
+    for path in sorted(PKG.rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            bound = int(bool(pos) and pos[0].arg in ("self", "cls"))
+            params = [
+                (arg, d, i - bound) for i, (arg, d) in enumerate(
+                    zip(pos[len(pos) - len(a.defaults):], a.defaults),
+                    start=len(pos) - len(a.defaults))
+            ] + [(arg, d, None) for arg, d in zip(a.kwonlyargs, a.kw_defaults)]
+            for arg, d, idx in params:
+                if isinstance(d, ast.Constant) and isinstance(d.value, bool):
+                    out[f"{fn.name}.{arg.arg}"] = (
+                        d.value, idx,
+                        f"{path.relative_to(ROOT)}:{fn.lineno}")
+    return out
+
+
+def _root_calls():
+    """``callee name -> [ast.Call]`` over every root file."""
+    calls: dict[str, list[ast.Call]] = {}
+    for path in [*sorted(PKG.rglob("*.py")), *_ENTRY_FILES]:
+        for n in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = (f.id if isinstance(f, ast.Name)
+                        else f.attr if isinstance(f, ast.Attribute) else None)
+                if name:
+                    calls.setdefault(name, []).append(n)
+    return calls
+
+
+def _values(call: ast.Call, param: str, idx: int | None, default: bool):
+    """Which of ``default`` / ``not default`` this call can pass."""
+    both = {default, not default}
+
+    def value(v: ast.expr) -> set[bool]:
+        if not isinstance(v, ast.Constant):
+            return both
+        return {default if v.value == default else not default}
+
+    for kw in call.keywords:
+        if kw.arg == param:
+            return value(kw.value)
+    if idx is not None:
+        for i, v in enumerate(call.args[:idx + 1]):
+            if isinstance(v, ast.Starred):
+                return both
+            if i == idx:
+                return value(v)
+    if any(kw.arg is None for kw in call.keywords):  # **spread
+        return both
+    return {default}
+
+
+def test_every_library_option_takes_both_values():
+    calls = _root_calls()
+    gaps = []
+    for key, (default, idx, where) in sorted(_options().items()):
+        if key in ALLOWED_OPTIONS:
+            continue
+        fn, param = key.split(".")
+        seen = set()
+        for call in calls.get(fn, []):
+            seen |= _values(call, param, idx, default)
+        for value in (default, not default):
+            if value not in seen:
+                gaps.append(f"{key}={value} ({where})")
+    assert not gaps, (
+        f"{len(gaps)} option values no query, job or library call "
+        f"selects (delete the option and the path only that value "
+        f"reaches, or select it from a query or job): {gaps}")
+
+
+def test_option_allowlist_cites_its_doc_line():
+    options = _options()
+    assert len(ALLOWED_OPTIONS) <= 5
+    for key, cite in ALLOWED_OPTIONS.items():
+        assert key in options, f"stale allowlist entry {key}"
+        doc, line = cite.split(":")
+        text = (ROOT / doc).read_text(encoding="utf-8").splitlines()
+        assert key.split(".")[1] in text[int(line) - 1], (key, cite)

@@ -290,3 +290,41 @@ def test_json_udf_resolves_refs_inside_nested_ids(spark):
     got = [r[0] for r in
            df.select(json_column_predicate(schema)(F.col("j"))).collect()]
     assert got == want
+
+
+def test_content_keywords_one_verdict_on_every_path(spark):
+    """``contentEncoding``/``contentMediaType`` get the same verdict on the
+    JSON-column route, the judge, a typed column in the suite and
+    ``validate_instance``: the typed compiler refuses them, so the
+    engine's group fallback judges them (one ``contentEncoding`` group)
+    and the native JSON path hands the column to the judge."""
+    from go_jsonschema_spark.engine import ConstraintSuite
+    from go_jsonschema_spark.spec import TableSpec
+
+    leaf = {"type": "string", "contentEncoding": "base64",
+            "contentMediaType": "application/json"}
+    schema = {"type": "object", "properties": {"s": leaf}}
+    # base64 of '{"a": 1}', not base64, base64 of 'not json', of '{}'
+    values = ["eyJhIjogMX0=", "not base64!", "bm90IGpzb24=", "e30="]
+    want = [validate_instance(leaf, v).valid for v in values]
+    assert want == [True, False, False, True]
+    docs = [json.dumps({"s": v}) for v in values]
+    df = spark.createDataFrame(
+        [(i, v, d) for i, (v, d) in enumerate(zip(values, docs))],
+        "id int, s string, j string")
+    auto, udf = json_column_predicate_auto(schema), json_column_predicate(
+        schema)
+    rows = df.orderBy("id").select(
+        auto(F.col("j")).alias("a"), udf(F.col("j")).alias("u")).collect()
+    assert [r["a"] for r in rows] == [r["u"] for r in rows] == [
+        validate_instance(schema, json.loads(d)).valid for d in docs] == want
+    with pytest.raises(CompileError):
+        json_column_predicate_native(schema)
+
+    res = ConstraintSuite(TableSpec(columns={
+        "s": leaf, "j": {"kind": "json", "schema": schema}}), key="id").run(df)
+    bad = sorted((r["constraint_id"], r["doc_id"])
+                 for r in res.violations.collect())
+    failing = [str(i) for i, ok in enumerate(want) if not ok]
+    assert bad == sorted([("j.json", i) for i in failing]
+                         + [("s.contentEncoding", i) for i in failing])

@@ -6,18 +6,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from go_jsonschema_spark.functions.literals import lit_bigints, lit_strings
+from go_jsonschema_spark.functions.literals import lit_strings
 
 
 def _one(spark, col):
     return spark.range(1).select(col.alias("v")).first()["v"]
-
-
-def test_bigint_literal_matches_litlist(spark):
-    vals = [0, 1, -1, 2**62, -(2**63), 2**63 - 1, 42]
-    fast = _one(spark, lit_bigints(vals))
-    slow = _one(spark, F.lit(vals).cast("array<bigint>"))
-    assert fast == slow == vals
 
 
 def test_string_literal_matches_litlist(spark):
@@ -52,5 +45,3 @@ def test_single_parsed_expression_for_large_lists(spark):
     # value equality is what we can assert portably
     vals = [f"{i}-{i + 1}-{i + 2}" for i in range(1000)]
     assert _one(spark, lit_strings(vals)) == vals
-    ints = [(i * 2654435761) % (2**63) - 2**62 for i in range(1000)]
-    assert _one(spark, lit_bigints(ints)) == ints

@@ -1,4 +1,4 @@
-"""Swap-point tests for optional cluster libraries (Pillow, idna, Iceberg
+"""Swap-point tests for optional cluster libraries (idna, Iceberg
 runtime): each real path is exercised when the library is importable and
 skipped cleanly when not, so cluster enablement is config-only.  The suite
 stays green BOTH with and without the libraries installed."""
@@ -16,33 +16,6 @@ def _has(mod: str) -> bool:
         return True
     except ImportError:
         return False
-
-
-# ---------------------------------------------------------------------------
-# Pillow decode
-# ---------------------------------------------------------------------------
-
-def test_decode_image_real_path():
-    PIL = pytest.importorskip("PIL")  # noqa: F841 - skip gate
-    import io
-
-    from PIL import Image
-
-    from go_jsonschema_spark.operators.multimodal import decode_image
-
-    buf = io.BytesIO()
-    Image.new("RGB", (16, 16), (128, 64, 32)).save(buf, format="PNG")
-    feats = decode_image(buf.getvalue())
-    assert len(feats) == 8
-    assert abs(sum(feats) - 1.0) < 1e-6
-
-
-@pytest.mark.skipif(_has("PIL"), reason="PIL installed; real path covered")
-def test_decode_image_raises_cleanly_without_pil():
-    from go_jsonschema_spark.operators.multimodal import decode_image
-
-    with pytest.raises(NotImplementedError, match="Pillow"):
-        decode_image(b"\x89PNG")
 
 
 # ---------------------------------------------------------------------------

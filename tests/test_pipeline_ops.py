@@ -143,14 +143,11 @@ def test_text_functions(spark, docs):
 
 def test_multimodal_features(spark):
     media = multimodal.synth_media(spark, 48)
-    feats = multimodal.extract_features(media, fake=True)
+    feats = multimodal.extract_features(media)
     rows = feats.collect()
     assert len(rows) == 48
     assert all(len(r["feature"]) == 8 for r in rows)
     assert all(r["n_bytes"] > 0 for r in rows)
     # deterministic: same input → same features
-    again = multimodal.extract_features(media, fake=True).collect()
+    again = multimodal.extract_features(media).collect()
     assert sorted(map(str, rows)) == sorted(map(str, again))
-    # real decoder is an explicit stub
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"\x89PNG")

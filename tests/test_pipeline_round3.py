@@ -145,16 +145,6 @@ def test_word_shingles_zipwith_equivalent(spark, docs, n):
 
 # -- decontamination ----------------------------------------------------------
 
-def test_contamination_hashed_matches_strings(docs):
-    probes = docs.filter(F.col("doc_id") < 5)
-    rest = docs.filter(F.col("doc_id") >= 5)
-    a = {(r["doc_id"], r["n_hits"]) for r in contamination_hits(
-        rest, probes, n=3, hashed=False).collect()}
-    b = {(r["doc_id"], r["n_hits"]) for r in contamination_hits(
-        rest, probes, n=3, hashed=True).collect()}
-    assert a == b and len(a) > 0
-
-
 def test_contamination_probe_budget(docs):
     probes = docs.filter(F.col("doc_id") < 50)
     with pytest.raises(ValueError, match="n-grams"):

@@ -229,19 +229,17 @@ def _cc_reference(edges):
     + [(20 + i, 20 + (i + 1) % 7) for i in range(7)],
 ])
 def test_star_and_label_clusters_agree(spark, edges):
-    """Both engines equal union-find ground truth; any other algorithm
-    name, including the label-propagation one, raises."""
+    """Both engines, each forced through ``star_threshold``, equal
+    union-find ground truth."""
     from go_jsonschema_spark.operators.dedup import duplicate_clusters
 
     pairs = spark.createDataFrame(edges, "a int, b int")
     want = _cc_reference(edges)
-    for algo in ("star", "local"):
+    for algo, threshold in (("star", 0), ("local", len(edges) + 1)):
+        st = {}
         got = {r["id"]: r["cluster"] for r in duplicate_clusters(
-            pairs, algorithm=algo).collect()}
-        assert got == want, algo
-    for algo in ("label", "nope"):
-        with pytest.raises(ValueError, match="algorithm must be"):
-            duplicate_clusters(pairs, algorithm=algo)
+            pairs, star_threshold=threshold, stats_out=st).collect()}
+        assert got == want and st["algorithm"] == algo, algo
 
 
 def test_star_clusters_random_graphs_hypothesis(spark):
@@ -263,7 +261,7 @@ def test_star_clusters_random_graphs_hypothesis(spark):
         want = _cc_reference(edges)
         pairs = spark.createDataFrame(edges, "a int, b int")
         star = {r["id"]: r["cluster"] for r in duplicate_clusters(
-            pairs, algorithm="star").collect()}
+            pairs, star_threshold=0).collect()}
         assert star == want, f"seed={seed}"
 
 
@@ -291,19 +289,18 @@ def test_clusters_auto_switch_counts_pairs(spark):
     from go_jsonschema_spark.operators.dedup import duplicate_clusters
 
     pairs = spark.createDataFrame([(1, 2), (2, 3)], "a int, b int")
-    # tiny threshold forces the star path through the auto switch
+    # tiny threshold forces the star path through the size switch
     st = {}
     out = {r["id"]: r["cluster"] for r in duplicate_clusters(
-        pairs, algorithm="auto", star_threshold=1, stats_out=st).collect()}
+        pairs, star_threshold=1, stats_out=st).collect()}
     assert out == {1: 1, 2: 1, 3: 1} and st["algorithm"] == "star"
     # default threshold routes a tiny list to the local union-find
     st2 = {}
     out2 = {r["id"]: r["cluster"] for r in duplicate_clusters(
-        pairs, algorithm="auto", stats_out=st2).collect()}
+        pairs, stats_out=st2).collect()}
     assert out2 == out and st2["algorithm"] == "local"
     # empty pair list: empty result, correct schema
-    empty = duplicate_clusters(
-        spark.createDataFrame([], "a int, b int"), algorithm="local")
+    empty = duplicate_clusters(spark.createDataFrame([], "a int, b int"))
     assert empty.columns == ["id", "cluster"] and empty.count() == 0
 
 

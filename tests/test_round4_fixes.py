@@ -34,7 +34,7 @@ def test_duplicate_clusters_auto_local_single_eval(spark):
 
     pairs, acc = _ticking_pairs(spark, 40)
     stats = {}
-    out = duplicate_clusters(pairs, algorithm="auto", stats_out=stats)
+    out = duplicate_clusters(pairs, stats_out=stats)
     rows = {r["id"]: r["cluster"] for r in out.collect()}
     assert stats["algorithm"] == "local"
     assert len(rows) == 41 and set(rows.values()) == {0}  # one chain
@@ -47,7 +47,7 @@ def test_duplicate_clusters_auto_star_single_eval(spark):
     pairs, acc = _ticking_pairs(spark, 40)
     stats = {}
     out = duplicate_clusters(
-        pairs, algorithm="auto", star_threshold=1, stats_out=stats)
+        pairs, star_threshold=1, stats_out=stats)
     rows = {r["id"]: r["cluster"] for r in out.collect()}
     assert stats["algorithm"] == "star"
     assert len(rows) == 41 and set(rows.values()) == {0}

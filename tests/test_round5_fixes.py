@@ -174,67 +174,42 @@ def test_probed_runs_discards_polluted_attempts():
     assert not noisy
 
 
-def test_has_dialect_classes():
-    from go_jsonschema_spark.functions.regex import has_dialect_classes
-
-    assert has_dialect_classes(r"^\w+$")
-    assert has_dialect_classes(r"a\d{2}")
-    assert has_dialect_classes(r"x\b")
-    assert has_dialect_classes(r"[\s\S]*")
-    assert not has_dialect_classes(r"^[a-z]+$")
-    assert not has_dialect_classes("\\\\w")   # escaped backslash, then w
-    assert not has_dialect_classes("plain")
-    assert has_dialect_classes("\\\\\\w")     # escaped backslash THEN \w
-
-
 def test_unicode_class_routing_divergence(spark):
     """VERDICT r4 item 3: `^\\w+$` compiles in BOTH dialects but Java
     evaluates `\\w` ASCII-only while the reference rewrites it to a
-    Unicode class (helpers.go:69-86).  Pin both routing modes on
-    non-ASCII input."""
+    Unicode class (helpers.go:69-86).  Pin the documented split on
+    non-ASCII input: the typed path follows Java, the judge Python."""
+    from go_jsonschema_spark.compile import _arrow_judge
     from go_jsonschema_spark.functions import regex as rx
 
     df = spark.createDataFrame([("café",), ("abc",), ("straße",)],
                                "s string")
     pat = r"^\w+$"
 
-    def run():
-        col = rx.ecma_pattern_predicate(F.col("s"), pat)
+    def run(col):
         return {r["s"]: r["m"]
                 for r in df.select("s", col.alias("m")).collect()}
 
-    # default: native rlike, Java ASCII-only \w — non-ASCII rejected
-    assert run() == {"café": False, "abc": True, "straße": False}
-
-    rx.set_unicode_class_routing(True)
-    try:
-        # routed through the ECMA shim: Unicode-aware, like the
-        # reference's converted pattern
-        assert run() == {"café": True, "abc": True, "straße": True}
-    finally:
-        rx.set_unicode_class_routing(False)
-
-    # the interpreter agrees with the unicode mode natively
-    from go_jsonschema_spark.interp import compile_ecma_regex
-
-    m = compile_ecma_regex(pat)
-    assert bool(m.search("café")) and bool(m.search("straße"))
+    # typed path: native rlike, Java ASCII-only \w — non-ASCII rejected
+    assert run(rx.ecma_pattern_predicate(F.col("s"), pat)) == {
+        "café": False, "abc": True, "straße": False}
+    # the judge's Python shim is Unicode-aware, like the reference's
+    # converted pattern
+    assert run(_arrow_judge({"pattern": pat}, typed=True)(F.col("s"))) == {
+        "café": True, "abc": True, "straße": True}
 
 
 def test_unicode_routing_plain_patterns_stay_native(spark):
-    """The flag must not move class-free patterns off the rlike fast
-    path: the compiled plan for a plain pattern contains no pythonUDF."""
+    """Patterns Java accepts — dialect classes included — stay on the
+    rlike fast path: the compiled plan contains no pythonUDF."""
     from go_jsonschema_spark.functions import regex as rx
 
     df = spark.createDataFrame([("abc",)], "s string")
-    rx.set_unicode_class_routing(True)
-    try:
+    for pat in (r"^[a-z]+$", r"^\w+$"):
         plan = df.filter(
-            rx.ecma_pattern_predicate(F.col("s"), r"^[a-z]+$"))._jdf \
+            rx.ecma_pattern_predicate(F.col("s"), pat))._jdf \
             .queryExecution().executedPlan().toString()
-    finally:
-        rx.set_unicode_class_routing(False)
-    assert "pythonUDF" not in plan and "ArrowEvalPython" not in plan
+        assert "pythonUDF" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_probed_runs_spread_gate_tops_up():
@@ -404,18 +379,6 @@ def test_range_join_matches_naive_between(spark):
     assert got == want and len(want) > 20
     # boundary inclusivity both ends
     assert (9, 100) in got and (3, 100) in got and (9, 200) in got
-
-
-def test_range_join_left_keeps_unmatched_points(spark):
-    from go_jsonschema_spark.operators.asof import range_join
-
-    pts = spark.createDataFrame([(1, 1.0), (2, 100.0)], "pid long, x double")
-    ivs = spark.createDataFrame([(9, 0.0, 5.0)], "iid long, lo double, hi double")
-    rows = range_join(pts, ivs, left_point="x", right_start="lo",
-                      right_end="hi", bin_width=10.0, how="left").collect()
-    by_pid = {r["pid"]: r for r in rows}
-    assert by_pid[1]["iid"] == 9
-    assert by_pid[2]["iid"] is None  # unmatched point kept with null right
 
 
 def test_range_join_negative_coords(spark):

@@ -1,8 +1,7 @@
 """Round-6 regression tests for the four ADVICE findings.
 
-1. range_join(how='left'): a MATCHED left row containing NULL columns
-   must not be re-emitted as a spurious unmatched row (the recovery
-   anti-join must be null-safe).
+1. range_join: a matched point row containing NULL columns is emitted
+   once per matching interval, and points outside every interval drop.
 2. t_closeness: an equivalence class whose quasi-identifier value is
    NULL must rejoin its own counts (null-safe skeleton join) — a
    NULL-quasi class distributed identically to the global distribution
@@ -24,8 +23,8 @@ from pyspark.sql import functions as F
 
 
 def test_range_join_left_null_column_no_duplicates(spark):
-    """ADVICE r6 (high): matched left row with a NULL tag column used to
-    fail the all-columns anti-join equality and get re-emitted."""
+    """A matched point (left-side) row with a NULL tag column is emitted
+    once; an unmatched point is absent (inner join)."""
     from go_jsonschema_spark.operators.asof import range_join
 
     pts = spark.createDataFrame(
@@ -38,16 +37,12 @@ def test_range_join_left_null_column_no_duplicates(spark):
     )
     rows = range_join(
         pts, ivs, left_point="x", right_start="lo", right_end="hi",
-        bin_width=10.0, how="left",
+        bin_width=10.0,
     ).collect()
-    # one row per (matched pair) + one row per unmatched point: 1+1+1
-    assert len(rows) == 3
     by_pid = {}
     for r in rows:
         by_pid.setdefault(r["pid"], []).append(r["iid"])
-    assert by_pid[1] == [10]       # matched once, NOT also re-emitted
-    assert by_pid[2] == [20]
-    assert by_pid[3] == [None]     # genuinely unmatched -> null right cols
+    assert by_pid == {1: [10], 2: [20]}
 
 
 def test_range_join_left_all_null_row_matched_once(spark):
@@ -58,14 +53,13 @@ def test_range_join_left_all_null_row_matched_once(spark):
     ivs = spark.createDataFrame([(1, 0.0, 10.0)],
                                 "iid long, lo double, hi double")
     out = range_join(pts, ivs, left_point="x", right_start="lo",
-                     right_end="hi", bin_width=4.0, how="left").collect()
+                     right_end="hi", bin_width=4.0).collect()
     assert len(out) == 1 and out[0]["iid"] == 1
 
 
 def test_range_join_span_prefilter_keeps_left_semantics(spark):
     """Points outside the intervals' global [min_start, max_end] are
-    pre-filtered from the join but must still appear as unmatched rows
-    under how='left'."""
+    pre-filtered from the join; the points inside still match."""
     from go_jsonschema_spark.operators.asof import range_join
 
     pts = spark.createDataFrame(
@@ -76,11 +70,7 @@ def test_range_join_span_prefilter_keeps_left_semantics(spark):
                                 "iid long, lo double, hi double")
     inner = range_join(pts, ivs, left_point="x", right_start="lo",
                        right_end="hi", bin_width=2.0).collect()
-    assert {r["pid"] for r in inner} == {1, 2}
-    left = range_join(pts, ivs, left_point="x", right_start="lo",
-                      right_end="hi", bin_width=2.0, how="left").collect()
-    assert len(left) == 4
-    assert {r["pid"] for r in left if r["iid"] is None} == {0, 3}
+    assert sorted((r["pid"], r["iid"]) for r in inner) == [(1, 1), (2, 1)]
 
 
 def test_range_join_empty_right_side(spark):
@@ -90,9 +80,6 @@ def test_range_join_empty_right_side(spark):
     ivs = spark.createDataFrame([], "iid long, lo double, hi double")
     assert range_join(pts, ivs, left_point="x", right_start="lo",
                       right_end="hi", bin_width=2.0).count() == 0
-    left = range_join(pts, ivs, left_point="x", right_start="lo",
-                      right_end="hi", bin_width=2.0, how="left").collect()
-    assert len(left) == 1 and left[0]["iid"] is None
 
 
 def test_t_closeness_null_quasi_class_rejoins_counts(spark):

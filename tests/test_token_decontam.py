@@ -1,5 +1,5 @@
 """tokens.token_ngram_contamination — token-ID-level n-gram
-decontamination: hand cases, hashed==string parity, plan shape."""
+decontamination: hand cases, bounds, plan shape."""
 
 from __future__ import annotations
 
@@ -35,7 +35,7 @@ def _probes(spark):
 
 def test_hand_computed_string_form(spark):
     out = {r["doc_id"]: r for r in token_ngram_contamination(
-        _corpus(spark), _probes(spark), n=3, hashed=False).collect()}
+        _corpus(spark), _probes(spark), n=3).collect()}
     # probe windows: [2,3,4] and [3,4,9]
     assert (out["a"]["n_windows"], out["a"]["n_hits"]) == (4, 1)
     assert out["b"]["n_hits"] == 0 and not out["b"]["contaminated"]
@@ -43,13 +43,6 @@ def test_hand_computed_string_form(spark):
     assert (out["d"]["n_windows"], out["d"]["n_hits"]) == (0, 0)
     # duplicate window in one doc counts once (DISTINCT probe windows)
     assert (out["e"]["n_hits"], out["e"]["contaminated"]) == (1, True)
-
-
-def test_hashed_form_matches_string_form(spark):
-    c, p = _corpus(spark), _probes(spark)
-    s = token_ngram_contamination(c, p, n=3, hashed=False)
-    h = token_ngram_contamination(c, p, n=3, hashed=True)
-    assert sorted(map(tuple, s.collect())) == sorted(map(tuple, h.collect()))
 
 
 def test_empty_probe_set(spark):
@@ -66,7 +59,7 @@ def test_probe_bound_raises(spark):
 
 def test_corpus_plan_no_explode_no_shuffle(spark):
     plan = _plan(token_ngram_contamination(
-        _corpus(spark), _probes(spark), n=3, hashed=True))
+        _corpus(spark), _probes(spark), n=3))
     assert "Exchange" not in plan
     assert "Generate" not in plan  # the corpus never explodes
     assert "EvalPython" not in plan and "InPandas" not in plan

@@ -67,10 +67,12 @@ def main() -> int:
         pairs = e.toDF("a", "b").localCheckpoint()  # freeze input
         n_pairs = pairs.count()
         sums = {}
-        for algo in ("star", "local"):
+        # force each engine through the size switch
+        for algo, threshold in (("star", 0), ("local", n_pairs + 1)):
             stats: dict = {}
             t0 = time.time()
-            out = duplicate_clusters(pairs, algorithm=algo, stats_out=stats)
+            out = duplicate_clusters(
+                pairs, star_threshold=threshold, stats_out=stats)
             # order-insensitive strong fingerprint of the full labeling
             agg = out.agg(
                 F.expr("bit_xor(xxhash64(id, cluster))").alias("fp"),
