@@ -43,6 +43,9 @@ from go_jsonschema_spark.compile import (
     _arrow_judge,
     compile_predicate,
 )
+from go_jsonschema_spark.operators.uniqueness import (
+    _key_col, key_doc_id, uniqueness_violations,
+)
 from go_jsonschema_spark.spec import SchemaSpec, SpecError, TableSpec
 
 __all__ = ["ConstraintSuite", "SuiteResult", "ConstraintPlan"]
@@ -181,9 +184,11 @@ class SuiteResult:
     def split(self, *, include_reasons: bool = False,
               quarantine_fk: bool = True) -> tuple[DataFrame, DataFrame]:
         """Quarantine split: ``(clean, quarantined)`` — the ETL routing
-        action (write clean rows onward, bad rows to a review sink)
-        derived from the SAME one-pass ``checked`` plan the verdicts
-        came from: no second scan, no join back.
+        action (write clean rows onward, bad rows to a review sink).
+        Both sides filter ``checked``, so each action evaluates every
+        predicate again over the input, the FK join included: a second
+        pass, not a read of the narrow frame the verdicts came from
+        (that frame carries no input columns to route).
 
         ``quarantine_fk`` also routes rows failing any foreign-key
         check (they are table-check violations, so they never count in
@@ -564,10 +569,6 @@ class ConstraintSuite:
         for tc in checks:
             kind = tc["kind"]
             if kind == "unique":
-                from go_jsonschema_spark.operators.uniqueness import (
-                    uniqueness_violations,
-                )
-
                 # one exact count aggregation, one exchange; never the
                 # hash-compact path (slower, see duplicate_keys docstring)
                 parts.append(
@@ -600,15 +601,9 @@ class ConstraintSuite:
                 )
 
                 det = tc["determinant"]
-                det_cols = [det] if isinstance(det, str) else list(det)
                 v = fd_violations(df, det, tc["dependent"])
-                doc_id = (
-                    F.to_json(F.struct(*det_cols))
-                    if len(det_cols) > 1
-                    else F.col(det_cols[0]).cast("string")
-                )
                 parts.append(v.select(
-                    doc_id.alias("doc_id"),
+                    key_doc_id(det, _key_col(det)[0]).alias("doc_id"),
                     F.lit(tc["id"]).alias("constraint_id"),
                     F.col("n_values").cast("string").alias("observed"),
                 ))
@@ -617,21 +612,15 @@ class ConstraintSuite:
                     reconcile_totals,
                 )
 
-                keys = tc["key"]
-                key_cols = [keys] if isinstance(keys, str) else list(keys)
                 v = reconcile_totals(
-                    df, _dim_table(dims, tc), keys,
+                    df, _dim_table(dims, tc), tc["key"],
                     tc["parent_col"], tc["child_col"],
                     atol=tc.get("atol", 1e-6),
                     how=tc.get("how", "full"),
                 )
-                doc_id = (
-                    F.to_json(F.struct(*key_cols))
-                    if len(key_cols) > 1
-                    else F.col(key_cols[0]).cast("string")
-                )
                 parts.append(v.select(
-                    doc_id.alias("doc_id"),
+                    key_doc_id(tc["key"], _key_col(tc["key"])[0])
+                    .alias("doc_id"),
                     F.lit(tc["id"]).alias("constraint_id"),
                     F.coalesce(
                         F.col("diff").cast("string"),
@@ -640,8 +629,8 @@ class ConstraintSuite:
                         .otherwise(F.lit("missing_children")),
                     ).alias("observed"),
                 ))
-            # stats/drift/row_count produce metrics, not violations — exposed
-            # via operators.stats / operators.drift and the checkpoint layer
+            # stats/drift/row_count/completeness produce metrics, not
+            # violations — metrics() runs them
         if not parts:
             return None
         out = parts[0]

@@ -193,7 +193,7 @@ def gopher_metrics(text: Column) -> dict[str, Column]:
     }
 
 
-def lang_id(text: Column, langs: list[str] | None = None) -> Column:
+def lang_id(text: Column) -> Column:
     """Two-stage language ID, fully native (one pass, no UDF):
 
     1. **script vote** — if more than a third of the non-space characters
@@ -208,19 +208,14 @@ def lang_id(text: Column, langs: list[str] | None = None) -> Column:
     Deterministic and replicated verbatim by the DuckDB oracle
     (__spark_entry__._lang_id_oracle builds the SQL from the same
     constants)."""
-    langs = langs or list(LANG_STOPWORDS)
     w = F.array_distinct(words(text))
     scores = {
-        lg: F.size(
-            F.array_intersect(
-                w, F.array(*[F.lit(s) for s in LANG_STOPWORDS[lg]])
-            )
-        )
-        for lg in langs
+        lg: F.size(F.array_intersect(w, F.array(*[F.lit(s) for s in stop])))
+        for lg, stop in LANG_STOPWORDS.items()
     }
-    best = F.greatest(*scores.values()) if len(scores) > 1 else list(scores.values())[0]
+    best = F.greatest(*scores.values())
     out = F.lit("und")
-    for lg in reversed(langs):
+    for lg in reversed(scores):
         out = F.when((scores[lg] > 0) & (scores[lg] == best), F.lit(lg)).otherwise(out)
     # script vote wraps the stopword result (outermost when = first range)
     n_chars = F.length(F.regexp_replace(text, r"\s", ""))

@@ -53,19 +53,18 @@ def _jtype(dt: T.DataType) -> str:
 
 def profile_table(
     df: DataFrame,
-    columns: list[str] | None = None,
     *,
     enum_max: int = 16,
 ) -> DataFrame:
-    """Per-column profile rows (``PROFILE_SCHEMA``): row/null/distinct
-    counts, numeric bounds, string length bounds, and — for string
-    columns with ≤ ``enum_max`` distinct values — the sorted
-    comma-joined value list.  Array columns profile their SIZE under
+    """Per-column profile rows (``PROFILE_SCHEMA``) for every column:
+    row/null/distinct counts, numeric bounds, string length bounds, and
+    — for string columns with ≤ ``enum_max`` distinct values — the
+    sorted comma-joined value list.  Array columns profile their SIZE under
     min_len/max_len and integral-element bounds under min_num/max_num
     (feeding minItems/maxItems + items bounds in
     :func:`infer_table_spec`)."""
     return _profile_frame(
-        df, *_profile_rows(df, columns, enum_max=enum_max, approx=False))
+        df, *_profile_rows(df, None, enum_max=enum_max, approx=False))
 
 
 def _profile_frame(df: DataFrame, rows, enums) -> DataFrame:

@@ -5,10 +5,6 @@ sides, union, and take the running ``last_value`` of the right side's
 payload over a window partitioned by key and ordered by (ts, side) — each
 left row then carries the most recent right row with ``right.ts <=
 left.ts``.  ONE shuffle (the window partitioning), O(n log n) per key.
-
-An ``applyInPandas`` + ``pd.merge_asof`` variant is the fallback when the
-payload is too wide to thread through the union, at the cost of the
-Arrow boundary.
 """
 
 from __future__ import annotations

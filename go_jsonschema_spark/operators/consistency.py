@@ -21,8 +21,6 @@ def fd_violations(
     df: DataFrame,
     determinant: str | list[str],
     dependent: str,
-    *,
-    constraint_id: str | None = None,
 ) -> DataFrame:
     """Functional-dependency audit: determinant value combinations that
     map to MORE than one distinct ``dependent`` value, i.e. witnesses
@@ -49,7 +47,7 @@ def fd_violations(
     # NULL-distinguishable dependent: groupBy treats NULL as a group, so
     # distinct (det, dep) pairs keep NULL-vs-value conflicts visible
     pairs = df.select(*dets, dependent).distinct()
-    out = (
+    return (
         pairs.groupBy(*dets)
         .agg(
             F.count(F.lit(1)).alias("n_values"),
@@ -58,9 +56,6 @@ def fd_violations(
         )
         .filter(F.col("n_values") > 1)
     )
-    if constraint_id:
-        out = out.select(F.lit(constraint_id).alias("constraint_id"), "*")
-    return out
 
 
 def reconcile_totals(

@@ -102,7 +102,6 @@ def lm_perplexity(
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
-    train_df: DataFrame | None = None,
     k: float = 0.5,
 ) -> DataFrame:
     """Score every document by the perplexity of an add-k-smoothed
@@ -112,12 +111,9 @@ def lm_perplexity(
         avg_logprob = sum(dc · ln P) / sum(dc)   over the doc's bigrams
         ppl = exp(-avg_logprob)
 
-    ``train_df`` defaults to ``df`` itself (self-perplexity — low means
-    the doc looks like the corpus, high means outlier/garbage; CCNet
-    trains on a clean reference corpus instead, which is just a
-    different ``train_df``).  Unseen bigrams/prefixes fall back to the
-    smoothed floor via left joins, so external corpora score without
-    error.
+    The LM trains on ``df`` itself (self-perplexity — low means the doc
+    looks like the corpus, high means outlier/garbage; CCNet trains on a
+    clean reference corpus instead).
 
     Output: ``(id_col, n_bigrams, avg_logprob, ppl)`` — one row per
     input document; docs with < 2 tokens get n_bigrams = 0 and NULL
@@ -125,9 +121,7 @@ def lm_perplexity(
     """
     if k <= 0:
         raise ValueError(f"lm_perplexity: smoothing k must be > 0, got {k}")
-    lm, vocab = bigram_lm(
-        train_df if train_df is not None else df,
-        text_col=text_col, id_col=id_col)
+    lm, vocab = bigram_lm(df, text_col=text_col, id_col=id_col)
     tok = _tokens(df, text_col, id_col)
     grams = _doc_bigrams(tok)
     p = (
@@ -135,13 +129,9 @@ def lm_perplexity(
     ) / (
         F.coalesce(F.col("c1"), F.lit(0)) + F.lit(float(k) * vocab)
     )
-    # c2 and c1 join SEPARATELY: a bigram unseen as a pair can still have
-    # a seen PREFIX, and its c1(w1) denominator must survive — joining the
-    # combined (w1,w2,c2,c1) model on (w1,w2) alone zeroes c1 for such
-    # bigrams, so P(.|w1) stops summing to 1 and an unseen bigram after a
-    # frequent prefix outscores a seen rare one, inverting the CCNet-style
-    # filter signal.  c1 is functionally dependent on w1, so the distinct
-    # prefix table is exact.
+    # c2 and c1 join SEPARATELY, each a left join: a bigram missing from
+    # the model as a pair keeps its prefix's c1(w1) denominator.  c1 is
+    # functionally dependent on w1, so the distinct prefix table is exact.
     c2p = lm.select("w1", "w2", "c2")
     c1p = lm.select("w1", "c1").distinct()
     scored = (
@@ -323,7 +313,7 @@ def rrf_fuse(
     *,
     k: int = 60,
     rank_col: str = "rank",
-    top_k: int | None = None,
+    top_k: int,
 ) -> DataFrame:
     """Reciprocal-rank fusion of N ranked lists —
     ``score(d) = Σ_lists 1/(k+rank_d)`` (Cormack et al.'s parameter-free
@@ -339,8 +329,8 @@ def rrf_fuse(
     final ordering window is small no matter the corpus size.  Ties
     break on the id columns for engine-independent output.
 
-    Output: ``(*id_cols, n_lists, rrf_score, fused_rank)``, score
-    rounded to 6.
+    Output: ``(*id_cols, n_lists, rrf_score, fused_rank)`` for the
+    ``top_k`` best fused ranks, score rounded to 6.
     """
     from functools import reduce
 
@@ -350,6 +340,8 @@ def rrf_fuse(
         raise ValueError("rrf_fuse: no rankings given")
     if k <= 0:
         raise ValueError(f"rrf_fuse: k must be > 0, got {k}")
+    if top_k < 1:
+        raise ValueError(f"rrf_fuse: top_k must be >= 1, got {top_k}")
     parts = [
         r.select(*id_cols,
                  (1.0 / (k + F.col(rank_col).cast("double"))).alias("__w__"))
@@ -364,7 +356,7 @@ def rrf_fuse(
                        *[F.col(c) for c in id_cols])
     out = fused.withColumn(
         "fused_rank", F.row_number().over(w).cast("long"))
-    return out.where(F.col("fused_rank") <= top_k) if top_k else out
+    return out.where(F.col("fused_rank") <= top_k)
 
 
 def pmi_collocations(

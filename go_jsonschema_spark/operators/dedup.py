@@ -171,7 +171,6 @@ def edit_distance_pairs(
     *,
     max_distance: int = 3,
     band: int = 32,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """EXACT near-duplicate pairs ``(a, b, distance)`` with
     ``levenshtein(text_a, text_b) <= max_distance`` — the typo/OCR-noise
@@ -191,9 +190,8 @@ def edit_distance_pairs(
 
     At 100 TB the blocked join is the usual LSH candidate shape
     (equi-join on small keys, shuffle ~2 rows per doc); block skew
-    mirrors the corpus' length histogram — cap degenerate blocks with
-    ``max_bucket`` (opt-in, sacrifices exactness on corpora that
-    skipped exact dedup first).  NULL texts are excluded.
+    mirrors the corpus' length histogram, and blocks are never capped
+    (a cap would sacrifice exactness).  NULL texts are excluded.
     """
     if max_distance < 0:
         raise ValueError("max_distance must be >= 0")
@@ -216,7 +214,6 @@ def edit_distance_pairs(
             )
         ).alias("blk"),
     )
-    blocked = _cap_buckets(blocked, ["blk"], max_bucket)
     cand = (
         blocked.alias("l")
         .join(blocked.alias("rt"), on="blk")

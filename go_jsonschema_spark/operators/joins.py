@@ -38,7 +38,7 @@ def semi_join_reducer(
     fact: DataFrame,
     dim: DataFrame,
     fact_key: str,
-    dim_key: str | None = None,
+    dim_key: str,
     *,
     n_buckets: int = 1 << 22,
 ) -> DataFrame:
@@ -57,10 +57,9 @@ def semi_join_reducer(
     if n_buckets < 1:
         raise ValueError(
             f"semi_join_reducer: n_buckets must be >= 1, got {n_buckets}")
-    dk = dim_key or fact_key
     digest = (
-        dim.where(F.col(dk).isNotNull())
-        .select(F.pmod(F.xxhash64(F.col(dk)), F.lit(n_buckets))
+        dim.where(F.col(dim_key).isNotNull())
+        .select(F.pmod(F.xxhash64(F.col(dim_key)), F.lit(n_buckets))
                 .alias("__bkt__"))
         .distinct()
     )
@@ -71,5 +70,5 @@ def semi_join_reducer(
         .join(F.broadcast(digest), "__bkt__", "left_semi")
     )
     return pre.join(
-        dim.select(F.col(dk).alias(fact_key)).distinct(),
+        dim.select(F.col(dim_key).alias(fact_key)).distinct(),
         fact_key, "left_semi")

@@ -35,17 +35,16 @@ def pack_chunks(
     token_col: str = "n_tok",
     key: str = "doc_id",
     budget: int = 2048,
-    group_col: str | None = None,
+    group_col: str,
 ) -> DataFrame:
     """Adds ``pack_id`` / ``pack_offset`` / ``pack_span`` (how many
     windows the doc touches) per the concat-and-chunk grid.  ``group_col``
-    scopes packing (e.g. per source); None packs the whole table as one
-    stream (single sort — fine for tests, scope by a column at scale)."""
+    scopes packing (e.g. per source or per split): each group is its own
+    stream, and the groups sort in parallel."""
     if budget <= 0:
         raise ValueError("budget must be positive")
-    part = [group_col] if group_col else []
     w = (
-        Window.partitionBy(*part)
+        Window.partitionBy(group_col)
         .orderBy(key)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -79,7 +78,7 @@ def pack_greedy(
     token_col: str = "n_tok",
     key: str = "doc_id",
     budget: int = 2048,
-    group_col: str | None = None,
+    group_col: str,
 ) -> DataFrame:
     """Greedy NO-STRADDLE packing: docs in deterministic ``key`` order
     fill a pack until the next doc doesn't fit, then a new pack opens —
@@ -96,18 +95,13 @@ def pack_greedy(
         pack_offset = used         if fits else 0
         used'       = used + n     if fits else n
 
-    so an oversize doc (``n > budget``) gets a pack of its own.  With
-    ``group_col=None`` the whole table is one group on one task — fine
-    for tests; scope by a column at scale (groups are the unit of
-    parallelism AND of pack numbering)."""
+    so an oversize doc (``n > budget``) gets a pack of its own.  Groups
+    are the unit of parallelism AND of pack numbering."""
     if budget <= 0:
         raise ValueError("budget must be positive")
     budget = int(budget)
-    one_group = group_col is None
-    gcol = group_col or "__g__"
-    src = df.withColumn(gcol, F.lit(0)) if one_group else df
     schema = T.StructType(
-        list(src.schema.fields)
+        list(df.schema.fields)
         + [T.StructField("pack_id", T.LongType()),
            T.StructField("pack_offset", T.LongType())]
     )
@@ -136,8 +130,7 @@ def pack_greedy(
         pdf["pack_offset"] = offsets
         return pdf
 
-    out = src.groupBy(gcol).applyInPandas(fill, schema)
-    return out.drop("__g__") if one_group else out
+    return df.groupBy(group_col).applyInPandas(fill, schema)
 
 
 def chunk_grid(
@@ -146,7 +139,7 @@ def chunk_grid(
     token_col: str = "n_tok",
     key: str = "doc_id",
     size: int = 512,
-    stride: int | None = None,
+    stride: int,
 ) -> DataFrame:
     """Overlapping token-window chunk grid per document — the
     context-window splitter for RAG indexing / long-doc training.  For a
@@ -165,9 +158,9 @@ def chunk_grid(
     text with them)."""
     if size <= 0:
         raise ValueError("size must be positive")
-    stride = int(stride or size)
     if stride <= 0:
         raise ValueError("stride must be positive")
+    stride = int(stride)
     n = F.col(token_col).cast("long")
     n_chunks = F.expr(
         f"CASE WHEN {token_col} > {size} "

@@ -46,12 +46,11 @@ def _fmt(v) -> str:
 
 def suggest_constraints(
     df: DataFrame,
-    columns: list[str] | None = None,
     *,
     enum_max: int = 20,
 ) -> DataFrame:
-    """Suggestion rows ``(column, keyword, value)``, ordered by
-    (column, keyword).  Keywords emitted:
+    """Suggestion rows ``(column, keyword, value)`` for every column,
+    ordered by (column, keyword).  Keywords emitted:
 
     - ``type``       — the column type's JSON-Schema name (only for
       string/integer/number/boolean columns; temporal and nested types
@@ -69,10 +68,7 @@ def suggest_constraints(
     """
     spark = df.sparkSession
     fields = {f.name: f.dataType for f in df.schema.fields}
-    cols = list(columns) if columns else list(fields)
-    for c in cols:
-        if c not in fields:
-            raise KeyError(f"suggest_constraints: no column {c!r}")
+    cols = list(fields)
 
     rows, str_enums = _profile_rows(df, cols, enum_max=enum_max,
                                     approx=False)
@@ -124,7 +120,6 @@ def dataset_card(
     suite=None,
     *,
     key: str = "doc_id",
-    dims: dict | None = None,
 ) -> DataFrame:
     """One-call dataset card: the long-format ``(metric, value)`` summary
     a data-readiness review starts from, assembled LAZILY (no collect —

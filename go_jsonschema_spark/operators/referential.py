@@ -41,12 +41,11 @@ def referential_violations(
 
 
 def referential_summary(
-    df: DataFrame, column: str, dim: DataFrame, dim_column: str | None = None
+    df: DataFrame, column: str, dim: DataFrame, dim_column: str
 ) -> DataFrame:
     """Per-value violation counts ``(value, n)`` — the compact form for
     metrics tables (one row per unknown dimension value, not per fact row)."""
-    dcol = dim_column or column
-    dim_keys = dim.select(F.col(dcol).alias(column)).distinct()
+    dim_keys = dim.select(F.col(dim_column).alias(column)).distinct()
     return (
         df.join(F.broadcast(dim_keys), on=column, how="left_anti")
         .groupBy(column)

@@ -30,6 +30,7 @@ __all__ = ["hash_split", "stratified_sample", "hash_bucket",
            "cap_per_group", "diversity_sample", "weighted_sample"]
 
 _BUCKETS = 1_000_000
+_SPLIT_WEIGHTS = {"train": 0.9, "val": 0.05, "test": 0.05}
 
 
 def hash_bucket(key: Column, salt: str) -> Column:
@@ -40,29 +41,19 @@ def hash_bucket(key: Column, salt: str) -> Column:
 def hash_split(
     df: DataFrame,
     key: str,
-    weights: dict[str, float] | None = None,
     *,
     salt: str = "split",
 ) -> DataFrame:
-    """Adds a ``split`` column ('train'/'val'/... per ``weights``) keyed
-    ONLY on ``xxhash64(key, salt)`` — membership survives repartitioning,
-    engine changes and re-runs.  Weights must sum to 1 (±1e-9)."""
-    weights = weights or {"train": 0.9, "val": 0.05, "test": 0.05}
-    total = sum(weights.values())
-    if abs(total - 1.0) > 1e-9:
-        raise ValueError(f"split weights sum to {total}, expected 1.0")
+    """Adds a ``split`` column ('train' 0.9 / 'val' 0.05 / 'test' 0.05)
+    keyed ONLY on ``xxhash64(key, salt)`` — membership survives
+    repartitioning, engine changes and re-runs."""
     b = hash_bucket(F.col(key), salt)
-    expr = None
-    hi = 0.0
-    names = list(weights)
-    for name in names[:-1]:
-        hi += weights[name]
-        cond = b < int(round(hi * _BUCKETS))
-        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(
-            cond, F.lit(name))
-    last = F.lit(names[-1])
-    expr = last if expr is None else expr.otherwise(last)
-    return df.withColumn("split", expr)
+    *head, last = _SPLIT_WEIGHTS
+    expr, hi = F, 0.0  # F.when opens the CASE, Column.when extends it
+    for name in head:
+        hi += _SPLIT_WEIGHTS[name]
+        expr = expr.when(b < int(round(hi * _BUCKETS)), F.lit(name))
+    return df.withColumn("split", expr.otherwise(F.lit(last)))
 
 
 def stratified_sample(

@@ -315,26 +315,20 @@ def equidepth_histogram(
     )
 
 
-def pairwise_corr(
-    df: DataFrame,
-    cols: list[str],
-    group_col: str | None = None,
-) -> DataFrame:
+def pairwise_corr(df: DataFrame, cols: list[str]) -> DataFrame:
     """Pearson correlation for every unordered column pair in ``cols``
-    (optionally per group) — the redundancy/leakage screen over a
-    table's numeric features, tidy-shaped for thresholding
-    (``WHERE abs(corr) > 0.95`` finds the duplicated features).
+    — the redundancy/leakage screen over a table's numeric features,
+    tidy-shaped for thresholding (``WHERE abs(corr) > 0.95`` finds the
+    duplicated features).
 
     ONE aggregation computes all C(m,2) correlations (each an
     algebraic one-pass moment — Spark's native ``corr``), then an
     inline unpivot explodes the single result row into tidy
-    ``(col_a, col_b, corr)`` rows.  No joins, no second scan; with
-    ``group_col`` the same single aggregation is group-keyed and
-    map-side combined.  Pairs where either column is constant have
-    undefined correlation and surface as NULL (both engines' corr
-    semantics).
+    ``(col_a, col_b, corr)`` rows.  No joins, no second scan.  Pairs
+    where either column is constant have undefined correlation and
+    surface as NULL (both engines' corr semantics).
 
-    Output: ``([group_col], col_a, col_b, corr)``, rounded to 6.
+    Output: ``(col_a, col_b, corr)``, rounded to 6.
     """
     if len(cols) < 2:
         raise ValueError("pairwise_corr: need at least two columns")
@@ -356,8 +350,7 @@ def pairwise_corr(
         ).alias(f"__c{i}__")
         for i, (a, bc) in enumerate(pairs)
     ]
-    gb = df.groupBy(group_col) if group_col else df.groupBy()
-    wide = gb.agg(*aggs)
+    wide = df.agg(*aggs)
     structs = F.array(*[
         F.struct(
             F.lit(a).alias("col_a"),
@@ -366,9 +359,8 @@ def pairwise_corr(
         )
         for i, (a, bc) in enumerate(pairs)
     ])
-    keep = [group_col] if group_col else []
-    return wide.select(*keep, F.explode(structs).alias("__s__")).select(
-        *keep, "__s__.col_a", "__s__.col_b", "__s__.corr")
+    return wide.select(F.explode(structs).alias("__s__")).select(
+        "__s__.col_a", "__s__.col_b", "__s__.corr")
 
 
 def trend(
@@ -503,7 +495,7 @@ def winsorize(
     *,
     lo: float = 0.01,
     hi: float = 0.99,
-    out_col: str | None = None,
+    out_col: str,
 ) -> DataFrame:
     """Winsorize (clip) ``column`` at its ``lo``/``hi`` interpolated
     percentiles — the outlier-taming transform that keeps row count
@@ -516,11 +508,10 @@ def winsorize(
     pushdown-friendly, codegen'd.  NULLs pass through unclipped (they
     carry "missing", not "extreme").
 
-    Output: ``df`` with ``out_col`` (default ``{column}_w``) added.
+    Output: ``df`` with ``out_col`` added.
     """
     if not (0.0 <= lo < hi <= 1.0):
         raise ValueError(f"winsorize: need 0 <= lo < hi <= 1, got {lo},{hi}")
-    out_col = out_col or f"{column}_w"
     row = df.where(F.col(column).isNotNull()).agg(F.expr(
         f"percentile({column}, array({lo}, {hi}))")).first()[0]
     if row is None:
@@ -597,8 +588,8 @@ def quantile_normalize(
     df: DataFrame,
     column: str,
     *,
-    group_col: str | None = None,
-    out_col: str | None = None,
+    group_col: str,
+    out_col: str,
 ) -> DataFrame:
     """Map each value to its empirical CDF position within its group —
     ``cume_dist`` ∈ (0, 1] — the rank-based normalization that makes
@@ -607,22 +598,17 @@ def quantile_normalize(
     signals, monotone-invariant model inputs, cross-source score
     calibration.
 
-    One window per group (groups run in parallel; without ``group_col``
-    this is a GLOBAL rank — fine for bounded inputs, but prefer a
-    group key at the 10^12-row scale where a total sort of one
-    partition is the bottleneck).  Ties share a value (cume_dist is
-    tie-stable), so the output is engine-independent without a
-    tiebreak column.  NULLs pass through as NULL rather than polluting
-    the rank.
+    One window per group (groups run in parallel — never one global
+    sort).  Ties share a value (cume_dist is tie-stable), so the output
+    is engine-independent without a tiebreak column.  NULLs pass
+    through as NULL rather than polluting the rank.
 
-    Output: ``df`` + ``out_col`` (default ``{column}_cdf``), rounded 6.
+    Output: ``df`` + ``out_col``, rounded 6.
     """
     from pyspark.sql import Window
 
-    out_col = out_col or f"{column}_cdf"
     v = F.col(column)
-    part = [group_col] if group_col else []
-    w = Window.partitionBy(*part).orderBy(v)
+    w = Window.partitionBy(group_col).orderBy(v)
     cdf = F.when(v.isNotNull(), F.round(F.cume_dist().over(w), 6))
     # rank only over non-null rows: union back the null rows untouched
     nn = df.where(v.isNotNull()).withColumn(out_col, cdf)

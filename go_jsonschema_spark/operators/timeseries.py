@@ -15,9 +15,7 @@ per-column fill policies:
 Scale shape: ONE aggregation shuffle over the events (map-side
 combined); the spine is ``(range_span / step)`` rows generated from a
 two-value driver aggregate — never row-scaled — and the fills are
-window functions over the SPINE (tiny), partitioned by group.  With
-``group_col`` the spine is cross-joined per distinct group, so every
-group covers the same grid (what a training-mix dashboard wants).
+window functions over the SPINE (tiny).
 """
 
 from __future__ import annotations
@@ -34,13 +32,12 @@ def resample(
     ts_col: str,
     step_seconds: int,
     aggs: dict[str, tuple[Column, str]],
-    group_col: str | None = None,
 ) -> DataFrame:
     """Resample ``df`` onto a dense ``step_seconds`` grid.
 
     ``aggs`` maps output column name → ``(aggregate expression, fill)``
     with fill one of ``zero | prev | linear | null``.  Returns
-    ``(bucket_ts[, group_col], *aggs)`` sorted-free (callers order).
+    ``(bucket_ts, *aggs)`` sorted-free (callers order).
     """
     for name, (_, fill) in aggs.items():
         if fill not in ("zero", "prev", "linear", "null"):
@@ -52,9 +49,8 @@ def resample(
         * step_seconds)
     src = df.filter(ts.isNotNull()).withColumn("__b__", bucket)
 
-    agged = src.groupBy(
-        *(["__b__", group_col] if group_col else ["__b__"])
-    ).agg(*[expr.alias(name) for name, (expr, _) in aggs.items()])
+    agged = src.groupBy("__b__").agg(
+        *[expr.alias(name) for name, (expr, _) in aggs.items()])
 
     # spine bounds: a two-value aggregate, never row-scaled
     lo, hi = src.agg(F.min("__b__"), F.max("__b__")).first()
@@ -66,17 +62,11 @@ def resample(
             F.lit(lo).cast("timestamp"), F.lit(hi).cast("timestamp"),
             F.expr(f"INTERVAL {int(step_seconds)} SECOND"),
         )).alias("__b__"))
-    if group_col:
-        spine = spine.crossJoin(
-            F.broadcast(src.select(group_col).distinct()))
+    dense = spine.join(agged, ["__b__"], "left")
 
-    keys = ["__b__"] + ([group_col] if group_col else [])
-    dense = spine.join(agged, keys, "left")
-
-    part = [group_col] if group_col else [F.lit(1)]
-    w_back = (Window.partitionBy(*part).orderBy("__b__")
+    w_back = (Window.partitionBy(F.lit(1)).orderBy("__b__")
               .rowsBetween(Window.unboundedPreceding, 0))
-    w_fwd = (Window.partitionBy(*part).orderBy("__b__")
+    w_fwd = (Window.partitionBy(F.lit(1)).orderBy("__b__")
              .rowsBetween(0, Window.unboundedFollowing))
 
     out = dense
@@ -261,7 +251,7 @@ def cusum_changepoint(
     *,
     ts_col: str,
     step_seconds: int,
-    group_col: str | None = None,
+    group_col: str,
 ) -> DataFrame:
     """CUSUM change-point scan per group: bucket events onto a
     ``step_seconds`` grid, then walk the cumulative sum of deviations
@@ -275,9 +265,8 @@ def cusum_changepoint(
 
     Shape: one map-side-combined bucket aggregation over the rows;
     everything after runs on the BUCKETS table — a per-group mean join
-    and one per-group ordered window (groups are parallel; a single
-    global series is one partition of buckets, which is bounded by
-    time-range/step, not by rows).
+    and one per-group ordered window (groups are parallel; each group's
+    buckets are bounded by time-range/step, not by rows).
 
     Output per group: ``(group, n_buckets, cusum_range, change_bucket)``
     — ``change_bucket`` the bucket-start timestamp with the peak |s|
@@ -289,22 +278,20 @@ def cusum_changepoint(
     bucket = F.timestamp_seconds(
         F.floor(F.unix_timestamp(ts) / step_seconds).cast("long")
         * step_seconds)
-    gcols = [group_col] if group_col else []
     counts = (
         df.where(ts.isNotNull())
-        .groupBy(*gcols, bucket.alias("__b__"))
+        .groupBy(group_col, bucket.alias("__b__"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    part = [F.col(c) for c in gcols] if gcols else [F.lit(1)]
-    w_all = Window.partitionBy(*part)
-    w_cum = (Window.partitionBy(*part).orderBy("__b__")
+    w_all = Window.partitionBy(group_col)
+    w_cum = (Window.partitionBy(group_col).orderBy("__b__")
              .rowsBetween(Window.unboundedPreceding, 0))
     s = counts.withColumn(
         "__s__", F.sum(F.col("n") - F.avg("n").over(w_all)).over(w_cum))
-    w_rank = Window.partitionBy(*part).orderBy(
+    w_rank = Window.partitionBy(group_col).orderBy(
         F.abs(F.col("__s__")).desc(), F.col("__b__"))
     ranked = s.withColumn("__r__", F.row_number().over(w_rank))
-    return ranked.groupBy(*gcols).agg(
+    return ranked.groupBy(group_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_buckets"),
         F.round(F.max("__s__") - F.min("__s__"), 4).alias("cusum_range"),
         F.max(F.when(F.col("__r__") == 1, F.col("__b__")))

@@ -109,8 +109,8 @@ def sequence_audit(
     df: DataFrame,
     *,
     tokens_col: str = "tokens",
-    bos_id: int | None = None,
-    eos_id: int | None = None,
+    bos_id: int,
+    eos_id: int,
 ) -> DataFrame:
     """Per-sequence sanity audit — the degenerate-generation /
     corrupt-tokenization signals a training pipeline gates on BEFORE
@@ -123,9 +123,9 @@ def sequence_audit(
     - ``n_distinct``    — distinct token count
     - ``distinct_ratio``— ``n_distinct / n_tok`` rounded to 6 (NULL for
       empty arrays): near-zero means a looping generator
-    - ``bos_ok``/``eos_ok`` (only when ``bos_id``/``eos_id`` given) —
-      first/last token equals the declared special id; False for empty
-      arrays (a sequence with no BOS is malformed, not vacuously fine)
+    - ``bos_ok``/``eos_ok`` — first/last token equals the declared
+      special id; False for empty arrays (a sequence with no BOS is
+      malformed, not vacuously fine)
 
     Everything is ONE narrow projection in whole-stage codegen: the run
     scan is a single ``F.aggregate`` fold over the array (state =
@@ -165,7 +165,7 @@ def sequence_audit(
         n_tok > 0, F.size(F.array_distinct(toks)).cast("long")
     ).otherwise(F.lit(0).cast("long"))
 
-    out = df.select(
+    return df.select(
         "*",
         n_tok.cast("long").alias("n_tok_audit"),
         run_state.alias("max_run"),
@@ -173,20 +173,15 @@ def sequence_audit(
         F.round(
             F.when(n_tok > 0, n_distinct / n_tok), 6
         ).alias("distinct_ratio"),
+    ).withColumn(
+        "bos_ok",
+        F.coalesce(F.try_element_at(toks, F.lit(1)) == F.lit(int(bos_id)),
+                   F.lit(False)),
+    ).withColumn(
+        "eos_ok",
+        F.coalesce(F.try_element_at(toks, F.lit(-1)) == F.lit(int(eos_id)),
+                   F.lit(False)),
     )
-    if bos_id is not None:
-        out = out.withColumn(
-            "bos_ok",
-            F.coalesce(F.try_element_at(toks, F.lit(1)) == F.lit(int(bos_id)),
-                       F.lit(False)),
-        )
-    if eos_id is not None:
-        out = out.withColumn(
-            "eos_ok",
-            F.coalesce(F.try_element_at(toks, F.lit(-1)) == F.lit(int(eos_id)),
-                       F.lit(False)),
-        )
-    return out
 
 
 def _token_windows(tokens_col, n: int):
@@ -210,13 +205,13 @@ def token_ngram_contamination(
     *,
     n: int = 13,
     tokens_col: str = "tokens",
-    probe_tokens_col: str | None = None,
     id_col: str = "doc_id",
     max_probe_windows: int = 200_000,
 ) -> DataFrame:
     """Token-ID-level benchmark decontamination (the Dolma/paloma-style
     13-gram rule, applied BEFORE detokenization): flag corpus sequences
     sharing any ``n``-token window with an evaluation/benchmark set.
+    ``probes`` carries its tokens in the same ``tokens_col``.
 
     Returns ``(doc_id, n_windows, n_hits, contaminated)`` where
     ``n_hits`` counts DISTINCT probe windows found in the document.
@@ -231,10 +226,9 @@ def token_ngram_contamination(
     exact '-'-joined id strings, so an external engine (the DuckDB
     oracle) can recompute the identical intersection.
     """
-    pcol = probe_tokens_col or tokens_col
     probe_windows = (
         probes.select(
-            F.explode(_token_windows(pcol, n)).alias("w"))
+            F.explode(_token_windows(tokens_col, n)).alias("w"))
         .distinct().limit(max_probe_windows + 1).collect()
     )
     if len(probe_windows) > max_probe_windows:

@@ -12,7 +12,7 @@ takes the ``hash_compact`` path (measured slower, see :func:`duplicate_keys`).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 __all__ = ["duplicate_keys", "uniqueness_violations", "compact_latest"]
 
@@ -28,6 +28,15 @@ def _key_col(key: str | list[str]):
     if len(key) == 1:
         return F.col(key[0]), key[0]
     return F.struct(*[F.col(k) for k in key]), "(" + ",".join(key) + ")"
+
+
+def key_doc_id(key: str | list[str], value: Column) -> Column:
+    """The violation-row ``doc_id`` of a key: ``value`` is the key column,
+    or for a composite key its struct (:func:`_key_col`), which renders
+    as one JSON object so the row stays one string column."""
+    if isinstance(key, str) or len(key) == 1:
+        return value.cast("string")
+    return F.to_json(value)
 
 
 def duplicate_keys(
@@ -83,18 +92,12 @@ def uniqueness_violations(
     hash_compact: bool = False,
 ) -> DataFrame:
     """Violation rows ``(doc_id, constraint_id, observed)`` for duplicate
-    keys — ``observed`` is the duplicate count as a string.  Composite keys
-    serialize as JSON so the violation row stays one string column."""
-    kcol, kname = _key_col(key)
+    keys — ``observed`` is the duplicate count as a string."""
+    _, kname = _key_col(key)
     cid = constraint_id or f"unique:{kname}"
     dups = duplicate_keys(df, key, hash_compact=hash_compact)
-    doc_id = (
-        F.to_json(F.col("key"))
-        if isinstance(key, list) and len(key) > 1
-        else F.col("key").cast("string")
-    )
     return dups.select(
-        doc_id.alias("doc_id"),
+        key_doc_id(key, F.col("key")).alias("doc_id"),
         F.lit(cid).alias("constraint_id"),
         F.concat(F.lit("count="), F.col("n_dup").cast("string")).alias("observed"),
     )

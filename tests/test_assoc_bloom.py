@@ -62,7 +62,7 @@ def test_reducer_semi_join_exact(spark):
         [(i, i % 100) for i in range(2000)], "id long, k long")
     dim = spark.createDataFrame([(k,) for k in range(0, 100, 7)], "k long")
     got = sorted(r["id"] for r in
-                 semi_join_reducer(fact, dim, "k").collect())
+                 semi_join_reducer(fact, dim, "k", "k").collect())
     want = sorted(i for i in range(2000)
                   if (i % 100) in set(range(0, 100, 7)))
     assert got == want
@@ -71,14 +71,14 @@ def test_reducer_semi_join_exact(spark):
 def test_reducer_null_keys_never_match(spark):
     fact = spark.createDataFrame([(1, None), (2, 5)], "id long, k long")
     dim = spark.createDataFrame([(5,)], "k long")
-    out = semi_join_reducer(fact, dim, "k").collect()
+    out = semi_join_reducer(fact, dim, "k", "k").collect()
     assert [r["id"] for r in out] == [2]
 
 
 def test_reducer_empty_dim(spark):
     fact = spark.createDataFrame([(1, 1)], "id long, k long")
     dim = spark.createDataFrame([], "k long")
-    assert semi_join_reducer(fact, dim, "k").count() == 0
+    assert semi_join_reducer(fact, dim, "k", "k").count() == 0
 
 
 def test_reducer_undersized_still_exact(spark):
@@ -86,7 +86,7 @@ def test_reducer_undersized_still_exact(spark):
     fact = spark.createDataFrame(
         [(i, i) for i in range(5000)], "id long, k long")
     dim = spark.createDataFrame([(i,) for i in range(0, 5000, 50)], "k long")
-    out = semi_join_reducer(fact, dim, "k", n_buckets=7).collect()
+    out = semi_join_reducer(fact, dim, "k", "k", n_buckets=7).collect()
     assert sorted(r["id"] for r in out) == list(range(0, 5000, 50))
 
 
@@ -114,4 +114,4 @@ def test_reducer_guard(spark):
     fact = spark.createDataFrame([(1, 1)], "id long, k long")
     dim = spark.createDataFrame([(1,)], "k long")
     with pytest.raises(ValueError, match="n_buckets"):
-        semi_join_reducer(fact, dim, "k", n_buckets=0)
+        semi_join_reducer(fact, dim, "k", "k", n_buckets=0)

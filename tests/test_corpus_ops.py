@@ -43,15 +43,6 @@ def test_lm_perplexity_hand_computed(spark):
     assert got[2]["avg_logprob"] == pytest.approx(avg2, rel=1e-12)
 
 
-def test_lm_perplexity_unseen_grams_smoothed(spark):
-    train = _docs(spark, [(1, "a b"), (2, "a b")])
-    score = _docs(spark, [(10, "x y")])  # both words unseen
-    got = lm_perplexity(score, train_df=train, k=0.5).collect()[0]
-    # c2 = 0, c1 = 0, V = 2 -> P = 0.5 / 1.0
-    assert got["avg_logprob"] == pytest.approx(math.log(0.5), rel=1e-12)
-    assert got["ppl"] == pytest.approx(2.0, rel=1e-12)
-
-
 def test_lm_perplexity_degenerate_docs(spark):
     df = _docs(spark, [(1, "a b a"), (2, "solo"), (3, ""), (4, None)])
     got = {r["doc_id"]: r for r in lm_perplexity(df).collect()}

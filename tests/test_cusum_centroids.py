@@ -18,15 +18,16 @@ def _events(spark, counts, step=3600):
     # counts[i] events in bucket i
     rows = []
     for i, n in enumerate(counts):
-        rows += [(len(rows) + j, i * step + j) for j in range(n)]
-    return spark.createDataFrame(rows, "id long, t long").select(
-        "id", F.timestamp_seconds("t").alias("ts"))
+        rows += [(len(rows) + j, "g", i * step + j) for j in range(n)]
+    return spark.createDataFrame(rows, "id long, g string, t long").select(
+        "id", "g", F.timestamp_seconds("t").alias("ts"))
 
 
 def test_cusum_finds_planted_shift(spark):
     # 2/bucket for 10 buckets, then 10/bucket for 10: change at bucket 9
     df = _events(spark, [2] * 10 + [10] * 10)
-    r = cusum_changepoint(df, ts_col="ts", step_seconds=3600).collect()[0]
+    r = cusum_changepoint(
+        df, ts_col="ts", step_seconds=3600, group_col="g").collect()[0]
     assert r["n_buckets"] == 20
     # CUSUM peak |s| sits at the LAST pre-shift bucket (i=9):
     # s dips by (2-6)=-4 per bucket for 10 buckets → range = 40
@@ -36,7 +37,8 @@ def test_cusum_finds_planted_shift(spark):
 
 def test_cusum_stable_series_small_range(spark):
     df = _events(spark, [5] * 12)
-    r = cusum_changepoint(df, ts_col="ts", step_seconds=3600).collect()[0]
+    r = cusum_changepoint(
+        df, ts_col="ts", step_seconds=3600, group_col="g").collect()[0]
     assert r["cusum_range"] == pytest.approx(0.0, abs=1e-6)
 
 

@@ -87,17 +87,6 @@ def test_corr_constant_column_is_null(spark):
     assert len(out) == 1 and out[0]["corr"] is None
 
 
-def test_corr_grouped(spark):
-    # group a: y=x (corr 1); group b: y=-x (corr -1)
-    rows = [(i, "a", float(i), float(i)) for i in range(10)]
-    rows += [(i + 10, "b", float(i), -float(i)) for i in range(10)]
-    df = spark.createDataFrame(rows, "id long, g string, x double, y double")
-    out = {r["g"]: r["corr"]
-           for r in pairwise_corr(df, ["x", "y"], group_col="g").collect()}
-    assert out["a"] == pytest.approx(1.0, abs=1e-6)
-    assert out["b"] == pytest.approx(-1.0, abs=1e-6)
-
-
 def test_corr_guards(spark):
     df = spark.createDataFrame([(1, 1.0)], "id long, x double")
     with pytest.raises(ValueError, match="two columns"):

@@ -15,15 +15,21 @@ scan can miss dead code, never flag live code.
 query or job calling them; each cites the doc line that names it, and
 counts as a root.
 
-The same holds for options: every library parameter with a ``True``/
-``False`` default must be set to its other value by some call in a root
-file (``go_jsonschema_spark/``, ``__spark_entry__.py``, ``jobs/*.py``)
-and left at its default by another — else one of its two code paths is
-an engine only tests reach.  Callees resolve by name, a value passed
-positionally counts, and a non-constant value (or a ``*``/``**``
-spread) counts as both.  ``ALLOWED_OPTIONS`` lists the few the docs
-promise, each citing the doc line that names it.  Pure static scan — no
-Spark."""
+The same holds for options: every library parameter whose default is
+``True``, ``False`` or ``None`` must be set to its other value (any
+value but ``None``, for a ``None`` default) by some call in a root file
+(``go_jsonschema_spark/``, ``__spark_entry__.py``, ``jobs/*.py``) and
+left at its default by another — else one of its two code paths is an
+engine only tests reach.  Callees resolve by name; a value passed
+positionally counts, a constant ``None`` counts as "left unset", and a
+non-constant value (or a ``*``/``**`` spread) counts as both.  The
+parameters of an ``ALLOWED`` function are exempt: it has no product
+caller, so no product call can select them.  ``ALLOWED_OPTIONS`` lists
+the few the docs promise, each citing the doc line that names it.
+String and numeric defaults are not scanned on purpose: a column-name
+default is a data binding, and a number is a tuning value or an input
+guard (``max_rows``, ``max_queries``), not a path switch.  Pure static
+scan — no Spark."""
 
 from __future__ import annotations
 
@@ -43,13 +49,17 @@ ALLOWED = {
 }
 
 ALLOWED_OPTIONS = {
-    "validate_instance.assert_formats": "README.md:99",
-    "validate_instance.collect_all": "README.md:99",
     "split.include_reasons": "README.md:37",
     "split.quarantine_fk": "COVERAGE.md:110",
     # retires with the hash-compact path (ROADMAP item 6)
     "uniqueness_violations.hash_compact": "COVERAGE.md:103",
+    # tests read which engine ran; folds into the run record (ROADMAP 3)
+    "duplicate_clusters.stats_out": "COVERAGE.md:145",
+    # the only way a declared drift check runs
+    "metrics.baselines": "COVERAGE.md:105",
 }
+
+_SET = "<set>"  # the other value of a ``None`` default: any non-None
 
 _DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 _ENTRY_FILES = [ROOT / "__spark_entry__.py",
@@ -109,8 +119,12 @@ def test_allowlist_cites_its_doc_line():
         assert name in text[int(line) - 1], (name, cite)
 
 
+def _other(default):
+    return _SET if default is None else not default
+
+
 def _options():
-    """Every library parameter with a ``True``/``False`` default, as
+    """Every library parameter with a ``True``/``False``/``None`` default, as
     ``"function.parameter" -> (default, positional index or None,
     "path:line")``; the index skips a method's ``self``/``cls``."""
     out = {}
@@ -127,7 +141,8 @@ def _options():
                     start=len(pos) - len(a.defaults))
             ] + [(arg, d, None) for arg, d in zip(a.kwonlyargs, a.kw_defaults)]
             for arg, d, idx in params:
-                if isinstance(d, ast.Constant) and isinstance(d.value, bool):
+                if isinstance(d, ast.Constant) and (
+                        d.value is None or isinstance(d.value, bool)):
                     out[f"{fn.name}.{arg.arg}"] = (
                         d.value, idx,
                         f"{path.relative_to(ROOT)}:{fn.lineno}")
@@ -148,14 +163,14 @@ def _root_calls():
     return calls
 
 
-def _values(call: ast.Call, param: str, idx: int | None, default: bool):
-    """Which of ``default`` / ``not default`` this call can pass."""
-    both = {default, not default}
+def _values(call: ast.Call, param: str, idx: int | None, default):
+    """Which of ``default`` / ``_other(default)`` this call can pass."""
+    both = {default, _other(default)}
 
-    def value(v: ast.expr) -> set[bool]:
+    def value(v: ast.expr) -> set:
         if not isinstance(v, ast.Constant):
             return both
-        return {default if v.value == default else not default}
+        return {default if v.value == default else _other(default)}
 
     for kw in call.keywords:
         if kw.arg == param:
@@ -178,10 +193,12 @@ def test_every_library_option_takes_both_values():
         if key in ALLOWED_OPTIONS:
             continue
         fn, param = key.split(".")
+        if fn in ALLOWED:
+            continue
         seen = set()
         for call in calls.get(fn, []):
             seen |= _values(call, param, idx, default)
-        for value in (default, not default):
+        for value in (default, _other(default)):
             if value not in seen:
                 gaps.append(f"{key}={value} ({where})")
     assert not gaps, (

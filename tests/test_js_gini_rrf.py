@@ -85,7 +85,8 @@ def _ranked(spark, pairs):
 def test_rrf_hand_case(spark):
     a = _ranked(spark, [(1, 1), (3, 2), (2, 3)])
     b = _ranked(spark, [(3, 1), (1, 2), (4, 3)])
-    out = {r["id"]: r for r in rrf_fuse([a, b], ["id"], k=60).collect()}
+    out = {r["id"]: r for r in
+           rrf_fuse([a, b], ["id"], k=60, top_k=20).collect()}
     assert out[1]["rrf_score"] == pytest.approx(
         round(1 / 61 + 1 / 62, 6), abs=1e-9)
     assert out[4]["n_lists"] == 1
@@ -99,6 +100,6 @@ def test_rrf_top_k_and_guards(spark):
     out = rrf_fuse([a], ["id"], k=60, top_k=3).collect()
     assert len(out) == 3 and {r["fused_rank"] for r in out} == {1, 2, 3}
     with pytest.raises(ValueError, match="no rankings"):
-        rrf_fuse([], ["id"])
+        rrf_fuse([], ["id"], top_k=20)
     with pytest.raises(ValueError, match="k must be"):
-        rrf_fuse([a], ["id"], k=0)
+        rrf_fuse([a], ["id"], k=0, top_k=20)

@@ -37,11 +37,6 @@ def test_hash_split_deterministic_and_partition_proof(docs):
     assert c["train"] / n == pytest.approx(0.9, abs=0.06)
 
 
-def test_hash_split_rejects_bad_weights(docs):
-    with pytest.raises(ValueError, match="sum"):
-        hash_split(docs, "doc_id", {"a": 0.5, "b": 0.4})
-
-
 def test_hash_sample_subset_and_rate(docs):
     """A constant weight is a fixed-rate Bernoulli-by-hash sample."""
     s = weighted_sample(docs, F.lit(0.2))
@@ -96,14 +91,16 @@ def test_pack_chunks_grid_invariants(spark):
 
 def test_pack_chunks_zero_and_budget_edge(spark):
     df = spark.createDataFrame(
-        [(1, 0), (2, 100), (3, 1)], "doc_id int, n_tok long")
+        [(1, "s", 0), (2, "s", 100), (3, "s", 1)],
+        "doc_id int, source string, n_tok long")
     out = {r["doc_id"]: r for r in pack_chunks(
-        df, token_col="n_tok", key="doc_id", budget=100).collect()}
+        df, token_col="n_tok", key="doc_id", budget=100,
+        group_col="source").collect()}
     assert out[1]["pack_span"] == 1 and out[1]["pack_offset"] == 0
     assert out[2]["pack_id"] == 0 and out[2]["pack_span"] == 1
     assert out[3]["pack_id"] == 1 and out[3]["pack_offset"] == 0
     with pytest.raises(ValueError):
-        pack_chunks(df, budget=0)
+        pack_chunks(df, budget=0, group_col="source")
 
 
 # -- word_shingles zip_with rewrite -------------------------------------------

@@ -15,18 +15,21 @@ from go_jsonschema_spark.operators.stats import (
 # ---------------------------------------------------------------------------
 
 def test_qnorm_uniform_positions(spark):
-    df = spark.createDataFrame([(i, float(i)) for i in range(1, 5)],
-                               "id long, v double")
+    df = spark.createDataFrame([(i, "a", float(i)) for i in range(1, 5)],
+                               "id long, g string, v double")
     out = {r["id"]: r["v_cdf"] for r in
-           quantile_normalize(df, "v").collect()}
+           quantile_normalize(df, "v", group_col="g", out_col="v_cdf")
+           .collect()}
     assert out == {1: 0.25, 2: 0.5, 3: 0.75, 4: 1.0}
 
 
 def test_qnorm_ties_share_position(spark):
     df = spark.createDataFrame(
-        [(1, 1.0), (2, 1.0), (3, 2.0)], "id long, v double")
+        [(1, "a", 1.0), (2, "a", 1.0), (3, "a", 2.0)],
+        "id long, g string, v double")
     out = {r["id"]: r["v_cdf"] for r in
-           quantile_normalize(df, "v").collect()}
+           quantile_normalize(df, "v", group_col="g", out_col="v_cdf")
+           .collect()}
     assert out[1] == out[2] == pytest.approx(2 / 3, abs=1e-6)
     assert out[3] == 1.0
 
@@ -36,7 +39,8 @@ def test_qnorm_grouped_and_nulls(spark):
         [(1, "a", 5.0), (2, "a", 10.0), (3, "b", 7.0), (4, "b", None)],
         "id long, g string, v double")
     out = {r["id"]: r["v_cdf"] for r in
-           quantile_normalize(df, "v", group_col="g").collect()}
+           quantile_normalize(df, "v", group_col="g", out_col="v_cdf")
+           .collect()}
     assert out[1] == 0.5 and out[2] == 1.0
     assert out[3] == 1.0  # ranks only within its group's non-nulls
     assert out[4] is None

@@ -69,8 +69,10 @@ def test_pack_chunks_exact_past_double_precision(spark):
     # long) offset stayed put — grid internally inconsistent (ADVICE r3)
     big = (1 << 53) + 2047
     df = spark.createDataFrame(
-        [("a", big), ("b", 10)], "doc_id string, n_tok long")
-    out = {r["doc_id"]: r for r in pack_chunks(df, budget=2048).collect()}
+        [("a", "s", big), ("b", "s", 10)],
+        "doc_id string, source string, n_tok long")
+    out = {r["doc_id"]: r for r in pack_chunks(
+        df, budget=2048, group_col="source").collect()}
     assert out["a"]["pack_id"] == 0 and out["a"]["pack_offset"] == 0
     assert out["b"]["pack_id"] == big // 2048
     assert out["b"]["pack_offset"] == big % 2048
@@ -120,10 +122,11 @@ def test_pack_greedy_properties(spark):
     from go_jsonschema_spark.operators.packing import pack_greedy
 
     rng = random.Random(11)
-    rows = [(i, rng.randint(0, 130)) for i in range(300)]
-    df = spark.createDataFrame(rows, "doc_id int, n_tok long")
+    rows = [(i, "s", rng.randint(0, 130)) for i in range(300)]
+    df = spark.createDataFrame(rows, "doc_id int, source string, n_tok long")
     out = sorted(
-        pack_greedy(df, budget=100, key="doc_id").collect(),
+        pack_greedy(df, budget=100, key="doc_id",
+                    group_col="source").collect(),
         key=lambda r: r["doc_id"])
     by_pack = {}
     for r in out:
@@ -146,11 +149,13 @@ def test_pack_greedy_whole_table_single_group(spark):
     from go_jsonschema_spark.operators.packing import pack_greedy
 
     df = spark.createDataFrame(
-        [(0, 60), (1, 30), (2, 60)], "doc_id int, n_tok long")
+        [(0, "s", 60), (1, "s", 30), (2, "s", 60)],
+        "doc_id int, source string, n_tok long")
+    packed = pack_greedy(df, budget=100, group_col="source")
     out = {r["doc_id"]: (r["pack_id"], r["pack_offset"])
-           for r in pack_greedy(df, budget=100).collect()}
+           for r in packed.collect()}
     assert out == {0: (0, 0), 1: (0, 60), 2: (1, 0)}
-    assert "__g__" not in pack_greedy(df, budget=100).columns
+    assert packed.columns == [*df.columns, "pack_id", "pack_offset"]
 
 
 # -- non_null_elements storage contract --------------------------------------
@@ -274,9 +279,10 @@ def test_pack_greedy_null_tokens(spark):
     from go_jsonschema_spark.operators.packing import pack_greedy
 
     df = spark.createDataFrame(
-        [(0, 60), (1, None), (2, 50)], "doc_id int, n_tok long")
+        [(0, "s", 60), (1, "s", None), (2, "s", 50)],
+        "doc_id int, source string, n_tok long")
     out = {r["doc_id"]: (r["pack_id"], r["pack_offset"])
-           for r in pack_greedy(df, budget=100).collect()}
+           for r in pack_greedy(df, budget=100, group_col="source").collect()}
     # null packs as a 0-length doc: stays in pack 0 at offset 60
     assert out == {0: (0, 0), 1: (0, 60), 2: (1, 0)}
 
@@ -299,6 +305,20 @@ def test_chunk_grid(spark):
     # every token covered; ends monotone
     for d, chunks in out.items():
         assert chunks[-1][2] == {0: 100, 1: 64, 2: 65, 3: 10}[d]
+
+
+def test_zero_stride_and_top_k_rejected(spark):
+    """0 is a value, not "unset": a zero chunk stride or fusion top_k
+    raises."""
+    from go_jsonschema_spark.operators.corpus import rrf_fuse
+    from go_jsonschema_spark.operators.packing import chunk_grid
+
+    df = spark.createDataFrame([(0, 100)], "doc_id int, n_tok long")
+    with pytest.raises(ValueError, match="stride"):
+        chunk_grid(df, size=64, stride=0)
+    ranked = spark.createDataFrame([(1, 1), (2, 2)], "id long, rank long")
+    with pytest.raises(ValueError, match="top_k"):
+        rrf_fuse([ranked], ["id"], top_k=0)
 
 
 def test_cap_per_group(spark):

@@ -523,22 +523,6 @@ def test_resample_fills_gaps_all_policies(spark):
     assert h3["avg_lin"] == 50.0
 
 
-def test_resample_grouped_shares_one_spine(spark):
-    from go_jsonschema_spark.operators.timeseries import resample
-
-    rows = [("a", "2024-01-01 00:00:00", 1.0),
-            ("a", "2024-01-01 02:00:00", 3.0),
-            ("b", "2024-01-01 01:00:00", 9.0)]
-    df = spark.createDataFrame(rows, "g string, ts string, v double") \
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    out = resample(df, ts_col="ts", step_seconds=3600, group_col="g",
-                   aggs={"n": (F.count(F.lit(1)), "zero")})
-    per_group = {r["g"]: r["n_buckets"] for r in out.groupBy("g")
-                 .agg(F.count(F.lit(1)).alias("n_buckets")).collect()}
-    # every group covers the full global grid (hours 00-02)
-    assert per_group == {"a": 3, "b": 3}
-
-
 def test_resample_empty_input(spark):
     from go_jsonschema_spark.operators.timeseries import resample
 

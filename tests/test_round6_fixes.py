@@ -1,4 +1,4 @@
-"""Round-6 regression tests for the four ADVICE findings.
+"""Round-6 regression tests for ADVICE findings.
 
 1. range_join: a matched point row containing NULL columns is emitted
    once per matching interval, and points outside every interval drop.
@@ -6,17 +6,12 @@
    NULL must rejoin its own counts (null-safe skeleton join) — a
    NULL-quasi class distributed identically to the global distribution
    has emd == 0, never an out-of-range value.
-3. lm_perplexity with an external train_df: an unseen bigram whose
-   PREFIX is seen must keep its c1(w1) denominator, so a seen rare
-   bigram never scores below the unseen floor for the same prefix.
-4. distributed_cumsum: a string leading order column is rejected
+3. distributed_cumsum: a string leading order column is rejected
    (numeric bucket split vs lexicographic window sort would silently
    corrupt prefix sums).
 """
 
 from __future__ import annotations
-
-import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -100,48 +95,6 @@ def test_t_closeness_null_quasi_class_rejoins_counts(spark):
     out = {r["zip"]: r["emd"] for r in
            t_closeness(df2, ["zip"], "diag", t=0.05).collect()}
     assert None in out and 0.0 <= out[None] <= 1.0
-
-
-def test_lm_perplexity_external_train_prefix_denominator(spark):
-    """ADVICE r6 (medium): unseen bigram with a SEEN prefix must use
-    c1(w1), not 0 — so p = k / (c1 + kV), strictly below the seen-rare
-    bigram's (c2 + k) / (c1 + kV) for the same prefix."""
-    from go_jsonschema_spark.operators.corpus import lm_perplexity
-
-    # train corpus: 'the cat' x 9, 'the dog' x 1 => c1(the)=10, V=3
-    train = spark.createDataFrame(
-        [("t", " ".join(["the cat"] * 9 + ["the dog"]))],
-        "doc_id string, text string")
-    score = spark.createDataFrame(
-        [("seen_rare", "the dog"), ("unseen", "the zebra")],
-        "doc_id string, text string")
-    out = {r["doc_id"]: r for r in
-           lm_perplexity(score, train_df=train, k=0.5).collect()}
-    v = 4  # {the, cat, dog, zebra}? no — train vocab only: {the, cat, dog}
-    v = 3
-    c1 = 10.0
-    p_seen = (1 + 0.5) / (c1 + 0.5 * v)
-    p_unseen = 0.5 / (c1 + 0.5 * v)
-    assert math.isclose(out["seen_rare"]["avg_logprob"],
-                        math.log(p_seen), rel_tol=1e-9)
-    assert math.isclose(out["unseen"]["avg_logprob"],
-                        math.log(p_unseen), rel_tol=1e-9)
-    # the buggy form gave the unseen bigram p = k/(kV) = 1/3 > p_seen,
-    # inverting the filter; now strictly lower:
-    assert out["unseen"]["ppl"] > out["seen_rare"]["ppl"]
-
-
-def test_lm_perplexity_unseen_prefix_floor(spark):
-    """A bigram whose PREFIX is unseen falls back to k / (0 + kV) = 1/V."""
-    from go_jsonschema_spark.operators.corpus import lm_perplexity
-
-    train = spark.createDataFrame([("t", "aa bb")],
-                                  "doc_id string, text string")
-    score = spark.createDataFrame([("d", "zz qq")],
-                                  "doc_id string, text string")
-    out = lm_perplexity(score, train_df=train, k=0.5).collect()[0]
-    assert math.isclose(out["avg_logprob"], math.log(1.0 / 2),
-                        rel_tol=1e-9)  # V = {aa, bb} = 2
 
 
 def test_distributed_cumsum_rejects_string_order(spark):

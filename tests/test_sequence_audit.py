@@ -49,12 +49,12 @@ def test_interleaved_token_reappearance_not_a_run(spark):
     # beyond one pair — gaps-and-islands, not global counting
     df = spark.createDataFrame([("x", [9, 1, 9, 9, 1, 9])],
                                "doc_id string, tokens array<int>")
-    assert sequence_audit(df).first()["max_run"] == 2
+    assert sequence_audit(df, bos_id=0, eos_id=0).first()["max_run"] == 2
 
 
-def test_flags_absent_without_ids(spark):
-    cols = sequence_audit(_df(spark)).columns
-    assert "bos_ok" not in cols and "eos_ok" not in cols
+def test_flags_always_emitted(spark):
+    cols = sequence_audit(_df(spark), bos_id=0, eos_id=0).columns
+    assert cols[-2:] == ["bos_ok", "eos_ok"]
 
 
 def test_plan_no_shuffle_no_python(spark):
@@ -70,4 +70,4 @@ def test_null_run_counts(spark):
     # pathological: consecutive NULL tokens form a run (eqNullSafe)
     df = spark.createDataFrame([("x", [None, None, None, 1])],
                                "doc_id string, tokens array<int>")
-    assert sequence_audit(df).first()["max_run"] == 3
+    assert sequence_audit(df, bos_id=0, eos_id=0).first()["max_run"] == 3

@@ -104,7 +104,7 @@ def test_entropy_guard(spark):
 def test_winsorize_clips_tails(spark):
     vals = [float(i) for i in range(1, 100)] + [10_000.0]
     df = spark.createDataFrame([(v,) for v in vals], "v double")
-    out = winsorize(df, "v", lo=0.05, hi=0.95)
+    out = winsorize(df, "v", lo=0.05, hi=0.95, out_col="v_w")
     col = [r["v_w"] for r in out.collect()]
     assert max(col) < 10_000.0 and min(col) > 1.0
     assert len(col) == 100  # row count preserved
@@ -113,14 +113,14 @@ def test_winsorize_clips_tails(spark):
 def test_winsorize_nulls_pass_through(spark):
     df = spark.createDataFrame([(1.0,), (None,), (2.0,), (3.0,)],
                                "v double")
-    out = winsorize(df, "v", lo=0.25, hi=0.75).collect()
+    out = winsorize(df, "v", lo=0.25, hi=0.75, out_col="v_w").collect()
     assert sum(1 for r in out if r["v_w"] is None) == 1
 
 
 def test_winsorize_guard(spark):
     df = spark.createDataFrame([(1.0,)], "v double")
     with pytest.raises(ValueError, match="lo < hi"):
-        winsorize(df, "v", lo=0.9, hi=0.1)
+        winsorize(df, "v", lo=0.9, hi=0.1, out_col="v_w")
 
 
 def test_winsorize_no_shuffle_in_clip(spark):
@@ -130,7 +130,7 @@ def test_winsorize_no_shuffle_in_clip(spark):
     df = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        winsorize(df, "value").explain("formatted")
+        winsorize(df, "value", out_col="v_w").explain("formatted")
     plan = buf.getvalue()
     assert "Exchange" not in plan  # boundaries are literals; pure project
     assert "BatchEvalPython" not in plan
