@@ -30,6 +30,13 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from go_jsonschema_spark.operators.sketches import (
+    _QSKETCH_KEY,
+    _SKETCH_KEY,
+    batch_distinct_sketch,
+    batch_quantile_sketch,
+)
+
 __all__ = ["CheckpointStore", "ResumableValidation", "RunReport"]
 
 
@@ -253,7 +260,7 @@ class ResumableValidation:
                 n_skip += 1
                 part_metrics.update({
                     k: v for k, v in prev["metrics"].items()
-                    if k not in ("__sketches__", "__qsketches__")
+                    if k not in (_SKETCH_KEY, _QSKETCH_KEY)
                 })
                 continue
             # partition pruning: the filter reaches the scan, so completed
@@ -284,20 +291,12 @@ class ResumableValidation:
             }
             part_metrics.update(metrics)
             if self.sketch_cols:
-                from go_jsonschema_spark.operators.sketches import (
-                    batch_distinct_sketch,
-                )
-
                 metrics = dict(metrics)
-                metrics["__sketches__"] = batch_distinct_sketch(
+                metrics[_SKETCH_KEY] = batch_distinct_sketch(
                     sub, list(self.sketch_cols))
             if self.quantile_cols:
-                from go_jsonschema_spark.operators.sketches import (
-                    batch_quantile_sketch,
-                )
-
                 metrics = dict(metrics)
-                metrics["__qsketches__"] = batch_quantile_sketch(
+                metrics[_QSKETCH_KEY] = batch_quantile_sketch(
                     sub, list(self.quantile_cols))
             self.store.mark_complete(run_id, key, [*batch], metrics, out_path)
             n_run += 1

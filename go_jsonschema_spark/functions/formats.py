@@ -14,15 +14,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-# JVM-side formats: Java-regex equivalents of the reference's precompiled
-# patterns (validators.go:650-654).
+from go_jsonschema_spark.interp import FORMAT_REGEX
+
+# JVM-side formats: the interpreter's single-regex formats, which read the
+# same in Java regex (the reference's precompiled patterns,
+# validators.go:650-654), plus a pre-filter for ``date``.
 _NATIVE_REGEX = {
-    "uuid": r"^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$",
-    # ISO-8601: weeks form is exclusive — P1Y1W is invalid
-    "duration": r"^P(?!$)(?:\d+W|(?=\d|T\d)(?:\d+Y)?(?:\d+M)?(?:\d+D)?(?:T(?=\d)(?:\d+H)?(?:\d+M)?(?:\d+(?:\.\d+)?S)?)?)$",
-    "hostname": r"^(?=.{1,253}\.?$)[a-zA-Z0-9](?:[a-zA-Z0-9-]{0,61}[a-zA-Z0-9])?(?:\.[a-zA-Z0-9](?:[a-zA-Z0-9-]{0,61}[a-zA-Z0-9])?)*\.?$",
-    "json-pointer": r"^(?:/(?:[^~/]|~0|~1)*)*$",
-    "relative-json-pointer": r"^(?:0|[1-9][0-9]*)(?:#|(?:/(?:[^~/]|~0|~1)*)*)$",
+    **FORMAT_REGEX,
     "date": r"^\d{4}-(0[1-9]|1[0-2])-(0[1-9]|[12]\d|3[01])$",
 }
 

@@ -141,22 +141,34 @@ def canonical_key(v: Any) -> Any:
 # Format validators (validateFormat, validators.go:656-857)
 # ---------------------------------------------------------------------------
 
-_HOSTNAME_RE = re.compile(
-    r"^(?=.{1,253}\.?$)[a-zA-Z0-9](?:[a-zA-Z0-9-]{0,61}[a-zA-Z0-9])?"
-    r"(?:\.[a-zA-Z0-9](?:[a-zA-Z0-9-]{0,61}[a-zA-Z0-9])?)*\.?$"
-)
-_UUID_RE = re.compile(
-    r"^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}"
-    r"-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$"
-)
-# ISO-8601: the weeks form is exclusive (P1Y1W invalid); otherwise the
-# date-time form needs at least one unit and T needs a following digit
-_DURATION_RE = re.compile(
-    r"^P(?!$)(?:\d+W|(?=\d|T\d)(?:\d+Y)?(?:\d+M)?(?:\d+D)?"
-    r"(?:T(?=\d)(?:\d+H)?(?:\d+M)?(?:\d+(?:\.\d+)?S)?)?)$"
-)
-_JSON_POINTER_RE = re.compile(r"^(?:/(?:[^~/]|~0|~1)*)*$")
-_REL_JSON_POINTER_RE = re.compile(r"^(?:0|[1-9][0-9]*)(?:#|(?:/(?:[^~/]|~0|~1)*)*)$")
+# Formats that are one regex; functions/formats.py runs these same
+# strings JVM-side through ``rlike``.
+FORMAT_REGEX = {
+    "hostname": (
+        r"^(?=.{1,253}\.?$)[a-zA-Z0-9](?:[a-zA-Z0-9-]{0,61}[a-zA-Z0-9])?"
+        r"(?:\.[a-zA-Z0-9](?:[a-zA-Z0-9-]{0,61}[a-zA-Z0-9])?)*\.?$"
+    ),
+    "uuid": (
+        r"^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}"
+        r"-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$"
+    ),
+    # ISO-8601: the weeks form is exclusive (P1Y1W invalid); otherwise the
+    # date-time form needs at least one unit and T needs a following digit
+    "duration": (
+        r"^P(?!$)(?:\d+W|(?=\d|T\d)(?:\d+Y)?(?:\d+M)?(?:\d+D)?"
+        r"(?:T(?=\d)(?:\d+H)?(?:\d+M)?(?:\d+(?:\.\d+)?S)?)?)$"
+    ),
+    "json-pointer": r"^(?:/(?:[^~/]|~0|~1)*)*$",
+    "relative-json-pointer":
+        r"^(?:0|[1-9][0-9]*)(?:#|(?:/(?:[^~/]|~0|~1)*)*)$",
+}
+
+
+def _regex_check(fmt: str):
+    match = re.compile(FORMAT_REGEX[fmt]).match
+    return lambda s: match(s) is not None
+
+
 _DATE_RE = re.compile(r"^(\d{4})-(\d{2})-(\d{2})$")
 _TIME_RE = re.compile(
     r"^(\d{2}):(\d{2}):(\d{2})(\.\d+)?(([Zz])|([+-])(\d{2}):(\d{2}))$"
@@ -313,21 +325,21 @@ _FORMAT_CHECKS = {
     "date-time": _valid_datetime,
     "date": _valid_date,
     "time": _valid_time,
-    "duration": lambda s: bool(_DURATION_RE.match(s)),
+    "duration": _regex_check("duration"),
     "email": _valid_email,
     "idn-email": _valid_email,
-    "hostname": lambda s: bool(_HOSTNAME_RE.match(s)),
+    "hostname": _regex_check("hostname"),
     "idn-hostname": _valid_idn_hostname,
     "ipv4": _valid_ipv4,
     "ipv6": _valid_ipv6,
-    "uuid": lambda s: bool(_UUID_RE.match(s)),
+    "uuid": _regex_check("uuid"),
     "uri": lambda s: _valid_uri(s, need_scheme=True),
     "iri": lambda s: _valid_uri(s, need_scheme=True),
     "uri-reference": lambda s: _valid_uri(s, need_scheme=False),
     "iri-reference": lambda s: _valid_uri(s, need_scheme=False),
     "uri-template": _valid_uri_template,
-    "json-pointer": lambda s: bool(_JSON_POINTER_RE.match(s)),
-    "relative-json-pointer": lambda s: bool(_REL_JSON_POINTER_RE.match(s)),
+    "json-pointer": _regex_check("json-pointer"),
+    "relative-json-pointer": _regex_check("relative-json-pointer"),
     "regex": _valid_regex,
 }
 

@@ -69,16 +69,25 @@ def running_distinct(
     store's manifests alone — no data rescan.  Requires the run to have
     been executed with ``ResumableValidation(..., sketch_cols=cols)``;
     columns without stored sketches are omitted from the result."""
-    by_col: dict[str, list[str]] = {c: [] for c in cols}
+    return {
+        c: union_estimate(spark, blobs)
+        for c, blobs in _manifest_sketches(
+            store, run_id, _SKETCH_KEY, cols).items()
+    }
+
+
+def _manifest_sketches(
+    store, run_id: str, block: str, cols: list[str],
+) -> dict[str, list]:
+    """{col: [one sketch per batch]} from the ``block`` entry of a run's
+    checkpoint manifests (columns with no stored sketches omitted)."""
+    by_col: dict[str, list] = {c: [] for c in cols}
     for manifest in store.completed(run_id).values():
-        sk = manifest.get("metrics", {}).get(_SKETCH_KEY, {})
+        sk = manifest.get("metrics", {}).get(block, {})
         for c in cols:
             if c in sk:
                 by_col[c].append(sk[c])
-    return {
-        c: union_estimate(spark, blobs)
-        for c, blobs in by_col.items() if blobs
-    }
+    return {c: sks for c, sks in by_col.items() if sks}
 
 
 # --- mergeable quantile sketches (r6) ---------------------------------------
@@ -222,14 +231,9 @@ def sketch_quantiles(sketch: dict, qs: list) -> dict:
 def _merged_qsketches(store, run_id: str, cols: list[str]) -> dict[str, dict]:
     """{col: merged sketch} from a run's checkpoint manifests (columns
     with no stored sketches omitted)."""
-    by_col: dict[str, list[dict]] = {c: [] for c in cols}
-    for manifest in store.completed(run_id).values():
-        sk = manifest.get("metrics", {}).get(_QSKETCH_KEY, {})
-        for c in cols:
-            if c in sk:
-                by_col[c].append(sk[c])
     return {c: merge_quantile_sketches(sks)
-            for c, sks in by_col.items() if sks}
+            for c, sks in _manifest_sketches(
+                store, run_id, _QSKETCH_KEY, cols).items()}
 
 
 def running_quantiles(

@@ -8,8 +8,10 @@ opening sockets, and a fetch per task would hammer the origin.  This
 module performs the same resolution ONCE, on the driver, at compile
 time:
 
-1. walk the schema and collect every ``$ref`` whose target *document*
-   is an absolute http/https/file URI not already resolvable (registry,
+1. read the ``$ref``s that the schema's :class:`SchemaSpec` index
+   collected at schema positions (``SchemaSpec.refs``, each with its
+   base URI in scope) and keep those whose target *document* is an
+   absolute http/https/file URI not already resolvable (registry,
    embedded meta-schemas, or a previously fetched document's ``$id``
    index),
 2. fetch each document — through an on-disk cache and, for http(s),
@@ -33,56 +35,11 @@ import os
 from typing import Any, Callable
 from urllib.parse import urljoin, urlparse
 
-from go_jsonschema_spark.spec import (
-    SchemaSpec,
-    SpecError,
-    _norm_uri,
-    _SUBSCHEMA_KEYS,
-    _SUBSCHEMA_LIST_KEYS,
-    _SUBSCHEMA_MAP_KEYS,
-)
+from go_jsonschema_spark.spec import SchemaSpec, SpecError, _norm_uri
 
 __all__ = ["fetch_remote_refs", "register_remote_refs", "fetch_schema"]
 
 _REMOTE_SCHEMES = ("http", "https", "file")
-
-
-def _iter_refs(node: Any, base_uri: str, out: list[tuple[str, str]]) -> None:
-    """Collect ``(ref, base_uri_in_scope)`` at schema positions only,
-    tracking ``$id``/``id`` base changes exactly like
-    :meth:`SchemaSpec._index` — a ``$ref`` inside ``enum``/``const``/
-    unknown keywords is data, not a reference (the suite's
-    unknownKeyword.json discipline)."""
-    if isinstance(node, list):
-        for s in node:
-            _iter_refs(s, base_uri, out)
-        return
-    if not isinstance(node, dict):
-        return
-    sid = node.get("$id") or node.get("id")
-    if isinstance(sid, str) and sid and not sid.startswith("#"):
-        base_uri = _norm_uri(urljoin(base_uri, sid) if base_uri else sid)
-    for kw in ("$ref", "$dynamicRef", "$recursiveRef"):
-        ref = node.get(kw)
-        if isinstance(ref, str) and ref:
-            out.append((ref, base_uri))
-    direct = set(_SUBSCHEMA_KEYS) | set(_SUBSCHEMA_LIST_KEYS) | {
-        "prefixItems", "items",
-        # 2019-09+ schema-valued keywords outside the core sets
-        "unevaluatedItems", "unevaluatedProperties", "contentSchema",
-    }
-    maps = set(_SUBSCHEMA_MAP_KEYS)
-    for k, v in node.items():
-        if k in direct:
-            _iter_refs(v, base_uri, out)
-        elif k in maps and isinstance(v, dict):
-            for s in v.values():
-                _iter_refs(s, base_uri, out)
-        elif k == "dependencies" and isinstance(v, dict):
-            for d in v.values():
-                if not isinstance(d, list):  # list form = required, data
-                    _iter_refs(d, base_uri, out)
-        # every other keyword holds data: no recursion
 
 
 def _resolvable(uri: str, tables: list[dict[str, Any]]) -> bool:
@@ -102,12 +59,10 @@ def _resolvable(uri: str, tables: list[dict[str, Any]]) -> bool:
 
 
 def _remote_doc_uris(
-    schema: Any, base_uri: str, tables: list[dict[str, Any]]
+    spec: SchemaSpec, tables: list[dict[str, Any]]
 ) -> set[str]:
-    refs: list[tuple[str, str]] = []
-    _iter_refs(schema, base_uri, refs)
     want: set[str] = set()
-    for ref, base in refs:
+    for ref, base in spec.refs:
         doc = ref.partition("#")[0]
         if not doc:
             continue  # fragment-only: local by definition
@@ -212,18 +167,16 @@ def fetch_remote_refs(
     unbounded crawl, and the driver should fail loudly rather than spider
     the origin."""
     fetcher = fetcher or _default_fetcher(allowlist)
-    known: dict[str, Any] = dict(registry or {})
+    try:
+        spec = SchemaSpec(schema, base_uri=base_uri)
+    except SpecError:
+        return {}  # malformed specs fail later, at compile/validate time
     # the schema's OWN $id index resolves refs like "folder/" that point
     # at an $id-carrying subschema of the input document — those are
     # local, never fetched (the suite's baseUriChange* cases)
-    if isinstance(schema, (dict, bool)):
-        try:
-            known = {**SchemaSpec(schema, base_uri=base_uri).registry,
-                     **known}
-        except SpecError:
-            pass  # malformed specs fail later, at compile/validate time
+    known: dict[str, Any] = {**spec.registry, **(registry or {})}
     fetched: dict[str, SchemaSpec] = {}
-    pending = _remote_doc_uris(schema, base_uri, [known])
+    pending = _remote_doc_uris(spec, [known])
     while pending:
         url = pending.pop()
         if url in known or url in fetched:
@@ -238,7 +191,7 @@ def fetch_remote_refs(
             url, fetcher=fetcher, allowlist=allowlist, cache_dir=cache_dir
         )
         fetched[url] = sp
-        pending |= _remote_doc_uris(sp.root, url, [known, fetched])
+        pending |= _remote_doc_uris(sp, [known, fetched])
     return fetched
 
 
@@ -258,8 +211,6 @@ def register_remote_refs(
     for schema in suite.spec.columns.values():
         if isinstance(schema, dict) and schema.get("kind") == "json":
             schema = schema.get("schema")
-        if not isinstance(schema, (dict, list)):
-            continue
         got = fetch_remote_refs(
             schema,
             registry=suite.registry,

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 # The reference's known keyword set, /root/reference/schema_types.go:163-211.
 KNOWN_KEYWORDS = frozenset(
@@ -83,15 +83,23 @@ KNOWN_KEYWORDS = frozenset(
     }
 )
 
-# Keywords whose value is itself a schema (or list/map of schemas) — used by
-# ref collection and compile-time inlining.
-_SUBSCHEMA_KEYS = ("items", "additionalItems", "contains", "propertyNames",
-                   "additionalProperties", "if", "then", "else", "not")
-_SUBSCHEMA_LIST_KEYS = ("allOf", "anyOf", "oneOf")
-_SUBSCHEMA_MAP_KEYS = (
+# Schema positions: keywords whose value is one subschema, a list of
+# subschemas, or a map of names to subschemas (``items`` is one or a list;
+# ``dependencies`` values are schemas or property lists).  Every other
+# keyword (enum, const, default, examples, unknown ones) holds data.  The
+# grammar checks, the $id/$ref index and deref expansion all walk a spec
+# through :func:`map_subschemas`, the one reader of this table.
+_SCHEMA_ONE = frozenset({
+    "additionalItems", "contains", "propertyNames", "additionalProperties",
+    "if", "then", "else", "not",
+    "unevaluatedItems", "unevaluatedProperties", "contentSchema",
+})
+_SCHEMA_LIST = frozenset({"allOf", "anyOf", "oneOf", "prefixItems"})
+_SCHEMA_MAP = frozenset({
     "properties", "patternProperties", "definitions", "$defs",
-    "dependentSchemas",
-)
+    "dependentSchemas", "dependencies",
+})
+DATA = object()  # map_subschemas: the keyword holds data
 
 JSON_TYPES = frozenset(
     {"string", "number", "integer", "object", "array", "boolean", "null"}
@@ -147,41 +155,8 @@ def normalize_spec(spec: Any) -> Any:
     ):
         raise SpecError("required must be an array of strings")
 
-    for kw in _SUBSCHEMA_KEYS:
-        if kw in spec:
-            sub = spec[kw]
-            if kw == "items" and isinstance(sub, list):
-                for s in sub:
-                    normalize_spec(s)
-            else:
-                normalize_spec(sub)
-    if "prefixItems" in spec:
-        if not isinstance(spec["prefixItems"], list) or not spec["prefixItems"]:
-            raise SpecError("prefixItems must be a non-empty array of schemas")
-        for s in spec["prefixItems"]:
-            normalize_spec(s)
-    for kw in _SUBSCHEMA_LIST_KEYS:
-        if kw in spec:
-            if not isinstance(spec[kw], list) or not spec[kw]:
-                raise SpecError(f"{kw} must be a non-empty array of schemas")
-            for s in spec[kw]:
-                normalize_spec(s)
-    for kw in _SUBSCHEMA_MAP_KEYS:
-        if kw in spec:
-            if not isinstance(spec[kw], dict):
-                raise SpecError(f"{kw} must be an object")
-            for s in spec[kw].values():
-                normalize_spec(s)
-    deps = spec.get("dependencies")
-    if deps is not None:
-        if not isinstance(deps, dict):
-            raise SpecError("dependencies must be an object")
-        for v in deps.values():
-            if isinstance(v, list):
-                if not all(isinstance(x, str) for x in v):
-                    raise SpecError("property dependency must list strings")
-            else:
-                normalize_spec(v)
+    for kw, v in spec.items():
+        map_subschemas(kw, v, normalize_spec)
     dreq = spec.get("dependentRequired")
     if dreq is not None:
         if not isinstance(dreq, dict) or not all(
@@ -194,6 +169,34 @@ def normalize_spec(spec: Any) -> Any:
         if v is not None and (isinstance(v, bool) or not isinstance(v, int) or v < 0):
             raise SpecError(f"{kw} must be a non-negative integer")
     return spec
+
+
+def map_subschemas(kw: str, value: Any, f: Callable[[Any], Any]) -> Any:
+    """Apply ``f`` to every subschema that keyword ``kw`` holds and return
+    ``value`` with each subschema replaced by ``f``'s result, or
+    :data:`DATA` when ``kw`` holds data.  Property lists under
+    ``dependencies`` come back as copies.  Raises :class:`SpecError` when
+    the container has the wrong shape (the reference parser's errors for
+    a non-array ``allOf`` or a non-object ``properties``)."""
+    if kw in _SCHEMA_ONE or (kw == "items" and not isinstance(value, list)):
+        return f(value)
+    if kw in _SCHEMA_LIST or kw == "items":
+        if not isinstance(value, list) or not (value or kw == "items"):
+            raise SpecError(f"{kw} must be a non-empty array of schemas")
+        return [f(s) for s in value]
+    if kw not in _SCHEMA_MAP:
+        return DATA
+    if not isinstance(value, dict):
+        raise SpecError(f"{kw} must be an object")
+    out = {}
+    for k, v in value.items():
+        if kw == "dependencies" and isinstance(v, list):
+            if not all(isinstance(x, str) for x in v):
+                raise SpecError("property dependency must list strings")
+            out[k] = list(v)
+        else:
+            out[k] = f(v)
+    return out
 
 
 def unescape_pointer(token: str) -> str:
@@ -227,7 +230,10 @@ class SchemaSpec:
     (ExpandURI analogue, schema_refs.go:73-116).  ``base_of`` records, for
     every dict node, the base *document* node and base URI in scope — this
     is what makes ``#/definitions/x`` inside an ``$id``-carrying subschema
-    resolve against that subschema, not the root.
+    resolve against that subschema, not the root.  ``refs`` lists every
+    ``$ref``/``$dynamicRef``/``$recursiveRef`` at a schema position as a
+    ``(ref, base URI in scope)`` pair — the reference's flat ``refs`` list
+    (parser.go:301-309), which remote-ref discovery reads.
     """
 
     root: Any  # dict or bool
@@ -235,19 +241,12 @@ class SchemaSpec:
     base_uri: str = ""  # retrieval URI (remote-doc registration)
 
     def __post_init__(self) -> None:
-        from urllib.parse import urljoin
-
         normalize_spec(self.root)
         self.base_of: dict[int, tuple[Any, str]] = {}
         self.dyn_anchors: dict[int, dict[str, Any]] = {}
-        root_uri = self.base_uri
-        if isinstance(self.root, dict):
-            sid = self.root.get("$id") or self.root.get("id")
-            if isinstance(sid, str) and not sid.startswith("#"):
-                root_uri = _norm_uri(
-                    urljoin(root_uri, sid) if root_uri else sid
-                )
-        self._index(self.root, self.root, root_uri)
+        self.refs: list[tuple[str, str]] = []
+        self._index(self.root, self.root, self.base_uri)
+        _, root_uri = self.base_of.get(id(self.root), (None, self.base_uri))
         if root_uri:
             self.registry[root_uri] = self.root
 
@@ -259,9 +258,9 @@ class SchemaSpec:
         """Record base context for EVERY nested node (schemas can live
         under unknown container keys — the reference reaches them via
         raw-byte path fallback, schema_refs.go:248-256), but register
-        ``$id`` only at known-schema positions: an id inside ``enum``/
-        ``const``/unknown keywords is data, not an identifier (the suite's
-        id.json / unknownKeyword.json cases)."""
+        ``$id`` and collect ``refs`` only at schema positions: an id
+        inside ``enum``/``const``/unknown keywords is data, not an
+        identifier (the suite's id.json / unknownKeyword.json cases)."""
         from urllib.parse import urljoin
 
         if isinstance(node, list):
@@ -303,30 +302,21 @@ class SchemaSpec:
                         self.dyn_anchors.setdefault(
                             id(base_node), {}
                         ).setdefault(anc, node)
+            for ref_kw in ("$ref", "$dynamicRef", "$recursiveRef"):
+                ref = node.get(ref_kw)
+                if isinstance(ref, str) and ref:
+                    self.refs.append((ref, base_uri))
         self.base_of[id(node)] = (base_node, base_uri)
-        if not schema_pos:
-            for v in node.values():
-                self._index(v, base_node, base_uri, False)
-            return
-        direct = set(_SUBSCHEMA_KEYS) | set(_SUBSCHEMA_LIST_KEYS) | {
-            "prefixItems", "items"
-        }
-        maps = set(_SUBSCHEMA_MAP_KEYS)  # dicts whose VALUES are schemas
+
+        def sub(s: Any) -> None:
+            self._index(s, base_node, base_uri)
+
         for k, v in node.items():
-            if k in direct:
-                self._index(v, base_node, base_uri, True)
-            elif k in maps and isinstance(v, dict):
-                self.base_of[id(v)] = (base_node, base_uri)
-                for s in v.values():
-                    self._index(s, base_node, base_uri, True)
-            elif k == "dependencies" and isinstance(v, dict):
-                self.base_of[id(v)] = (base_node, base_uri)
-                for d in v.values():
-                    self._index(d, base_node, base_uri,
-                                not isinstance(d, list))
-            else:
+            if not schema_pos or map_subschemas(k, v, sub) is DATA:
                 # enum/const/default/examples/unknown keywords: data
                 self._index(v, base_node, base_uri, False)
+            elif isinstance(v, dict):  # a map of subschemas (or one)
+                self.base_of.setdefault(id(v), (base_node, base_uri))
 
     def _context(self, at: Any) -> tuple[Any, str]:
         if at is not None and id(at) in self.base_of:
@@ -452,17 +442,11 @@ def deref_expand(spec: "SchemaSpec", circular_threshold: int = 3) -> Any:
     import copy
 
     counts: dict[int, int] = {}
-    direct = set(_SUBSCHEMA_KEYS) | set(_SUBSCHEMA_LIST_KEYS) | {
-        "prefixItems", "items"
-    }
-    maps = set(_SUBSCHEMA_MAP_KEYS)
 
-    def walk(node: Any, schema_pos: bool) -> Any:
-        if isinstance(node, list):
-            return [walk(x, schema_pos) for x in node]
+    def walk(node: Any) -> Any:
         if not isinstance(node, dict):
-            return node
-        if schema_pos and isinstance(node.get("$ref"), str):
+            return copy.deepcopy(node)
+        if isinstance(node.get("$ref"), str):
             c = counts.get(id(node), 0)
             if c < circular_threshold:
                 try:
@@ -475,29 +459,17 @@ def deref_expand(spec: "SchemaSpec", circular_threshold: int = 3) -> Any:
                     # schema.go:223-227; $ref siblings drop)
                     counts[id(node)] = c + 1
                     try:
-                        return walk(target, True)
+                        return walk(target)
                     finally:
                         counts[id(node)] = c
             return copy.deepcopy(node)
-        if not schema_pos:
-            return {k: walk(v, False) for k, v in node.items()}
         out: dict[str, Any] = {}
         for k, v in node.items():
-            if k in direct:
-                out[k] = walk(v, True)
-            elif k in maps and isinstance(v, dict):
-                out[k] = {kk: walk(s, True) for kk, s in v.items()}
-            elif k == "dependencies" and isinstance(v, dict):
-                out[k] = {
-                    kk: (copy.deepcopy(d) if isinstance(d, list)
-                         else walk(d, True))
-                    for kk, d in v.items()
-                }
-            else:
-                out[k] = copy.deepcopy(v)
+            sub = map_subschemas(k, v, walk)
+            out[k] = copy.deepcopy(v) if sub is DATA else sub
         return out
 
-    return walk(spec.root, True)
+    return walk(spec.root)
 
 
 def validate_spec_against_metaschema(spec: Any, draft: int = 7) -> list[str]:

@@ -86,6 +86,27 @@ def test_deref_ref_inside_enum_is_data():
     assert out["properties"]["x"] == {"type": "integer"}
 
 
+
+def test_deref_expands_refs_to_unevaluated_and_content_schemas():
+    """``unevaluatedProperties``, ``unevaluatedItems`` and ``contentSchema``
+    hold schemas: an ``$anchor``/``$id`` there is a ref target, and a
+    ``$ref`` there expands."""
+    leaf = {"$anchor": "leaf", "type": "string"}
+    spec = SchemaSpec({
+        "$id": "http://x.test/root.json",
+        "properties": {"a": {"$ref": "#leaf"}, "b": {"$ref": "inner.json"}},
+        "prefixItems": [{"$ref": "#item"}],
+        "unevaluatedProperties": leaf,
+        "unevaluatedItems": {"$anchor": "item", "$ref": "#/$defs/n"},
+        "contentSchema": {"$id": "inner.json", "minLength": 2},
+        "$defs": {"n": {"type": "integer"}},
+    })
+    out = deref_expand(spec)
+    assert out["properties"] == {
+        "a": leaf, "b": {"$id": "inner.json", "minLength": 2}}
+    assert out["prefixItems"] == [{"type": "integer"}]
+    assert out["unevaluatedItems"] == {"type": "integer"}
+
 def test_deref_mutual_recursion_bounded():
     spec = SchemaSpec({
         "definitions": {

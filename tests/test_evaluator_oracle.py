@@ -468,6 +468,52 @@ def test_unevaluated_in_registered_document():
                                  registry=registry).valid is want
 
 
+# A ``$ref`` to an ``$id``/``$anchor`` declared under each schema position:
+# (draft, schema, values).  The first three positions were data to the
+# spec index and unresolvable.
+POSITION_CASES = [
+    (2020, {"properties": {"a": {"$ref": "#foo"}},
+            "unevaluatedProperties": {"$anchor": "foo", "type": "string"}},
+     [{"a": 1}, {"a": "x"}, {"b": 1}]),
+    (2020, {"prefixItems": [{"$ref": "#foo"}],
+            "unevaluatedItems": {"$anchor": "foo", "type": "string"}},
+     [[1], ["x"], ["x", 1], ["x", "y"]]),
+    (2020, {"$id": "http://x.test/root.json",
+            "properties": {"a": {"$ref": "inner.json"}},
+            "contentSchema": {"$id": "inner.json", "type": "string"}},
+     [{"a": 1}, {"a": "x"}]),
+    (7, {"items": [{"$id": "#first", "type": "string"}],
+         "additionalItems": {"$ref": "#first"}},
+     [["x", "y"], ["x", 1], [1]]),
+    (7, {"dependencies": {"b": {"$id": "#dep", "required": ["c"]}},
+         "properties": {"a": {"$ref": "#dep"}}},
+     [{"a": {}}, {"a": {"c": 1}}, {"b": 1}]),
+    (2020, {"dependentSchemas": {"b": {"$anchor": "dep", "type": "object",
+                                       "required": ["c"]}},
+            "properties": {"a": {"$ref": "#dep"}}},
+     [{"a": {}}, {"a": {"c": 1}}, {"b": 1}]),
+    (2020, {"propertyNames": {"$anchor": "short", "maxLength": 2},
+            "properties": {"ab": {"$ref": "#short"}}},
+     [{"ab": "xyz"}, {"ab": "xy"}, {"abc": 1}]),
+    (2020, {"if": {"$anchor": "i", "type": "string"},
+            "then": {"$anchor": "t", "minLength": 2},
+            "else": {"$anchor": "e", "type": "object"},
+            "properties": {"a": {"$ref": "#i"}, "b": {"$ref": "#t"},
+                           "c": {"$ref": "#e"}}},
+     [{"a": 1}, {"b": "x"}, {"c": 1}, {"a": "s", "b": "st", "c": {}}]),
+]
+
+
+@pytest.mark.parametrize("draft,schema,values", POSITION_CASES)
+def test_ref_targets_at_every_schema_position(draft, schema, values):
+    check = ORACLES[draft](schema)
+    verdicts = set()
+    for value in values:
+        want = check.is_valid(value)
+        verdicts.add(want)
+        assert _judge(schema, value, draft) == [want] * 3, value
+    assert verdicts == {True, False}
+
 def test_plain_dict_registry_document_owns_its_pointers():
     """A registry value given as a plain dict resolves a JSON-pointer
     ``$ref`` inside itself against itself, as a ``SchemaSpec`` does."""
